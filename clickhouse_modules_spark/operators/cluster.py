@@ -146,12 +146,11 @@ def connected_components(
     # materialize (knob: operators/materialize.py): sym is read every
     # iteration; labels is re-derived per round — unbounded lineage
     # without pinning
-    sym = materialize(sym, name="cc_edges")
+    sym = materialize(sym)
     labels = materialize(
         sym.select(F.col("a").alias("id"))
         .distinct()
-        .select("id", F.col("id").alias("label")),
-        name="cc_labels0",
+        .select("id", F.col("id").alias("label"))
     )
     def label_sum(df: DataFrame):
         return df.agg(
@@ -202,7 +201,7 @@ def connected_components(
                 labels.join(mapping, labels["label"] == mapping["__mid"])
                 .select("id", F.col("__mlabel").alias("label"))
             )
-        labels = materialize(labels, name="cc_labels")
+        labels = materialize(labels)
         cur_sum = label_sum(labels)
         if cur_sum == prev_sum:  # updates only ever DECREASE labels
             converged = True

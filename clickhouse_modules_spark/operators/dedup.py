@@ -302,11 +302,7 @@ def prefix_filter_candidates(
     # the dfreq groupBy + join + window once PER BRANCH (measured 2× the
     # whole candidate time at sf0.1). The prefix table is ~half the
     # exploded tokens — small relative to the corpus at any scale.
-    from clickhouse_modules_spark.operators.materialize import materialize
-
-    pref = materialize(
-        pref.select("__id", "__n", "__rn", "__tok"), name="ppjoin_prefix"
-    )
+    pref = materialize(pref.select("__id", "__n", "__rn", "__tok"))
     left = pref.select(
         F.col("__id").alias("id_a"),
         F.col("__n").alias("__na"),
@@ -519,7 +515,7 @@ def minhash_banded_pairs(
             F.col("__sig.sh").alias("__h"),
         )
     )
-    hashed = materialize(hashed, name="minhash_sig")
+    hashed = materialize(hashed)
     exploded = hashed.select(
         F.col(id_col), F.explode(F.col("__bands")).alias("band_key")
     )
@@ -535,7 +531,7 @@ def minhash_banded_pairs(
         .filter(F.col("__bucket_n") <= max_bucket)
         .drop("__bucket_n")
     )
-    bounded = materialize(bounded, name="minhash_bands")
+    bounded = materialize(bounded)
 
     a = bounded.select(F.col(id_col).alias("id_a"), "band_key")
     b = bounded.select(F.col(id_col).alias("id_b"), "band_key")
@@ -773,8 +769,7 @@ def dedup_against_index(
         )
     dfreq = spark.read.parquet(f"{path}/dfreq")
     pref_b = materialize(
-        _ranked_prefixes(new_df, id_col, set_col, threshold, dfreq),
-        name="probe_prefix",
+        _ranked_prefixes(new_df, id_col, set_col, threshold, dfreq)
     )
     left = pref_b.select(
         F.col("__id").alias("id_a"),

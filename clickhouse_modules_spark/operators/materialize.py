@@ -1,4 +1,4 @@
-"""Materialization strategy for reused intermediates.
+"""Materialization of reused intermediates.
 
 Several operators compute an expensive intermediate that multiple plan
 branches then read (an LSH signature table feeding both sides of a
@@ -8,76 +8,17 @@ without pinning, the intermediate is recomputed once per branch
 (measured 2× on the banding paths) — and iterative lineage grows
 unboundedly.
 
-HOW to pin is a deployment decision, not an operator property, so it is
-a knob (``$SPARK_GRAFT_MATERIALIZE`` or per-call ``mode=``):
-
-- ``checkpoint`` (default): ``localCheckpoint(eager=True)`` — fastest
-  on a single node (blocks stay in executor storage memory). NOT fault
-  tolerant: lineage is truncated, so losing an executor loses the job;
-  blocks also compete with shuffle memory. Right for local[N] benches,
-  wrong for a 1000-executor run.
-- ``persist``: MEMORY_AND_DISK persist + an eager count. Blocks remain
-  recomputable from lineage (executor loss → recompute, not job loss)
-  and spill to disk instead of evicting shuffle pages.
-- ``table``: write parquet, read back — the 100 TB posture: off-heap,
-  restart-safe, shareable across jobs, and the read-back side gets its
-  own pushdown/pruning. Costs a write; amortized when the intermediate
-  is large or the job is long.
-- ``none``: no pinning (trust exchange reuse where it applies).
-
-The choice never changes results — only fault-tolerance and memory
-residency (asserted in tests/test_materialize.py).
+Pinning is ``localCheckpoint(eager=True)``: the fastest posture on a
+single node (blocks stay in executor storage memory). It is NOT fault
+tolerant — lineage is truncated, so losing an executor loses the job —
+and the blocks compete with shuffle memory.
 """
 
 from __future__ import annotations
 
-import atexit
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame
 
-ENV_KNOB = "SPARK_GRAFT_MATERIALIZE"
-_VALID = ("checkpoint", "persist", "table", "none")
 
-# Paths written by mode='table' this process — removed at interpreter
-# exit so iterative callers (connected_components materializes labels
-# each round) don't accumulate unbounded temp parquet across runs.
-_TABLE_PATHS: list[str] = []
-
-
-def _cleanup_table_paths() -> None:
-    for p in _TABLE_PATHS:
-        shutil.rmtree(p, ignore_errors=True)
-    _TABLE_PATHS.clear()
-
-
-atexit.register(_cleanup_table_paths)
-
-
-def materialize(df: DataFrame, mode: str | None = None, name: str = "step") -> DataFrame:
-    """Pin ``df`` for multi-branch / iterative reuse per ``mode``
-    (default: ``$SPARK_GRAFT_MATERIALIZE`` or ``checkpoint``)."""
-    mode = mode or os.environ.get(ENV_KNOB, "checkpoint")
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=True)
-    if mode == "persist":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()  # eager: later branches read blocks, not lineage
-        return out
-    if mode == "table":
-        path = os.path.join(
-            tempfile.gettempdir(),
-            "spark_graft_mat",
-            f"{name}-{uuid.uuid4().hex[:12]}",
-        )
-        df.write.mode("overwrite").parquet(path)
-        _TABLE_PATHS.append(path)  # reclaimed atexit
-        return df.sparkSession.read.parquet(path)
-    if mode == "none":
-        return df
-    raise ValueError(f"unknown materialize mode {mode!r}; one of {_VALID}")
+def materialize(df: DataFrame) -> DataFrame:
+    """Pin ``df`` for multi-branch / iterative reuse."""
+    return df.localCheckpoint(eager=True)

@@ -1100,7 +1100,7 @@ def embed_dedup_against_index(
     )
     from clickhouse_modules_spark.operators.materialize import materialize
 
-    sig = materialize(sig, name="embed_dedup_sig")
+    sig = materialize(sig)
     left = sig.select(
         F.col("id").alias("id_a"), F.col("emb").alias("emb_a"), "bucket"
     )

@@ -20,8 +20,6 @@ DuckDB, so unrounded doubles differ in the last ulps.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -155,10 +153,8 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ``approx_priorities`` is HLL over a 5-value column: HLL++ stores
     tiny cardinalities exactly (sparse mode), so the sketch is
-    oracle-checkable against exact COUNT(DISTINCT) here while the
-    high-cardinality estimation behavior (the 100 TB path: fixed-size
-    mergeable sketch, no expand, no second shuffle) is accuracy-pinned
-    in tests/test_pipeline.py via q_agg_uniq_fn.
+    oracle-checkable against exact COUNT(DISTINCT) here (the 100 TB
+    path: fixed-size mergeable sketch, no expand, no second shuffle).
     """
     o = pscan(spark, f"{sf_dir}/orders.parquet")
     # TWO aggregations joined on the (3-row) group key, NOT one: when
@@ -183,49 +179,6 @@ def q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return plain.join(dist, "o_orderstatus").select(
         "o_orderstatus", "n_customers", "n_orders", "approx_priorities"
-    )
-
-
-# Unregistered (HLL sketch != DuckDB's estimator): the high-cardinality
-# uniq behavior; accuracy asserted in tests/test_pipeline.py. The driver
-# surface covers uniq via q_agg_distinct.approx_priorities.
-def q_agg_uniq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``uniq()`` → approx_count_distinct (HyperLogLog++).
-
-    No oracle: HLL estimates are engine-specific. Accuracy is asserted in
-    tests/test_pipeline.py against the exact distinct count (±5%).
-
-    rsd=0.02 (≈2^12 registers): measured 0.4% error on this corpus at
-    ~4× less agg-buffer width than rsd=0.01, whose 2^14-register buffer
-    materializes 1,639 attributes per group and dominated the bench.
-
-    100 TB note: this is THE scale story for distinct counts — fixed-size
-    sketch per group, merged associatively; no expand, no second shuffle.
-    """
-    e = load_events(spark, sf_dir)
-    return e.groupBy("event_type").agg(
-        F.approx_count_distinct("user_id", 0.02).alias("approx_users"),
-    )
-
-
-# Unregistered: the conditional-aggregate family rides q_agg_groupby's
-# exchange on the driver surface; kept as an API function.
-def q_agg_if(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``countIf/sumIf/avgIf`` → conditional aggregates."""
-    li = pscan(spark, f"{sf_dir}/lineitem.parquet")
-    return li.groupBy("l_returnflag").agg(
-        F.count(F.when(F.col("l_discount") > 0.05, 1)).alias("cnt_highdisc"),
-        F.round(
-            F.sum(
-                F.when(F.col("l_quantity") > 25, F.col("l_extendedprice")).otherwise(
-                    0.0
-                )
-            ),
-            2,
-        ).alias("sum_bulk_price"),
-        F.round(
-            F.avg(F.when(F.col("l_tax") > 0.04, F.col("l_extendedprice"))), 4
-        ).alias("avg_taxed_price"),
     )
 
 
@@ -283,50 +236,6 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.grouping("o_orderpriority").cast("long").alias("g_priority"),
         F.max_by("o_orderkey", enc).alias("top_orderkey"),
         F.min_by("o_orderkey", enc).alias("bottom_orderkey"),
-    )
-
-
-# Unregistered: the quantile family is driver-checked inside
-# q_agg_quantile_filter (same percentile aggregates, same exchange).
-def q_agg_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``quantile`` → exact continuous percentile.
-
-    Spark's ``percentile`` (exact, interpolating) matches DuckDB
-    ``quantile_cont``. At 100 TB prefer ``percentile_approx`` (KLL-like
-    sketch, mergeable, bounded memory) — exposed as ch.quantile_approx in
-    the function shim; exact percentile materializes each group's values.
-    """
-    li = pscan(spark, f"{sf_dir}/lineitem.parquet")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.percentile("l_extendedprice", 0.5), 4).alias("p50_price"),
-        F.round(F.percentile("l_extendedprice", 0.9), 4).alias("p90_price"),
-        F.round(F.percentile("l_quantity", 0.25), 4).alias("p25_qty"),
-    )
-
-
-# Unregistered: argMax/argMin ride q_agg_rollup on the driver surface.
-def q_agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``argMax/argMin`` → max_by/min_by."""
-    o = pscan(spark, f"{sf_dir}/orders.parquet")
-    return o.groupBy("o_orderstatus").agg(
-        F.max_by("o_orderkey", "o_totalprice").alias("top_orderkey"),
-        F.min_by("o_orderkey", "o_totalprice").alias("bottom_orderkey"),
-        F.round(F.max("o_totalprice"), 2).alias("max_price"),
-    )
-
-
-# Unregistered: groupArray/groupUniqArray are driver-checked inside
-# q_agg_summap (collect_list reassembly + the types_uniq collect_set).
-def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ClickHouse ``groupArray/groupUniqArray`` → collect_list/collect_set.
-
-    Outputs are sorted then joined to a string: collect_list order is
-    partition-dependent, so raw lists are never exposed by engine queries.
-    """
-    n = pscan(spark, f"{sf_dir}/nation.parquet")
-    return n.groupBy("n_regionkey").agg(
-        F.array_join(F.sort_array(F.collect_list("n_name")), ",").alias("nations"),
-        F.array_join(F.sort_array(F.collect_set("n_name")), ",").alias("nations_uniq"),
     )
 
 
@@ -497,57 +406,32 @@ def q_agg_quantile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     but shuffled once (the final small rollup); no window over the full
     data, no sort.
 
-    ``SPARK_GRAFT_QUANTILE=approx`` swaps exact ``percentile`` for
-    ``percentile_approx`` (Greenwald-Khanna sketch) in the threshold
-    pass — the documented 100 TB posture: exact percentile BUFFERS
-    EVERY GROUP VALUE in the aggregation state (memory ∝ group size);
-    the sketch is bounded (∝ accuracy) and partial-mergeable, so the
-    threshold pass stays map-side-combinable at any scale. Rank error ≤
-    1/accuracy (default 10⁴ → tail thresholds within ~0.01% of rank;
-    value-error bound pinned in tests/test_aggregations.py). The
-    join-back shape is unchanged; default stays exact so the DuckDB
-    oracle hash-matches.
+    The thresholds are exact, so the DuckDB oracle hash-matches.
     """
     li = pscan(spark, f"{sf_dir}/lineitem.parquet")
-    approx = os.environ.get("SPARK_GRAFT_QUANTILE", "exact") == "approx"
-    if approx:
-        # sketch path unchanged: bounded-memory, partial-mergeable
-        thr = li.groupBy("l_returnflag").agg(
-            F.expr(
-                "percentile_approx(l_extendedprice, array(0.5D, 0.9D, 0.95D))"
-            ).alias("pp"),
-            F.expr("percentile_approx(l_quantity, 0.25D)").alias("p25q"),
-        ).select(
-            "l_returnflag",
-            F.col("pp")[0].alias("p50"),
-            F.col("pp")[1].alias("p90"),
-            F.col("pp")[2].alias("p95"),
-            "p25q",
-        )
-    else:
-        # r16 (guide §1.2/§4.2): the built-in exact percentile buffers
-        # every boxed value in a per-group hashmap — measured 1.20 s
-        # for the 594 k-distinct price column alone at sf0.1, the whole
-        # query's wall. The grouped-numpy operator sorts the same
-        # multiset vectorized and interpolates with Spark's own formula
-        # — bit-identical thresholds (pinned vs F.percentile), full
-        # query 1.53 → 0.91 s. (A pure-JVM row_number rank-select was
-        # measured too: Window buffering costs 0.63 s/column — no win;
-        # see operators/percentile.py.)
-        thr = exact_group_percentiles(
-            li,
-            "l_returnflag",
-            [
-                ("l_extendedprice", [0.5, 0.9, 0.95], "pp"),
-                ("l_quantity", [0.25], "qq"),
-            ],
-        ).select(
-            "l_returnflag",
-            F.col("pp")[0].alias("p50"),
-            F.col("pp")[1].alias("p90"),
-            F.col("pp")[2].alias("p95"),
-            F.col("qq")[0].alias("p25q"),
-        )
+    # r16 (guide §1.2/§4.2): the built-in exact percentile buffers
+    # every boxed value in a per-group hashmap — measured 1.20 s
+    # for the 594 k-distinct price column alone at sf0.1, the whole
+    # query's wall. The grouped-numpy operator sorts the same
+    # multiset vectorized and interpolates with Spark's own formula
+    # — bit-identical thresholds (pinned vs F.percentile), full
+    # query 1.53 → 0.91 s. (A pure-JVM row_number rank-select was
+    # measured too: Window buffering costs 0.63 s/column — no win;
+    # see operators/percentile.py.)
+    thr = exact_group_percentiles(
+        li,
+        "l_returnflag",
+        [
+            ("l_extendedprice", [0.5, 0.9, 0.95], "pp"),
+            ("l_quantity", [0.25], "qq"),
+        ],
+    ).select(
+        "l_returnflag",
+        F.col("pp")[0].alias("p50"),
+        F.col("pp")[1].alias("p90"),
+        F.col("pp")[2].alias("p95"),
+        F.col("qq")[0].alias("p25q"),
+    )
     return (
         li.join(F.broadcast(thr), "l_returnflag")
         .filter(F.col("l_extendedprice") > F.col("p95"))

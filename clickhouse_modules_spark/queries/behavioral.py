@@ -399,8 +399,8 @@ def q_seq_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization (gaps-and-islands): split each user's event
     stream at >30-minute silences, then per-session stats — the batch
-    twin of ``q_stream_session`` (same semantics, full-history replay
-    instead of watermarked state).
+    twin of the session leg of ``q_stream_windows`` (same semantics,
+    full-history replay instead of watermarked state).
 
     One user-keyed exchange feeds BOTH windows (lag + running sum share
     the partition/order) and the final groupBy reuses the same hash —

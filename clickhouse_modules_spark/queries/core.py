@@ -78,39 +78,3 @@ def q_project(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("charge"),
         F.upper("l_returnflag").alias("flag_upper"),
     )
-
-
-# Unregistered: the predicate family is driver-checked inside q_project;
-# kept as the operator API + pytest surface.
-def q_filter_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equality / range / IN / LIKE / BETWEEN / boolean-combination predicates.
-
-    Generalizes reference R1's single-equality WHERE (clickhouse_users.py:149).
-    All predicates are Catalyst-pushable into the parquet scan.
-    """
-    o = pscan(spark, f"{sf_dir}/orders.parquet")
-    return o.filter(
-        (F.col("o_orderstatus") == "O")
-        & F.col("o_totalprice").between(1000, 100000)
-        & F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-        & (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & ((F.col("o_custkey") % 2 == 0) | (F.col("o_totalprice") > 50000))
-        & F.col("o_orderpriority").like("_-%")
-        & F.col("o_custkey").isNotNull()
-    ).select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-
-
-# Unregistered: array membership (has) is driver-checked via
-# q_fn_collections.has_merge and the reconcile quota-membership golden
-# row (both array_contains); kept as the R5-shaped API function.
-def q_has(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array membership — ClickHouse ``has(arr, x)`` → ``array_contains``.
-
-    Mirrors reference R5: ``SELECT name FROM system.quotas WHERE
-    has(apply_to_list, '{user}')`` (clickhouse_users.py:179).
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return d.filter(
-        F.array_contains(F.split(F.col("text"), " ", -1), "spark")
-        & (F.col("lang") == "en")
-    ).select("doc_id", "lang")

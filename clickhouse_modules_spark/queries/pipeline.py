@@ -149,8 +149,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     even a 200-doc sketch slice costs +4 s of fixed Python-worker +
     band-join plumbing). The sketches are the 100 TB scale path and
     keep their own full execution + recall-floor pins in pytest
-    (q_dedup_sketches,
-    test_pipeline.py::test_minhash_banded_recall_and_precision and the
+    (test_pipeline.py::test_minhash_banded_recall_and_precision and the
     simhash completeness tests) — engine-specific xxhash outputs
     that have no DuckDB twin by nature (round-5 verdict item 5
     sanctioned exactly this split: 'drop the xxhash sketches from the
@@ -168,7 +167,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("hs"),
     )
-    sets = materialize(sets, name="near_shingle_sets")
+    sets = materialize(sets)
     ap = dedup.prefix_filter_candidates(sets, "doc_id", "hs", threshold=0.5)
     verified = dedup.jaccard_pairs(
         sets, "doc_id", "hs", band_df=ap, threshold=0.5
@@ -176,61 +175,7 @@ def q_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     return verified.select("id_a", "id_b", F.round("jaccard", 4).alias("jaccard"))
 
 
-# Unregistered single (the sketch outputs q_dedup_near no longer
-# surfaces — engine-specific scores, no DuckDB twin): pytest surface
-# for per-method attribution + recall floors.
-def q_dedup_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-based near-dup pairs with method tags and scores:
-    minhash (score = verified xxhash-shingle Jaccard) and simhash
-    (score = Hamming distance)."""
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    mh = dedup.minhash_banded_pairs(
-        d, "doc_id", "text", jaccard_threshold=0.5
-    ).select(
-        F.lit("minhash").alias("method"),
-        "id_a",
-        "id_b",
-        F.round("jaccard", 4).alias("score"),
-    )
-    sh = q_dedup_simhash_fn(spark, sf_dir).select(
-        F.lit("simhash").alias("method"),
-        "id_a",
-        "id_b",
-        F.col("hamming").cast("double").alias("score"),
-    )
-    return mh.unionByName(sh)
-
-
-# Unregistered single (absorbed into q_dedup_near): operator API surface.
-def q_dedup_simhash_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup: banded candidate pairs at Hamming distance ≤ 3.
-
-    d ≤ 3 with 4 × 16-bit bands is the Manku et al. configuration and
-    makes the banding COMPLETE by pigeonhole — 3 flipped bits cannot
-    touch all 4 bands, so every qualifying pair collides on ≥1 band:
-    recall is exactly 1.0, not probabilistic. (A looser cut like d ≤ 8
-    both loses that guarantee and, on this vocabulary-homogeneous
-    corpus, passes ~6% of ALL pairs — 777k rows at sf0.1.)
-
-    The distance cut rides inside simhash_candidates (before its
-    distinct) — map-side bit_count, so the distinct only shuffles near
-    pairs instead of every band collision.
-    """
-    d = parallel_scan(
-        pscan(spark, f"{sf_dir}/documents.parquet"),
-        path=f"{sf_dir}/documents.parquet",
-    )
-    # 8 plan references (4 bands × 2 join sides) read the fingerprint
-    # table — materialize the UDF output once.
-    fp = materialize(
-        d.select("doc_id", dedup.simhash64("text").alias("simhash")),
-        name="simhash_fp",
-    )
-    return dedup.simhash_candidates(fp, "doc_id", max_hamming=3)
-
-
-# Shared by the q_dedup_ngram oracle and (as the edge source) the
-# q_dedup_cluster recursive-CTE oracle.
+# The edge source of the q_dedup_cluster recursive-CTE oracle.
 _NGRAM_PAIR_CTES = """
     toks AS (
         SELECT doc_id, string_split(text, ' ') AS w FROM documents
@@ -277,8 +222,7 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once (the expensive interpreted-HOF chain; measured ~2× faster
     # end-to-end than relying on exchange reuse alone).
     base = materialize(
-        keyed.repartition(spark.sparkContext.defaultParallelism, "band_key"),
-        name="ngram_bands",
+        keyed.repartition(spark.sparkContext.defaultParallelism, "band_key")
     )
     a = base.select(
         F.col("doc_id").alias("id_a"), "band_key", F.col("toks").alias("set_a")
@@ -294,22 +238,6 @@ def _ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
         .filter(F.col("jaccard") >= 0.4)
     )
-
-
-# Unregistered single (absorbed into q_dedup_cluster, whose
-# recursive-CTE oracle re-derives these pairs and value-checks the
-# clustering built on them): operator API + pytest surface.
-def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-set Jaccard over CONTENT-banded candidate pairs.
-
-    Band key = min over 3-word shingles of md5(shingle) — a one-hash
-    MinHash: P(two docs share the key) = shingle-Jaccard. md5 is
-    bit-identical in Spark and DuckDB, so the full pipeline (banding +
-    verification) is oracle-checked. Measured at sf0.01: 135 candidate
-    pairs from 500 docs (vs 124,750 all-pairs); a low-cardinality
-    attribute key like lang would be O(n²) in the dominant bucket.
-    """
-    return _ngram_pairs(spark, sf_dir)
 
 
 @query(
@@ -499,8 +427,7 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 100 TB of vectors this is the "LSH index", persisted properly
     # (partitioned by band bucket) rather than checkpointed.
     sig = materialize(
-        e.select("vec_id", F.explode(buckets(F.col("embedding"))).alias("bucket")),
-        name="embed_sig",
+        e.select("vec_id", F.explode(buckets(F.col("embedding"))).alias("bucket"))
     )
     # Bucket cap (replicated in the oracle): the window's count shuffles
     # on bucket — the same exchange the self-join needs anyway.
@@ -592,7 +519,7 @@ def q_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referenced by the exact leg AND both recall contracts — pinned via
     # materialize so the scan+TakeOrdered runs once, not three times.
     qv = _query_vec(spark, sf_dir)
-    ex = materialize(q_sim_topk(spark, sf_dir, query_vec=qv), name="sim_exact")
+    ex = materialize(q_sim_topk(spark, sf_dir, query_vec=qv))
     exact_rows = ex.select(
         F.lit("exact").alias("method"),
         "vec_id",
@@ -689,207 +616,6 @@ def q_sim_ivf(
         e, "embedding", "vec_id", qv, k=10,
         n_clusters=16, n_probe=10,
     )
-
-
-# ------------------------------------------------------------------- text
-# Unregistered single (corpus stats absorbed into q_pipeline_e2e): operator API + pytest surface.
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus statistics per language."""
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return d.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-        F.round(F.avg(F.size(F.split("text", " ", -1))), 4).alias("avg_words"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-    )
-
-
-# Unregistered single (absorbed into q_text_profile): operator API + pytest surface.
-def q_text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace + BPE-ish (ceil(len/4) per word)."""
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return d.filter(F.col("doc_id") < 100).select(
-        "doc_id",
-        textstats.token_count_ws("text").cast("long").alias("n_tokens_ws"),
-        textstats.token_count_bpe("text").cast("long").alias("n_tokens_bpe"),
-    )
-
-
-def _langid_oracle() -> str:
-    """DuckDB replica of textstats.lang_id: per-language stopword-hit
-    scores, argmax with first-alphabetical tie-break, 'und' on zero."""
-    langs = sorted(textstats.LANG_MARKERS)
-    score = {
-        lang: " + ".join(
-            f"list_contains(ws, '{m}')::INT" for m in textstats.LANG_MARKERS[lang]
-        )
-        for lang in langs
-    }
-    score_cols = ", ".join(f"({score[lang]}) AS s_{lang}" for lang in langs)
-    g = "GREATEST(" + ", ".join(f"s_{lang}" for lang in langs) + ")"
-    # lang_id updates only on STRICTLY greater while scanning langs in
-    # sorted order → ties resolve to the first alphabetical language.
-    arms = " ".join(f"WHEN s_{lang} = {g} THEN '{lang}'" for lang in langs[:-1])
-    return f"""
-    WITH w AS (SELECT doc_id, lang, string_split(text, ' ') AS ws FROM documents),
-    s AS (SELECT doc_id, lang, {score_cols} FROM w)
-    SELECT doc_id, lang,
-           CASE WHEN {g} = 0 THEN 'und' {arms} ELSE '{langs[-1]}' END AS lang_pred
-    FROM s
-    """
-
-
-# Unregistered single (absorbed into q_text_profile): operator API surface.
-def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID heuristic alongside the labeled lang column.
-
-    The oracle replicates the classifier exactly (marker hit counts +
-    strict-greater argmax), so the whole heuristic is oracle-checked.
-    NOTE: the fixture corpus's lang labels are synthetic noise — every
-    doc draws from the same tech vocabulary, so label recovery from text
-    is impossible by construction. Classifier accuracy is asserted on a
-    real marker-bearing micro-corpus in tests/test_pipeline.py."""
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return d.select(
-        "doc_id",
-        "lang",
-        textstats.lang_id("text").alias("lang_pred"),
-    )
-
-
-# Unregistered single (absorbed into q_text_profile): operator API + pytest surface.
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality score: length + alpha-ratio + stopword components."""
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return d.filter(F.col("doc_id") < 100).select(
-        "doc_id",
-        F.round(textstats.quality_score("text"), 6).alias("quality"),
-    )
-
-
-# Unregistered single (absorbed into q_text_profile): operator API + pytest surface.
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash document fingerprint (min md5 over 8-char shingles)."""
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return d.filter(F.col("doc_id") < 100).select(
-        "doc_id", textstats.fingerprint("text")
-    )
-
-
-# Unregistered single (absorbed into q_text_chunk_scrub): operator API + pytest surface.
-def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document chunking: 256-char windows, 32-char overlap (stride 224).
-
-    Scan-shaped row multiplication (posexplode over computed offsets) —
-    the tokenize-and-pack precursor for a training pipeline.
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 200)
-    return textprep.chunk_text(d, "text", "doc_id", size=256, overlap=32)
-
-
-# Unregistered single (absorbed into q_text_chunk_scrub): operator API + pytest surface.
-def q_text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing over text seeded with a synthetic email + phone per
-    doc (the fixture corpus contains no real PII, so the query injects a
-    deterministic specimen and the oracle injects the same one).
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 200)
-    payload = F.concat(
-        F.substring("text", 1, 40),
-        F.lit(" reach user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com or +1-555-123-4567 now"),
-    )
-    return d.select(
-        "doc_id", textprep.scrub_pii(payload).alias("scrubbed")
-    )
-
-
-# Unregistered single (absorbed into q_pipeline_e2e): operator API + pytest surface.
-def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 90/5/5 train/val/test split from md5(doc_id).
-
-    Engine-portable and re-run-stable: a doc never migrates between
-    splits when the corpus grows or the pipeline re-runs — the property
-    that keeps eval sets uncontaminated across dataset versions.
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet")
-    return (
-        d.select(textprep.hash_split("doc_id", 90, 5).alias("split"), "doc_id")
-        .groupBy("split")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("min_id"))
-    )
-
-
-# ------------------------------------------------------------- multimodal
-# Unregistered single (absorbed into q_multimodal): operator API + pytest surface.
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column decode plumbing via mapInPandas (stubbed decoder).
-
-    The oracle reproduces the stub's deterministic arithmetic — what is
-    being validated is the Arrow batch plumbing and schema contract.
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 100)
-    with_media = multimodal.attach_binary_payload(d, "text")
-    meta = multimodal.decode_image_meta(with_media)
-    return meta.select(
-        "doc_id",
-        "n_bytes",
-        "format",
-        F.col("width").cast("long").alias("width"),
-        F.col("height").cast("long").alias("height"),
-    )
-
-
-# Unregistered single (absorbed into q_multimodal): operator API + pytest surface.
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing: binary in → binary out + new dims (stub codec).
-
-    The oracle replicates the stub's aspect-preserving scale and
-    area-proportional byte truncation arithmetically; what's validated
-    is the binary-in/binary-out mapInPandas stage a real
-    decode→resize→re-encode pipeline needs.
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 100)
-    resized = multimodal.resize_images(multimodal.attach_binary_payload(d, "text"))
-    return resized.select(
-        "doc_id",
-        F.length("media").cast("long").alias("n_bytes_out"),
-        "width",
-        "height",
-    )
-
-
-# Unregistered single (absorbed into q_multimodal): operator API + pytest surface.
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature extraction plumbing: binary → fixed-dim double vector.
-
-    Fake features = per-chunk byte means (np.array_split layout: first
-    n%8 chunks get the extra byte) scaled to [0,1]; the oracle rebuilds
-    the same chunking per character (text is ASCII, byte == char). Both
-    sides produce bit-identical doubles (exact integer sums / IEEE
-    division), so the array column hash-matches without rounding.
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 100)
-    return multimodal.extract_features(
-        multimodal.attach_binary_payload(d, "text"), dim=8
-    )
-
-
-# Unregistered single (absorbed into q_multimodal): operator API + pytest surface.
-def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling: 1 input row → N frame rows via mapInPandas.
-
-    The video-decode step is stubbed (a 'frame' = a 64-byte payload
-    slice, tagged with its md5); what the oracle checks is the
-    one-to-many Arrow iterator contract — row multiplication, frame
-    indexing, and byte-exact slicing (text is ASCII, so byte offsets
-    equal the oracle's character offsets).
-    """
-    d = pscan(spark, f"{sf_dir}/documents.parquet").filter(F.col("doc_id") < 100)
-    with_media = multimodal.attach_binary_payload(d, "text")
-    return multimodal.sample_frames(with_media, every_n_bytes=64)
 
 
 @query(
@@ -1139,8 +865,8 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("text").alias("n_chars"),
     )
     # min/max chars + min doc id per cell: the per-(split,lang) corpus
-    # statistics (q_text_stats shape) and the hash-split assignment
-    # (q_split_hash shape) are both driver-checked here.
+    # statistics and the hash-split assignment are both driver-checked
+    # here.
     return labeled.groupBy("split", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("total_tokens"),
@@ -1205,6 +931,11 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("mx") / F.col("tot").cast("double"), 6), F.lit(0.0)
         ).alias("top_bigram_frac"),
     )
+
+
+# Largest pairable-shingle set q_text_contaminate compiles into an IN
+# list; past it the query falls back to a shuffle semi-join.
+_CONTAMINATE_IN_LIST_BOUND = 100_000
 
 
 @query(
@@ -1280,7 +1011,7 @@ def q_text_contaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
         )
     )
-    sh = materialize(sh, name="contaminate_shingles")
+    sh = materialize(sh)
     # r16 (guide §2.3/§3): one stats pass replaces the r15
     # hot-set-materialize + probe + broadcast-anti-join chain. A
     # shingle h contributes a (train, bench) pair iff ≥1 bench doc AND
@@ -1305,7 +1036,7 @@ def q_text_contaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("df") <= 100) & (F.col("nb") >= 1)
         & (F.col("df") - F.col("nb") >= 1)
     )
-    bound = 100_000
+    bound = _CONTAMINATE_IN_LIST_BOUND
     pair_rows = pairable.select("h", "nb").limit(bound + 1).collect()
     if len(pair_rows) <= bound:
         hs = [r["h"] for r in pair_rows]
@@ -1313,7 +1044,7 @@ def q_text_contaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(False)
         )
         bench_rows = sum(r["nb"] for r in pair_rows)
-    else:  # pragma: no cover - fixture sets are far below the bound
+    else:
         kept = sh.join(pairable.select("h"), "h")
         bench_rows = None
     train = kept.filter(F.col("doc_id") % 50 != 0).withColumnRenamed(
@@ -1557,8 +1288,9 @@ def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ONE wide projection plus the bigram pass:
 
     - ``lang_pred``: marker-hit language-ID heuristic (oracle replays
-      the classifier exactly; see q_text_langid for why the synthetic
-      lang labels are unrecoverable by construction);
+      the classifier exactly). The fixture's lang labels are synthetic
+      noise (every doc draws from one vocabulary), so accuracy is
+      asserted on a marker-bearing micro-corpus in pytest instead;
     - ``n_tokens_ws`` / ``n_tokens_bpe``: whitespace + BPE-ish token
       counts;
     - ``quality``: length/alpha-ratio/stopword quality score;

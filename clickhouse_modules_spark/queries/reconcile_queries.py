@@ -100,46 +100,3 @@ def q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "seq int, kind string, k string, v string",
     )
     return exists.unionByName(quota).unionByName(plan)
-
-
-# Unregistered singles (absorbed into q_reconcile): operator API surface.
-def q_user_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 — existence probe over the users catalog, one row per name."""
-    catalog = Catalog.demo(spark)
-    probes = spark.createDataFrame(
-        [("db_admin",), ("app_user",), ("ghost_user",)], "name string"
-    )
-    return (
-        probes.join(catalog.users.select("name", "auth_type"), "name", "left")
-        .select("name", F.col("auth_type").isNotNull().alias("exists"))
-    )
-
-
-def q_quota_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R5/R6 — quotas applying to a user via array_contains plus the
-    full apply list (clickhouse_users.py:179-180)."""
-    catalog = Catalog.demo(spark)
-    return catalog.quotas.select(
-        "name",
-        F.array_contains(F.col("apply_to_list"), "app_user").alias("applies_to_app_user"),
-        F.array_join(F.sort_array("apply_to_list"), ",").alias("apply_list"),
-    )
-
-
-def q_reconcile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end plan: diff a desired user spec against the demo
-    catalog and return the planned statement list."""
-    catalog = Catalog.demo(spark)
-    stmts = plan_user(
-        catalog,
-        user="new_analyst",
-        password="s3cret",
-        roles=["reader_role", "analyst_role"],
-        init_roles=True,
-        quota="test_quota",
-        profile="custom_profile",
-    )
-    return spark.createDataFrame(
-        [(i, s.op, s.reported_sql) for i, s in enumerate(stmts)],
-        "seq int, op string, sql string",
-    )

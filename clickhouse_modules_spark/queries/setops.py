@@ -63,35 +63,3 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit("except").alias("op"), "nationkey", F.lit("").alias("src"))
     )
     return union.unionByName(inter).unionByName(exc)
-
-
-# Unregistered singles (absorbed into q_set_ops): operator API surface.
-def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UNION ALL of two projected+distinct legs (union-by-name)."""
-    c = pscan(spark, f"{sf_dir}/customer.parquet")
-    s = pscan(spark, f"{sf_dir}/supplier.parquet")
-    left = c.select(F.col("c_nationkey").alias("nationkey")).distinct().withColumn(
-        "src", F.lit("customer")
-    )
-    right = s.select(F.col("s_nationkey").alias("nationkey")).distinct().withColumn(
-        "src", F.lit("supplier")
-    )
-    return left.unionByName(right)
-
-
-def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERSECT (distinct): nations having both customers and suppliers."""
-    c = pscan(spark, f"{sf_dir}/customer.parquet")
-    s = pscan(spark, f"{sf_dir}/supplier.parquet")
-    return c.select(F.col("c_nationkey").alias("nationkey")).intersect(
-        s.select(F.col("s_nationkey").alias("nationkey"))
-    )
-
-
-def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT (distinct): nations with customers but no suppliers."""
-    c = pscan(spark, f"{sf_dir}/customer.parquet")
-    s = pscan(spark, f"{sf_dir}/supplier.parquet")
-    return c.select(F.col("c_nationkey").alias("nationkey")).subtract(
-        s.select(F.col("s_nationkey").alias("nationkey"))
-    )

@@ -65,8 +65,7 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side on the row_number predicate.
 
     o_orderkey in ORDER BY is the unique tie-breaker: row_number over a
-    non-unique ordering is nondeterministic. (ntile rides the same
-    window shape; asserted in pytest via q_win_rank.)
+    non-unique ordering is nondeterministic.
     """
     o = pscan(spark, f"{sf_dir}/orders.parquet")
     w = Window.partitionBy("o_orderstatus").orderBy(

@@ -195,31 +195,12 @@ def q_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tumb.unionByName(slid).unionByName(sess).unionByName(dedup)
 
 
-# Unregistered singles (absorbed into q_stream_windows): operator API +
-# pytest surface.
+# Unregistered single (absorbed into q_stream_windows): pytest surface.
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 10-min windows per event_type, with watermark."""
     return sw.run_to_memory(
         sw.tumbling_counts(sw.events_stream(spark, sf_dir)),
         "q_stream_tumbling_sink",
-        output_mode="complete",
-    )
-
-
-def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding 10-min windows every 5 min (each event in 2 windows)."""
-    return sw.run_to_memory(
-        sw.sliding_counts(sw.events_stream(spark, sf_dir)),
-        "q_stream_sliding_sink",
-        output_mode="complete",
-    )
-
-
-def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session windows (30-min gap) per user."""
-    return sw.run_to_memory(
-        sw.session_counts(sw.events_stream(spark, sf_dir)),
-        "q_stream_session_sink",
         output_mode="complete",
     )
 

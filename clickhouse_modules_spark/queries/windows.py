@@ -84,62 +84,3 @@ def q_win_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same larger-first remainder rule
         F.ntile(4).over(w).alias("qtile"),
     )
-
-
-# Unregistered singles (absorbed into q_win_analytic / q_topk): kept as
-# the operator API + pytest surface (q_win_rank additionally covers
-# ntile, which q_topk's filtered output can't surface).
-def q_win_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """row_number / rank / dense_rank / ntile per status by price."""
-    o = pscan(spark, f"{sf_dir}/orders.parquet")
-    w = Window.partitionBy("o_orderstatus").orderBy(
-        F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
-    )
-    return o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.row_number().over(w).alias("rn"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-    )
-
-
-def q_win_laglead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag / lead / first / last within each order by line number."""
-    li = pscan(spark, f"{sf_dir}/lineitem.parquet")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey"
-    )
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        "l_quantity",
-        F.lag("l_quantity").over(w).alias("prev_qty"),
-        F.lead("l_quantity").over(w).alias("next_qty"),
-        F.first("l_partkey").over(w).alias("first_part"),
-        F.last("l_partkey").over(w_full).alias("last_part"),
-    )
-
-
-def q_win_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame windows: running sum + 3-row moving average."""
-    li = pscan(spark, f"{sf_dir}/lineitem.parquet")
-    w = Window.partitionBy("l_orderkey").orderBy(
-        "l_linenumber", "l_partkey", "l_suppkey"
-    )
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.round(
-            F.sum("l_extendedprice").over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-            2,
-        ).alias("running_total"),
-        F.round(
-            F.avg("l_extendedprice").over(w.rowsBetween(-2, Window.currentRow)), 4
-        ).alias("moving_avg3"),
-    )

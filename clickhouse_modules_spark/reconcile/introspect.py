@@ -83,12 +83,6 @@ def quota_apply_list(catalog: Catalog, quota: str) -> list[str]:
     return list(rows[0][0]) if rows else []
 
 
-def role_exists(catalog: Catalog, role: str) -> bool:
-    """Existence probe on roles (implied by CREATE ROLE IF NOT EXISTS —
-    clickhouse_users.py:234-237; we track roles explicitly)."""
-    return catalog.roles.filter(F.col("name") == F.lit(role)).limit(1).count() > 0
-
-
 def get_grants(catalog: Catalog, grantee: str) -> list[tuple[str, str, str]]:
     """Current privilege grants for a grantee: (privilege, database, table)."""
     rows = (

@@ -134,36 +134,25 @@ def get_spark(app_name: str = "clickhouse_modules_spark") -> SparkSession:
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
+    # Only static confs go on the builder; configure_session applies
+    # RUNTIME_CONFS to the session it returns.
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # runtime-size-gated SMJ→SHJ rewrite; see RUNTIME_CONFS (r16)
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            "134217728",
-        )
         # r15: ContextCleaner only unpersists dead localCheckpoint/
         # broadcast blocks when a JVM GC happens; with an 8 g heap that
         # can be never, so a long multi-query session accumulates every
         # prior query's materialized intermediates in storage memory
         # (measured 40-170 s vs a flat 20.6 s on one sf10 query).
-        # Static conf — applies to sessions WE build; harnesses that
-        # receive a foreign session force a System.gc() between queries
-        # instead (bench.py / run_sf_sweep.py).
+        # Static conf — applies to sessions WE build; a caller that
+        # receives a foreign session forces a System.gc() between
+        # queries instead (tools/run_sf_sweep.py does).
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
-        # r16: bench.py reads per-query executor task-time as DELTAS of
-        # the status store's cumulative stage counters; keep enough
-        # stage history that a delta never spans an eviction (a
-        # multi-query session retires hundreds of stages)
+        # perfbench/spans.py:stage_table reads per-operation executor
+        # counters as DELTAS of the status store's cumulative stage
+        # list; keep enough stage history that a delta never spans an
+        # eviction (a multi-query session retires hundreds of stages)
         .config("spark.ui.retainedStages", "20000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

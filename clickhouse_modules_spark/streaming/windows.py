@@ -133,28 +133,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # composite when scoped to 8. The conf is read once at query START, so
 # a scoped set around .start()/awaitTermination() affects only the
 # streaming jobs inside; a refcount handles the composites that launch
-# jobs from a thread pool (first-in sets, last-out restores). At
-# production scale RAISE the knob via SPARK_GRAFT_STREAM_PARTITIONS —
-# state-store count should track state size, not the batch shuffle
-# width.
+# jobs from a thread pool (first-in sets, last-out restores). The
+# state-store count tracks state size (the source-size hint below), not
+# the batch shuffle width.
 _SSP_LOCK = threading.Lock()
 _SSP_DEPTH = 0
 _SSP_SAVED: dict[str, str] | None = None
 
-# Optional RocksDB-backed state store (SPARK_GRAFT_STATE_STORE=rocksdb):
-# the default HDFS provider keeps EVERY store's state on-heap — at
-# 100 TB streaming scale (dedup sets, session windows over months)
-# state ≫ executor heap and the job OOMs; RocksDB spills state to local
-# SSD with bounded block-cache memory. One conf line, scoped+restored
-# exactly like the partition knob so batch jobs are untouched; the
-# provider is read at query START, so scoping around .start() is
-# sufficient. Same results either way (pinned in tests/test_streaming).
-_STATE_STORE_CONF = "spark.sql.streaming.stateStore.providerClass"
 _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
 # size-derived suggestion from the last events_stream() source (bytes /
 # 512 KiB, clamped to [4, defaultParallelism]): 4 stores at fixture
 # scale, rising toward core count as the replayed history grows
@@ -180,9 +166,7 @@ def stream_scope(
     n_partitions: int | None = None,
 ):
     """Scoped session confs for streaming jobs: shuffle-partition count
-    (state-store width), no-data micro-batches (``nodata``), and, when
-    ``SPARK_GRAFT_STATE_STORE=rocksdb``, the RocksDB state-store
-    provider.
+    (state-store width) and no-data micro-batches (``nodata``).
 
     ``nodata=False`` (r15) skips availableNow's trailing no-data
     micro-batch — one whole batch of state-commit + sink overhead per
@@ -193,8 +177,7 @@ def stream_scope(
     full result each batch and update-mode sinks ship value CHANGES —
     a no-data batch adds nothing to either — so those runners always
     pass False; the append runner keeps the default unless its caller
-    knows the stream emits eagerly (e.g. dropDuplicates).
-    ``SPARK_GRAFT_STREAM_NODATA`` overrides both directions. Under the
+    knows the stream emits eagerly (e.g. dropDuplicates). Under the
     refcount, the FIRST scope's value wins for concurrently launched
     jobs; a nested nodata=True request under an active False scope
     RAISES (it would silently lose its watermark flush — see below),
@@ -214,14 +197,8 @@ def stream_scope(
     # operator (applyInPandasWithState) is throughput-bound on its
     # workers and wants ~cores, not ~state size — measured on
     # q_stream_stateful: 4 stores 8.7 s / 8 → 6.4 s / 16 → 5.5 s.
-    # Env still wins over both.
-    n = os.environ.get(
-        "SPARK_GRAFT_STREAM_PARTITIONS",
-        str(n_partitions or _SSP_HINT or 4),
-    )
-    nodata_v = os.environ.get(
-        "SPARK_GRAFT_STREAM_NODATA", "true" if nodata else "false"
-    )
+    n = str(n_partitions or _SSP_HINT or 4)
+    nodata_v = "true" if nodata else "false"
     with _SSP_LOCK:
         # 'first scope wins' is only safe in one direction: a nested
         # scope that NEEDS the trailing no-data batch (nodata=True —
@@ -254,11 +231,6 @@ def stream_scope(
             spark.conf.set("spark.sql.shuffle.partitions", n)
             _SSP_SAVED[_NODATA_CONF] = spark.conf.get(_NODATA_CONF)
             spark.conf.set(_NODATA_CONF, nodata_v)
-            if os.environ.get("SPARK_GRAFT_STATE_STORE") == "rocksdb":
-                _SSP_SAVED[_STATE_STORE_CONF] = spark.conf.get(
-                    _STATE_STORE_CONF
-                )
-                spark.conf.set(_STATE_STORE_CONF, _ROCKSDB_PROVIDER)
     try:
         yield
     finally:

@@ -34,7 +34,7 @@ def _sets(spark, sf_dir):
 
 
 def _pairs_from_scratch(sets):
-    sets = materialize(sets, name="scratch_sets")
+    sets = materialize(sets)
     cand = dedup.prefix_filter_candidates(sets, "doc_id", "hs", THRESH)
     return dedup.jaccard_pairs(
         sets, "doc_id", "hs", band_df=cand, threshold=THRESH
@@ -123,7 +123,7 @@ def test_probe_reads_only_matching_buckets(spark, sf_small, tmp_path):
     s = _sets(spark, sf_small)
     a = s.filter(F.pmod(F.xxhash64("doc_id"), F.lit(5)) < 4)
     b = s.filter(F.pmod(F.xxhash64("doc_id"), F.lit(5)) >= 4).limit(3)
-    b = materialize(b, name="tiny_probe")
+    b = materialize(b)
     path = str(tmp_path / "idx")
     dedup.build_prefix_index(a, "doc_id", "hs", path, threshold=THRESH)
     m = spark.read.parquet(f"{path}/meta").first()

@@ -1,42 +1,16 @@
-"""materialize() knob: every mode must return the SAME rows — the knob
-trades fault tolerance / memory residency, never results."""
+"""materialize() pins an intermediate without changing its rows."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from clickhouse_modules_spark.operators import cluster
 from clickhouse_modules_spark.operators.materialize import materialize
 
 
-@pytest.mark.parametrize("mode", ["checkpoint", "persist", "table", "none"])
+@pytest.mark.parametrize("mode", ["checkpoint"])
 def test_modes_preserve_rows(spark, mode):
     df = spark.range(0, 100).withColumn("v", F.col("id") % 7)
-    out = materialize(df, mode=mode)
+    out = materialize(df)
     assert out.count() == 100
     assert out.agg(F.sum("v")).collect()[0][0] == df.agg(F.sum("v")).collect()[0][0]
-
-
-def test_unknown_mode_raises(spark):
-    with pytest.raises(ValueError, match="unknown materialize mode"):
-        materialize(spark.range(1), mode="bogus")
-
-
-@pytest.mark.parametrize("mode", ["persist", "none"])
-def test_connected_components_identical_under_modes(spark, monkeypatch, mode):
-    """The iterative CC operator (the heaviest materialize consumer)
-    must produce identical clusters under a fault-tolerant mode."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 20)], ["src", "dst"]
-    )
-    base = {
-        (r["id"], r["cluster_id"])
-        for r in cluster.connected_components(edges).collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", mode)
-    got = {
-        (r["id"], r["cluster_id"])
-        for r in cluster.connected_components(edges).collect()
-    }
-    assert got == base

@@ -189,48 +189,3 @@ class TestChColumnApiParity:
         assert r["auniq"] == 2 and r["apop"] == [1, 2]
         assert r["dow"] == 4  # Thursday, Monday-based
         assert str(r["soq"]).startswith("2026-07-01")
-
-
-def test_quantile_filter_approx_knob(spark, sf_med, monkeypatch):
-    # SPARK_GRAFT_QUANTILE=approx swaps exact percentile for the
-    # bounded-memory Greenwald-Khanna sketch in the threshold pass.
-    # percentile_approx guarantees RANK error <= 1/accuracy (1e-4 at
-    # the default): the returned threshold is an ACTUAL data value
-    # whose rank is within eps of the target, so it must fall inside
-    # the exact [p_target - 0.01, p_target + 0.01] value bracket.
-    from clickhouse_modules_spark.queries.aggregations import (
-        q_agg_quantile_filter,
-    )
-
-    exact = {
-        r["l_returnflag"]: r
-        for r in q_agg_quantile_filter(spark, sf_med).collect()
-    }
-    li = spark.read.parquet(f"{sf_med}/lineitem.parquet")
-    brackets = {
-        r["l_returnflag"]: r
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.expr(
-                "percentile(l_extendedprice, array(0.94D, 0.96D))"
-            ).alias("b95"),
-            F.expr(
-                "percentile(l_quantity, array(0.24D, 0.26D))"
-            ).alias("b25"),
-        )
-        .collect()
-    }
-    monkeypatch.setenv("SPARK_GRAFT_QUANTILE", "approx")
-    approx = {
-        r["l_returnflag"]: r
-        for r in q_agg_quantile_filter(spark, sf_med).collect()
-    }
-    assert set(approx) == set(exact)
-    for flag, a in approx.items():
-        b = brackets[flag]
-        assert b["b95"][0] <= a["p95_price"] <= b["b95"][1], flag
-        assert b["b25"][0] <= a["p25_qty"] <= b["b25"][1], flag
-        # the filter+rollup leg still runs and stays plausible: counts
-        # within 30% of the exact run (threshold moved by <=1e-4 rank)
-        e = exact[flag]
-        assert abs(a["n_above"] - e["n_above"]) <= max(5, 0.3 * e["n_above"])

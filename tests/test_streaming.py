@@ -167,8 +167,8 @@ def test_without_watermark_late_event_counts(spark, late_data_dir):
 
 def test_session_window_merges_on_exact_gap_boundary(spark):
     """Spark's [t, t+gap) session windows MERGE when touching: an event
-    at exactly prev+gap extends the session. The q_stream_session
-    oracle therefore uses a STRICT '>' gap test — pin the engine
+    at exactly prev+gap extends the session. The q_stream_windows
+    session-leg oracle therefore uses a STRICT '>' gap test — pin the engine
     behavior this depends on."""
     from datetime import datetime
 
@@ -243,36 +243,6 @@ def test_stream_partition_scope_restores_on_failure(spark, tmp_path):
     with _pytest.raises(Exception):
         sw.run_to_memory(doomed, "t_doomed")
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-
-
-def test_rocksdb_state_store_same_results(spark, sf_small, monkeypatch):
-    """SPARK_GRAFT_STATE_STORE=rocksdb swaps the state-store provider
-    (the 100 TB posture: state spills to local disk instead of heap)
-    inside stream_scope only — identical results, conf restored after."""
-    from clickhouse_modules_spark.queries.streaming_queries import (
-        q_stream_windows,
-    )
-
-    def rows(df):
-        return {tuple(r) for r in df.collect()}
-
-    from clickhouse_modules_spark.queries.streaming_queries import (
-        q_stream_stateful,
-    )
-
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    before = spark.conf.get(conf_key)
-    default = rows(q_stream_windows(spark, sf_small))
-    default_state = rows(q_stream_stateful(spark, sf_small))
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    rocks = rows(q_stream_windows(spark, sf_small))
-    assert rocks == default and len(rocks) > 0
-    # the applyInPandasWithState operator keeps per-group state in the
-    # SAME store abstraction — must survive the provider swap too
-    rocks_state = rows(q_stream_stateful(spark, sf_small))
-    assert rocks_state == default_state and len(rocks_state) > 0
-    # scoped: the session-level provider is untouched after the run
-    assert spark.conf.get(conf_key) == before
 
 
 def test_stream_dedup_against_index(spark, tmp_path):

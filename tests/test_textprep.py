@@ -186,6 +186,23 @@ class TestContamination:
         assert (7, 50) in pairs and pairs[(7, 50)] >= 3
         assert (8, 50) not in pairs
 
+    def test_semi_join_fallback_matches_in_list(self, spark, sf_med, monkeypatch):
+        """Past the IN-list bound the query takes the shuffle semi-join
+        branch; both branches return the same pairs."""
+        from clickhouse_modules_spark.queries import pipeline as qp
+
+        def pairs():
+            out = qp.q_text_contaminate(spark, sf_med).collect()
+            return sorted(tuple(r) for r in out)
+
+        in_list = pairs()
+        monkeypatch.setattr(qp, "_CONTAMINATE_IN_LIST_BOUND", 0)
+        fallback = pairs()
+        # a non-empty result implies a non-empty pairable set, which
+        # exceeds a bound of 0: the fallback branch ran
+        assert fallback
+        assert fallback == in_list
+
 
 class TestMixCorpora:
     def test_mixture_hits_target_shares(self, spark, sf_small):

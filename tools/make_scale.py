@@ -1,7 +1,8 @@
 """Synthesize a larger scale factor from sf0.1 by key-offset replication.
 
-Purpose: measured evidence for the scaling claims — run bench.py against
-the generated directory and compare per-query wall time vs sf0.1. The
+Purpose: measured evidence for the scaling claims — run
+tools/run_sf_sweep.py against the generated directory and compare
+per-query wall time vs sf0.1. The
 driver's fixtures stop at sf0.1; this produces ~sf1 (10 copies) in /tmp.
 
 Replication rules (FK-consistent, workload-linear):
