@@ -12,7 +12,7 @@ user runs around them — the table lifecycle:
   (mutations), ``ADD/DROP/RENAME/MODIFY COLUMN`` (metadata-only)
 - ``OPTIMIZE TABLE t [FINAL] [DEDUPLICATE]``, ``TRUNCATE``, ``DROP``,
   ``RENAME TABLE``, ``EXCHANGE TABLES``, ``ALTER TABLE t DROP/DETACH/
-  ATTACH PARTITION <id>`` (directory-level retention)
+  ATTACH PARTITION <id>`` (partition-level retention)
 - ``CREATE MATERIALIZED VIEW mv TO target AS SELECT …`` — CH's
   insert-triggered MV: the stored select runs over EACH INSERTED BATCH
   and appends to the target (the canonical CH streaming-ETL pattern),
@@ -32,8 +32,12 @@ itself, so a distinct prefix changes nothing.
 
 Spark-first mapping (not a MergeTree reimplementation):
 
-- A table is a parquet directory ``{root}/{name}/data`` plus a JSON
-  meta sidecar — schema, engine, ORDER BY, PARTITION BY, TTL.
+- A table is parquet part files under ``{root}/{name}/data`` plus a
+  JSON manifest ``meta.json`` (schema, engine, keys, TTL, ``next_seq``,
+  the live and the detached part lists). Readers read the live list.
+- Every write commits through ``ChWarehouse._commit``: the manifest's
+  atomic replace makes new parts visible and old ones invisible at
+  once (MergeTree's rename), so a crash leaves the old rows or the new.
 - ``ORDER BY`` → rows of every insert are sorted within write tasks,
   so parquet row-group min/max stats cluster on the key: scans with a
   key predicate skip row groups — the honest Spark analog of CH's
@@ -44,9 +48,9 @@ Spark-first mapping (not a MergeTree reimplementation):
   pruning ≈ CH partition pruning). Expression partitions (toYYYYMM…)
   become derived ``_p{i}`` columns, hidden from reads.
 - Mutations are copy-on-write rewrites — exactly what CH mutations are
-  (rewrite parts) — staged then swapped, and PARTITION-PRUNED: only
-  directories that contain matching rows are rewritten, so a
-  one-partition delete on a 100 TB table rewrites one partition.
+  (rewrite parts) — and PARTITION-PRUNED: only the parts of partitions
+  that contain matching rows are rewritten, so a one-partition delete
+  on a 100 TB table rewrites one partition.
 - ``ALTER ADD/DROP/RENAME/MODIFY COLUMN`` are METADATA-ONLY (CH
   semantics): no data rewrite at any scale; the read path projects
   historical file schemas onto the logical schema (default-fill,
@@ -58,11 +62,10 @@ Spark-first mapping (not a MergeTree reimplementation):
   block" (Collapsing FINAL) are deterministic even for same-key rows
   inside one INSERT.
 
-Not transactional against concurrent writers (same caveat as
-sources/registry.compact_table): at production scale these rewrites
-belong behind a table format's commit protocol; the statement
-semantics, pruning, and staged-swap plans are the part that carries
-over.
+One writer per table: two concurrent writers would each commit a
+manifest built from the same predecessor, and the later one wins
+(same caveat as sources/registry.compact_table). RENAME, EXCHANGE and
+BACKUP/RESTORE move whole table directories and are not atomic.
 
 Reference parity: the reference repo (bgsokolov/clickhouse_modules)
 manages users/roles/grants (reconcile/), not tables; the table DDL
@@ -72,11 +75,13 @@ user of the reference's cluster runs every day.
 
 from __future__ import annotations
 
+import glob
 import json
 import math
 import os
 import re
 import shutil
+import uuid
 from dataclasses import dataclass, field, asdict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -291,6 +296,10 @@ class TableMeta:
     settings: str | None = None
     next_seq: int = 0
     schema_evolved: bool = False
+    # part files relative to data/ (``_p0=202401/part-….parquet``):
+    # the live ones are the table; detached ones stay on disk unread
+    parts: list[str] = field(default_factory=list)
+    detached: list[str] = field(default_factory=list)
 
     def column(self, name: str) -> ColumnMeta:
         for c in self.columns:
@@ -733,6 +742,46 @@ class ChWarehouse:
             json.dump(asdict(meta), f, indent=1)
         os.replace(tmp, self._meta_path(meta.name))
 
+    def _commit(
+        self,
+        meta: TableMeta,
+        df: DataFrame | None = None,
+        garbage: list[str] | tuple = (),
+    ) -> None:
+        """The one write path for table data. The caller has edited
+        ``meta``; ``df`` holds rows to add, ``garbage`` the files the
+        edit unlisted. Spark writes ``df`` (sorted within tasks on ORDER
+        BY: row-group clustering) to a fresh staging directory; its
+        files move into ``data/<partition>/`` under their unique Spark
+        names and join ``meta.parts``; ``_save_meta`` commits; only then
+        are ``garbage``, emptied partition directories and the staging
+        directory deleted. Before the commit no manifest lists a new
+        file, so a crash at any step leaves the old rows or the new."""
+        data = f"{self._dir(meta.name)}/data"
+        stage = f"{self._dir(meta.name)}/_stage-{uuid.uuid4().hex}"
+        if df is not None:
+            sort_cols = [F.expr(e) for e in meta.order_by]
+            if sort_cols:
+                df = df.sortWithinPartitions(*sort_cols)
+            writer = df.write
+            if meta.partition_cols:
+                writer = writer.partitionBy(*meta.partition_cols)
+            writer.parquet(stage)
+            depth = "*=*/" * len(meta.partition_cols)
+            for rel in sorted(glob.glob(f"{depth}*.parquet", root_dir=stage)):
+                os.makedirs(os.path.dirname(f"{data}/{rel}"), exist_ok=True)
+                os.rename(f"{stage}/{rel}", f"{data}/{rel}")
+                meta.parts.append(rel)
+        self._save_meta(meta)
+        for rel in garbage:
+            os.remove(f"{data}/{rel}")
+        # deepest first, so a multi-level partition's parent empties too
+        for d in sorted({os.path.dirname(r) for r in garbage}, reverse=True):
+            while d and not os.listdir(f"{data}/{d}"):
+                os.rmdir(f"{data}/{d}")
+                d = os.path.dirname(d)
+        shutil.rmtree(stage, ignore_errors=True)
+
     def tables(self) -> list[str]:
         return sorted(
             e.name
@@ -752,24 +801,20 @@ class ChWarehouse:
         return ", ".join(f"`{c.name}` {c.spark_type}" for c in cols)
 
     def _raw_df(self, meta: TableMeta, session=None) -> DataFrame | None:
-        """The on-disk frame (stored names, _ch_seq, partition cols) or
-        None when no data files exist yet. ``session`` overrides the
-        session the frame binds to — required inside foreachBatch,
-        where the micro-batch DataFrame lives on a CLONED session and
-        frames from two sessions cannot join."""
-        data = f"{self._dir(meta.name)}/data"
-        has_files = os.path.isdir(data) and any(
-            f.endswith(".parquet")
-            for _r, _d, fs in os.walk(data)
-            for f in fs
-        )
-        if not has_files:
+        """The on-disk frame (stored names, _ch_seq, partition cols) of
+        the live parts, or None when there are none. ``basePath`` makes
+        Spark derive the partition columns from the part paths.
+        ``session`` overrides the session the frame binds to — required
+        inside foreachBatch, where the micro-batch DataFrame lives on a
+        CLONED session and frames from two sessions cannot join."""
+        if not meta.parts:
             return None
-        reader = (session or self.spark).read
+        data = f"{self._dir(meta.name)}/data"
+        reader = (session or self.spark).read.option("basePath", data)
         if meta.schema_evolved:
             # only evolved tables pay the all-footers merge cost
             reader = reader.option("mergeSchema", "true")
-        return reader.parquet(data)
+        return reader.parquet(*[f"{data}/{p}" for p in meta.parts])
 
     @staticmethod
     def _stored_expr(c: ColumnMeta, raw_cols: list[str]):
@@ -1080,7 +1125,10 @@ class ChWarehouse:
                 if m.group(2):
                     return None
                 raise ValueError(f"table {name} does not exist")
-            shutil.rmtree(f"{self._dir(name)}/data", ignore_errors=True)
+            # detached parts survive, as in CH
+            meta = self.meta(name)
+            garbage, meta.parts = meta.parts, []
+            self._commit(meta, garbage=garbage)
             return None
         if kw == "DROP":
             m = re.match(
@@ -1437,10 +1485,10 @@ class ChWarehouse:
         _mv_chain: frozenset = frozenset(),
     ) -> None:
         """Append a batch: align to the stored schema (defaults for
-        missing columns, MATERIALIZED computed, types cast), sort
-        within write tasks on ORDER BY (row-group clustering), stamp
-        ``_ch_seq``, write hive-partitioned — then fire materialized
-        views bound to this source over EXACTLY this batch."""
+        missing columns, MATERIALIZED computed, types cast), stamp
+        ``_ch_seq``, commit its parts together with the ``next_seq``
+        bump — then fire materialized views bound to this source over
+        EXACTLY this batch."""
         meta = self.meta(name)
         provided = provided if provided is not None else list(df.columns)
         exprs = []
@@ -1475,15 +1523,8 @@ class ChWarehouse:
             for expr_, col_ in zip(meta.partition_exprs, meta.partition_cols):
                 if col_ != expr_:
                     out = out.withColumn(col_, F.expr(expr_))
-            sort_cols = [F.expr(e) for e in meta.order_by]
-            if sort_cols:
-                out = out.sortWithinPartitions(*sort_cols)
-            writer = out.write.mode("append")
-            if meta.partition_cols:
-                writer = writer.partitionBy(*meta.partition_cols)
-            writer.parquet(f"{self._dir(name)}/data")
             meta.next_seq += 1
-            self._save_meta(meta)
+            self._commit(meta, out)
         # MV cascade: CH fires MVs on the INSERTED BLOCK, not the table.
         # Everything runs on the BATCH's session (inside foreachBatch
         # that is a clone of the main session; temp views registered on
@@ -1692,29 +1733,27 @@ class ChWarehouse:
         return sql_expr
 
     # Spark's escapePathName percent-encodes ':', '=', ' ', '%', …
-    # in partition directory names — a pruned swap with such a value
-    # would target the WRONG path and silently no-op. Only values
-    # whose str() is byte-identical to the directory token qualify;
-    # everything else takes the full-rewrite fallback.
+    # in partition directory names, so str(value) names the wrong
+    # directory. Only values whose str() is byte-identical to the
+    # directory token qualify for a pruned rewrite; everything else
+    # takes the full-rewrite fallback.
     _HIVE_SAFE = re.compile(r"^[A-Za-z0-9_.+-]+$")
 
     def _rewrite(self, meta, transform, prune_pred=None) -> None:
-        """Copy-on-write rewrite (the CH mutation model): stage the new
-        data, swap directories. With ``prune_pred`` and a partitioned
-        table, ONLY partitions containing matching rows rewrite — the
+        """Copy-on-write rewrite (the CH mutation model): the rewritten
+        rows replace the parts they were read from in one ``_commit``.
+        With ``prune_pred`` and a partitioned table, ONLY the parts of
+        partitions containing matching rows are read and replaced — the
         driver touches one row per affected partition (never per data
-        row), and untouched partition directories are never read or
-        written. Falls back to a full rewrite when a partition value
-        needs hive escaping (str(v) must equal the directory token for
-        the swap to be correct)."""
-        data = f"{self._dir(meta.name)}/data"
+        row). Falls back to a full rewrite when a partition value does
+        not name its directory (needs hive escaping, or str(v) differs
+        from Spark's token, e.g. booleans)."""
         raw = self._raw_df(meta)
         if raw is None:
             return
         canon = self._canon_stored(meta, raw)
-        stage = data + ".__stage__"
-        shutil.rmtree(stage, ignore_errors=True)
-        pruned = False
+        replaced = list(meta.parts)
+        new = None
         if prune_pred is not None and meta.partition_cols:
             affected = (
                 canon.filter(prune_pred)
@@ -1724,66 +1763,37 @@ class ChWarehouse:
             )
             if not affected:
                 return
-            vals_ok = all(
+            rels = {
+                "/".join(f"{pc}={r[pc]}" for pc in meta.partition_cols)
+                for r in affected
+            }
+            if rels <= {os.path.dirname(p) for p in meta.parts} and all(
                 v is not None and self._HIVE_SAFE.match(str(v))
                 for r in affected
                 for v in r
-            )
-            if vals_ok:
-                pruned = True
+            ):
                 keep = None
                 for r in affected:
                     clause = F.lit(True)
                     for pc in meta.partition_cols:
                         clause = clause & (F.col(pc) == F.lit(r[pc]))
                     keep = clause if keep is None else (keep | clause)
-                sub = canon.filter(keep)  # partition-pruned scan
-                new = transform(sub)
-                self._write_stored(meta, new, stage)
-                for r in affected:
-                    rel = "/".join(
-                        f"{pc}={r[pc]}" for pc in meta.partition_cols
-                    )
-                    live_dir = f"{data}/{rel}"
-                    stage_dir = f"{stage}/{rel}"
-                    shutil.rmtree(live_dir, ignore_errors=True)
-                    if os.path.isdir(stage_dir):
-                        os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-                        os.rename(stage_dir, live_dir)
-                shutil.rmtree(stage, ignore_errors=True)
-        if not pruned:
+                new = transform(canon.filter(keep))  # partition-pruned
+                replaced = [
+                    p for p in meta.parts if os.path.dirname(p) in rels
+                ]
+        if new is None:
             new = transform(canon)
-            self._write_stored(meta, new, stage)
-            old = data + ".__old__"
-            shutil.rmtree(old, ignore_errors=True)
-            os.rename(data, old)
-            os.rename(stage, data)
-            shutil.rmtree(old)
-        # rewritten rows are canonical: renames/fills materialized
-        # there, but other partitions may still hold historical schemas
-        # — the evolved flag (and the lazy-ADD watermarks: the defaults
-        # are now REAL stored values; leaving added_seq set would make
-        # the read path re-evaluate the default over them forever —
-        # visibly wrong for non-deterministic defaults like now())
-        # may only clear on a FULL rewrite
-        if not pruned:
-            changed = meta.schema_evolved
+            # every live row is now canonical: the defaults are REAL
+            # stored values, and a lazy-ADD watermark left set would
+            # re-evaluate them on read (wrong for now()). A pruned
+            # rewrite leaves historical schemas, so only this clears.
             meta.schema_evolved = False
             for c in meta.columns:
-                if c.added_seq is not None:
-                    c.added_seq = None
-                    changed = True
-            if changed:
-                self._save_meta(meta)
-
-    def _write_stored(self, meta: TableMeta, df: DataFrame, path: str) -> None:
-        sort_cols = [F.expr(e) for e in meta.order_by]
-        if sort_cols:
-            df = df.sortWithinPartitions(*sort_cols)
-        writer = df.write.mode("overwrite")
-        if meta.partition_cols:
-            writer = writer.partitionBy(*meta.partition_cols)
-        writer.parquet(path)
+                c.added_seq = None
+        gone = set(replaced)
+        meta.parts = [p for p in meta.parts if p not in gone]
+        self._commit(meta, new, garbage=replaced)
 
     def _alter(self, stmt: str) -> None:
         m = re.match(r"^ALTER\s+TABLE\s+(\w+)\s+(.*)$", stmt, re.S | re.I)
@@ -1893,20 +1903,12 @@ class ChWarehouse:
             # everywhere: a pruned rewrite would leave other partitions
             # reading the DEFAULT through the added_seq rule, masking
             # nothing — but the updated partitions' stored values would
-            # ALSO be masked by that rule. Full rewrite + clear the
-            # watermark instead.
-            lazy_targets = [
-                c for c in assigns if meta.column(c).added_seq is not None
-            ]
+            # ALSO be masked by that rule. A full rewrite clears the
+            # watermark in its commit instead.
+            lazy = any(meta.column(c).added_seq is not None for c in assigns)
             self._rewrite(
-                meta,
-                apply_update,
-                prune_pred=None if lazy_targets else match,
+                meta, apply_update, prune_pred=None if lazy else match
             )
-            if lazy_targets:
-                for c in lazy_targets:
-                    meta.column(c).added_seq = None
-                self._save_meta(meta)
             return None
         pm = re.match(
             r"^(DROP|DETACH|ATTACH)\s+PARTITION\s+(.+)$", body, re.S | re.I
@@ -2049,11 +2051,11 @@ class ChWarehouse:
 
     def _partition_op(self, meta: TableMeta, op: str, lit: str) -> None:
         """``ALTER TABLE t DROP/DETACH/ATTACH PARTITION <id>`` — THE
-        cheap retention ops: a partition is a directory, so dropping a
-        month of a 100 TB table is one directory remove, no data read.
-        DETACH moves it to ``{table}/detached/`` (recoverable); ATTACH
-        moves it back. The partition id is the literal partition VALUE
-        (tuple literal for multi-column partitioning)."""
+        cheap retention ops: no data read. DROP unlists a partition's
+        parts; DETACH moves them to the detached list (replacing an
+        earlier detached set), ATTACH moves them back — no file moves.
+        The partition id is the literal partition VALUE (tuple literal
+        for multi-column partitioning)."""
         if not meta.partition_cols:
             raise ValueError(f"table {meta.name} is not partitioned")
         vals = [v.strip().strip("'\"") for v in (
@@ -2069,32 +2071,37 @@ class ChWarehouse:
         rel = "/".join(
             f"{c}={v}" for c, v in zip(meta.partition_cols, vals)
         )
-        live = f"{self._dir(meta.name)}/data/{rel}"
-        detached = f"{self._dir(meta.name)}/detached/{rel}"
+        live = [p for p in meta.parts if os.path.dirname(p) == rel]
+        stash = [p for p in meta.detached if os.path.dirname(p) == rel]
         # CH semantics (r13 DDL-fuzzer finding, seed 2): partition ops
         # act on "all matching parts" — ZERO matching parts is a
         # silent no-op, not an error (dropping an already-empty month
         # must be idempotent for retention jobs). ATTACH onto a LIVE
-        # partition stays loud: CH would merge both part sets, which a
-        # directory move cannot express — documented divergence.
-        if op == "DROP":
-            if os.path.isdir(live):
-                shutil.rmtree(live)
-        elif op == "DETACH":
-            if os.path.isdir(live):
-                os.makedirs(os.path.dirname(detached), exist_ok=True)
-                shutil.rmtree(detached, ignore_errors=True)
-                os.rename(live, detached)
-        else:  # ATTACH
-            if not os.path.isdir(detached):
-                return None  # nothing detached → no-op, like CH
-            if os.path.isdir(live):
+        # partition stays loud: CH would merge both part sets —
+        # documented divergence.
+        garbage: list[str] = []
+        if op == "ATTACH":
+            if not stash:
+                return None
+            if live:
                 raise ValueError(
                     f"partition {rel} already attached — CH would "
                     "merge the part sets; move the data explicitly"
                 )
-            os.makedirs(os.path.dirname(live), exist_ok=True)
-            os.rename(detached, live)
+            meta.detached = [p for p in meta.detached if p not in stash]
+            meta.parts += stash
+        elif not live:
+            return None
+        else:
+            meta.parts = [p for p in meta.parts if p not in live]
+            if op == "DROP":
+                garbage = live
+            else:
+                meta.detached = [
+                    p for p in meta.detached if p not in stash
+                ] + live
+                garbage = stash
+        self._commit(meta, garbage=garbage)
         return None
 
     def show_create(self, name: str) -> str:
@@ -2338,18 +2345,14 @@ class ChWarehouse:
         # full-table rewrite; afterwards re-cluster files globally on
         # the ORDER BY key (disjoint min/max file ranges — the "one big
         # merged part" analog; repartitionByRange gives file-level skip)
-        data = f"{self._dir(meta.name)}/data"
-        raw = self._raw_df(meta)
-        if raw is None:
+        if not meta.parts:
             return None
         if part_pred is not None:
             self._rewrite(meta, transform, prune_pred=part_pred)
         elif not meta.partition_cols and meta.order_by:
+            data = f"{self._dir(meta.name)}/data"
             total_bytes = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _d, fs in os.walk(data)
-                for f in fs
-                if f.endswith(".parquet")
+                os.path.getsize(f"{data}/{p}") for p in meta.parts
             )
             n_files = max(1, math.ceil(total_bytes / (128 << 20)))
             self._rewrite(
@@ -2398,29 +2401,23 @@ class ChWarehouse:
 
     def parts(self) -> DataFrame:
         """The ``system.parts`` surface: one row per (table, partition
-        directory) with file/row/byte counts — what capacity planning
-        and merge monitoring read in CH. Row counts come from parquet
-        FOOTERS via pyarrow (driver-side metadata reads, no Spark job,
-        no data scanned); at 100 TB this is still only O(files) footer
-        fetches of a few KB each."""
+        directory) with file/row/byte counts of the live parts the
+        manifest lists — what capacity planning and merge monitoring
+        read in CH. Row counts come from parquet FOOTERS via pyarrow
+        (driver-side metadata reads, no Spark job, no data scanned); at
+        100 TB this is still only O(files) footer fetches of a few KB
+        each."""
         import pyarrow.parquet as pq
 
         rows = []
         for t in self.tables():
             meta = self.meta(t)
             data = f"{self._dir(t)}/data"
-            if not os.path.isdir(data):
-                continue
             by_part: dict[str, list[str]] = {}
-            for r, _d, fs in os.walk(data):
-                for f in fs:
-                    if not f.endswith(".parquet"):
-                        continue
-                    rel = os.path.relpath(r, data)
-                    part = "" if rel == "." else rel
-                    by_part.setdefault(part, []).append(
-                        os.path.join(r, f)
-                    )
+            for p in meta.parts:
+                by_part.setdefault(os.path.dirname(p), []).append(
+                    f"{data}/{p}"
+                )
             for part, files in sorted(by_part.items()):
                 n_rows = sum(
                     pq.ParquetFile(f).metadata.num_rows for f in files

@@ -24,9 +24,11 @@ operation — ``pos = p * (n-1)``; ``(higher - pos) * lowerKey +
 ``lowerKey``; Python floats ARE IEEE doubles, so the arithmetic is
 the same instruction sequence.
 
-NULLs are ignored like the built-in's; a float NaN is treated as NULL
-(the fixtures carry none — documented divergence, the built-in sorts
-NaN greatest).
+NULLs are ignored like the built-in's; a NaN is a value, which
+``np.sort`` places last, where the built-in's ordering puts it (NaN
+greatest). Groups travel as Arrow (``applyInArrow``), whose per-column
+validity bitmap is the null mask: through pandas a NULL double arrives
+as NaN, and a NaN result leaves as NULL.
 
 100 TB: one shuffle on the group key; each group's values must fit one
 worker — the SAME bound the built-in has (its aggregation state holds
@@ -73,20 +75,13 @@ def exact_group_percentiles(
     ``groupBy(group).agg(percentile(value, array(*ps)), ...)``.
     """
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
 
     value_cols = [v for v, _, _ in specs]
     src = df.select(group_col, *value_cols)
     local_specs = [(v, list(map(float, ps)), out) for v, ps, out in specs]
-
-    def pct(pdf: pd.DataFrame) -> pd.DataFrame:
-        row = {group_col: pdf[group_col].iloc[0]}
-        for v, ps, out in local_specs:
-            a = pdf[v].to_numpy(np.float64, copy=True)
-            a = np.sort(a[~np.isnan(a)])
-            row[out] = _spark_percentiles(a, ps)
-        return pd.DataFrame([row])
-
     schema = T.StructType(
         [src.schema[group_col]]
         + [
@@ -94,4 +89,15 @@ def exact_group_percentiles(
             for _, _, out in local_specs
         ]
     )
-    return src.groupBy(group_col).applyInPandas(pct, schema=schema)
+    arrow_schema = pa.schema(
+        [(f.name, to_arrow_type(f.dataType)) for f in schema.fields]
+    )
+
+    def pct(t: pa.Table) -> pa.Table:
+        cols = {group_col: t.column(group_col).slice(0, 1)}
+        for v, ps, out in local_specs:
+            a = pc.drop_null(t.column(v)).to_numpy().astype(np.float64, copy=False)
+            cols[out] = [_spark_percentiles(np.sort(a), ps)]
+        return pa.table(cols, schema=arrow_schema)
+
+    return src.groupBy(group_col).applyInArrow(pct, schema=schema)

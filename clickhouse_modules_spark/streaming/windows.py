@@ -139,6 +139,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SSP_LOCK = threading.Lock()
 _SSP_DEPTH = 0
 _SSP_SAVED: dict[str, str] | None = None
+# the nodata value of the first active scope ("true"/"false")
+_SSP_NODATA: str | None = None
 
 _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 # size-derived suggestion from the last events_stream() source (bytes /
@@ -177,11 +179,13 @@ def stream_scope(
     full result each batch and update-mode sinks ship value CHANGES —
     a no-data batch adds nothing to either — so those runners always
     pass False; the append runner keeps the default unless its caller
-    knows the stream emits eagerly (e.g. dropDuplicates). Under the
-    refcount, the FIRST scope's value wins for concurrently launched
-    jobs; a nested nodata=True request under an active False scope
-    RAISES (it would silently lose its watermark flush — see below),
-    while False under True is allowed (one redundant no-data batch).
+    knows the stream emits eagerly (e.g. dropDuplicates). The conf is
+    session-wide, so every scope active at once must pass the same
+    ``nodata``: any mix raises RuntimeError, in either order. True
+    under False would silently lose its watermark flush and drop rows;
+    the guard compares against the first scope's value kept under the
+    lock, so whether it fires never depends on which thread entered
+    first.
 
     Context-manager form so exception-safety is structural, not
     call-site discipline: every caller that launches streaming jobs
@@ -191,7 +195,7 @@ def stream_scope(
     non-refcounted inner scope would restore the BATCH conf mid-flight
     under an outer scope.
     """
-    global _SSP_DEPTH, _SSP_SAVED
+    global _SSP_DEPTH, _SSP_SAVED, _SSP_NODATA
     # per-runner override (r16): the size-derived hint fits state-store
     # commit costs (stateful JVM aggregations), but a PYTHON-bound
     # operator (applyInPandasWithState) is throughput-bound on its
@@ -200,29 +204,18 @@ def stream_scope(
     n = str(n_partitions or _SSP_HINT or 4)
     nodata_v = "true" if nodata else "false"
     with _SSP_LOCK:
-        # 'first scope wins' is only safe in one direction: a nested
-        # scope that NEEDS the trailing no-data batch (nodata=True —
-        # watermark-gated append flush) under an active nodata=False
-        # scope would silently lose its flush and DROP ROWS. Refuse
-        # loudly instead (r16, advisor item). The reverse (False under
-        # True) merely runs one redundant no-data batch — harmless.
-        if (
-            _SSP_DEPTH > 0
-            and _SSP_SAVED is not None
-            and nodata_v == "true"
-            and spark.conf.get(_NODATA_CONF) == "false"
-        ):
+        if _SSP_DEPTH > 0 and nodata_v != _SSP_NODATA:
             raise RuntimeError(
-                "stream_scope(nodata=True) entered while a "
-                "nodata=False scope is active: the session-wide "
-                f"{_NODATA_CONF} conf cannot honor both, and running "
-                "this watermark-gated job without its trailing "
-                "no-data batch would drop result rows. Launch the "
-                "conflicting jobs sequentially, or make the "
-                "concurrent batch uniform."
+                f"stream_scope(nodata={nodata}) entered while a "
+                f"nodata={_SSP_NODATA == 'true'} scope is active: the "
+                f"session-wide {_NODATA_CONF} conf cannot honor both "
+                "(a watermark-gated job without its trailing no-data "
+                "batch drops result rows). Launch the conflicting jobs "
+                "sequentially, or make the concurrent batch uniform."
             )
         _SSP_DEPTH += 1
         if _SSP_DEPTH == 1:
+            _SSP_NODATA = nodata_v
             _SSP_SAVED = {
                 "spark.sql.shuffle.partitions": spark.conf.get(
                     "spark.sql.shuffle.partitions"
@@ -240,6 +233,7 @@ def stream_scope(
                 for k, v in _SSP_SAVED.items():
                     spark.conf.set(k, v)
                 _SSP_SAVED = None
+                _SSP_NODATA = None
 
 
 def run_to_memory(

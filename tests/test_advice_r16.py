@@ -22,14 +22,16 @@ def test_stream_scope_nodata_conflict_raises(spark):
     ) == "true"
 
 
-def test_stream_scope_false_under_true_allowed(spark):
-    # harmless direction: one redundant no-data batch, never dropped rows
+def test_stream_scope_false_under_true_raises(spark):
+    # the guard fires on any mix, in either order: which scope comes
+    # first depends on thread scheduling in the concurrent composites
     with sw.stream_scope(spark, nodata=True):
-        with sw.stream_scope(spark, nodata=False):
-            # first scope won: conf stays true
-            assert spark.conf.get(
-                "spark.sql.streaming.noDataMicroBatches.enabled"
-            ) == "true"
+        with pytest.raises(RuntimeError, match="nodata"):
+            with sw.stream_scope(spark, nodata=False):
+                pass  # pragma: no cover
+    assert spark.conf.get(
+        "spark.sql.streaming.noDataMicroBatches.enabled"
+    ) == "true"
 
 
 def test_stream_scope_uniform_false_nested_ok(spark):

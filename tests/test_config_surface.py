@@ -135,3 +135,51 @@ def test_every_query_function_is_registered_or_called():
         if not registered and name not in used
     ]
     assert not orphans, f"unregistered q_* functions nothing references: {orphans}"
+
+
+def _os_calls_by_function(path: str) -> dict[str, set[str]]:
+    """``os.<attr>`` call names per enclosing function (``Class.method``
+    for methods) in one module."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    out: dict[str, set[str]] = {}
+
+    def visit(node, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, f"{child.name}.")
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                name = f"{prefix}{child.name}"
+                out.setdefault(name, set()).update(
+                    n.func.attr
+                    for n in ast.walk(child)
+                    if isinstance(n, ast.Call)
+                    and isinstance(n.func, ast.Attribute)
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id == "os"
+                )
+
+    visit(tree, "")
+    return out
+
+
+DDL = os.path.join(PKG, "ddl.py")
+
+
+def test_warehouse_reads_parts_from_the_manifest():
+    # readers take the live part list from meta.json, never a directory
+    # walk (a walk would also see uncommitted and replaced files)
+    walkers = [f for f, calls in _os_calls_by_function(DDL).items()
+               if "walk" in calls]
+    assert not walkers, f"os.walk in ddl.py: {walkers}"
+
+
+def test_warehouse_commits_only_through_save_meta():
+    # table data changes become visible only through the manifest's
+    # atomic replace; os.rename moves staged files nothing lists yet
+    # (_commit) or whole table directories (RENAME/EXCHANGE)
+    calls = _os_calls_by_function(DDL)
+    replace = {f for f, c in calls.items() if "replace" in c}
+    rename = {f for f, c in calls.items() if "rename" in c}
+    assert replace == {"ChWarehouse._save_meta"}
+    assert rename <= {"ChWarehouse._commit", "ChWarehouse.execute"}, rename

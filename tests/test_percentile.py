@@ -74,3 +74,19 @@ def test_int_column_matches_double_semantics(spark):
         [(1, i % 7) for i in range(100)], "g INT, v INT"
     )
     assert _builtin(df, "g", ["v"]) == _ours(df, "g", ["v"])
+
+
+def test_nan_sorts_greatest_and_null_is_dropped(spark):
+    # NaN is a value (the built-in orders it above every double), NULL
+    # is not one; group 1 puts NaN inside the upper percentiles, group
+    # 2 is NaN-only, group 3 mixes NaN and NULL with one finite value
+    nan = float("nan")
+    rows = [(1, v) for v in [3.0, None, nan, 1.0, 2.0, None, 5.0, nan]]
+    rows += [(2, nan), (2, nan), (3, None), (3, nan), (3, 4.0)]
+    df = spark.createDataFrame(rows, "g INT, v DOUBLE")
+
+    def norm(res):
+        # NaN != NaN: compare through repr
+        return {g: repr(vals) for g, vals in res.items()}
+
+    assert norm(_builtin(df, "g", ["v"])) == norm(_ours(df, "g", ["v"]))

@@ -283,3 +283,52 @@ def test_check_mode_returns_real_plan_without_applying(spark, cat):
     cat2, result = reconcile_user(cat, check_mode=True, user="svc", password="pw")
     assert result.changed and result.run_queries
     assert not insp.user_exists(cat2, "svc")
+
+
+# ------------------------------------------------------------ persistence
+def _catalog_rows(cat):
+    return {
+        name: sorted(
+            (tuple(r) for r in getattr(cat, name).collect()),
+            key=repr,
+        )
+        for name in (
+            "users", "role_grants", "settings_profile_elements",
+            "quotas", "roles", "grants",
+        )
+    }
+
+
+def test_catalog_save_load_round_trip(spark, tmp_path):
+    path = str(tmp_path / "catalog")
+    first = Catalog.from_rows(
+        spark,
+        users=[
+            ("db_admin", "sha256_password", "a" * 64),
+            ("svc", None, None),
+        ],
+        role_grants=[("db_admin", "db_admin_role")],
+        settings_profile_elements=[("svc", None)],
+        quotas=[("q_two", ["db_admin", "svc"]), ("q_none", [])],
+        roles=[("db_admin_role",)],
+        grants=[],  # an empty table round-trips with its schema
+    )
+    first.save(path)
+    loaded = Catalog.load(spark, path)
+    assert _catalog_rows(loaded) == _catalog_rows(first)
+    # names and types survive (file reads mark every column nullable)
+    for name in ("quotas", "grants"):
+        assert [
+            (f.name, f.dataType) for f in getattr(loaded, name).schema
+        ] == [(f.name, f.dataType) for f in getattr(first, name).schema]
+    assert loaded.grants.count() == 0
+
+    # a second save to the same path replaces the first
+    second = Catalog.from_rows(
+        spark,
+        users=[("app_user", "sha256_hash", "b" * 64)],
+        quotas=[("q_one", ["app_user"])],
+        grants=[("app_user", "SELECT", "analytics", "*")],
+    )
+    second.save(path)
+    assert _catalog_rows(Catalog.load(spark, path)) == _catalog_rows(second)
