@@ -5,8 +5,10 @@ The query side of this package translates CH-dialect SELECTs
 user runs around them — the table lifecycle:
 
 - ``CREATE TABLE … ENGINE = MergeTree()/ReplacingMergeTree(v)/
-  SummingMergeTree()/Memory/Log/Null [PARTITION BY e] [ORDER BY (…)]
-  [SAMPLE BY c] [TTL …] [SETTINGS …]`` (+ ``AS SELECT`` / ``AS other``)
+  SummingMergeTree()/AggregatingMergeTree/[Versioned]CollapsingMergeTree/
+  Memory/Log/Null [PARTITION BY e] [ORDER BY (…)] [SAMPLE BY c] [TTL …]
+  [SETTINGS …]`` (+ ``AS SELECT`` / ``AS other``); SAMPLE BY must be
+  an ORDER BY item, as in CH
 - ``INSERT INTO t [(cols)] VALUES …`` / ``INSERT INTO t SELECT …``
 - ``ALTER TABLE t DELETE WHERE p`` / ``UPDATE c = e, … WHERE p``
   (mutations), ``ADD/DROP/RENAME/MODIFY COLUMN`` (metadata-only)
@@ -61,6 +63,10 @@ Spark-first mapping (not a MergeTree reimplementation):
   wins" (versionless Replacing FINAL) and "last state row in the
   block" (Collapsing FINAL) are deterministic even for same-key rows
   inside one INSERT.
+- Each merging engine has ONE merge, ``ChWarehouse._merge``, over the
+  canonical stored frame: ``SELECT … FROM t FINAL`` reads it through a
+  hidden view registered next to ``t``, and ``OPTIMIZE … FINAL``
+  writes it, so the two cannot disagree.
 
 One writer per table: two concurrent writers would each commit a
 manifest built from the same predecessor, and the later one wins
@@ -84,10 +90,9 @@ import shutil
 import uuid
 from dataclasses import dataclass, field, asdict
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from clickhouse_modules_spark.functions.ch_sql import (
-    SAF_AGG_FOR_ROLE,
     STATE_BASES,
     agg_sql_for_role,
     _find_close,
@@ -96,12 +101,9 @@ from clickhouse_modules_spark.functions.ch_sql import (
     _top_level_words,
     ch_sql,
     deregister_table,
-    register_aggregating_table,
-    register_collapsing_table,
     register_dictionary,
-    register_replacing_table,
+    register_merged_view,
     register_sampling_key,
-    register_summing_table,
     translate,
 )
 
@@ -326,6 +328,10 @@ _ENGINE_FAMILIES = {
     "Log": "merge",
     "Memory": "merge",
     "Null": "null",
+}
+# engines whose parts merge: FINAL reads and OPTIMIZE FINAL writes _merge
+_MERGING = {
+    e for e, f in _ENGINE_FAMILIES.items() if f not in ("merge", "null")
 }
 
 _PART_IDENT_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -675,6 +681,13 @@ def parse_create_table(sql: str) -> tuple[TableMeta, str | None, bool, bool]:
             partition_exprs.append(pe)
             partition_cols.append(f"_p{i}")
     sample_by = clauses.get("SAMPLE") and translate(clauses["SAMPLE"]) or None
+    if sample_by and sample_by not in order_by:
+        # CH rejects this at CREATE too; it keeps FINAL SAMPLE (sampling
+        # the merged rows) equal to sampling the rows before the merge
+        raise ValueError(
+            f"SAMPLE BY {sample_by} must be an ORDER BY item "
+            f"(ORDER BY {', '.join(order_by) or 'tuple()'})"
+        )
     ttl = None
     if "TTL" in clauses:
         ttl = translate(clauses["TTL"])
@@ -838,183 +851,194 @@ class ChWarehouse:
             ).otherwise(base)
         return base.cast(c.spark_type).alias(c.name)
 
-    def table_df(self, name: str, session=None) -> DataFrame:
-        """The LOGICAL table frame: historical file schemas projected
-        onto the current logical schema — renamed columns coalesce over
-        their stored names, added columns default-fill, MODIFYed types
-        cast, ALIAS columns compute, bookkeeping columns drop. All of
-        it is projection work Catalyst prunes through (a filter on a
-        renamed column still reaches the parquet scan)."""
-        meta = self.meta(name)
+    def _canon_stored(self, meta: TableMeta, session=None) -> DataFrame | None:
+        """The live parts projected onto the CANONICAL stored layout
+        (logical names, current types, defaults filled, renames
+        coalesced) + ``_ch_seq``/``_ch_rid`` + partition columns, or
+        None when the table has no parts. Reads, FINAL and mutations
+        all start here, so rewritten rows also materialize pending
+        metadata-only ALTERs — exactly what a CH mutation does to the
+        parts it rewrites."""
         raw = self._raw_df(meta, session=session)
         if raw is None:
+            return None
+        exprs = [
+            self._stored_expr(c, raw.columns)
+            for c in meta.stored_columns()
+        ]
+        exprs.append(F.col("_ch_seq"))
+        if "_ch_rid" in raw.columns:
+            exprs.append(F.col("_ch_rid"))
+        for pc in meta.partition_cols:
+            if pc not in [c.name for c in meta.stored_columns()]:
+                exprs.append(F.col(pc))
+        return raw.select(*exprs)
+
+    def _logical(
+        self, meta: TableMeta, canon: DataFrame | None, session=None
+    ) -> DataFrame:
+        """A canonical frame as the table's LOGICAL columns: ALIAS
+        columns compute over it (so they can reference renamed/filled
+        names), bookkeeping columns drop. All of it is projection work
+        Catalyst prunes through (a filter on a renamed column still
+        reaches the parquet scan). ``canon`` None → an empty frame."""
+        if canon is None:
             return (session or self.spark).createDataFrame(
                 [], self._schema_ddl(meta, stored_only=False)
             )
-        exprs = [
-            self._stored_expr(c, raw.columns)
-            for c in meta.stored_columns()
-        ]
-        out = raw.select(*exprs)
-        # ALIAS columns compute in a second projection so they can
-        # reference renamed/filled logical names
         for c in meta.logical_columns():
             if c.kind == "alias":
-                out = out.withColumn(
+                canon = canon.withColumn(
                     c.name, F.expr(c.default).cast(c.spark_type)
                 )
-        return out.select(*[c.name for c in meta.logical_columns()])
+        return canon.select(*[c.name for c in meta.logical_columns()])
 
-    def _seq_frame(
-        self, meta: TableMeta, raw: DataFrame | None, session=None
-    ) -> DataFrame:
-        """Stored-layout frame plus ``_ch_ord`` — the TOTAL insert order
-        ``struct(_ch_seq batch id, _ch_rid within-batch row id)`` that
-        FINAL rewrites tiebreak on (struct ordering is lexicographic).
-        Batches written before ``_ch_rid`` existed order as rid 0: their
-        within-batch order was never recorded, the same arbitrary-but-
-        stable choice as before. ``raw`` None (no parts yet) yields an
-        empty frame so FINAL on an empty table returns an empty set
-        instead of failing registration."""
-        if raw is None:
-            return (session or self.spark).createDataFrame(
-                [],
-                self._schema_ddl(meta)
-                + ", `_ch_ord` STRUCT<s: BIGINT, r: BIGINT>",
-            )
-        exprs = [
-            self._stored_expr(c, raw.columns)
-            for c in meta.stored_columns()
-        ]
+    def table_df(self, name: str, session=None) -> DataFrame:
+        """The LOGICAL table frame: historical file schemas projected
+        onto the current logical schema (``_canon_stored``), ALIAS
+        columns computed (``_logical``)."""
+        meta = self.meta(name)
+        return self._logical(meta, self._canon_stored(meta, session), session)
+
+    def _merge(self, meta: TableMeta, d: DataFrame) -> DataFrame:
+        """The engine's FINAL merge of a canonical frame, in the same
+        canonical layout: ``SELECT … FINAL`` reads it (the hidden
+        merged view) and ``OPTIMIZE … FINAL`` writes it.
+
+        Rows merge when they agree on every ORDER BY expression and
+        every partition column — CH merges never cross partitions, so
+        the same key in two partitions stays two rows. Without ORDER BY
+        the key is the whole stored row. Insert order is
+        ``(_ch_seq, _ch_rid)``; ``_ch_rid`` missing or NULL orders as 0.
+
+        - Replacing: the row with the greatest version survives (no
+          version column: the last inserted); version ties keep the
+          last inserted (CH's "last in the selection").
+        - Collapsing (+ the version column for Versioned): the net sign
+          decides survival — 0 drops the group, > 0 keeps the LAST
+          state row, < 0 the FIRST cancel row, which a later merge can
+          still pair (where CH's pairwise collapse ends for well-formed
+          streams). Two windows over one partitioning: one exchange.
+        - Summing: columns that are neither key columns nor referenced
+          by the partition key sum (the numeric ones, or the engine's
+          column list), cast back to their storage type.
+        - Aggregating: each column merges by its SimpleAggregateFunction
+          / AggregateFunction role (``agg_sql_for_role``; states merge,
+          they are not finalized).
+
+        Summing and Aggregating keep ``max`` of any other column where
+        CH keeps an arbitrary row's value; plain ORDER BY columns and
+        partition columns are the group keys, and a column used only
+        inside an ORDER BY expression is such an "other" column."""
+        stored = [c.name for c in meta.stored_columns()]
+        group = list(dict.fromkeys([
+            *(meta.order_by or stored),
+            *([meta.version_col] if meta.sign_col and meta.version_col
+              else []),
+            *meta.partition_cols,
+        ]))
+        keys = [F.expr(e) for e in group]
         rid = (
             F.coalesce(F.col("_ch_rid"), F.lit(0))
-            if "_ch_rid" in raw.columns
+            if "_ch_rid" in d.columns
             else F.lit(0)
         )
-        ord_ = F.struct(
-            F.col("_ch_seq").cast("bigint").alias("s"),
-            rid.cast("bigint").alias("r"),
-        ).alias("_ch_ord")
-        return raw.select(*exprs, ord_)
+        if meta.engine == "ReplacingMergeTree":
+            newest = [F.col("_ch_seq").desc(), rid.desc()]
+            if meta.version_col:
+                newest.insert(0, F.col(meta.version_col).desc())
+            w = Window.partitionBy(*keys).orderBy(*newest)
+            return (
+                d.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
+            )
+        if meta.sign_col:
+            sign = F.col(meta.sign_col)
+            ord_ = F.struct(
+                F.col("_ch_seq").cast("bigint").alias("s"),
+                rid.cast("bigint").alias("r"),
+            )
+            d = d.withColumn(
+                "__net", F.sum(sign).over(Window.partitionBy(*keys))
+            )
+            w = Window.partitionBy(*keys).orderBy(
+                F.when(F.col("__net") > 0, sign).otherwise(-sign).desc(),
+                F.when(F.col("__net") > 0, ord_).desc(),
+                ord_.asc(),
+            )
+            return (
+                d.withColumn("__rn", F.row_number().over(w))
+                .filter((F.col("__net") != 0) & (F.col("__rn") == 1))
+                .drop("__net", "__rn")
+            )
+        if meta.engine == "SummingMergeTree":
+            # CH isInPartitionKey: columns feeding a partition
+            # expression are not summed either
+            not_summed = set(group) | _partition_source_cols(meta, stored)
+            sums = set(meta.sum_cols) or {
+                c.name
+                for c in meta.stored_columns()
+                if c.name not in not_summed
+                and c.spark_type.split("(")[0]
+                in ("tinyint", "smallint", "int", "bigint", "float",
+                    "double", "decimal")
+            }
+        aggs = []
+        for c in meta.stored_columns():
+            if c.name in group:
+                continue
+            if meta.engine == "SummingMergeTree":
+                role = "sum" if c.name in sums else "other"
+            else:  # AggregatingMergeTree
+                role = c.agg_func or "other"
+            agg = F.expr(agg_sql_for_role(role, c.name))
+            if role != "other":
+                # pin the declared storage type (sum widening / struct
+                # field names for avg states)
+                agg = agg.cast(c.spark_type)
+            aggs.append(agg.alias(c.name))
+        aggs.append(F.max("_ch_seq").alias("_ch_seq"))
+        tail = ["_ch_seq"]
+        if "_ch_rid" in d.columns:
+            aggs.append(F.max("_ch_rid").alias("_ch_rid"))
+            tail.append("_ch_rid")
+        part_extra = [pc for pc in meta.partition_cols if pc not in stored]
+        # an expression key gets its own name: Spark would name
+        # cast(ts as date) after ts, the column it aggregates
+        by = [
+            k if e in stored or e in part_extra else k.alias(f"__k{i}")
+            for i, (e, k) in enumerate(zip(group, keys))
+        ]
+        return d.groupBy(*by).agg(*aggs).select(*stored, *tail, *part_extra)
 
     def _register_views(
         self, session=None, only: set[str] | None = None
     ) -> dict[str, DataFrame]:
+        """Views for the warehouse tables (those in ``only``, when
+        given): each table's logical frame under its own name and, for
+        the merging MergeTree engines, the logical projection of
+        ``_merge`` under a hidden name that ``FROM t FINAL`` reads. Both
+        come from one read of the live parts."""
         views: dict[str, DataFrame] = {}
         for name in self.tables():
             if only is not None and name not in only:
                 continue
             meta = self.meta(name)
-            views[name] = self.table_df(name, session=session)
             # the FINAL/SAMPLE registries are process-global keyed by
             # view NAME: another warehouse (or a dropped + recreated
-            # table) may have left a different engine's entry under
-            # this name, and the rewriter checks engines in a fixed
-            # order — clear before registering
+            # table) may have left a different table's entry under it
             deregister_table(name)
-            if meta.engine == "ReplacingMergeTree":
-                # CH merges never cross partitions: FINAL groups by the
-                # partition expressions too (same key, two months → two
-                # rows, matching OPTIMIZE FINAL and CH itself)
-                extra = list(meta.partition_exprs)
-                if meta.version_col:
-                    # ver TIES keep the LAST INSERTED row (CH's "last
-                    # in the selection"). Registering bare ver left
-                    # the tie to file order, which a mutation rewrite
-                    # FLIPS (the rewritten file is newer) — r13
-                    # DDL-fuzzer seeds 9/25. Compose (ver, insert
-                    # order) into one lexicographic struct version
-                    # through a hidden seq view, exactly the
-                    # versionless path's mechanism.
-                    seq_view = f"__{name}_seq"
-                    frame = self._seq_frame(
-                        meta, self._raw_df(meta, session=session),
-                        session=session,
-                    )
-                    views[seq_view] = frame.withColumn(
-                        "_ch_vord",
-                        F.struct(
-                            F.col(meta.version_col).alias("v"),
-                            F.col("_ch_ord").alias("o"),
-                        ),
-                    ).drop("_ch_ord")
-                    register_replacing_table(
-                        name, meta.order_by, "_ch_vord",
-                        extra_group=extra, source_view=seq_view,
-                    )
-                else:
-                    # versionless: latest INSERT wins — resolve FINAL
-                    # through a hidden view exposing the total insert
-                    # order (batch id, within-batch row id) as the
-                    # version (dropped from the output)
-                    seq_view = f"__{name}_seq"
-                    views[seq_view] = self._seq_frame(
-                        meta, self._raw_df(meta, session=session),
-                        session=session,
-                    )
-                    register_replacing_table(
-                        name, meta.order_by, "_ch_ord",
-                        extra_group=extra, source_view=seq_view,
-                    )
-            elif meta.engine == "SummingMergeTree" and meta.order_by:
-                logical = [c.name for c in meta.logical_columns()]
-                keys = [c for c in meta.order_by if c in logical]
-                numeric = ("tinyint", "smallint", "int", "bigint",
-                           "float", "double", "decimal")
-                # partitioning-key columns are NOT summable (CH rule —
-                # a merged row cannot leave its partition; the
-                # OPTIMIZE FINAL path already excluded them, this read
-                # path summed them: r13 DDL-fuzzer seed 29 returned
-                # p×count for a PARTITION BY p column). Also exclude
-                # every logical column REFERENCED by an expression
-                # partition key (CH isInPartitionKey — r13 ADVICE).
-                grp = set(keys) | {
-                    pc for pc in meta.partition_cols if pc in logical
-                } | _partition_source_cols(meta, logical)
-                sums = meta.sum_cols or [
-                    c.name for c in meta.logical_columns()
-                    if c.name not in grp
-                    and c.spark_type.split("(")[0] in numeric
-                ]
-                others = [
-                    c for c in logical if c not in keys and c not in sums
-                ]
-                register_summing_table(
-                    name, keys, sums, others, ordered_cols=logical,
-                    extra_group=list(meta.partition_exprs),
+            canon = self._canon_stored(meta, session)
+            views[name] = self._logical(meta, canon, session)
+            if meta.engine in _MERGING:
+                merged = f"__{name}_final"
+                views[merged] = self._logical(
+                    meta,
+                    None if canon is None else self._merge(meta, canon),
+                    session,
                 )
-            elif meta.engine in (
-                "CollapsingMergeTree", "VersionedCollapsingMergeTree"
-            ):
-                # insert order (which state row is "last") comes from
-                # the hidden (_ch_seq, _ch_rid) total order, exposed
-                # through a seq view exactly like versionless
-                # ReplacingMergeTree
-                seq_view = f"__{name}_seq"
-                views[seq_view] = self._seq_frame(
-                    meta, self._raw_df(meta, session=session),
-                    session=session,
-                )
-                register_collapsing_table(
-                    name,
-                    list(meta.order_by),
-                    meta.sign_col,
-                    version_col=meta.version_col,
-                    extra_group=list(meta.partition_exprs),
-                    order_col="_ch_ord",
-                    source_view=seq_view,
-                )
-            elif meta.engine == "AggregatingMergeTree" and meta.order_by:
-                logical = [c.name for c in meta.logical_columns()]
-                keys = [c for c in meta.order_by if c in logical]
-                roles = [
-                    (c.name, "key" if c.name in keys
-                     else (c.agg_func or "other"))
-                    for c in meta.logical_columns()
-                ]
-                register_aggregating_table(
-                    name, roles, extra_group=list(meta.partition_exprs)
-                )
+                register_merged_view(name, merged)
             if meta.sample_by:
                 register_sampling_key(name, meta.sample_by)
         return views
@@ -1419,8 +1443,10 @@ class ChWarehouse:
                 )
             if not meta.order_by:
                 raise ValueError(f"{meta.engine} requires ORDER BY")
-        if meta.engine == "AggregatingMergeTree" and not meta.order_by:
-            raise ValueError("AggregatingMergeTree requires ORDER BY")
+        if meta.engine in (
+            "AggregatingMergeTree", "SummingMergeTree"
+        ) and not meta.order_by:
+            raise ValueError(f"{meta.engine} requires ORDER BY")
         self._save_meta(meta)
         if ctas_df is not None:
             self.insert_df(meta.name, ctas_df)
@@ -1699,24 +1725,6 @@ class ChWarehouse:
 
     # -- mutations / ALTER ---------------------------------------------
 
-    def _canon_stored(self, meta: TableMeta, raw: DataFrame) -> DataFrame:
-        """Project a raw frame onto the CANONICAL stored layout (logical
-        names, current types, defaults filled, renames coalesced) +
-        ``_ch_seq`` + partition columns. Mutations rewrite through this,
-        so rewritten rows also materialize pending metadata-only ALTERs
-        — exactly what a CH mutation does to the parts it rewrites."""
-        exprs = [
-            self._stored_expr(c, raw.columns)
-            for c in meta.stored_columns()
-        ]
-        exprs.append(F.col("_ch_seq"))
-        if "_ch_rid" in raw.columns:
-            exprs.append(F.col("_ch_rid"))
-        for pc in meta.partition_cols:
-            if pc not in [c.name for c in meta.stored_columns()]:
-                exprs.append(F.col(pc))
-        return raw.select(*exprs)
-
     @staticmethod
     def _alias_subst(meta: TableMeta, sql_expr: str) -> str:
         """ALIAS columns don't exist on disk; substitute their defining
@@ -1748,10 +1756,9 @@ class ChWarehouse:
         row). Falls back to a full rewrite when a partition value does
         not name its directory (needs hive escaping, or str(v) differs
         from Spark's token, e.g. booleans)."""
-        raw = self._raw_df(meta)
-        if raw is None:
+        canon = self._canon_stored(meta)
+        if canon is None:
             return
-        canon = self._canon_stored(meta, raw)
         replaced = list(meta.parts)
         new = None
         if prune_pred is not None and meta.partition_cols:
@@ -2145,6 +2152,11 @@ class ChWarehouse:
     # -- OPTIMIZE ------------------------------------------------------
 
     def _optimize(self, stmt: str) -> None:
+        """``OPTIMIZE TABLE t [PARTITION p] [FINAL] [DEDUPLICATE [BY
+        …]]``: one rewrite of the table (or partition) that drops rows
+        past their TTL, applies the engine's ``_merge`` under FINAL,
+        then deduplicates; an unpartitioned table with ORDER BY is also
+        range-partitioned on the key."""
         m = re.match(
             r"^OPTIMIZE\s+TABLE\s+(\w+)"
             r"(?:\s+PARTITION\s+('[^']*'|[\w()-]+))?(\s+FINAL)?"
@@ -2186,11 +2198,9 @@ class ChWarehouse:
             part_pred = F.col(meta.partition_cols[0]).cast(
                 "string"
             ) == F.lit(val)
-        logical_names = [c.name for c in meta.stored_columns()]
+        merges = final and meta.engine in _MERGING
 
         def transform(d: DataFrame) -> DataFrame:
-            from pyspark.sql import Window
-
             if meta.ttl:
                 # CH applies TTL during merges: rows whose expiry
                 # instant has passed are dropped by OPTIMIZE
@@ -2198,147 +2208,11 @@ class ChWarehouse:
                     F.expr(meta.ttl).cast("timestamp")
                     > F.current_timestamp()
                 )
-            # CH merges (and therefore FINAL collapse) happen WITHIN a
-            # partition: same key in two partitions stays two rows, and
-            # a row's partition never changes under OPTIMIZE
-            part_extra = [
-                pc for pc in meta.partition_cols if pc not in logical_names
-            ]
-            if final and meta.engine == "ReplacingMergeTree":
-                keys = meta.order_by or logical_names
-                grp = keys + [
-                    pc for pc in meta.partition_cols if pc not in keys
-                ]
-                ver = meta.version_col or "_ch_seq"
-                rid = (
-                    F.coalesce(F.col("_ch_rid"), F.lit(0))
-                    if "_ch_rid" in d.columns
-                    else F.lit(0)
-                )
-                w = Window.partitionBy(*grp).orderBy(
-                    F.col(ver).desc(), F.col("_ch_seq").desc(),
-                    rid.desc(),
-                )
-                d = (
-                    d.withColumn("__rn", F.row_number().over(w))
-                    .filter(F.col("__rn") == 1)
-                    .drop("__rn")
-                )
-            elif final and meta.engine == "SummingMergeTree":
-                keys = meta.order_by or []
-                if not keys:
-                    raise ValueError("SummingMergeTree FINAL needs ORDER BY")
-                grp = keys + [
-                    pc for pc in meta.partition_cols if pc not in keys
-                ]
-                # CH isInPartitionKey: columns feeding an expression
-                # partition key are excluded from summation too
-                # (mirrors the read-path rule — r13 ADVICE)
-                part_src = _partition_source_cols(meta, logical_names)
-                sums = meta.sum_cols or [
-                    c.name
-                    for c in meta.stored_columns()
-                    if c.name not in grp
-                    and c.name not in part_src
-                    and c.spark_type.split("(")[0]
-                    in ("tinyint", "smallint", "int", "bigint", "float",
-                        "double", "decimal")
-                ]
-                aggs = [F.sum(c).cast(
-                    meta.column(c).spark_type).alias(c) for c in sums]
-                others = [
-                    c
-                    for c in logical_names
-                    if c not in grp and c not in sums
-                ]
-                # non-sum columns keep max(value) — the SAME
-                # deterministic choice the query-side FINAL rewrite
-                # makes (ch_sql.SAF_AGG_FOR_ROLE "other" → max), so
-                # OPTIMIZE FINAL materializes exactly what SELECT …
-                # FINAL returns. CH itself keeps an arbitrary "any".
-                aggs += [F.max(c).alias(c) for c in others]
-                aggs.append(F.max("_ch_seq").alias("_ch_seq"))
-                carry_rid = "_ch_rid" in d.columns
-                if carry_rid:
-                    aggs.append(F.max("_ch_rid").alias("_ch_rid"))
-                d = d.groupBy(*grp).agg(*aggs).select(
-                    *logical_names, "_ch_seq",
-                    *(["_ch_rid"] if carry_rid else []), *part_extra
-                )
-            elif final and meta.engine in (
-                "CollapsingMergeTree", "VersionedCollapsingMergeTree"
-            ):
-                # same fixpoint as the query-side FINAL rewrite
-                # (ch_sql._COLLAPSING): net sign decides survival, the
-                # last state / first cancel row (by _ch_seq insert
-                # order) survives. Two windows over ONE partitioning —
-                # a single exchange.
-                keys = meta.order_by or logical_names
-                grp = keys + (
-                    [meta.version_col] if meta.version_col else []
-                )
-                grp += [pc for pc in meta.partition_cols if pc not in grp]
-                sign = F.col(meta.sign_col)
-                rid = (
-                    F.coalesce(F.col("_ch_rid"), F.lit(0))
-                    if "_ch_rid" in d.columns
-                    else F.lit(0)
-                )
-                ord_ = F.struct(
-                    F.col("_ch_seq").cast("bigint").alias("s"),
-                    rid.cast("bigint").alias("r"),
-                )
-                d = d.withColumn(
-                    "__net", F.sum(sign).over(Window.partitionBy(*grp))
-                )
-                w = Window.partitionBy(*grp).orderBy(
-                    F.when(F.col("__net") > 0, sign)
-                    .otherwise(-sign).desc(),
-                    F.when(F.col("__net") > 0, ord_).desc(),
-                    ord_.asc(),
-                )
-                d = (
-                    d.withColumn("__rn", F.row_number().over(w))
-                    .filter((F.col("__net") != 0) & (F.col("__rn") == 1))
-                    .drop("__net", "__rn")
-                )
-            elif final and meta.engine == "AggregatingMergeTree":
-                keys = meta.order_by or []
-                if not keys:
-                    raise ValueError(
-                        "AggregatingMergeTree FINAL needs ORDER BY"
-                    )
-                grp = keys + [
-                    pc for pc in meta.partition_cols if pc not in keys
-                ]
-                # ONE role→aggregate vocabulary shared with the
-                # query-side FINAL rewrite (ch_sql.SAF_AGG_FOR_ROLE):
-                # OPTIMIZE FINAL must materialize exactly what
-                # SELECT … FINAL returns
-                aggs = []
-                for c in meta.stored_columns():
-                    if c.name in grp:
-                        continue
-                    role = c.agg_func or "other"
-                    if role not in SAF_AGG_FOR_ROLE:
-                        role = role if role.startswith("state:") else "other"
-                    expr = F.expr(agg_sql_for_role(role, c.name))
-                    if c.agg_func == "sum" or role.startswith("state:"):
-                        # pin the declared storage type (sum widening /
-                        # struct field names for avg states)
-                        expr = expr.cast(c.spark_type)
-                    aggs.append(expr.alias(c.name))
-                aggs.append(F.max("_ch_seq").alias("_ch_seq"))
-                carry_rid = "_ch_rid" in d.columns
-                if carry_rid:
-                    aggs.append(F.max("_ch_rid").alias("_ch_rid"))
-                d = d.groupBy(*grp).agg(*aggs).select(
-                    *logical_names, "_ch_seq",
-                    *(["_ch_rid"] if carry_rid else []), *part_extra
-                )
+            if merges:
+                d = self._merge(meta, d)
             if dedup:
                 # row-content dedup: _ch_seq is bookkeeping, not content
-                subset = dedup_by or logical_names
+                subset = dedup_by or [c.name for c in meta.stored_columns()]
                 d = d.dropDuplicates(subset)
             return d
 

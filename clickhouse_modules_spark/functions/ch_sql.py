@@ -5170,16 +5170,11 @@ _CLAUSE_STARTERS = {
     "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "UNION", "SETTINGS",
 }
 
-# ReplacingMergeTree metadata for FROM … FINAL: view name → (key cols,
-# version col). CH resolves FINAL from the table engine's ORDER BY /
-# version; Spark has no such metadata, so it is registered explicitly.
-# The ONE role→Spark-aggregate vocabulary for SimpleAggregateFunction
-# columns and Summing non-key columns, shared by the query-side FINAL
-# rewrite below AND ddl.ChWarehouse's OPTIMIZE FINAL physical collapse —
-# the two must stay bit-identical or OPTIMIZE materializes different
-# values than SELECT … FINAL returns. Convention: any→min /
-# anyLast→max / other→max are deterministic stand-ins for CH's
-# arbitrary "any value" (documented in the engine docstrings).
+# The role→Spark-aggregate vocabulary for SimpleAggregateFunction
+# columns and Summing non-key columns, which ddl.ChWarehouse._merge
+# applies for both SELECT … FINAL and OPTIMIZE FINAL. Convention:
+# any→min / anyLast→max / other→max are deterministic stand-ins for
+# CH's arbitrary "any value" (documented in the engine docstrings).
 SAF_AGG_FOR_ROLE: dict[str, str] = {
     "sum": "sum", "min": "min", "any": "min",
     "max": "max", "anyLast": "max", "other": "max",
@@ -5376,7 +5371,11 @@ _SIM_KERNELS: dict[str, str] = {
     "byteHammingDistance": "__ch_byte_hamming",
 }
 
-_REPLACING: dict[str, tuple[list[str], str, list[str], str | None]] = {}
+# ReplacingMergeTree metadata for FROM … FINAL over a plain view: view
+# name → (key cols, version col). CH resolves FINAL from the table
+# engine's ORDER BY / version; a plain view has no such metadata, so it
+# is registered explicitly.
+_REPLACING: dict[str, tuple[list[str], str]] = {}
 
 # Deterministic sampling keys for FROM … SAMPLE n/d: view name → column.
 # CH samples on the table's declared SAMPLE BY key; same idea here.
@@ -5461,130 +5460,24 @@ def _elem_needs_cast(base: str, key: str) -> bool:
     return not (is_str_lit or is_int_lit or is_bare_ident or str_key)
 
 
-# SummingMergeTree / AggregatingMergeTree metadata for FROM … FINAL:
-# view name → ordered [(col, role)] with role in
-# key|sum|min|max|any|anyLast|other. FINAL on these engines is a
-# per-key aggregate: sums sum, min/max take their extreme,
-# any/anyLast/other take a deterministic extreme (min for any, max
-# for anyLast/other) where CH keeps an arbitrary survivor. Order is
-# preserved so SELECT * matches the table's column order.
-_SUMMING: dict[str, list[tuple[str, str]]] = {}
-
-# CollapsingMergeTree / VersionedCollapsingMergeTree metadata for
-# FROM … FINAL: view name → (key cols, sign col, version col or None,
-# extra partition-group exprs, insert-order col, source view or None).
-_COLLAPSING: dict[
-    str, tuple[list[str], str, str | None, list[str], str, str | None]
-] = {}
+# Warehouse tables with a merging MergeTree engine: view name → the
+# hidden view holding its merged rows (ddl.ChWarehouse._merge), which
+# ``FROM name FINAL`` reads instead of the table.
+_MERGED: dict[str, str] = {}
 
 
-def register_summing_table(
-    name: str,
-    key_cols: list[str],
-    sum_cols: list[str],
-    other_cols: list[str],
-    ordered_cols: list[str] | None = None,
-    extra_group: list[str] | None = None,
-) -> None:
-    """Declare a view as SummingMergeTree-like so ``FROM name FINAL``
-    collapses: per ``key_cols``, ``sum_cols`` sum and ``other_cols``
-    take max (deterministic; CH keeps an arbitrary row's value).
-    ``ordered_cols`` pins the projection order (default: keys, sums,
-    others)."""
-    role = {c: "key" for c in key_cols}
-    role.update({c: "sum" for c in sum_cols})
-    role.update({c: "other" for c in other_cols})
-    order = ordered_cols or [*key_cols, *sum_cols, *other_cols]
-    _SUMMING[name] = ([(c, role[c]) for c in order],
-                      list(extra_group or []))
-
-
-def register_aggregating_table(
-    name: str,
-    cols_with_roles: list[tuple[str, str]],
-    extra_group: list[str] | None = None,
-) -> None:
-    """Declare a view as AggregatingMergeTree-like (the
-    SimpleAggregateFunction subset — plain-valued states) so ``FROM
-    name FINAL`` collapses per key. ``cols_with_roles`` is the ordered
-    column list with roles from ``key|sum|min|max|any|anyLast|other``.
-    ``any``/``anyLast``/``other`` resolve to a deterministic extreme
-    (min for any, max for anyLast/other) where CH keeps an arbitrary
-    row's value — deterministic beats bit-faithful-to-arbitrary.
-    True ``AggregateFunction`` blob states stay rejected at the DDL
-    layer (engine-internal representation)."""
-    _SUMMING[name] = (list(cols_with_roles), list(extra_group or []))
-
-
-def register_collapsing_table(
-    name: str,
-    key_cols: list[str],
-    sign_col: str,
-    version_col: str | None = None,
-    extra_group: list[str] | None = None,
-    order_col: str | None = None,
-    source_view: str | None = None,
-) -> None:
-    """Declare a view as CollapsingMergeTree(sign)-like (or, with
-    ``version_col``, VersionedCollapsingMergeTree(sign, version)) so
-    ``FROM name FINAL`` fully collapses.
-
-    Collapse group = ``key_cols`` + ``extra_group`` (the PARTITION BY —
-    CH merges never cross partitions) + ``version_col`` for the
-    Versioned form (pairs cancel only within one version). Per group:
-
-    - ``sum(sign) == 0`` → the group vanishes (all state rows
-      cancelled);
-    - ``sum(sign) > 0`` → the LAST state row (sign = 1) by
-      ``order_col`` survives;
-    - ``sum(sign) < 0`` → the FIRST cancel row (sign = -1) survives
-      (CH keeps the earliest unmatched cancel so later merges can
-      still pair it).
-
-    This is the fully-merged fixpoint of CH's pairwise collapse for
-    well-formed streams; ``order_col`` is the insert-order column (the
-    ddl layer's hidden ``_ch_seq`` batch id via ``source_view``, which
-    is dropped from the output). Defaults to ``version_col`` when not
-    given."""
-    order = order_col or version_col
-    if order is None:
-        raise ValueError(
-            "register_collapsing_table needs order_col (insert order) "
-            "or version_col to resolve which row survives"
-        )
-    _COLLAPSING[name] = (
-        list(key_cols),
-        sign_col,
-        version_col,
-        list(extra_group or []),
-        order,
-        source_view,
-    )
+def register_merged_view(name: str, merged_view: str) -> None:
+    """Make ``FROM name FINAL`` read ``merged_view``: the view of the
+    table's rows after its engine's merge."""
+    _MERGED[name] = merged_view
 
 
 def register_replacing_table(
-    name: str,
-    key_cols: list[str],
-    version_col: str,
-    extra_group: list[str] | None = None,
-    source_view: str | None = None,
+    name: str, key_cols: list[str], version_col: str
 ) -> None:
     """Declare a view as ReplacingMergeTree-like so ``FROM name FINAL``
-    can resolve: latest ``version_col`` per ``key_cols`` wins.
-
-    ``extra_group``: additional grouping EXPRESSIONS (the table's
-    PARTITION BY — CH merges, and therefore FINAL collapse, never
-    cross partitions: the same key in two partitions stays two rows).
-    ``source_view``: read the rows from this view instead of ``name``
-    and drop ``version_col`` from the output — how a HIDDEN version
-    (the ddl layer's ``_ch_seq`` batch id on versionless
-    ReplacingMergeTree) resolves FINAL without leaking into results."""
-    _REPLACING[name] = (
-        list(key_cols),
-        version_col,
-        list(extra_group or []),
-        source_view,
-    )
+    can resolve: latest ``version_col`` per ``key_cols`` wins."""
+    _REPLACING[name] = (list(key_cols), version_col)
 
 
 def deregister_table(name: str) -> None:
@@ -5592,8 +5485,7 @@ def deregister_table(name: str) -> None:
     renamed — stale entries would silently misresolve a later table
     that reuses the name)."""
     _REPLACING.pop(name, None)
-    _SUMMING.pop(name, None)
-    _COLLAPSING.pop(name, None)
+    _MERGED.pop(name, None)
     _SAMPLING.pop(name, None)
 
 
@@ -5620,13 +5512,17 @@ def _sample_predicate_sql(key: str, num: int, den: int) -> str:
 def _rewrite_from_modifiers(sql: str) -> str:
     """Rewrite CH table modifiers in FROM clauses:
 
-    - ``FROM t [AS a] FINAL`` → latest-version-per-key subquery (one
-      window over the key exchange — the ReplacingMergeTree read path,
-      WindowGroupLimit prunes map-side). Requires
-      ``register_replacing_table``.
+    - ``FROM t [AS a] FINAL`` on a warehouse table →
+      ``FROM <merged view> AS t``: the hidden view of the table's rows
+      after its engine's merge (``register_merged_view``; ddl.py
+      builds it with the merge OPTIMIZE FINAL writes).
+    - ``FROM t [AS a] FINAL`` on a plain view → latest-version-per-key
+      subquery (one window over the key exchange, WindowGroupLimit
+      prunes map-side). Requires ``register_replacing_table``.
     - ``FROM t [AS a] [FINAL] SAMPLE n/d`` → deterministic md5-bucket
-      predicate on the registered sampling key, applied INSIDE the
-      subquery so it reaches the scan. Requires
+      predicate on the registered sampling key over the table, or over
+      the merged view under FINAL (a plain view samples before its
+      FINAL window), so it reaches the scan. Requires
       ``register_sampling_key``.
     """
     words = list(_top_level_words(sql))
@@ -5674,84 +5570,31 @@ def _rewrite_from_modifiers(sql: str) -> str:
                 break
         if not final and sample is None:
             continue
-        preds = []
-        inner = table
-        if final and table in _REPLACING and _REPLACING[table][3]:
-            # hidden-version source (ddl's _ch_seq view) replaces the
-            # table as the scan target BEFORE sampling wraps it
-            inner = _REPLACING[table][3]
-        if final and table in _COLLAPSING and _COLLAPSING[table][5]:
-            inner = _COLLAPSING[table][5]
+        merged = _MERGED.get(table) if final else None
+        base = merged or table
         if sample is not None:
             key = _SAMPLING.get(table)
             if key is None:
                 raise ValueError(
                     f"SAMPLE on '{table}' needs register_sampling_key()"
                 )
-            preds.append(_sample_predicate_sql(key, sample[0], sample[1]))
-        base = (
-            f"(SELECT * FROM {inner} WHERE {' AND '.join(preds)})"
-            if preds
-            else inner
-        )
-        if final:
-            if table in _SUMMING:
-                cols, extra = _SUMMING[table]
-                keys = [c for c, r in cols if r == "key"]
-                proj = [
-                    c if r == "key"
-                    else f"{agg_sql_for_role(r, c)} AS {c}"
-                    for c, r in cols
-                ]
-                base = (
-                    f"(SELECT {', '.join(proj)} FROM {base} "
-                    f"GROUP BY {', '.join(keys + extra)})"
+            pred = _sample_predicate_sql(key, sample[0], sample[1])
+            base = f"(SELECT * FROM {base} WHERE {pred})"
+        if final and merged is None:
+            meta = _REPLACING.get(table)
+            if meta is None:
+                raise ValueError(
+                    f"FINAL on '{table}' needs register_replacing_table() "
+                    "or a warehouse table with a merging MergeTree engine"
                 )
-            elif table in _COLLAPSING:
-                keys, sign, ver, extra, order, src = _COLLAPSING[table]
-                grp = keys + ([ver] if ver else []) + extra
-                # two windows over ONE partitioning (Catalyst plans a
-                # single exchange): per-group net sign, then a rank
-                # whose ordering flips with the net's own sign —
-                # net > 0 wants the LAST state row, net < 0 the FIRST
-                # cancel row
-                hidden = ["__net", "__rn"] + (
-                    [order] if src is not None else []
-                )
-                base = (
-                    f"(SELECT * EXCEPT ({', '.join(hidden)}) FROM ("
-                    f"SELECT *, row_number() OVER ("
-                    f"PARTITION BY {', '.join(grp)} ORDER BY "
-                    f"(CASE WHEN __net > 0 THEN {sign} "
-                    f"ELSE -{sign} END) DESC, "
-                    # last-state (net>0) vs first-cancel (net<0) without
-                    # negating order (works for timestamp versions):
-                    # net>0 → key2 = order DESC; net<0 → key2 all-NULL
-                    # ties, key3 = order ASC decides
-                    f"(CASE WHEN __net > 0 THEN {order} END) DESC, "
-                    f"{order} ASC) AS __rn "
-                    f"FROM (SELECT *, sum({sign}) OVER ("
-                    f"PARTITION BY {', '.join(grp)}) AS __net "
-                    f"FROM {base})) "
-                    f"WHERE __net <> 0 AND __rn = 1)"
-                )
-            else:
-                meta = _REPLACING.get(table)
-                if meta is None:
-                    raise ValueError(
-                        f"FINAL on '{table}' needs "
-                        "register_replacing_table() or "
-                        "register_summing_table()"
-                    )
-                keys, ver, extra, src = meta
-                hidden = ["__rn"] + ([ver] if src is not None else [])
-                base = (
-                    f"(SELECT * EXCEPT ({', '.join(hidden)}) FROM ("
-                    f"SELECT *, row_number() OVER ("
-                    f"PARTITION BY {', '.join(keys + extra)} "
-                    f"ORDER BY {ver} DESC) AS __rn FROM {base}) "
-                    f"WHERE __rn = 1)"
-                )
+            keys, ver = meta
+            base = (
+                f"(SELECT * EXCEPT (__rn) FROM ("
+                f"SELECT *, row_number() OVER ("
+                f"PARTITION BY {', '.join(keys)} "
+                f"ORDER BY {ver} DESC) AS __rn FROM {base}) "
+                f"WHERE __rn = 1)"
+            )
         out_alias = alias if alias is not None else table
         rewritten = sql[:fs] + f"FROM {base} AS {out_alias}" + sql[end:]
         return _rewrite_from_modifiers(rewritten)

@@ -27,17 +27,22 @@ from pyspark.sql.types import StructType
 # Keyed by (realpath, mtime_ns, size) — same invalidation contract as
 # the streaming source's schema cache (r16, judge item 7): a path
 # rewritten in-process with a different schema re-infers instead of
-# silently serving stale columns. Non-local paths (no os.stat) fall
-# back to a path-only key, which matches the pre-r16 behavior.
+# silently serving stale columns. A directory also keys on the files
+# under it, so a part file rewritten in place invalidates too. Non-local
+# paths (no os.stat) fall back to a path-only key, which matches the
+# pre-r16 behavior.
 _SCHEMA_CACHE: dict[tuple, StructType] = {}
 _BYTES_CACHE: dict[tuple, int] = {}
 
 
 def _cache_key(path: str) -> tuple:
-    """(realpath, mtime_ns, size) for local paths; for a directory the
-    stat covers the dir inode (a file added/replaced inside bumps the
-    dir mtime). Unstattable paths (hdfs://, s3a://) key by path only."""
+    """(realpath, mtime_ns, size) for local paths. A directory adds the
+    count, newest mtime_ns and total size of the files under it: adding
+    or replacing a file bumps the directory's own mtime, rewriting one
+    in place does not. Unstattable paths (hdfs://, s3a://) key by path
+    only."""
     import os
+    import stat
 
     local = path
     if local.startswith("file:"):
@@ -46,7 +51,19 @@ def _cache_key(path: str) -> tuple:
             local = local[1:]
     try:
         st = os.stat(local)
-        return (os.path.realpath(local), st.st_mtime_ns, st.st_size)
+        key = (os.path.realpath(local), st.st_mtime_ns, st.st_size)
+        if not stat.S_ISDIR(st.st_mode):
+            return key
+        files = [
+            os.stat(os.path.join(d, f))
+            for d, _dirs, names in os.walk(local)
+            for f in names
+        ]
+        return key + (
+            len(files),
+            max((f.st_mtime_ns for f in files), default=0),
+            sum(f.st_size for f in files),
+        )
     except OSError:
         return (path,)
 

@@ -1,6 +1,7 @@
 """The package's configuration surface, checked from source with ``ast``
-(no Spark): which environment variables it reads, and that no query
-function in ``queries/`` is left without a caller."""
+(no Spark): which environment variables it reads, that no query
+function in ``queries/`` is left without a caller, and that the
+warehouse's commit and FINAL merge each live in one place."""
 
 from __future__ import annotations
 
@@ -137,9 +138,9 @@ def test_every_query_function_is_registered_or_called():
     assert not orphans, f"unregistered q_* functions nothing references: {orphans}"
 
 
-def _os_calls_by_function(path: str) -> dict[str, set[str]]:
-    """``os.<attr>`` call names per enclosing function (``Class.method``
-    for methods) in one module."""
+def _calls_by_function(path: str) -> dict[str, set[str]]:
+    """``name.attr`` calls (``os.replace``, ``F.row_number``, …) per
+    enclosing function (``Class.method`` for methods) in one module."""
     with open(path, encoding="utf-8") as fh:
         tree = ast.parse(fh.read(), path)
     out: dict[str, set[str]] = {}
@@ -151,26 +152,37 @@ def _os_calls_by_function(path: str) -> dict[str, set[str]]:
             elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 name = f"{prefix}{child.name}"
                 out.setdefault(name, set()).update(
-                    n.func.attr
+                    f"{n.func.value.id}.{n.func.attr}"
                     for n in ast.walk(child)
                     if isinstance(n, ast.Call)
                     and isinstance(n.func, ast.Attribute)
                     and isinstance(n.func.value, ast.Name)
-                    and n.func.value.id == "os"
                 )
 
     visit(tree, "")
     return out
 
 
+def _defined(path: str) -> set[str]:
+    """Every function or method name a module defines."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    return {
+        n.name
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+
 DDL = os.path.join(PKG, "ddl.py")
+CH_SQL = os.path.join(PKG, "functions", "ch_sql.py")
 
 
 def test_warehouse_reads_parts_from_the_manifest():
     # readers take the live part list from meta.json, never a directory
     # walk (a walk would also see uncommitted and replaced files)
-    walkers = [f for f, calls in _os_calls_by_function(DDL).items()
-               if "walk" in calls]
+    walkers = [f for f, calls in _calls_by_function(DDL).items()
+               if "os.walk" in calls]
     assert not walkers, f"os.walk in ddl.py: {walkers}"
 
 
@@ -178,8 +190,26 @@ def test_warehouse_commits_only_through_save_meta():
     # table data changes become visible only through the manifest's
     # atomic replace; os.rename moves staged files nothing lists yet
     # (_commit) or whole table directories (RENAME/EXCHANGE)
-    calls = _os_calls_by_function(DDL)
-    replace = {f for f, c in calls.items() if "replace" in c}
-    rename = {f for f, c in calls.items() if "rename" in c}
+    calls = _calls_by_function(DDL)
+    replace = {f for f, c in calls.items() if "os.replace" in c}
+    rename = {f for f, c in calls.items() if "os.rename" in c}
     assert replace == {"ChWarehouse._save_meta"}
     assert rename <= {"ChWarehouse._commit", "ChWarehouse.execute"}, rename
+
+
+def test_one_final_merge():
+    # SELECT … FINAL reads the merge OPTIMIZE FINAL writes: one method,
+    # no second copy as SQL registries in ch_sql or windows elsewhere
+    copies = {
+        "register_summing_table",
+        "register_aggregating_table",
+        "register_collapsing_table",
+    } & _defined(CH_SQL)
+    assert not copies, f"FINAL merge registries in ch_sql.py: {copies}"
+    assert "_seq_frame" not in _defined(DDL)
+    windowed = {
+        f
+        for f, c in _calls_by_function(DDL).items()
+        if c & {"F.row_number", "Window.partitionBy"}
+    }
+    assert windowed == {"ChWarehouse._merge"}, windowed

@@ -570,13 +570,13 @@ class TestExplain:
         wh.execute("CREATE TABLE unused (y Int32) ENGINE = Memory")
         wh.execute("INSERT INTO used VALUES (1)")
         loaded = []
-        orig = wh.table_df
+        orig = wh._raw_df
 
-        def spy(name, session=None):
-            loaded.append(name)
-            return orig(name, session=session)
+        def spy(meta, session=None):
+            loaded.append(meta.name)
+            return orig(meta, session=session)
 
-        monkeypatch.setattr(wh, "table_df", spy)
+        monkeypatch.setattr(wh, "_raw_df", spy)
         wh.execute("SELECT count() AS n FROM used").collect()
         assert "used" in loaded and "unused" not in loaded
 
@@ -1244,6 +1244,11 @@ class TestCollapsingEngines:
                 "CREATE TABLE b (k Int32, s Int8) "
                 "ENGINE = CollapsingMergeTree(s)"
             )
+        with pytest.raises(ValueError, match="requires ORDER BY"):
+            wh.execute(
+                "CREATE TABLE b (k Int32, v Int64) "
+                "ENGINE = SummingMergeTree"
+            )
 
     def test_show_create_roundtrip(self, wh, spark, tmp_path):
         wh.execute(
@@ -1466,8 +1471,8 @@ class TestInsertOrderDeterminism:
 
     def test_summing_optimize_agrees_with_query_final(self, wh):
         # non-sum column where LATEST != MAX: OPTIMIZE FINAL and
-        # SELECT ... FINAL must return the SAME value (max — the one
-        # SAF_AGG_FOR_ROLE vocabulary both paths now share)
+        # SELECT ... FINAL must return the SAME value (max — both
+        # read ChWarehouse._merge)
         wh.execute(
             "CREATE TABLE sa (k Int32, n Int64, note String) "
             "ENGINE = SummingMergeTree(n) ORDER BY k"
@@ -1705,3 +1710,109 @@ class TestRound14AdviceDdl:
         assert (rows2[0]["k"], rows2[0]["d"], rows2[0]["v"]) == (
             "a", 13, 12
         )
+
+
+# engine clause, engine columns, inserted batches, FINAL v per (day, k)
+# on a table ORDER BY (toDate(ts), k): k = 1 on two days, and on the
+# first day a second row (a newer version, another summand, a cancel +
+# new state) that merges with the first
+_D1, _D1B, _D2 = (
+    "toDateTime('2024-01-01 10:00:00')",
+    "toDateTime('2024-01-01 11:00:00')",
+    "toDateTime('2024-01-02 10:00:00')",
+)
+_SORT_KEY_CASES = {
+    "replacing": (
+        "ReplacingMergeTree(ver)", "v Float64, ver UInt64",
+        [f"({_D1}, 1, 1.0, 1), ({_D2}, 1, 3.0, 1)", f"({_D1B}, 1, 2.0, 2)"],
+        {"2024-01-01": 2.0, "2024-01-02": 3.0},
+    ),
+    "summing": (
+        "SummingMergeTree", "v Float64",
+        [f"({_D1}, 1, 1.0), ({_D2}, 1, 3.0)", f"({_D1B}, 1, 2.0)"],
+        {"2024-01-01": 3.0, "2024-01-02": 3.0},
+    ),
+    "aggregating": (
+        "AggregatingMergeTree",
+        "v SimpleAggregateFunction(sum, Float64), "
+        "top SimpleAggregateFunction(max, Int64)",
+        [f"({_D1}, 1, 1.0, 5), ({_D2}, 1, 3.0, 1)", f"({_D1B}, 1, 2.0, 7)"],
+        {"2024-01-01": 3.0, "2024-01-02": 3.0},
+    ),
+    "collapsing": (
+        "CollapsingMergeTree(sign)", "v Float64, sign Int8",
+        [f"({_D1}, 1, 1.0, 1), ({_D2}, 1, 3.0, 1)",
+         f"({_D1}, 1, 1.0, -1), ({_D1B}, 1, 2.0, 1)"],
+        {"2024-01-01": 2.0, "2024-01-02": 3.0},
+    ),
+    "versioned_collapsing": (
+        "VersionedCollapsingMergeTree(sign, ver)",
+        "v Float64, sign Int8, ver UInt64",
+        [f"({_D1}, 1, 1.0, 1, 1), ({_D2}, 1, 3.0, 1, 1)",
+         f"({_D1}, 1, 1.0, -1, 1), ({_D1B}, 1, 2.0, 1, 2)"],
+        {"2024-01-01": 2.0, "2024-01-02": 3.0},
+    ),
+}
+
+
+@pytest.mark.parametrize("engine", list(_SORT_KEY_CASES))
+def test_final_merges_on_sort_key_expressions(wh, engine):
+    """CH merges rows that agree on every ORDER BY EXPRESSION: with
+    ORDER BY (toDate(ts), k), k = 1 on two days stays two rows and the
+    same-day rows merge. SELECT … FINAL used to keep only the plain
+    column items (one row per k on Summing/Aggregating), and OPTIMIZE
+    FINAL failed to resolve the expression."""
+    clause, cols, batches, want = _SORT_KEY_CASES[engine]
+    wh.execute(
+        f"CREATE TABLE t (ts DateTime, k Int64, {cols}) "
+        f"ENGINE = {clause} ORDER BY (toDate(ts), k)"
+    )
+    for b in batches:
+        wh.execute(f"INSERT INTO t VALUES {b}")
+    final = sorted(map(tuple, wh.execute("SELECT * FROM t FINAL").collect()))
+    got = {
+        str(r["d"]): r["v"]
+        for r in wh.execute(
+            "SELECT toDate(ts) AS d, k, v FROM t FINAL"
+        ).collect()
+    }
+    assert len(final) == len(want) and got == want
+    wh.execute("OPTIMIZE TABLE t FINAL")
+    assert sorted(map(tuple, wh.execute("SELECT * FROM t").collect())) == final
+
+
+def test_sample_by_must_be_an_order_by_item():
+    # CH rejects such a table at CREATE; requiring it keeps FINAL SAMPLE
+    # (sampling the merged rows) equal to sampling before the merge
+    with pytest.raises(ValueError, match="SAMPLE BY id must be an ORDER BY"):
+        parse_create_table(
+            "CREATE TABLE s (k Int64, id Int64) ENGINE = MergeTree "
+            "ORDER BY k SAMPLE BY id"
+        )
+    meta, *_ = parse_create_table(
+        "CREATE TABLE s (k Int64, id Int64) ENGINE = MergeTree "
+        "ORDER BY (k, id) SAMPLE BY id"
+    )
+    assert meta.sample_by == "id"
+
+
+def test_final_read_plans_one_exchange_and_window_group_limit(wh):
+    import io
+    from contextlib import redirect_stdout
+
+    wh.execute(
+        "CREATE TABLE kv (k UInt64, grp String, v Float64, ver UInt64) "
+        "ENGINE = ReplacingMergeTree(ver) PARTITION BY grp ORDER BY k"
+    )
+    wh.execute("INSERT INTO kv VALUES (1, 'a', 1.0, 1), (2, 'b', 3.0, 1)")
+    wh.execute("INSERT INTO kv VALUES (1, 'a', 5.0, 2)")
+    df = wh.execute("SELECT k, grp, v, ver FROM kv FINAL")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    tree = buf.getvalue().split("\n\n")[0]
+    assert "WindowGroupLimit" in tree  # rn = 1 pruned before the exchange
+    assert tree.count("Exchange") == 1, tree
+    assert sorted(map(tuple, df.collect())) == [
+        (1, "a", 5.0, 2), (2, "b", 3.0, 1)
+    ]
