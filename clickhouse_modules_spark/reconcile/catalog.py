@@ -1,5 +1,5 @@
 """Catalog state: the system.* tables the reference introspects, as
-DataFrames with fixed schemas (FIXTURES.md §A).
+driver-local DataFrames with fixed schemas (FIXTURES.md §A).
 
 The reference reads four ClickHouse system tables (clickhouse_users.py:
 149,156,166,179-180; clickhouse_grants.py:164,174); we model those plus
@@ -8,17 +8,44 @@ The reference reads four ClickHouse system tables (clickhouse_users.py:
 clickhouse_grants.py:292-300).
 
 State is immutable: every mutation returns a new Catalog of DataFrames.
-Catalogs are tiny control-plane tables; persistence (``save``/``load``)
-round-trips through parquet under a warehouse dir so reconcile state
-survives sessions.
+The catalog is a few kilobytes, so it never touches Spark's file I/O:
+
+- In memory, every table is an Arrow table on the driver, and its
+  DataFrame comes from ``local_relation`` — the one
+  ``createDataFrame`` call here. Spark plans it as a ``LocalRelation``,
+  so the filter/select/collect probes of ``introspect`` run on the
+  driver without a Spark job. A Catalog keeps each table's Arrow
+  snapshot until a statement replaces that table (``with_table``);
+  only a replaced table costs a ``toArrow()`` job, once, when it is
+  checkpointed or saved.
+- On disk, ``save(path)`` writes the six tables with pyarrow into a
+  fresh version directory ``<path>/v-<uuid>/<table>.parquet``, then
+  commits it with one ``os.replace`` of the pointer file
+  ``<path>/CURRENT``, which names the live version. Only then is the
+  version the pointer named before deleted. A crash at any step leaves
+  the old catalog or the new one, and a crashed save's version
+  directory is never named. ``load`` reads the version the pointer
+  names.
+
+``checkpoint()`` stays public because callers (the playbook benchmark)
+call it before ``save``: it snapshots the replaced tables to Arrow, so
+their DataFrames become local relations again and the lineage of a
+long mutation chain stops growing.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, replace as dc_replace
+import os
+import shutil
+import uuid
+from dataclasses import dataclass, field, replace as dc_replace
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 USERS_SCHEMA = T.StructType(
     [
@@ -63,6 +90,36 @@ TABLES = {
     "roles": ROLES_SCHEMA,
     "grants": GRANTS_SCHEMA,
 }
+ARROW_SCHEMAS = {name: to_arrow_schema(schema) for name, schema in TABLES.items()}
+
+# the file naming the live version directory of a saved catalog
+POINTER = "CURRENT"
+
+
+def arrow_rows(name: str, rows) -> pa.Table:
+    """Rows of catalog table ``name`` (tuples, Rows or dicts) as Arrow.
+    Rejects a tuple of the wrong width and a null in a NOT NULL column,
+    which pyarrow itself would accept."""
+    schema = ARROW_SCHEMAS[name]
+    dicts = []
+    for r in rows:
+        if not isinstance(r, dict):
+            if len(r) != len(schema):
+                raise ValueError(f"{name}: row {r!r} has {len(r)} of {len(schema)} fields")
+            r = dict(zip(schema.names, r))
+        dicts.append(r)
+    table = pa.Table.from_pylist(dicts, schema=schema)
+    for f, column in zip(schema, table.columns):
+        if not f.nullable and column.null_count:
+            raise ValueError(f"{name}.{f.name} is NOT NULL")
+    return table
+
+
+def local_relation(spark: SparkSession, name: str, table: pa.Table) -> DataFrame:
+    """The one way a catalog DataFrame is built: an Arrow table becomes a
+    driver-local ``LocalRelation``, which filter/select/collect plans
+    evaluate without a Spark job."""
+    return spark.createDataFrame(table, TABLES[name])
 
 
 @dataclass(frozen=True)
@@ -74,22 +131,25 @@ class Catalog:
     quotas: DataFrame
     roles: DataFrame
     grants: DataFrame
+    # table name -> the Arrow table its DataFrame was built from; a
+    # table that a statement replaced has no entry
+    snapshots: dict = field(default_factory=dict, repr=False, compare=False)
+
+    @classmethod
+    def _from_arrow(cls, spark: SparkSession, tables: dict) -> "Catalog":
+        dfs = {name: local_relation(spark, name, t) for name, t in tables.items()}
+        return cls(spark=spark, snapshots=dict(tables), **dfs)
 
     @classmethod
     def empty(cls, spark: SparkSession) -> "Catalog":
-        dfs = {
-            name: spark.createDataFrame([], schema) for name, schema in TABLES.items()
-        }
-        return cls(spark=spark, **dfs)
+        return cls.from_rows(spark)
 
     @classmethod
     def from_rows(cls, spark: SparkSession, **rows) -> "Catalog":
         """Build a catalog from lists of tuples/dicts per table name."""
-        dfs = {}
-        for name, schema in TABLES.items():
-            data = rows.get(name, [])
-            dfs[name] = spark.createDataFrame(data, schema)
-        return cls(spark=spark, **dfs)
+        return cls._from_arrow(
+            spark, {name: arrow_rows(name, rows.get(name, [])) for name in TABLES}
+        )
 
     @classmethod
     def demo(cls, spark: SparkSession) -> "Catalog":
@@ -109,26 +169,50 @@ class Catalog:
         )
 
     def with_table(self, name: str, df: DataFrame) -> "Catalog":
-        return dc_replace(self, **{name: df})
+        snapshots = {k: v for k, v in self.snapshots.items() if k != name}
+        return dc_replace(self, snapshots=snapshots, **{name: df})
+
+    def _replaced(self) -> dict:
+        """The tables a statement replaced, as Arrow: one ``toArrow()``
+        job each."""
+        return {
+            name: getattr(self, name).toArrow().cast(ARROW_SCHEMAS[name])
+            for name in TABLES
+            if name not in self.snapshots
+        }
+
+    def checkpoint(self) -> "Catalog":
+        """Snapshot the replaced tables, so each DataFrame is a local
+        relation again (long mutation chains otherwise grow the plan
+        unboundedly)."""
+        fresh = self._replaced()
+        dfs = {name: local_relation(self.spark, name, t) for name, t in fresh.items()}
+        return dc_replace(self, snapshots={**self.snapshots, **fresh}, **dfs)
 
     def save(self, path: str) -> None:
+        """Write a new version and commit it by replacing the pointer."""
+        version = f"v-{uuid.uuid4().hex}"
+        os.makedirs(os.path.join(path, version))
+        tables = {**self.snapshots, **self._replaced()}
         for name in TABLES:
-            getattr(self, name).write.mode("overwrite").parquet(f"{path}/{name}")
+            pq.write_table(tables[name], os.path.join(path, version, f"{name}.parquet"))
+        pointer = Path(path, POINTER)
+        old = pointer.read_text() if pointer.exists() else None
+        tmp = Path(path, f"{POINTER}.{uuid.uuid4().hex}.tmp")
+        tmp.write_text(version)
+        os.replace(tmp, pointer)
+        if old is not None:
+            shutil.rmtree(os.path.join(path, old))
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "Catalog":
-        dfs = {
-            name: spark.read.schema(schema).parquet(f"{path}/{name}")
-            for name, schema in TABLES.items()
-        }
-        return cls(spark=spark, **dfs)
-
-    def checkpoint(self) -> "Catalog":
-        """Materialize lineage (long mutation chains otherwise grow the
-        plan unboundedly — the control-plane analog of iterative-algorithm
-        checkpointing)."""
-        dfs = {}
-        for name, schema in TABLES.items():
-            rows = getattr(self, name).collect()
-            dfs[name] = self.spark.createDataFrame(rows, schema)
-        return Catalog(spark=self.spark, **dfs)
+        version = Path(path, POINTER).read_text()
+        return cls._from_arrow(
+            spark,
+            {
+                name: pq.read_table(
+                    os.path.join(path, version, f"{name}.parquet"), schema=schema
+                )
+                for name, schema in ARROW_SCHEMAS.items()
+            },
+        )

@@ -39,7 +39,11 @@ from clickhouse_modules_spark.plans.statements import (
     q_ident,
 )
 from clickhouse_modules_spark.reconcile import introspect as insp
-from clickhouse_modules_spark.reconcile.catalog import Catalog
+from clickhouse_modules_spark.reconcile.catalog import (
+    Catalog,
+    arrow_rows,
+    local_relation,
+)
 
 
 class SpecError(ValueError):
@@ -395,12 +399,15 @@ def apply_statements(catalog: Catalog, statements: list[Statement]) -> Catalog:
     return catalog
 
 
+def _new_rows(catalog: Catalog, name: str, rows: list[tuple]):
+    return local_relation(catalog.spark, name, arrow_rows(name, rows))
+
+
 def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
-    spark = catalog.spark
     p = stmt.params
     if stmt.op == "create_user":
         row = [(p["name"], p["auth_type"], p["password_sha256"])]
-        new = spark.createDataFrame(row, catalog.users.schema)
+        new = _new_rows(catalog, "users", row)
         return catalog.with_table(
             "users",
             catalog.users.filter(F.col("name") != p["name"]).unionByName(new),
@@ -433,7 +440,7 @@ def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
             )
         )
     if stmt.op == "alter_quota":
-        if catalog.quotas.filter(F.col("name") == p["quota"]).limit(1).count() == 0:
+        if catalog.quotas.filter(F.col("name") == p["quota"]).isEmpty():
             raise ApplyError(f"quota {p['quota']!r} does not exist")
         arr = F.array(*[F.lit(u) for u in p["apply_to_list"]])
         return catalog.with_table(
@@ -446,8 +453,8 @@ def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
             ),
         )
     if stmt.op == "set_profile":
-        new = spark.createDataFrame(
-            [(p["user"], p["profile"])], catalog.settings_profile_elements.schema
+        new = _new_rows(
+            catalog, "settings_profile_elements", [(p["user"], p["profile"])]
         )
         return catalog.with_table(
             "settings_profile_elements",
@@ -456,7 +463,7 @@ def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
             ).unionByName(new),
         )
     if stmt.op == "create_role":
-        new = spark.createDataFrame([(p["role"],)], catalog.roles.schema)
+        new = _new_rows(catalog, "roles", [(p["role"],)])
         return catalog.with_table(
             "roles",
             catalog.roles.filter(F.col("name") != p["role"]).unionByName(new),
@@ -472,9 +479,7 @@ def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
                     & F.col("granted_role_name").isin(p["roles"])
                 )
             )
-        new = spark.createDataFrame(
-            [(p["user"], r) for r in p["roles"]], catalog.role_grants.schema
-        )
+        new = _new_rows(catalog, "role_grants", [(p["user"], r) for r in p["roles"]])
         return catalog.with_table("role_grants", base.unionByName(new))
     if stmt.op == "revoke_role":
         return catalog.with_table(
@@ -500,9 +505,10 @@ def _apply_one(catalog: Catalog, stmt: Statement) -> Catalog:
                     & F.col("privilege").isin(p["privileges"])
                 )
             )
-        new = spark.createDataFrame(
+        new = _new_rows(
+            catalog,
+            "grants",
             [(p["grantee"], priv, p["database"], p["table"]) for priv in p["privileges"]],
-            catalog.grants.schema,
         )
         return catalog.with_table("grants", base.unionByName(new))
     if stmt.op == "revoke_privs":

