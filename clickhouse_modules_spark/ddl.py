@@ -95,12 +95,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from clickhouse_modules_spark.functions.ch_sql import (
     STATE_BASES,
     agg_sql_for_role,
-    _find_close,
-    _split_top,
-    _subst_ident,
-    _top_level_words,
     ch_sql,
     deregister_table,
+    lex,
     register_dictionary,
     register_merged_view,
     register_sampling_key,
@@ -186,13 +183,13 @@ def ch_type_to_spark(t: str) -> tuple[str, bool]:
         sub, _ = ch_type_to_spark(inner)
         return f"array<{sub}>", False
     if head == "Map":
-        k, v = _split_top(inner)
+        k, v = lex(inner).split()
         ks, _ = ch_type_to_spark(k)
         vs, _ = ch_type_to_spark(v)
         return f"map<{ks},{vs}>", False
     if head in ("Tuple", "Nested"):
         fields = []
-        for i, part in enumerate(_split_top(inner)):
+        for i, part in enumerate(lex(inner).split()):
             fm = re.match(r"^([A-Za-z_]\w*)\s+(.+)$", part.strip(), re.S)
             if fm and not re.match(r"^(Nullable|LowCardinality|Array|Map|Tuple)$", fm.group(1)):
                 fname, ftype = fm.group(1), fm.group(2)
@@ -209,7 +206,7 @@ def ch_type_to_spark(t: str) -> tuple[str, bool]:
     if head == "FixedString":
         return "string", False  # length not enforced (CH pads with \0)
     if head == "Decimal":
-        p, s = [x.strip() for x in _split_top(inner)]
+        p, s = [x.strip() for x in lex(inner).split()]
         if int(p) > 38:
             raise ValueError(f"Decimal({p},{s}): precision > 38")
         return f"decimal({p},{s})", False
@@ -355,27 +352,6 @@ def _partition_source_cols(meta: "TableMeta", logical: list[str]) -> set:
     return refs
 
 
-def _sub_outside_strings(sql: str, pat: re.Pattern, repl: str) -> str:
-    """Apply a regex substitution only OUTSIDE string literals (a plain
-    re.sub would rewrite matching text inside quoted strings)."""
-    out, i, n = [], 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        j = i
-        while j < n and sql[j] not in "'\"":
-            j += 1
-        out.append(pat.sub(repl, sql[i:j]))
-        i = j
-    return "".join(out)
-
-
 # ---------------------------------------------------------------------------
 # CREATE TABLE parsing
 # ---------------------------------------------------------------------------
@@ -463,7 +439,7 @@ def _parse_column_entry(entry: str) -> ColumnMeta | None:
     rest = m.group(2).strip()
     # split off the first top-level tail keyword
     tail_kind, tail_expr = None, None
-    for ws, we, w in _top_level_words(rest):
+    for ws, we, w in lex(rest).words():
         if w.upper() in _COL_TAIL_KEYWORDS and ws > 0:
             tail_kind = w.upper()
             tail_expr = rest[we:].strip()
@@ -522,7 +498,7 @@ def _parse_column_entry(entry: str) -> ColumnMeta | None:
     if tail_kind in ("DEFAULT", "MATERIALIZED", "ALIAS"):
         # the stored expression is pre-translated CH → Spark SQL; any
         # further tail (CODEC/COMMENT) is cosmetic and dropped with it
-        for ws, we, w in _top_level_words(tail_expr):
+        for ws, we, w in lex(tail_expr).words():
             if w.upper() in ("CODEC", "COMMENT") and ws > 0:
                 tail_expr = tail_expr[:ws].strip()
                 break
@@ -565,7 +541,7 @@ def _split_create_tail(tail: str) -> dict[str, str]:
     top-level keyword. Returns {clause: body}; AS captures the rest of
     the statement (CTAS)."""
     marks: list[tuple[int, int, str]] = []
-    for ws, we, w in _top_level_words(tail):
+    for ws, we, w in lex(tail).words():
         up = w.upper()
         if up in _CREATE_CLAUSES:
             # PARTITION BY / PRIMARY KEY / ORDER BY / SAMPLE BY are
@@ -598,8 +574,8 @@ def _tuple_items(body: str) -> list[str]:
     if body.lower() in ("tuple()", "()"):
         return []
     if body.startswith("("):
-        close = _find_close(body, 0)
-        return [translate(x) for x in _split_top(body[1:close]) if x.strip()]
+        toks = lex(body)
+        return [translate(x) for x in toks.split(1, toks.close(0)) if x.strip()]
     return [translate(body)] if body else []
 
 
@@ -628,8 +604,9 @@ def parse_create_table(sql: str) -> tuple[TableMeta, str | None, bool, bool]:
     rest = m.group(4).strip()
     columns: list[ColumnMeta] = []
     if rest.startswith("("):
-        close = _find_close(rest, 0)
-        for entry in _split_top(rest[1:close]):
+        toks = lex(rest)
+        close = toks.close(0)
+        for entry in toks.split(1, close):
             cm = _parse_column_entry(entry)
             if cm is not None:
                 columns.append(cm)
@@ -652,9 +629,9 @@ def parse_create_table(sql: str) -> tuple[TableMeta, str | None, bool, bool]:
     if engine == "ReplacingMergeTree" and engine_args:
         version_col = engine_args.strip("` ")
     if engine == "SummingMergeTree" and engine_args:
-        sum_cols = [c.strip("` ") for c in _split_top(engine_args)]
+        sum_cols = [c.strip("` ") for c in lex(engine_args).split()]
     if engine == "CollapsingMergeTree":
-        args = [a.strip("` ") for a in _split_top(engine_args) if a.strip()]
+        args = [a.strip("` ") for a in lex(engine_args).split() if a.strip()]
         if len(args) != 1:
             raise ValueError(
                 "CollapsingMergeTree needs exactly one argument: "
@@ -662,7 +639,7 @@ def parse_create_table(sql: str) -> tuple[TableMeta, str | None, bool, bool]:
             )
         sign_col = args[0]
     if engine == "VersionedCollapsingMergeTree":
-        args = [a.strip("` ") for a in _split_top(engine_args) if a.strip()]
+        args = [a.strip("` ") for a in lex(engine_args).split() if a.strip()]
         if len(args) != 2:
             raise ValueError(
                 "VersionedCollapsingMergeTree needs exactly two "
@@ -1058,8 +1035,9 @@ class ChWarehouse:
                 ("columns", self.columns_info),
             ):
                 pat = re.compile(rf"\bsystem\.{sysname}\b", re.I)
-                new_stmt = _sub_outside_strings(
-                    stmt, pat, f"__system_{sysname}"
+                new_stmt = "".join(
+                    text if is_str else pat.sub(f"__system_{sysname}", text)
+                    for text, is_str in lex(stmt).segments()
                 )
                 if new_stmt != stmt:
                     stmt = new_stmt
@@ -1360,19 +1338,8 @@ class ChWarehouse:
         """Execute a ;-separated statement batch (what a CH client
         sends); returns the LAST statement's result. Semicolons inside
         string literals don't split."""
-        stmts, depth, start, in_str = [], 0, 0, None
-        for i, c in enumerate(script):
-            if in_str:
-                if c == in_str:
-                    in_str = None
-            elif c in "'\"":
-                in_str = c
-            elif c == ";":
-                stmts.append(script[start:i])
-                start = i + 1
-        stmts.append(script[start:])
         result = None
-        for st_ in stmts:
+        for st_ in lex(script).cut(";"):
             if st_.strip():
                 result = self.execute(st_)
         return result
@@ -1464,7 +1431,7 @@ class ChWarehouse:
             raise ValueError(f"unparseable INSERT: {stmt[:80]!r}")
         name = m.group(1)
         cols = (
-            [c.strip("` ") for c in _split_top(m.group(2)[1:-1])]
+            [c.strip("` ") for c in lex(m.group(2)[1:-1]).split()]
             if m.group(2)
             else None
         )
@@ -1682,7 +1649,7 @@ class ChWarehouse:
         src = sm.group(1)
         self.meta(src)  # must exist
         attrs = [
-            c.name for e in _split_top(m.group(4))
+            c.name for e in lex(m.group(4)).split()
             if (c := _parse_column_entry(e)) is not None
         ]
         if os.path.exists(self._mv_path(name)) and not m.group(1):
@@ -1729,15 +1696,13 @@ class ChWarehouse:
     def _alias_subst(meta: TableMeta, sql_expr: str) -> str:
         """ALIAS columns don't exist on disk; substitute their defining
         expressions into a mutation predicate so WHERE clauses over
-        them still work. Uses the translator's quote-aware
-        ``_subst_ident`` — a naive regex would rewrite matching text
+        them still work. Substitutes words of the token stream — a
+        naive regex would rewrite matching text
         INSIDE string literals (``WHERE tag = 'vip'`` with an alias
         named vip)."""
         for c in meta.columns:
             if c.kind == "alias":
-                sql_expr = _subst_ident(
-                    sql_expr, c.name, f"({c.default})"
-                )
+                sql_expr = lex(sql_expr).subst(c.name, f"({c.default})")
         return sql_expr
 
     # Spark's escapePathName percent-encodes ':', '=', ' ', '%', …
@@ -1820,7 +1785,7 @@ class ChWarehouse:
             The scope conjunct is NULL-COALESCED like the predicate: a
             NULL partition value must not satisfy ``~match`` deletion.
             """
-            words = list(_top_level_words(tail))
+            words = lex(tail).words()
             wi = next(
                 (i for i, (_s, _e, w) in enumerate(words)
                  if w.upper() == "WHERE"),
@@ -1873,7 +1838,7 @@ class ChWarehouse:
                 match = match & scope
             assigns: dict[str, str] = {}
 
-            for part in _split_top(assign_text):
+            for part in lex(assign_text).split():
                 am = re.match(r"^(`[^`]+`|\w+)\s*=\s*(.+)$", part.strip(), re.S)
                 if not am:
                     raise ValueError(f"unparseable assignment: {part!r}")
@@ -2020,10 +1985,10 @@ class ChWarehouse:
             # the column follow the rename (quote-aware), or later
             # inserts/reads resolve a name that no longer exists
             if meta.ttl:
-                meta.ttl = _subst_ident(meta.ttl, old, new)
+                meta.ttl = lex(meta.ttl).subst(old, new)
             for other in meta.columns:
                 if other.default:
-                    other.default = _subst_ident(other.default, old, new)
+                    other.default = lex(other.default).subst(old, new)
             meta.schema_evolved = True
             self._save_meta(meta)
             return None
@@ -2065,10 +2030,9 @@ class ChWarehouse:
         for multi-column partitioning)."""
         if not meta.partition_cols:
             raise ValueError(f"table {meta.name} is not partitioned")
+        toks = lex(lit)
         vals = [v.strip().strip("'\"") for v in (
-            _split_top(lit[1:_find_close(lit, 0)])
-            if lit.startswith("(")
-            else [lit]
+            toks.split(1, toks.close(0)) if lit.startswith("(") else [lit]
         )]
         if len(vals) != len(meta.partition_cols):
             raise ValueError(
@@ -2171,7 +2135,7 @@ class ChWarehouse:
         final = bool(m.group(3))
         dedup = bool(m.group(4))
         dedup_by = (
-            [c.strip("` ") for c in _split_top(m.group(6))]
+            [c.strip("` ") for c in lex(m.group(6)).split()]
             if m.group(6)
             else None
         )

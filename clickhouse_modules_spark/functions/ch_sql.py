@@ -46,13 +46,229 @@ type-default zeros).
 Not a full parser: DDL and clauses inside nested subqueries are out
 of scope and pass through untouched (Spark rejects what it can't
 parse — loudly, not silently).
+
+One lexer reads the text: ``lex(sql)`` returns a :class:`Tokens`
+stream, and every scan here and in ``ddl.py`` queries it instead of
+looking at quote characters itself. The token rules:
+
+- ``'`` or ``"`` opens a string literal that ends at the next same
+  quote, or at the end of the text; there are no escapes, so ``'a''b'``
+  is two literals;
+- a word is a run of identifier characters (``str.isalnum()`` or
+  ``_``), numbers included; ``1.5`` is the words ``1`` and ``5`` around
+  a ``.``;
+- every other non-space character is a token of its own;
+- the paren depth counts ``(`` and ``)`` only, and ``(``/``)`` and
+  ``[``/``]`` are matched separately.
+
+``translate`` lexes a statement once and hands the tokens to each
+clause pass in turn. A pass first looks for its trigger (a word such
+as ``PREWHERE`` or ``LIMIT``, or a character such as ``[``) among the
+stream's ``marks``; when the trigger is absent, the pass cannot change
+the text, so it returns it at once. Only a pass that changed the text
+makes ``translate`` lex it again, which keeps a long VALUES list
+linear to translate.
 """
 
 from __future__ import annotations
 
 import re
+from bisect import bisect_left
 
 from pyspark.sql import DataFrame, SparkSession
+
+# ------------------------------------------------------------------ lexer
+
+# A string literal runs from a quote to the next same quote (or the end
+# of the text); a word is a run of identifier characters (``\w``: what
+# str.isalnum() accepts, plus ``_``); any other non-space character is a
+# one-character token.
+_TOKEN_RE = re.compile(r"""'[^']*'?|"[^"]*"?|\w+|\S""")
+_QUOTES = frozenset("'\"")
+
+
+class Tokens:
+    """The token stream of one SQL text.
+
+    ``starts``/``ends`` are each token's offsets, ``depths`` the paren
+    depth before it (``(`` and ``)`` only; brackets do not count, and an
+    unmatched ``)`` takes the depth below 0). ``partner`` maps the
+    offset of every matched ``(``/``)`` and ``[``/``]`` to the offset of
+    its partner. ``marks`` holds every word upper-cased and every
+    one-character token: a clause pass whose trigger is not among them
+    cannot change the text.
+    """
+
+    __slots__ = ("sql", "starts", "ends", "depths", "partner", "marks",
+                 "_words")
+
+    def __init__(self, sql: str):
+        self.sql = sql
+        starts, ends, depths = [], [], []
+        partner: dict[int, int] = {}
+        marks: set[str] = set()
+        parens: list[int] = []
+        brackets: list[int] = []
+        depth = 0
+        for m in _TOKEN_RE.finditer(sql):
+            s, e = m.span()
+            c = sql[s]
+            starts.append(s)
+            ends.append(e)
+            depths.append(depth)
+            if c in _QUOTES:
+                continue
+            marks.add(m.group().upper())
+            if c == "(":
+                depth += 1
+                parens.append(s)
+            elif c == ")":
+                depth -= 1
+                if parens:
+                    o = parens.pop()
+                    partner[o], partner[s] = s, o
+            elif c == "[":
+                brackets.append(s)
+            elif c == "]" and brackets:
+                o = brackets.pop()
+                partner[o], partner[s] = s, o
+        self.starts, self.ends, self.depths = starts, ends, depths
+        self.partner, self.marks = partner, marks
+        self._words: list[tuple[int, int, str]] | None = None
+
+    def is_word(self, k: int) -> bool:
+        c = self.sql[self.starts[k]]
+        return c.isalnum() or c == "_"
+
+    def is_string(self, k: int) -> bool:
+        return self.sql[self.starts[k]] in _QUOTES
+
+    def at(self, i: int) -> int:
+        """Index of the first token starting at or after offset ``i``."""
+        return bisect_left(self.starts, i)
+
+    def words(self) -> list[tuple[int, int, str]]:
+        """(start, end, word) of every word at paren depth 0."""
+        if self._words is None:
+            sql = self.sql
+            self._words = [
+                (s, e, sql[s:e])
+                for s, e, d in zip(self.starts, self.ends, self.depths)
+                if d == 0 and (sql[s].isalnum() or sql[s] == "_")
+            ]
+        return self._words
+
+    def close(self, i: int) -> int:
+        """Offset of the ``)`` matching the ``(`` at offset ``i``."""
+        j = self.partner.get(i)
+        if j is None or self.sql[i] != "(":
+            raise ValueError("unbalanced parentheses in SQL")
+        return j
+
+    def close_bracket(self, i: int) -> int:
+        """Offset of the ``]`` matching the ``[`` at offset ``i``."""
+        j = self.partner.get(i)
+        if j is None or self.sql[i] != "[":
+            raise ValueError("unbalanced brackets in SQL")
+        return j
+
+    def open_of(self, j: int) -> int:
+        """Offset of the ``(``/``[`` matching the closer at offset ``j``."""
+        i = self.partner.get(j)
+        if i is None or self.sql[j] not in ")]":
+            raise ValueError("unbalanced delimiters in SQL")
+        return i
+
+    def split(self, lo: int = 0, hi: int | None = None) -> list[str]:
+        """``sql[lo:hi]`` cut at its own top-level commas, each part
+        stripped; [] for blank text."""
+        sql = self.sql
+        if hi is None:
+            hi = len(sql)
+        if not sql[lo:hi].strip():
+            return []
+        starts, depths = self.starts, self.depths
+        k = bisect_left(starts, lo)
+        base = depths[k] if k < len(starts) else 0
+        parts, start = [], lo
+        while k < len(starts) and starts[k] < hi:
+            s = starts[k]
+            if sql[s] == "," and depths[k] == base:
+                parts.append(sql[start:s].strip())
+                start = s + 1
+            k += 1
+        parts.append(sql[start:hi].strip())
+        return parts
+
+    def cut(self, sep: str) -> list[str]:
+        """The text cut at every ``sep`` token, at any depth, unstripped."""
+        sql = self.sql
+        parts, start = [], 0
+        for s in self.starts:
+            if sql[s] == sep:
+                parts.append(sql[start:s])
+                start = s + 1
+        parts.append(sql[start:])
+        return parts
+
+    def segments(self) -> list[tuple[str, bool]]:
+        """The text as alternating runs: (text, is_string_literal)."""
+        sql = self.sql
+        out: list[tuple[str, bool]] = []
+        pos = 0
+        for s, e in zip(self.starts, self.ends):
+            if sql[s] in _QUOTES:
+                if s > pos:
+                    out.append((sql[pos:s], False))
+                out.append((sql[s:e], True))
+                pos = e
+        if pos < len(sql):
+            out.append((sql[pos:], False))
+        return out
+
+    def subst(self, ident: str, repl: str) -> str:
+        """Every word equal to ``ident`` replaced by ``repl``, except a
+        dotted reference (``tbl.ident`` is a column, not the alias)."""
+        sql = self.sql
+        out, pos = [], 0
+        for s, e in zip(self.starts, self.ends):
+            if sql[s:e] == ident and not (s > 0 and sql[s - 1] == "."):
+                out.append(sql[pos:s])
+                out.append(repl)
+                pos = e
+        if not out:
+            return sql
+        out.append(sql[pos:])
+        return "".join(out)
+
+    def map_subqueries(self, fn) -> str:
+        """Apply ``fn`` to the text inside every outermost paren group
+        that starts with SELECT."""
+        sql = self.sql
+        out, pos, skip = [], 0, -1
+        for s in self.starts:
+            if s < skip or sql[s] != "(":
+                continue
+            skip = self.close(s)
+            inner = sql[s + 1 : skip]
+            if re.match(r"^\s*SELECT\b", inner, re.I):
+                out.append(sql[pos : s + 1])
+                out.append(fn(inner))
+                pos = skip
+        if not out:
+            return sql
+        out.append(sql[pos:])
+        return "".join(out)
+
+
+def lex(sql: str) -> Tokens:
+    """Tokenize ``sql`` once; every scan of SQL text reads the result."""
+    return Tokens(sql)
+
+
+def is_quoted(s: str) -> bool:
+    """True when ``s`` starts and ends with the same quote character."""
+    return len(s) >= 2 and s[0] in _QUOTES and s[-1] == s[0]
 
 # name → Spark name (plain rename, argument order preserved)
 RENAMES: dict[str, str] = {
@@ -2689,7 +2905,7 @@ def _array_split_sql(reverse: bool, lam: str, arrs: list[str]) -> str:
     def flag(idx: str) -> str:
         b = body
         for p_, arr_ in zip(params, arrs):
-            b = _subst_ident(b, p_, f"try_element_at({arr_}, {idx})")
+            b = lex(b).subst(p_, f"try_element_at({arr_}, {idx})")
         # CH treats any nonzero as a cut; NULL (out-of-range probe or
         # NULL flag) never cuts
         return f"coalesce(CAST(({b}) AS BOOLEAN), false)"
@@ -3317,7 +3533,10 @@ def _sequence_match_sql(
     )
 
 
-def _rewrite_moving_order(sql: str) -> str:
+_MOVING_AGGS = ("groupArrayMovingSum", "groupArrayMovingAvg")
+
+
+def _rewrite_moving_order(toks: Tokens) -> str:
     """Auto-derive the ordering key for bare ``groupArrayMovingSum/
     Avg(v)`` (and the windowed ``(n)(v)`` spelling) from an enclosing
     ``FROM (… ORDER BY key [ASC|DESC])`` subquery — the common CH
@@ -3328,6 +3547,7 @@ def _rewrite_moving_order(sql: str) -> str:
     multi-key or underivable shapes fall through untouched and reject
     loudly at the dispatch site with the explicit-key spelling.
     """
+    sql = toks.sql
     if "groupArrayMoving" not in sql:
         return sql
     # collect EVERY top-level FROM ( … ) subquery's ORDER BY; only a
@@ -3335,8 +3555,7 @@ def _rewrite_moving_order(sql: str) -> str:
     # ordering by different keys (UNION ALL) must reject, not silently
     # aggregate the first leg in the second leg's order
     candidates = set()
-    words = list(_top_level_words(sql))
-    for ws, we, w in words:
+    for ws, we, w in toks.words():
         if w.upper() != "FROM":
             continue
         j = we
@@ -3344,8 +3563,8 @@ def _rewrite_moving_order(sql: str) -> str:
             j += 1
         if j >= len(sql) or sql[j] != "(":
             continue
-        sub = sql[j + 1 : _find_close(sql, j)]
-        subwords = list(_top_level_words(sub))
+        sub = sql[j + 1 : toks.close(j)]
+        subwords = lex(sub).words()
         for si, (ss, se, swd) in enumerate(subwords):
             if (
                 swd.upper() == "ORDER"
@@ -3368,34 +3587,29 @@ def _rewrite_moving_order(sql: str) -> str:
                     keytext, this_asc = keytext[:-5].rstrip(), False
                 elif up.endswith(" ASC"):
                     keytext = keytext[:-4].rstrip()
-                if len(_split_top(keytext)) == 1 and keytext:
+                if len(lex(keytext).split()) == 1 and keytext:
                     candidates.add((keytext, this_asc))
     if len(candidates) != 1:
         return sql  # ambiguous (or none) → the loud reject downstream
     (key, asc), = candidates
     tail = f", {key}" + ("" if asc else ", false")
-    # inject right-to-left so indices stay valid; quote-aware scan
-    for name in ("groupArrayMovingSum", "groupArrayMovingAvg"):
-        pos = len(sql)
-        while True:
-            at = sql.rfind(name + "(", 0, pos)
-            pos = at
-            if at < 0:
-                break
-            if at > 0 and _is_ident_char(sql[at - 1]):
-                continue  # suffix of a longer identifier
-            open1 = at + len(name)
-            close1 = _find_close(sql, open1)
-            grp = open1
-            # parameterized spelling: args live in the SECOND group
-            j = close1 + 1
-            while j < len(sql) and sql[j] in " \t\n":
-                j += 1
-            close = close1
-            if j < len(sql) and sql[j] == "(":
-                grp, close = j, _find_close(sql, j)
-            if len(_split_top(sql[grp + 1 : close])) == 1:
-                sql = sql[:close] + tail + sql[close:]
+    # inject right-to-left so the offsets found stay valid
+    inserts = []
+    for s, e in zip(toks.starts, toks.ends):
+        if sql[s:e] not in _MOVING_AGGS or sql[e : e + 1] != "(":
+            continue
+        close = toks.close(e)
+        grp = e
+        # parameterized spelling: args live in the SECOND group
+        j = close + 1
+        while j < len(sql) and sql[j] in " \t\n":
+            j += 1
+        if j < len(sql) and sql[j] == "(":
+            grp, close = j, toks.close(j)
+        if len(toks.split(grp + 1, close)) == 1:
+            inserts.append(close)
+    for close in sorted(inserts, reverse=True):
+        sql = sql[:close] + tail + sql[close:]
     return sql
 
 
@@ -3426,27 +3640,23 @@ _WIDTH_DISPATCH_FNS = {
 }
 
 
-def _rewrite_byteswap(sql: str) -> str:
-    for fn, marker in _WIDTH_DISPATCH_FNS.items():
-        if fn not in sql:
+def _rewrite_byteswap(toks: Tokens) -> str:
+    sql = toks.sql
+    if not any(fn in sql for fn in _WIDTH_DISPATCH_FNS):
+        return sql
+    out, pos = [], 0
+    for s, e in zip(toks.starts, toks.ends):
+        marker = _WIDTH_DISPATCH_FNS.get(sql[s:e])
+        if marker is None or sql[e : e + 1] != "(":
             continue
-        start = 0
-        while True:
-            at = sql.find(fn + "(", start)
-            if at < 0:
-                break
-            if at > 0 and _is_ident_char(sql[at - 1]):
-                start = at + 1
-                continue
-            open1 = at + len(fn)
-            inner = sql[open1 + 1 : _find_close(sql, open1)].lstrip()
-            m = re.match(r"^(to(?:U)?Int(?:8|16|32|64))\s*\(", inner)
-            if m and m.group(1) in _BYTESWAP_WIDTHS:
-                width, signed = _BYTESWAP_WIDTHS[m.group(1)]
-                tag = "s" if signed else "u"
-                sql = sql[:at] + f"{marker}{tag}{width}" + sql[open1:]
-            start = at + 1
-    return sql
+        inner = sql[e + 1 : toks.close(e)].lstrip()
+        m = re.match(r"^(to(?:U)?Int(?:8|16|32|64))\s*\(", inner)
+        if m and m.group(1) in _BYTESWAP_WIDTHS:
+            width, signed = _BYTESWAP_WIDTHS[m.group(1)]
+            tag = "s" if signed else "u"
+            out += [sql[pos:s], f"{marker}{tag}{width}"]
+            pos = e
+    return "".join(out) + sql[pos:] if out else sql
 
 
 # median<Suffix> is CH's documented alias family for
@@ -3456,28 +3666,27 @@ def _rewrite_byteswap(sql: str) -> str:
 # whose parameterized forms (medianGK(acc)(x)…) inject it
 _MEDIAN_DIRECT = ("median", "medianExact", "medianTDigest",
                   "medianTiming")
-_MEDIAN_RE = re.compile(r"\bmedian([A-Z]\w*)\s*\(")
 
 
-def _rewrite_median(sql: str) -> str:
+def _rewrite_median(toks: Tokens) -> str:
+    sql = toks.sql
     if "median" not in sql:
         return sql
-    start = 0
-    while True:
-        at = sql.find("median", start)
-        if at < 0:
-            return sql
-        if at > 0 and _is_ident_char(sql[at - 1]):
-            start = at + 1
-            continue
-        m = _MEDIAN_RE.match(sql, at)
-        if m is None or ("median" + m.group(1)) in _MEDIAN_DIRECT:
-            start = at + 1
+    starts, ends = toks.starts, toks.ends
+    out, pos = [], 0
+    for k in range(len(starts) - 1):
+        s, e = starts[k], ends[k]
+        word = sql[s:e]
+        if not (
+            word.startswith("median")
+            and "A" <= word[6:7] <= "Z"
+            and sql[starts[k + 1]] == "("
+        ) or word in _MEDIAN_DIRECT:
             continue
         # a PURE combinator tail (medianIf, medianOrNull, medianArray,
         # …) belongs to the direct TEMPLATES base — leave it for the
         # combinator machinery rather than renaming the combinator
-        suffix = m.group(1)
+        suffix = word[6:]
         stripped = True
         while stripped:
             stripped = False
@@ -3488,10 +3697,10 @@ def _rewrite_median(sql: str) -> str:
                     suffix = suffix[: -len(tail)]
                     stripped = True
         if ("median" + suffix) in _MEDIAN_DIRECT or not suffix:
-            start = at + 1
             continue
-        sql = sql[:at] + "quantile" + sql[at + len("median"):]
-        start = at + 1
+        out += [sql[pos:s], "quantile"]
+        pos = s + len("median")
+    return "".join(out) + sql[pos:] if out else sql
 
 
 def _byteswap_sql(width_bits: int, arg: str, signed: bool = False) -> str:
@@ -3780,7 +3989,7 @@ def _tuple_components(expr: str) -> list[str] | None:
     s = expr.strip()
     if not (s.startswith("struct(") and s.endswith(")")):
         return None
-    parts = _split_top(s[len("struct(") : -1])
+    parts = lex(s[len("struct(") : -1]).split()
     comps = []
     for i, p in enumerate(parts):
         p = p.strip()
@@ -3833,9 +4042,9 @@ def _regex_capture_groups(pattern: str) -> int:
 
 
 def _consume_full_frame_over(
-    sql: str, pos: int, ident: str, fn: str
+    toks: Tokens, pos: int, ident: str, fn: str
 ) -> tuple[str, int] | None:
-    """If ``sql[pos:]`` is an inline ``OVER (spec)``, return the spec
+    """If ``toks.sql[pos:]`` is an inline ``OVER (spec)``, return the spec
     with any FULL frame clause removed, plus the index just past the
     closing paren; ``None`` when no inline OVER follows (named-window
     references pass through untouched).
@@ -3846,6 +4055,7 @@ def _consume_full_frame_over(
     ``ROWS/RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING``
     idiom — a NARROW frame changes boundary-row results and is rejected
     loudly rather than silently diverging."""
+    sql = toks.sql
     n = len(sql)
     k2 = pos
     while k2 < n and sql[k2] in " \t\n":
@@ -3855,10 +4065,10 @@ def _consume_full_frame_over(
         k3 += 1
     if not (sql[k2 : k2 + 4].upper() == "OVER" and k3 < n and sql[k3] == "("):
         return None
-    oc = _find_close(sql, k3)
+    oc = toks.close(k3)
     spec = sql[k3 + 1 : oc]
     fstart = None
-    for ws, _we, w in _top_level_words(spec):
+    for ws, _we, w in lex(spec).words():
         if w.upper() in ("ROWS", "RANGE"):
             fstart = ws
             break
@@ -3874,52 +4084,6 @@ def _consume_full_frame_over(
             )
         spec = spec[:fstart]
     return spec, oc + 1
-
-
-def _is_ident_char(c: str) -> bool:
-    return c.isalnum() or c == "_"
-
-
-def _find_close(s: str, i: int) -> int:
-    """Index of the ')' matching the '(' at s[i], honoring quotes."""
-    depth = 0
-    in_str: str | None = None
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced parentheses in SQL")
-
-
-def _split_top(s: str) -> list[str]:
-    """Split on top-level commas (quote- and paren-aware)."""
-    parts, depth, start = [], 0, 0
-    in_str: str | None = None
-    for i, c in enumerate(s):
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return [p.strip() for p in parts] if s.strip() else []
 
 
 # Translated (Spark-side) spellings that produce an ARRAY or MAP —
@@ -3968,52 +4132,6 @@ _STRINGY_PREFIXES = (
 )
 
 
-def _find_close_bracket(s: str, i: int) -> int:
-    """Index of the ']' matching the '[' at s[i], honoring quotes and
-    nested brackets."""
-    depth = 0
-    in_str: str | None = None
-    while i < len(s):
-        c = s[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-        elif c == "[":
-            depth += 1
-        elif c == "]":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    raise ValueError("unbalanced brackets in SQL")
-
-
-def _find_open(s: str, j: int) -> int:
-    """Index of the '('/'[' matching the closer at s[j], scanning
-    backward (quote-aware; SQL text here is already balanced)."""
-    close = s[j]
-    open_ = "(" if close == ")" else "["
-    depth = 0
-    i = j
-    while i >= 0:
-        c = s[i]
-        if c in "'\"":
-            q = c
-            i -= 1
-            while i >= 0 and s[i] != q:
-                i -= 1
-        elif c == close:
-            depth += 1
-        elif c == open_:
-            depth -= 1
-            if depth == 0:
-                return i
-        i -= 1
-    raise ValueError("unbalanced delimiters in SQL")
-
-
 # Words that can directly precede a '[' only when it opens an ARRAY
 # LITERAL (never a subscript base): keyword contexts like `IN [...]`,
 # `ARRAY JOIN [...] AS x`, `WHEN [...]`. Anything else ending in an
@@ -4033,20 +4151,29 @@ _BRACKET_LITERAL_KEYWORDS = frozenset(
 )
 
 
-def _subscript_base_start(s: str) -> int:
-    """Start index of the primary expression ending at ``len(s)`` — the
-    subscript base for a following '[': trailing ')' / ']' groups, then
-    the identifier chain (dots included) that heads them."""
-    k = len(s)
-    while k > 0 and s[k - 1] in ")]":
-        k = _find_open(s, k - 1)
-    j = k
-    while j > 0 and (_is_ident_char(s[j - 1]) or s[j - 1] == "."):
-        j -= 1
-    return j
+def _subscript_base(toks: Tokens, k: int) -> int:
+    """Offset where the primary expression before the ``[`` token ``k``
+    starts — its subscript base: trailing ``)``/``]`` groups, then the
+    identifier chain (dots included) that heads them; -1 when the token
+    before the ``[`` is no ``)``, ``]`` or word (an array literal)."""
+    sql, starts, ends = toks.sql, toks.starts, toks.ends
+    if k == 0 or not (sql[starts[k - 1]] in ")]" or toks.is_word(k - 1)):
+        return -1
+
+    def adjacent(b: int) -> bool:
+        return b == k or ends[b - 1] == starts[b]
+
+    b = k
+    while b > 0 and sql[starts[b - 1]] in ")]" and adjacent(b):
+        b = toks.at(toks.open_of(starts[b - 1]))
+    while b > 0 and (toks.is_word(b - 1) or sql[starts[b - 1]] == ".") and (
+        adjacent(b)
+    ):
+        b -= 1
+    return starts[b]
 
 
-def _rewrite_subscripts(sql: str) -> str:
+def _rewrite_subscripts(toks: Tokens) -> str:
     """Rewrite CH bracket syntax to Spark-evaluable calls:
 
     - subscript ``base[idx]`` → ``element_at(base, idx)``: CH array
@@ -4063,198 +4190,159 @@ def _rewrite_subscripts(sql: str) -> str:
     operator/punctuation, or a keyword (``IN [1,2]``, ``ARRAY JOIN
     [..]``); otherwise it subscripts the preceding primary expression.
     """
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1
-            buf.append(sql[i : j + 1])
-            i = j + 1
+    sql = toks.sql
+    if "[" not in toks.marks:
+        return sql
+    # output pieces with the source offset each starts at; a rewritten
+    # bracket group is one piece, which a later base takes whole
+    out: list[str] = []
+    src: list[int] = []
+    rewritten: list[bool] = []
+    pos = 0
+    for k, i in enumerate(toks.starts):
+        if i < pos or sql[i] != "[":
             continue
-        if c == "[":
-            close = _find_close_bracket(sql, i)
-            inner = _rewrite_subscripts(sql[i + 1 : close])
-            cur = "".join(buf)
-            stripped = cur.rstrip()
-            is_sub = False
-            if stripped and (
-                stripped[-1] in ")]" or _is_ident_char(stripped[-1])
-            ):
-                start = _subscript_base_start(stripped)
-                base = stripped[start:]
-                if base and not (
-                    base.replace(".", "").isidentifier()
-                    and base.upper() in _BRACKET_LITERAL_KEYWORDS
-                ) and not base.isdigit():
-                    is_sub = True
-            if is_sub:
-                # Spark's element_at needs an INT array index, but CH
-                # subscripts take any integer width — and the tables'
-                # keys are Int64 (r13 fuzz seed 20023: a BIGINT index
-                # expression failed analysis). Cast non-literal INDEX
-                # EXPRESSIONS down to INT, but only when the subscript
-                # can plausibly be an array index (r13 ADVICE: the
-                # unconditional cast broke m[string_col] map lookups
-                # with MAP_FUNCTION_DIFF_TYPES and overflowed bigint
-                # map keys > 2^31). Pass through untouched:
-                #   - string literals and int literals (as before),
-                #   - bare identifiers (m[string_col] / m[key_col]) —
-                #     UNLESS the registered view schemas classify the
-                #     BASE as an array column, where element_at does
-                #     require an INT index (r14 ADVICE: arr[k] with a
-                #     BIGINT index column failed analysis),
-                #   - string-producing call spellings
-                #     (m[concat(a, b)], m[lower(k)]),
-                #   - any index over a syntactic MAP producer
-                #     (map(...)[k], map_from_arrays(...)[k]).
-                # Residual documented gap: an ARITHMETIC index over a
-                # bigint-keyed map (m[k + 1] with keys > 2^31) still
-                # casts and overflows — indistinguishable statically
-                # from the array case that needs the cast.
-                # classification shared with the explicit
-                # arrayElement()/arrayElementOrNull() spellings —
-                # bare-identifier bases resolve against registered
-                # view schemas (r14 ADVICE: an array COLUMN with a
-                # bigint index column needs the cast; syntax alone
-                # can't tell it from a map column; r13 seed 20023
-                # pins ([10,20,30])[k] with k Int64)
-                if _elem_needs_cast(base, inner):
-                    inner = f"CAST({inner} AS INT)"
-                # try_element_at: Spark 4.1.2 ANSI element_at returns the
-                # LAST element for a NULL index (upstream defect,
-                # pinned in tests/test_advice_r15.py; found by
-                # fuzz v6 seed 51694) — CH arr[NULL] is NULL. The
-                # try_ variant also turns out-of-range into NULL
-                # instead of an ANSI error (CH returns a type
-                # default there; NULL is the documented delta).
-                buf = [stripped[:start], f"try_element_at({base}, {inner})"]
-            else:
-                buf.append(f"array({inner})")
-            i = close + 1
-            continue
-        buf.append(c)
-        i += 1
-    return "".join(buf)
+        if i > pos:
+            out.append(sql[pos:i])
+            src.append(pos)
+            rewritten.append(False)
+        close = toks.close_bracket(i)
+        inner = _rewrite_subscripts(lex(sql[i + 1 : close]))
+        start = _subscript_base(toks, k)
+        is_sub = False
+        if start >= 0:
+            j = len(src)
+            while j > 0 and src[j - 1] >= start:
+                j -= 1
+            end = src[j] if j < len(src) else i
+            if j > 0 and start < end and rewritten[j - 1]:
+                j -= 1
+            elif j > 0 and start < end:
+                cut = start - src[j - 1]
+                piece = out[j - 1]
+                out[j - 1 : j] = [piece[:cut], piece[cut:]]
+                src.insert(j, start)
+                rewritten.insert(j, False)
+            base = "".join(out[j:]).rstrip()
+            is_sub = not (
+                base.replace(".", "").isidentifier()
+                and base.upper() in _BRACKET_LITERAL_KEYWORDS
+            ) and not base.isdigit()
+        if is_sub:
+            # Spark's element_at needs an INT array index, but CH
+            # subscripts take any integer width — and the tables'
+            # keys are Int64 (r13 fuzz seed 20023: a BIGINT index
+            # expression failed analysis). Cast non-literal INDEX
+            # EXPRESSIONS down to INT, but only when the subscript
+            # can plausibly be an array index (r13 ADVICE: the
+            # unconditional cast broke m[string_col] map lookups
+            # with MAP_FUNCTION_DIFF_TYPES and overflowed bigint
+            # map keys > 2^31). Pass through untouched:
+            #   - string literals and int literals (as before),
+            #   - bare identifiers (m[string_col] / m[key_col]) —
+            #     UNLESS the registered view schemas classify the
+            #     BASE as an array column, where element_at does
+            #     require an INT index (r14 ADVICE: arr[k] with a
+            #     BIGINT index column failed analysis),
+            #   - string-producing call spellings
+            #     (m[concat(a, b)], m[lower(k)]),
+            #   - any index over a syntactic MAP producer
+            #     (map(...)[k], map_from_arrays(...)[k]).
+            # Residual documented gap: an ARITHMETIC index over a
+            # bigint-keyed map (m[k + 1] with keys > 2^31) still
+            # casts and overflows — indistinguishable statically
+            # from the array case that needs the cast.
+            # classification shared with the explicit
+            # arrayElement()/arrayElementOrNull() spellings —
+            # bare-identifier bases resolve against registered
+            # view schemas (r14 ADVICE: an array COLUMN with a
+            # bigint index column needs the cast; syntax alone
+            # can't tell it from a map column; r13 seed 20023
+            # pins ([10,20,30])[k] with k Int64)
+            if _elem_needs_cast(base, inner):
+                inner = f"CAST({inner} AS INT)"
+            # try_element_at: Spark 4.1.2 ANSI element_at returns the
+            # LAST element for a NULL index (upstream defect,
+            # pinned in tests/test_advice_r15.py; found by
+            # fuzz v6 seed 51694) — CH arr[NULL] is NULL. The
+            # try_ variant also turns out-of-range into NULL
+            # instead of an ANSI error (CH returns a type
+            # default there; NULL is the documented delta).
+            at = src[j]
+            del out[j:], src[j:], rewritten[j:]
+            out.append(f"try_element_at({base}, {inner})")
+            src.append(at)
+        else:
+            out.append(f"array({inner})")
+            src.append(i)
+        rewritten.append(True)
+        pos = close + 1
+    out.append(sql[pos:])
+    return "".join(out)
 
 
-def _rewrite_dot_index(sql: str) -> str:
+def _rewrite_dot_index(toks: Tokens) -> str:
     """CH tuple element access ``t.1`` → ``t.col1``: ``tuple(...)``
     maps to Spark ``struct(...)`` whose auto-named fields are
     ``col1..colN`` (both 1-based, so indices carry over). Float
-    literals (``0.5``) are left alone — the token before the dot must
-    not be purely numeric."""
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1
-            buf.append(sql[i : j + 1])
-            i = j + 1
+    literals (``0.5``) are left alone: the token right before the dot
+    must be a ``)``, a ``]`` or a word that is neither all digits nor
+    itself after a dot."""
+    sql = toks.sql
+    if "." not in toks.marks:
+        return sql
+    starts, ends = toks.starts, toks.ends
+    out, pos = [], 0
+    for k in range(1, len(starts)):
+        i = starts[k]
+        if sql[i] != "." or not sql[i + 1 : i + 2].isdigit():
             continue
-        if c == "." and i + 1 < n and sql[i + 1].isdigit():
-            prev = "".join(buf)
-            prev_ok = False
-            if prev and prev[-1] in ")]":
-                prev_ok = True
-            elif prev and _is_ident_char(prev[-1]):
-                k = len(prev)
-                while k > 0 and _is_ident_char(prev[k - 1]):
-                    k -= 1
-                tok = prev[k:]
-                # numeric token (incl. hex-ish/exponent tails) → this
-                # dot is part of a numeric literal, not tuple access
-                prev_ok = not tok.isdigit() and not (
-                    k > 0 and prev[k - 1] == "."
-                )
-            if prev_ok:
-                j = i + 1
-                while j < n and sql[j].isdigit():
-                    j += 1
-                buf.append(".col" + sql[i + 1 : j])
-                i = j
-                continue
-        buf.append(c)
-        i += 1
-    return "".join(buf)
+        if ends[k - 1] != i:
+            continue
+        ws = starts[k - 1]
+        if sql[ws] not in ")]" and not (
+            toks.is_word(k - 1)
+            and not sql[ws:i].isdigit()
+            and not (ws > 0 and sql[ws - 1] == ".")
+        ):
+            continue
+        j = i + 1
+        while j < len(sql) and sql[j].isdigit():
+            j += 1
+        out += [sql[pos:i], ".col" + sql[i + 1 : j]]
+        pos = j
+    return "".join(out) + sql[pos:] if out else sql
 
 
-def _top_level_words(s: str):
-    """Yield (start, end, word) for identifiers at paren-depth 0,
-    skipping string literals."""
-    depth, i, n = 0, 0, len(s)
-    in_str: str | None = None
-    while i < n:
-        c = s[i]
-        if in_str:
-            if c == in_str:
-                in_str = None
-            i += 1
-        elif c in "'\"":
-            in_str = c
-            i += 1
-        elif c == "(":
-            depth += 1
-            i += 1
-        elif c == ")":
-            depth -= 1
-            i += 1
-        elif depth == 0 and _is_ident_char(c):
-            j = i
-            while j < n and _is_ident_char(s[j]):
-                j += 1
-            yield i, j, s[i:j]
-            i = j
-        else:
-            i += 1
-
-
-def _from_view_cols(sql: str) -> list[str] | None:
+def _from_view_cols(toks: Tokens) -> list[str] | None:
     """Column list of the statement's SINGLE FROM view, when that view
     was registered through :func:`ch_sql` — the schema source for
     star-expansion rewrites (APPLY/COLUMNS). None when unknown — and
     deliberately None when the FROM clause joins tables: expanding a
     star over only the left table's schema would silently drop the
     right table's columns."""
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    words = toks.words()
     for i, (_ws, _we, w) in enumerate(words[:-1]):
         if w.upper() == "FROM":
             later = {x[2].upper() for x in words[i + 2 :]}
             if later & {"JOIN", "ASOF"}:
                 return None
             # comma cross-join: a ',' at top level inside FROM
-            tail = sql[words[i + 1][1] :]
-            clause_cut = len(tail)
-            for ws2, _we2, w2 in _top_level_words(tail):
-                if w2.upper() in ("WHERE", "GROUP", "ORDER", "LIMIT",
-                                  "HAVING", "SETTINGS", "UNION"):
-                    clause_cut = ws2
-                    break
-            from_region = tail[:clause_cut]
-            depth = 0
-            in_str = None
-            for ch_ in from_region:
-                if in_str:
-                    if ch_ == in_str:
-                        in_str = None
-                elif ch_ in "'\"":
-                    in_str = ch_
-                elif ch_ == "(":
-                    depth += 1
-                elif ch_ == ")":
-                    depth -= 1
-                elif ch_ == "," and depth == 0:
-                    return None
+            lo = words[i + 1][1]
+            hi = next(
+                (ws2 for ws2, _we2, w2 in words[i + 2 :]
+                 if w2.upper() in ("WHERE", "GROUP", "ORDER", "LIMIT",
+                                   "HAVING", "SETTINGS", "UNION")),
+                len(sql),
+            )
+            if len(toks.split(lo, hi)) > 1:
+                return None
             return _VIEW_COLS.get(words[i + 1][2])
     return None
 
 
-def _rewrite_column_selectors(sql: str) -> str:
+def _rewrite_column_selectors(toks: Tokens) -> str:
     """CH column-selector modifiers Spark lacks:
 
     - ``COLUMNS('re')`` → the FROM view's columns matching the regex;
@@ -4267,33 +4355,15 @@ def _rewrite_column_selectors(sql: str) -> str:
     to be a ch_sql-registered view — anything else rejects loudly.
     ``* EXCEPT (…)`` alone passes through (shared Spark syntax).
     """
+    sql = toks.sql
     if not re.search(r"\bAPPLY\b|\bCOLUMNS\b|\bEXCEPT\s+\w", sql, re.I):
         return sql
     # recurse into parenthesized subqueries first (selector modifiers
     # are per-SELECT; the top-level scan below only sees depth 0)
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1
-            buf.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            close = _find_close(sql, i)
-            inner = sql[i + 1 : close]
-            if re.match(r"^\s*SELECT\b", inner, re.I):
-                inner = _rewrite_column_selectors(inner)
-            buf.append("(" + inner + ")")
-            i = close + 1
-            continue
-        buf.append(c)
-        i += 1
-    sql = "".join(buf)
-    words = list(_top_level_words(sql))
+    sql = toks.map_subqueries(lambda q: _rewrite_column_selectors(lex(q)))
+    if sql != toks.sql:
+        toks = lex(sql)
+    words = toks.words()
     sel = from_ = None
     for ws, we, w in words:
         if w.upper() == "SELECT" and sel is None:
@@ -4303,8 +4373,8 @@ def _rewrite_column_selectors(sql: str) -> str:
             break
     if sel is None or from_ is None:
         return sql
-    items = _split_top(sql[sel:from_])
-    cols = _from_view_cols(sql)
+    items = toks.split(sel, from_)
+    cols = _from_view_cols(toks)
     out_items = []
     pat = re.compile(
         r"^(\*|COLUMNS\s*\(\s*('[^']*')\s*\))"
@@ -4346,7 +4416,7 @@ def _rewrite_column_selectors(sql: str) -> str:
             drop = {
                 e.strip().strip("`")
                 for e in (
-                    _split_top(exc[1:-1]) if exc.startswith("(") else [exc]
+                    lex(exc[1:-1]).split() if exc.startswith("(") else [exc]
                 )
             }
             chosen = [c for c in chosen if c not in drop]
@@ -4368,7 +4438,7 @@ def _rewrite_column_selectors(sql: str) -> str:
     ) + " " + sql[from_:]
 
 
-def _rewrite_select_replace(sql: str) -> str:
+def _rewrite_select_replace(toks: Tokens) -> str:
     """Rewrite ClickHouse's ``SELECT * REPLACE (expr AS col, …)``
     (sql-reference/statements/select: the REPLACE modifier) — Spark has
     ``* EXCEPT`` but no ``* REPLACE``.
@@ -4379,7 +4449,10 @@ def _rewrite_select_replace(sql: str) -> str:
     Otherwise fall back to ``* EXCEPT (cols…), expr AS col …``, which
     preserves values but moves replaced columns to the end (documented
     divergence: no schema to anchor positions to)."""
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "REPLACE" not in toks.marks:
+        return sql
+    words = toks.words()
     star = None
     for wi, (ws, we, w) in enumerate(words):
         if w.upper() != "SELECT":
@@ -4400,14 +4473,14 @@ def _rewrite_select_replace(sql: str) -> str:
             p += 1
         if p >= len(sql) or sql[p] != "(":
             continue
-        close = _find_close(sql, p)
+        close = toks.close(p)
         star = (wi, j, p, close)
         break
     if star is None:
         return sql
     wi, star_pos, open_p, close_p = star
     repls: dict[str, str] = {}
-    for item in _split_top(sql[open_p + 1 : close_p]):
+    for item in toks.split(open_p + 1, close_p):
         parts = item.rsplit(" AS ", 1) if " AS " in item else item.rsplit(
             " as ", 1
         )
@@ -4462,39 +4535,7 @@ def _tmpl_apply(name: str, tmpl: str, args: list[str]) -> str:
     return tmpl.format(*args)
 
 
-def _subst_ident(sql: str, ident: str, repl: str) -> str:
-    """Replace word-boundary occurrences of ``ident`` outside string
-    literals (the scalar-WITH alias substitution primitive)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    in_str: str | None = None
-    while i < n:
-        c = sql[i]
-        if in_str:
-            out.append(c)
-            if c == in_str:
-                in_str = None
-            i += 1
-        elif c in "'\"":
-            in_str = c
-            out.append(c)
-            i += 1
-        elif _is_ident_char(c):
-            j = i
-            while j < n and _is_ident_char(sql[j]):
-                j += 1
-            word = sql[i:j]
-            # a dotted reference (tbl.ident) is a column, not the alias
-            prev = sql[i - 1] if i > 0 else ""
-            out.append(repl if word == ident and prev != "." else word)
-            i = j
-        else:
-            out.append(c)
-            i += 1
-    return "".join(out)
-
-
-def _rewrite_scalar_with(sql: str) -> str:
+def _rewrite_scalar_with(toks: Tokens) -> str:
     """ClickHouse's scalar WITH form — ``WITH <expr> AS <ident>, …
     SELECT`` — substitutes each alias with its parenthesized expression
     throughout the statement (CH evaluates the expression per use; for
@@ -4502,7 +4543,10 @@ def _rewrite_scalar_with(sql: str) -> str:
     a Spark scalar subquery). Standard ``ident AS (SELECT …)`` CTEs in
     the same WITH list are kept as real CTEs.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "WITH" not in toks.marks:
+        return sql
+    words = toks.words()
     if not words or words[0][2].upper() != "WITH":
         return sql
     sel = next(
@@ -4510,32 +4554,8 @@ def _rewrite_scalar_with(sql: str) -> str:
     )
     if sel is None:
         return sql
-    clause = sql[words[0][1] : sel[0]]
-    # split the WITH list on clause-level commas (depth 0 within it)
-    items: list[str] = []
-    depth = 0
-    in_str: str | None = None
-    cur: list[str] = []
-    for c in clause:
-        if in_str:
-            cur.append(c)
-            if c == in_str:
-                in_str = None
-        elif c in "'\"":
-            in_str = c
-            cur.append(c)
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            cur.append(c)
-        elif c == "," and depth == 0:
-            items.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    items.append("".join(cur))
+    # the WITH list, split on its own top-level commas
+    items = toks.split(words[0][1], sel[0])
     kept: list[str] = []
     scalars: list[tuple[str, str]] = []
     for it in items:
@@ -4553,11 +4573,11 @@ def _rewrite_scalar_with(sql: str) -> str:
     kept_sql = f"WITH {', '.join(kept)} " if kept else ""
     out = kept_sql + body
     for ident, expr in scalars:
-        out = _subst_ident(out, ident, f"({expr})")
+        out = lex(out).subst(ident, f"({expr})")
     return out
 
 
-def _rewrite_distinct_on(sql: str) -> str:
+def _rewrite_distinct_on(toks: Tokens) -> str:
     """ClickHouse ``SELECT DISTINCT ON (keys) …`` → a ranked-window
     subquery: first row per key group under the statement's ORDER BY.
 
@@ -4568,7 +4588,10 @@ def _rewrite_distinct_on(sql: str) -> str:
     SOURCE columns (they are replayed inside the window frame, where
     same-select aliases are not visible). Top-level statement only.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"DISTINCT", "ON"} <= toks.marks:
+        return sql
+    words = toks.words()
     di = next(
         (
             wi
@@ -4587,7 +4610,7 @@ def _rewrite_distinct_on(sql: str) -> str:
         raise ValueError(
             "DISTINCT ON requires a parenthesized key list"
         )
-    close = _find_close(sql, p)
+    close = toks.close(p)
     keys = sql[p + 1 : close].strip()
     # select list spans to the top-level FROM
     from_w = next(
@@ -4649,7 +4672,7 @@ def _rewrite_distinct_on(sql: str) -> str:
             f"{body}) WHERE __don_rn = 1 ORDER BY {order_list}"
             + (f" {tail}" if tail else "")
         )
-    keys_r = ", ".join(res(p) for p in _split_top(keys))
+    keys_r = ", ".join(res(p) for p in lex(keys).split())
     order_r = res.order(order_list)
     head2, hidden = res.finish()
     exc = ", ".join(["__don_rn"] + hidden)
@@ -4662,12 +4685,15 @@ def _rewrite_distinct_on(sql: str) -> str:
     )
 
 
-def _rewrite_limit_offset(sql: str) -> str:
+def _rewrite_limit_offset(toks: Tokens) -> str:
     """Rewrite ClickHouse/MySQL ``LIMIT offset, count`` (offset FIRST —
     clickhouse.com/docs/sql-reference/statements/select/limit) into
     Spark's ``LIMIT count OFFSET offset``. Runs after ``_rewrite_limit_by``
     so only plain (non-BY) comma LIMITs remain at top level."""
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"LIMIT", ","} <= toks.marks:
+        return sql
+    words = toks.words()
     for wi in range(len(words) - 2):
         (ls, _le, lw), (_os, oe, ow), (cs, ce, cw) = words[wi : wi + 3]
         if not (lw.upper() == "LIMIT" and ow.isdigit() and cw.isdigit()):
@@ -4680,7 +4706,7 @@ def _rewrite_limit_offset(sql: str) -> str:
         return (
             sql[:ls]
             + f"LIMIT {cw} OFFSET {ow}"
-            + _rewrite_limit_offset(sql[ce:])
+            + _rewrite_limit_offset(lex(sql[ce:]))
         )
     return sql
 
@@ -4690,7 +4716,7 @@ def _reject_ordinal_order_keys(okeys: str, clause: str) -> None:
     ordinals: Spark resolves ``ORDER BY 1`` only at query level — in
     an OVER() the literal 1 is a CONSTANT ordering, silently ranking
     every row 1."""
-    for part in _split_top(okeys):
+    for part in lex(okeys).split():
         lead = part.strip().split()[0] if part.strip() else ""
         if lead.isdigit():
             raise ValueError(
@@ -4700,7 +4726,7 @@ def _reject_ordinal_order_keys(okeys: str, clause: str) -> None:
             )
 
 
-def _rewrite_offset_fetch(sql: str) -> str:
+def _rewrite_offset_fetch(toks: Tokens) -> str:
     """Standard-SQL ``OFFSET n ROW[S] [FETCH FIRST|NEXT m ROW[S]
     ONLY|WITH TIES]`` (CH supports it; Spark wants LIMIT/OFFSET) →
     ``LIMIT m OFFSET n``. The WITH TIES variant re-spells to
@@ -4708,7 +4734,10 @@ def _rewrite_offset_fetch(sql: str) -> str:
     (ties + offset combined is rejected — the rank filter and the row
     skip do not compose deterministically in one pass).
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "OFFSET" not in toks.marks:
+        return sql
+    words = toks.words()
     for wi in range(len(words) - 1):
         (os_, _oe, ow) = words[wi]
         (_ns, ne, nw) = words[wi + 1]
@@ -4756,7 +4785,7 @@ def _rewrite_offset_fetch(sql: str) -> str:
     return sql
 
 
-def _rewrite_qualify(sql: str) -> str:
+def _rewrite_qualify(toks: Tokens) -> str:
     """CH ``QUALIFY <pred>`` (filter on window-function results) →
     wrapped subquery: the predicate lands in a hidden ``__q`` column
     computed over the inner result, the outer WHERE filters on it, and
@@ -4767,7 +4796,10 @@ def _rewrite_qualify(sql: str) -> str:
     are out of reach — select them (CH itself resolves those against
     the projection in most cases).
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "QUALIFY" not in toks.marks:
+        return sql
+    words = toks.words()
     q_idx = None
     for wi, (ws, _we, ww) in enumerate(words):
         if ww.upper() == "QUALIFY":
@@ -4794,14 +4826,17 @@ def _rewrite_qualify(sql: str) -> str:
     )
 
 
-def _rewrite_limit_with_ties(sql: str) -> str:
+def _rewrite_limit_with_ties(toks: Tokens) -> str:
     """CH ``ORDER BY keys LIMIT n WITH TIES`` → rank()-window wrap
     (every row tied with the n-th survives). Scale note: WITH TIES is
     inherently a GLOBAL top-n — the rank window is a single ordered
     partition, the same work CH's single-node merge does; use it for
     human-sized n.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"LIMIT", "WITH", "TIES"} <= toks.marks:
+        return sql
+    words = toks.words()
     hit = None
     for wi in range(len(words) - 3):
         (ls, _le, lw) = words[wi]
@@ -4864,7 +4899,7 @@ def _rewrite_limit_with_ties(sql: str) -> str:
     )
 
 
-def _rewrite_limit_by(sql: str) -> str:
+def _rewrite_limit_by(toks: Tokens) -> str:
     """Rewrite ClickHouse ``ORDER BY keys LIMIT n BY cols [LIMIT m]``
     (and the offset form ``LIMIT n, m BY cols`` — skip n, keep m per
     group) into a ``row_number()`` window subquery.
@@ -4874,7 +4909,10 @@ def _rewrite_limit_by(sql: str) -> str:
     the overall result. An ORDER BY is required here — without one the
     kept rows are engine-dependent, and this engine refuses to guess.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"LIMIT", "BY"} <= toks.marks:
+        return sql
+    words = toks.words()
     hit = None  # (word_idx_after_LIMIT_nums, limit_start, skip, n_rows, by_end)
     for wi in range(len(words) - 2):
         (ls, _le, lw), (_ns, ne, nw), (_bs, be, bw) = words[wi : wi + 3]
@@ -4945,9 +4983,9 @@ def _rewrite_limit_by(sql: str) -> str:
             hidden.append(nm)
             return nm
 
-        bcols = ", ".join(_resolve(p) for p in _split_top(bcols))
+        bcols = ", ".join(_resolve(p) for p in lex(bcols).split())
         oparts = []
-        for part in _split_top(okeys):
+        for part in lex(okeys).split():
             m = re.match(
                 r"(?is)^(.*?)((?:\s+(?:ASC|DESC))?"
                 r"(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$",
@@ -5006,7 +5044,7 @@ def _scope_resolver(head: str, prefix: str):
 
     def resolve_order(okeys: str) -> str:
         oparts = []
-        for part in _split_top(okeys):
+        for part in lex(okeys).split():
             m = re.match(
                 r"(?is)^(.*?)((?:\s+(?:ASC|DESC))?"
                 r"(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$",
@@ -5037,7 +5075,7 @@ def _head_select_items(head: str) -> tuple[int, list] | None:
     Only explicit ``AS`` aliases and bare-identifier items are
     recognized; implicit trailing aliases stay unresolved and fall
     through to injection, which is still correct for source columns."""
-    words = list(_top_level_words(head))
+    words = lex(head).words()
     if not words or words[0][2].upper() != "SELECT":
         return None
     i = 1
@@ -5052,23 +5090,23 @@ def _head_select_items(head: str) -> tuple[int, list] | None:
     if from_pos is None:
         return None
     items: list[tuple[str, str | None]] = []
-    for item in _split_top(head[sel_start:from_pos]):
-        toks = list(_top_level_words(item))
+    for item in lex(head[sel_start:from_pos]).split():
+        iw = lex(item).words()
         expr, alias = item.strip(), None
-        if len(toks) >= 2 and toks[-2][2].upper() == "AS":
-            alias = toks[-1][2]
-            expr = item[: toks[-2][0]].strip()
+        if len(iw) >= 2 and iw[-2][2].upper() == "AS":
+            alias = iw[-1][2]
+            expr = item[: iw[-2][0]].strip()
         elif (
-            len(toks) == 1
-            and toks[0][0] == 0
-            and toks[0][1] == len(expr)
+            len(iw) == 1
+            and iw[0][0] == 0
+            and iw[0][1] == len(expr)
         ):
             alias = expr
         items.append((expr, alias))
     return from_pos, items
 
 
-def _rewrite_array_join(sql: str) -> str:
+def _rewrite_array_join(toks: Tokens) -> str:
     """Rewrite CH ``[LEFT] ARRAY JOIN e1 AS a1[, e2 AS a2, …]`` into a
     Spark ``LATERAL VIEW``.
 
@@ -5088,7 +5126,10 @@ def _rewrite_array_join(sql: str) -> str:
     errors — shorter arrays never silently truncate the row set.
     LEFT ARRAY JOIN keeps empty-array rows (→ OUTER, aliases NULL).
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"ARRAY", "JOIN"} <= toks.marks:
+        return sql
+    words = toks.words()
     for wi in range(len(words) - 1):
         (as_, _ae, aw), (_js, je, jw) = words[wi], words[wi + 1]
         if aw.upper() != "ARRAY" or jw.upper() != "JOIN":
@@ -5104,10 +5145,10 @@ def _rewrite_array_join(sql: str) -> str:
             if kw.upper() in _CLAUSE_STARTERS:
                 clause_end = ks
                 break
-        items = _split_top(sql[je:clause_end])
+        items = toks.split(je, clause_end)
         pairs = []  # (array_expr, alias)
         for item in items:
-            iw = list(_top_level_words(item))
+            iw = lex(item).words()
             as_pos = [x for x in iw if x[2].upper() == "AS"]
             if not as_pos or iw[-1][2].upper() == "AS":
                 raise ValueError("ARRAY JOIN requires 'AS <alias>' per array")
@@ -5131,11 +5172,11 @@ def _rewrite_array_join(sql: str) -> str:
                 f"(__x, __i) -> named_struct({fields}))) __aj AS {aliases}"
             )
         rewritten = sql[:clause_start] + view + " " + sql[clause_end:]
-        return _rewrite_array_join(rewritten.rstrip())
+        return _rewrite_array_join(lex(rewritten.rstrip()))
     return sql
 
 
-def _rewrite_with_totals(sql: str) -> str:
+def _rewrite_with_totals(toks: Tokens) -> str:
     """Rewrite CH ``GROUP BY keys WITH TOTALS`` → Spark
     ``GROUP BY keys GROUPING SETS ((keys), ())``.
 
@@ -5143,7 +5184,10 @@ def _rewrite_with_totals(sql: str) -> str:
     count — exactly the empty grouping set. (``WITH ROLLUP`` would be
     wrong for multi-key: it adds per-prefix subtotals CH never emits.)
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"WITH", "TOTALS"} <= toks.marks:
+        return sql
+    words = toks.words()
     for wi in range(len(words) - 1):
         (ws_, _we, ww), (_ts, te, tw) = words[wi], words[wi + 1]
         if ww.upper() != "WITH" or tw.upper() != "TOTALS":
@@ -5159,7 +5203,7 @@ def _rewrite_with_totals(sql: str) -> str:
             raise ValueError("WITH TOTALS without GROUP BY")
         keys = [
             k.strip()
-            for k in _split_top(sql[words[gb + 1][1] : ws_].strip())
+            for k in lex(sql[words[gb + 1][1] : ws_].strip()).split()
         ]
         sets = f"GROUPING SETS (({', '.join(keys)}), ())"
         return sql[:ws_] + sets + sql[te:]
@@ -5445,9 +5489,7 @@ def _elem_needs_cast(base: str, key: str) -> bool:
     element_at family (array base, non-literal index); False when it
     must pass through uncast (map keys keep the map's key type)."""
     key = key.strip()
-    is_str_lit = (
-        len(key) >= 2 and key[0] in "'\"" and key[-1] == key[0]
-    )
+    is_str_lit = is_quoted(key)
     is_int_lit = key.lstrip("-").isdigit()
     cls = _elem_base_class(base)
     if cls == "map":
@@ -5509,7 +5551,7 @@ def _sample_predicate_sql(key: str, num: int, den: int) -> str:
     return f"{bucket} < {num}"
 
 
-def _rewrite_from_modifiers(sql: str) -> str:
+def _rewrite_from_modifiers(toks: Tokens) -> str:
     """Rewrite CH table modifiers in FROM clauses:
 
     - ``FROM t [AS a] FINAL`` on a warehouse table →
@@ -5525,7 +5567,10 @@ def _rewrite_from_modifiers(sql: str) -> str:
       FINAL window), so it reaches the scan. Requires
       ``register_sampling_key``.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"FINAL", "SAMPLE"} & toks.marks:
+        return sql
+    words = toks.words()
     for wi, (fs, fe, fw) in enumerate(words):
         if fw.upper() != "FROM" or wi + 1 >= len(words):
             continue
@@ -5597,11 +5642,11 @@ def _rewrite_from_modifiers(sql: str) -> str:
             )
         out_alias = alias if alias is not None else table
         rewritten = sql[:fs] + f"FROM {base} AS {out_alias}" + sql[end:]
-        return _rewrite_from_modifiers(rewritten)
+        return _rewrite_from_modifiers(lex(rewritten))
     return sql
 
 
-def _rewrite_asof_join(sql: str) -> str:
+def _rewrite_asof_join(toks: Tokens) -> str:
     """Rewrite CH ``<ltable> [lalias] ASOF [LEFT] JOIN <right> [AS r]
     ON <conds>`` into an explicit domain → equi-join → window → join-back
     shape.
@@ -5630,7 +5675,10 @@ def _rewrite_asof_join(sql: str) -> str:
     ``ch_sql(views=…)`` registration), largest wins backward / smallest
     forward — deterministic where CH picks arbitrarily.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "ASOF" not in toks.marks:
+        return sql
+    words = toks.words()
     for wi in range(len(words) - 1):
         (as_, _ae, aw) = words[wi]
         if aw.upper() != "ASOF":
@@ -5680,7 +5728,13 @@ def _rewrite_asof_join(sql: str) -> str:
                 on_end = ts
                 break
         cond = sql[words[k][1] : on_end].strip()
-        parts = [p.strip() for p in _split_and(cond)]
+        # split the conjunction on its top-level ANDs
+        parts, start = [], 0
+        for ws, we, w in lex(cond).words():
+            if w.upper() == "AND":
+                parts.append(cond[start:ws].strip())
+                start = we
+        parts.append(cond[start:].strip())
         ineqs = [p for p in parts if ("<=" in p or ">=" in p)]
         if len(ineqs) != 1:
             raise ValueError(
@@ -5738,7 +5792,7 @@ def _rewrite_asof_join(sql: str) -> str:
         # subquery — the join-back condition references them): strip
         # them from a bare star select list. Explicit select lists
         # never see them.
-        rw_words = list(_top_level_words(rewritten))
+        rw_words = lex(rewritten).words()
         if len(rw_words) >= 2 and rw_words[0][2].upper() == "SELECT":
             internals = ", ".join(
                 [f"{alias}.__dk{i}" for i in range(len(eqs))]
@@ -5763,22 +5817,11 @@ def _rewrite_asof_join(sql: str) -> str:
                     + f" * EXCEPT ({internals})"
                     + rewritten[rw_words[1][0] - 1 :]
                 )
-        return _rewrite_asof_join(rewritten)
+        return _rewrite_asof_join(lex(rewritten))
     return sql
 
 
-def _split_and(cond: str) -> list[str]:
-    """Split a conjunction on top-level ANDs (quote/paren aware)."""
-    parts, start = [], 0
-    for ws, we, w in _top_level_words(cond):
-        if w.upper() == "AND":
-            parts.append(cond[start:ws])
-            start = we
-    parts.append(cond[start:])
-    return parts
-
-
-def _rewrite_with_fill(sql: str) -> str:
+def _rewrite_with_fill(toks: Tokens) -> str:
     """Rewrite CH ``ORDER BY col WITH FILL [FROM a] [TO b] [STEP s]``:
     wrap the statement, build a value spine with ``sequence()``, and
     left-join the real rows onto it.
@@ -5789,7 +5832,10 @@ def _rewrite_with_fill(sql: str) -> str:
     type-default zeros — a silent 0 is indistinguishable from a real
     0, which a pipeline should never risk. Single fill column only.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"WITH", "FILL"} <= toks.marks:
+        return sql
+    words = toks.words()
     for wi in range(len(words) - 1):
         if (
             words[wi][2].upper() != "WITH"
@@ -5849,7 +5895,7 @@ def _rewrite_with_fill(sql: str) -> str:
                 raise ValueError(
                     "INTERPOLATE requires a parenthesized column list"
                 )
-            close = _find_close(sql, p)
+            close = toks.close(p)
             body = sql[p + 1 : close]
             if " AS " in f" {body.upper()} ":
                 raise ValueError(
@@ -5915,12 +5961,15 @@ def _rewrite_with_fill(sql: str) -> str:
     return sql
 
 
-def _rewrite_prewhere(sql: str) -> str:
+def _rewrite_prewhere(toks: Tokens) -> str:
     """Merge CH ``PREWHERE cond`` into the WHERE clause. PREWHERE is a
     CH scan-optimization hint (filter before reading other columns);
     Spark's predicate pushdown does exactly this automatically, so the
     correct translation is plain conjunction."""
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "PREWHERE" not in toks.marks:
+        return sql
+    words = toks.words()
     for wi, (ps, pe, pw) in enumerate(words):
         if pw.upper() != "PREWHERE":
             continue
@@ -5950,7 +5999,7 @@ def _rewrite_prewhere(sql: str) -> str:
     return sql
 
 
-def _rewrite_any_join(sql: str) -> str:
+def _rewrite_any_join(toks: Tokens) -> str:
     """CH ``ANY LEFT/INNER JOIN t USING (keys)`` (either keyword order:
     ``LEFT ANY JOIN`` too) → a plain join against ``t`` deduplicated to
     one row per key.
@@ -5964,7 +6013,10 @@ def _rewrite_any_join(sql: str) -> str:
     JOIN (CH dedups the LEFT side) and ON-form conditions are rejected
     — use the DataFrame API for those shapes.
     """
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "ANY" not in toks.marks:
+        return sql
+    words = toks.words()
     for wi, (ws, _we, w) in enumerate(words):
         if w.upper() != "ANY":
             continue
@@ -6013,7 +6065,7 @@ def _rewrite_any_join(sql: str) -> str:
         # parenthesized (Spark requires the parens).
         p = sql.find("(", words[k][1])
         if p != -1 and not sql[words[k][1] : p].strip():
-            close = _find_close(sql, p)
+            close = toks.close(p)
             ukeys = [c.strip() for c in sql[p + 1 : close].split(",")]
             using_end = close + 1
         else:
@@ -6052,31 +6104,36 @@ def _rewrite_any_join(sql: str) -> str:
             + f"USING ({', '.join(ukeys)})"
             + sql[using_end:]
         )
-        return _rewrite_any_join(rebuilt)
+        return _rewrite_any_join(lex(rebuilt))
     return sql
 
 
-def _drop_global(sql: str) -> str:
+def _drop_global(toks: Tokens) -> str:
     """Drop CH's GLOBAL keyword before IN / NOT / JOIN variants — a
     distributed-subquery shipping hint; Spark's optimizer owns that
     decision."""
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if "GLOBAL" not in toks.marks:
+        return sql
+    words = toks.words()
     followers = {"IN", "NOT", "JOIN", "ANY", "ALL", "LEFT", "RIGHT", "INNER"}
     for wi in range(len(words) - 1):
         (gs, ge, gw) = words[wi]
         if gw.upper() == "GLOBAL" and words[wi + 1][2].upper() in followers:
-            return _drop_global(sql[:gs] + sql[words[wi + 1][0] :])
+            return _drop_global(lex(sql[:gs] + sql[words[wi + 1][0] :]))
     return sql
 
 
-def _strip_trailing_clauses(sql: str) -> str:
+def _strip_trailing_clauses(toks: Tokens) -> str:
     """Drop CH execution-control tails: ``SETTINGS k=v, …`` (server
     knobs — Spark's equivalents live in the session conf) and
     ``FORMAT Name`` (a client-protocol artifact, meaningless to an
     engine API that returns DataFrames). Both may only appear at the
     end of the statement; anything after them is cut with them."""
-    sql = sql.rstrip().rstrip(";")
-    words = list(_top_level_words(sql))
+    sql = toks.sql
+    if not {"OUTFILE", "SETTINGS", "FORMAT"} & toks.marks:
+        return sql
+    words = toks.words()
     for i, (_ws, _we, w) in enumerate(words[:-1]):
         if w.upper() == "INTO" and words[i + 1][2].upper() == "OUTFILE":
             raise ValueError(
@@ -6086,7 +6143,9 @@ def _strip_trailing_clauses(sql: str) -> str:
                 "the returned DataFrame yourself"
             )
     for kw in ("SETTINGS", "FORMAT"):
-        for ws, we, w in _top_level_words(sql):
+        for ws, we, w in words:
+            if ws >= len(sql):
+                break
             if w.upper() != kw:
                 continue
             rest = sql[we:].lstrip()
@@ -6109,38 +6168,31 @@ def _only_funcs_and_tk(expr: str) -> bool:
     """True when every bare identifier in ``expr`` is a function call,
     a keyword, or a ``__tk*`` reference — i.e. the expression needs no
     source columns beyond the substituted topK result."""
-    i, n = 0, len(expr)
-    while i < n:
-        c = expr[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and expr[j] != c:
-                j += 1
-            i = j + 1
+    toks = lex(expr)
+    starts = toks.starts
+    for k, (s, e) in enumerate(zip(starts, toks.ends)):
+        if not toks.is_word(k):
             continue
-        if c.isalpha() or c == "_":
-            j = i
-            while j < n and (expr[j].isalnum() or expr[j] == "_"):
-                j += 1
-            tok = expr[i:j]
-            k = j
-            while k < n and expr[k].isspace():
-                k += 1
-            is_call = k < n and expr[k] == "("
-            if not (
-                is_call
-                or tok.upper() in _TK_KEYWORDS
-                or tok.startswith("__tk")
-                or (i > 0 and expr[i - 1] == ".")
-            ):
-                return False
-            i = j
+        # an identifier starts at a word's first letter or '_'
+        i = next(
+            (x for x in range(s, e) if expr[x].isalpha() or expr[x] == "_"),
+            None,
+        )
+        if i is None:
             continue
-        i += 1
+        tok = expr[i:e]
+        is_call = k + 1 < len(starts) and expr[starts[k + 1]] == "("
+        if not (
+            is_call
+            or tok.upper() in _TK_KEYWORDS
+            or tok.startswith("__tk")
+            or (i > 0 and expr[i - 1] == ".")
+        ):
+            return False
     return True
 
 
-def _rewrite_topk_twophase(sql: str) -> str:
+def _rewrite_topk_twophase(toks: Tokens) -> str:
     """Lower ``topK(k)(x)`` / ``topKWeighted(k)(x, w)`` in a plain
     ``SELECT … FROM … GROUP BY`` into a TWO-PHASE plan: count (or
     weight-sum) per (group, value) first, then collect only the
@@ -6162,9 +6214,10 @@ def _rewrite_topk_twophase(sql: str) -> str:
     wrappers referencing nothing but the topK value, ORDER BY tail
     (if any) referencing output aliases only, no topK inside HAVING.
     """
+    sql = toks.sql
     if "topK" not in sql:
         return sql
-    words = list(_top_level_words(sql))
+    words = toks.words()
     if not words or words[0][2].upper() != "SELECT":
         return sql
     uppers = [w[2].upper() for w in words]
@@ -6212,22 +6265,22 @@ def _rewrite_topk_twophase(sql: str) -> str:
     if "topK" in having_txt:
         return sql
     tail_txt = sql[words[tail_i][0]:].strip() if tail_i is not None else ""
-    gkeys = [g.strip() for g in _split_top(group_keys_txt) if g.strip()]
+    gkeys = [g.strip() for g in lex(group_keys_txt).split() if g.strip()]
     if not gkeys:
         return sql
 
     # parse select items: (body, alias, has_topk)
     items = []
-    for item in _split_top(select_list):
+    for item in lex(select_list).split():
         item = item.strip()
-        toks = list(_top_level_words(item))
+        iw = lex(item).words()
         alias = None
         body = item
-        if len(toks) >= 2 and toks[-2][2].upper() == "AS":
-            alias = toks[-1][2]
-            body = item[: toks[-2][0]].strip()
-        elif len(toks) == 1 and toks[0][0] == 0 \
-                and toks[0][1] == len(item):
+        if len(iw) >= 2 and iw[-2][2].upper() == "AS":
+            alias = iw[-1][2]
+            body = item[: iw[-2][0]].strip()
+        elif len(iw) == 1 and iw[0][0] == 0 \
+                and iw[0][1] == len(item):
             alias = item
         items.append([body, alias, "topK" in item])
     if any(a is None for _b, a, _t in items):
@@ -6248,7 +6301,7 @@ def _rewrite_topk_twophase(sql: str) -> str:
         m = re.match(r"(?is)^ORDER\s+BY\s+(.*?)(\bLIMIT\b.*|$)",
                      tail_txt)
         aliases = {a for _b, a, _t in items}
-        for part in _split_top(m.group(1)):
+        for part in lex(m.group(1)).split():
             lead = re.sub(
                 r"(?is)\s+(ASC|DESC|NULLS\s+(FIRST|LAST))\s*$", "",
                 part.strip(),
@@ -6280,13 +6333,14 @@ def _rewrite_topk_twophase(sql: str) -> str:
                 return body
             fn = m.group(1)
             p_open = body.index("(", m.end() - 1)
-            p_close = _find_close(body, p_open)
+            bt = lex(body)
+            p_close = bt.close(p_open)
             inner1 = body[p_open + 1 : p_close]
             k2 = p_close + 1
             while k2 < len(body) and body[k2].isspace():
                 k2 += 1
             if k2 < len(body) and body[k2] == "(":
-                a_close = _find_close(body, k2)
+                a_close = bt.close(k2)
                 params = inner1
                 args_txt = body[k2 + 1 : a_close]
                 call_end = a_close + 1
@@ -6297,7 +6351,7 @@ def _rewrite_topk_twophase(sql: str) -> str:
             kp = params.strip()
             if not kp.isdigit():
                 return None
-            args = [a.strip() for a in _split_top(args_txt)]
+            args = [a.strip() for a in lex(args_txt).split()]
             if fn == "topK" and len(args) != 1:
                 return None
             if fn == "topKWeighted" and len(args) != 2:
@@ -6365,6 +6419,7 @@ def _rewrite_topk_twophase(sql: str) -> str:
 
 
 _HOP_CALL_RE = re.compile(r"\b(hopStart|hopEnd|hop)\s*\(")
+_HOP_CALLS = ("hopStart", "hopEnd", "hop")
 
 
 def _hop_secs(arg: str, ident: str) -> int:
@@ -6385,7 +6440,7 @@ def _hop_secs(arg: str, ident: str) -> int:
     return int(toks[1]) * _INTERVAL_SECONDS[unit]
 
 
-def _rewrite_hop(sql: str) -> str:
+def _rewrite_hop(toks: Tokens) -> str:
     """CH hopping windows → Spark, both CH behaviors (r15; previously
     a loud reject):
 
@@ -6405,38 +6460,20 @@ def _rewrite_hop(sql: str) -> str:
     CH arg order is (time, hop_interval, window_interval); Spark's is
     (time, window_duration, slide_duration) — swapped here.
     """
+    sql = toks.sql
     if not _HOP_CALL_RE.search(sql):
         return sql
     # recurse into parenthesized subqueries first (the GROUP BY
     # detection below is per-SELECT at paren depth 0)
-    buf: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'\"":
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1
-            buf.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        if c == "(":
-            close = _find_close(sql, i)
-            inner = sql[i + 1 : close]
-            if re.match(r"^\s*SELECT\b", inner, re.I):
-                inner = _rewrite_hop(inner)
-            buf.append("(" + inner + ")")
-            i = close + 1
-            continue
-        buf.append(c)
-        i += 1
-    sql = "".join(buf)
+    sql = toks.map_subqueries(lambda q: _rewrite_hop(lex(q)))
+    if sql != toks.sql:
+        toks = lex(sql)
     # an UNPARENTHESIZED top-level set operation carries one SELECT
     # (and one possible GROUP BY hop region) per branch — process
     # each branch independently so the second branch's GROUP BY is
     # not mistaken for select-side references to the first's windows
     # (r15 self-review)
-    words = list(_top_level_words(sql))
+    words = toks.words()
     for wi, (ws, _we, w) in enumerate(words):
         if w.upper() in ("UNION", "INTERSECT", "EXCEPT") and wi > 0:
             nxt = words[wi + 1] if wi + 1 < len(words) else None
@@ -6446,9 +6483,9 @@ def _rewrite_hop(sql: str) -> str:
                 else _we
             )
             return (
-                _rewrite_hop(sql[:ws])
+                _rewrite_hop(lex(sql[:ws]))
                 + sql[ws:cut]
-                + _rewrite_hop(sql[cut:])
+                + _rewrite_hop(lex(sql[cut:]))
             )
     # locate the top-level GROUP BY region (if any)
     gb_lo = gb_hi = -1
@@ -6466,43 +6503,21 @@ def _rewrite_hop(sql: str) -> str:
         r"\bhop\s*\(", sql[gb_lo:gb_hi]
     ) is not None
 
-    # string-literal spans: a hop( inside a quoted string is data,
-    # not a call (self-review r15)
-    lit_spans: list[tuple[int, int]] = []
-    j = 0
-    while j < len(sql):
-        if sql[j] in "'\"":
-            q = sql[j]
-            k2 = j + 1
-            while k2 < len(sql) and sql[k2] != q:
-                k2 += 1
-            lit_spans.append((j, k2))
-            j = k2 + 1
-        else:
-            j += 1
-
-    def _in_literal(pos: int) -> bool:
-        return any(lo <= pos <= hi for lo, hi in lit_spans)
-
     # the grouped form's (hop, window) spec — select-side
     # hopStart/hopEnd must reference the SAME windows
     gspec: tuple[int, int] | None = None
 
+    starts = toks.starts
     out: list[str] = []
-    i = 0
-    while True:
-        m = _HOP_CALL_RE.search(sql, i)
-        if m is None:
-            out.append(sql[i:])
-            break
-        if _in_literal(m.start()):
-            out.append(sql[i : m.end()])
-            i = m.end()
+    pos = 0
+    for k in range(len(starts) - 1):
+        at = starts[k]
+        ident = sql[at : toks.ends[k]]
+        open_p = starts[k + 1]
+        if at < pos or ident not in _HOP_CALLS or sql[open_p] != "(":
             continue
-        ident = m.group(1)
-        open_p = sql.index("(", m.end() - 1)
-        close = _find_close(sql, open_p)
-        args = [a.strip() for a in _split_top(sql[open_p + 1 : close])]
+        close = toks.close(open_p)
+        args = toks.split(open_p + 1, close)
         if len(args) != 3:
             raise ValueError(
                 f"{ident}(time, INTERVAL hop, INTERVAL window) — "
@@ -6510,7 +6525,7 @@ def _rewrite_hop(sql: str) -> str:
             )
         h = _hop_secs(args[1], ident)
         w = _hop_secs(args[2], ident)
-        out.append(sql[i : m.start()])
+        out.append(sql[pos:at])
         if grouped:
             if gspec is None:
                 gspec = (h, w)
@@ -6521,7 +6536,7 @@ def _rewrite_hop(sql: str) -> str:
                     f"(hop, window) intervals — got {(h, w)} vs "
                     f"{gspec}"
                 )
-            in_group_by = gb_lo <= m.start() < gb_hi
+            in_group_by = gb_lo <= at < gb_hi
             if ident == "hop" and in_group_by:
                 out.append(
                     f"window({args[0]}, '{w} seconds', '{h} seconds')"
@@ -6546,8 +6561,40 @@ def _rewrite_hop(sql: str) -> str:
                     f"struct(to_timestamp({st}) AS col1, "
                     f"to_timestamp(({st}) + {w}) AS col2)"
                 )
-        i = close + 1
-    return "".join(out)
+        pos = close + 1
+    return "".join(out) + sql[pos:]
+
+
+# Clause rewrites in the order translate runs them. Each takes the
+# statement's tokens and returns its text, unchanged (the same string)
+# when its trigger word or character is absent.
+_CLAUSE_PASSES = (
+    _strip_trailing_clauses,
+    _rewrite_hop,
+    _rewrite_topk_twophase,
+    _rewrite_moving_order,
+    _rewrite_byteswap,
+    _rewrite_median,
+    _rewrite_subscripts,
+    _rewrite_dot_index,
+    _rewrite_scalar_with,
+    _rewrite_column_selectors,
+    _rewrite_select_replace,
+    _rewrite_distinct_on,
+    _rewrite_from_modifiers,
+    _rewrite_asof_join,
+    _rewrite_any_join,
+    _rewrite_array_join,
+    _rewrite_with_totals,
+    _rewrite_prewhere,
+    _drop_global,
+    _rewrite_qualify,
+    _rewrite_with_fill,
+    _rewrite_offset_fetch,
+    _rewrite_limit_with_ties,
+    _rewrite_limit_by,
+    _rewrite_limit_offset,
+)
 
 
 def translate(sql: str) -> str:
@@ -6557,51 +6604,34 @@ def translate(sql: str) -> str:
     the statement in a subquery — any clause rewritten after it would
     sit at paren depth 1 where the top-level scanners no longer see it.
     """
-    sql = _strip_trailing_clauses(sql)
-    sql = _rewrite_hop(sql)
-    sql = _rewrite_topk_twophase(sql)
-    sql = _rewrite_moving_order(sql)
-    sql = _rewrite_byteswap(sql)
-    sql = _rewrite_median(sql)
-    sql = _rewrite_subscripts(sql)
-    sql = _rewrite_dot_index(sql)
-    sql = _rewrite_scalar_with(sql)
-    sql = _rewrite_column_selectors(sql)
-    sql = _rewrite_select_replace(sql)
-    sql = _rewrite_distinct_on(sql)
-    sql = _rewrite_from_modifiers(sql)
-    sql = _rewrite_asof_join(sql)
-    sql = _rewrite_any_join(sql)
-    sql = _rewrite_array_join(sql)
-    sql = _rewrite_with_totals(sql)
-    sql = _rewrite_prewhere(sql)
-    sql = _drop_global(sql)
-    sql = _rewrite_qualify(sql)
-    sql = _rewrite_with_fill(sql)
-    sql = _rewrite_offset_fetch(sql)
-    sql = _rewrite_limit_with_ties(sql)
-    sql = _rewrite_limit_by(sql)
-    sql = _rewrite_limit_offset(sql)
+    toks = lex(sql.rstrip().rstrip(";"))
+    for rewrite in _CLAUSE_PASSES:
+        sql = rewrite(toks)
+        if sql != toks.sql:
+            toks = lex(sql)
+    sql = toks.sql
+    starts, ends = toks.starts, toks.ends
     out: list[str] = []
     i = 0
     n = len(sql)
-    while i < n:
+    for tk in range(len(starts)):
+        j = ends[tk]
+        if j <= i:
+            continue  # already emitted with a call or a numeric literal
+        # a numeric literal's exponent can end inside this word
+        s = max(starts[tk], i)
+        out.append(sql[i:s])
+        i = s
         c = sql[i]
-        if c in "'\"":  # copy string literals verbatim
-            j = i + 1
-            while j < n and sql[j] != c:
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
+        if toks.is_string(tk):  # copy string literals verbatim
+            out.append(sql[i:j])
+            i = j
             continue
-        if c == "=" and i + 1 < n and sql[i + 1] == "=":
+        if c == "=" and sql[i + 1 : i + 2] == "=":
             out.append("=")  # CH allows ==
             i += 2
             continue
-        if _is_ident_char(c):
-            j = i
-            while j < n and _is_ident_char(sql[j]):
-                j += 1
+        if toks.is_word(tk):
             ident = sql[i:j]
             if ident[0].isdigit():
                 # numeric literal. CH parses 10.0 / 1e6 as Float64;
@@ -6622,9 +6652,7 @@ def translate(sql: str) -> str:
                     and sql[j2] == "."
                     and sql[j2 + 1].isdigit()
                 ):
-                    k2 = j2 + 1
-                    while k2 < n and _is_ident_char(sql[k2]):
-                        k2 += 1
+                    k2 = ends[tk + 2]  # the word after the dot
                     tok, j2 = tok + sql[j2:k2], k2
                 if (
                     tok[-1] in "eE"
@@ -6647,8 +6675,8 @@ def translate(sql: str) -> str:
             while k < n and sql[k] in " \t\n":
                 k += 1
             if k < n and sql[k] == "(":
-                close = _find_close(sql, k)
-                args = [translate(a) for a in _split_top(sql[k + 1 : close])]
+                close = toks.close(k)
+                args = [translate(a) for a in toks.split(k + 1, close)]
                 # parameterized aggregate: another '(' right after?
                 k2 = close + 1
                 while k2 < n and sql[k2] in " \t\n":
@@ -6679,16 +6707,15 @@ def translate(sql: str) -> str:
                     # combinators doc). Still ONE partial aggregation
                     # pass: every leg is a conditional aggregate in the
                     # same GROUP BY, no explode, no re-scan.
-                    close2 = _find_close(sql, k2)
+                    close2 = toks.close(k2)
                     args2 = [
-                        translate(a)
-                        for a in _split_top(sql[k2 + 1 : close2])
+                        translate(a) for a in toks.split(k2 + 1, close2)
                     ]
                     out.append(_resample_sql(ident, args, args2))
                     i = close2 + 1
                     continue
                 if param_base is not None and k2 < n and sql[k2] == "(":
-                    close2 = _find_close(sql, k2)
+                    close2 = toks.close(k2)
                     params = args
                     if param_base in ("quantileGK", "quantilesGK",
                                       "quantileDD"):
@@ -6711,7 +6738,7 @@ def translate(sql: str) -> str:
                                 )
                             params = params + ["0.5"]  # CH level default
                     args2 = [
-                        translate(a) for a in _split_top(sql[k2 + 1 : close2])
+                        translate(a) for a in toks.split(k2 + 1, close2)
                     ]
                     if param_base != ident:
                         cond = args2[-1]
@@ -7701,10 +7728,9 @@ def translate(sql: str) -> str:
                             "(['p1', 'p2', …])"
                         )
                     metas = set(".^$*+?()[]{}|\\")
-                    for p_ in _split_top(pats[6:-1]):
+                    for p_ in lex(pats[6:-1]).split():
                         p_ = p_.strip()
-                        if not (len(p_) >= 2 and p_[0] in "'\""
-                                and p_[-1] == p_[0]):
+                        if not is_quoted(p_):
                             raise ValueError(
                                 f"{ident}: every pattern must be a "
                                 "string literal"
@@ -7823,7 +7849,7 @@ def translate(sql: str) -> str:
                             "mapApply: the lambda must return a "
                             "(key, value) TUPLE literal"
                         )
-                    parts = _split_top(body[1:-1])
+                    parts = lex(body[1:-1]).split()
                     if len(parts) != 2:
                         raise ValueError(
                             "mapApply: the lambda tuple must have "
@@ -8425,7 +8451,7 @@ def translate(sql: str) -> str:
                     # full-frame idiom consumed, narrow frames rejected
                     # (see _consume_full_frame_over).
                     fn = "lag" if ident == "lagInFrame" else "lead"
-                    got = _consume_full_frame_over(sql, close + 1, ident, fn)
+                    got = _consume_full_frame_over(toks, close + 1, ident, fn)
                     if got is not None:
                         spec, nxt = got
                         out.append(
@@ -8452,7 +8478,7 @@ def translate(sql: str) -> str:
                             "result instead"
                         )
                     got = _consume_full_frame_over(
-                        sql, close + 1, ident, "lag"
+                        toks, close + 1, ident, "lag"
                     )
                     if got is None:
                         raise ValueError(
@@ -8503,20 +8529,20 @@ def translate(sql: str) -> str:
                     # timezone — rejected rather than approximated.
                     # 3-arg (r12, CH 24.9+): an explicit ORIGIN defines
                     # the alignment — floor the origin-relative offset.
-                    toks = args[1].split()
+                    parts = args[1].split()
                     if (
-                        len(toks) != 3
-                        or toks[0].upper() != "INTERVAL"
-                        or not toks[1].isdigit()
-                        or toks[2].upper().rstrip("S") not in _INTERVAL_SECONDS
+                        len(parts) != 3
+                        or parts[0].upper() != "INTERVAL"
+                        or not parts[1].isdigit()
+                        or parts[2].upper().rstrip("S") not in _INTERVAL_SECONDS
                     ):
                         raise ValueError(
                             "toStartOfInterval supports INTERVAL n "
                             "SECOND/MINUTE/HOUR/DAY/WEEK, got "
                             f"{args[1]!r}"
                         )
-                    unit = toks[2].upper().rstrip("S")
-                    secs = int(toks[1]) * _INTERVAL_SECONDS[unit]
+                    unit = parts[2].upper().rstrip("S")
+                    secs = int(parts[1]) * _INTERVAL_SECONDS[unit]
                     if len(args) == 3:
                         # CH's ORIGINAL 3-arg spelling passes a
                         # TIMEZONE string literal here; only the
@@ -8524,11 +8550,7 @@ def translate(sql: str) -> str:
                         # reject the tz spelling loudly instead of
                         # mis-reading it as an origin (ADVICE r12)
                         a2 = args[2].strip()
-                        if (
-                            len(a2) >= 2
-                            and a2[0] in "'\""
-                            and a2[-1] == a2[0]
-                        ):
+                        if is_quoted(a2):
                             raise ValueError(
                                 "toStartOfInterval(t, INTERVAL, "
                                 f"{a2}) timezone variant unsupported"
@@ -8560,12 +8582,12 @@ def translate(sql: str) -> str:
                     # end) tuple with CH's col1/col2 field names.
                     # Second-based units only (same constraint and
                     # reasons as toStartOfInterval).
-                    toks = args[1].split()
+                    parts = args[1].split()
                     if (
-                        len(toks) != 3
-                        or toks[0].upper() != "INTERVAL"
-                        or not toks[1].isdigit()
-                        or toks[2].upper().rstrip("S")
+                        len(parts) != 3
+                        or parts[0].upper() != "INTERVAL"
+                        or not parts[1].isdigit()
+                        or parts[2].upper().rstrip("S")
                         not in _INTERVAL_SECONDS
                     ):
                         raise ValueError(
@@ -8573,8 +8595,8 @@ def translate(sql: str) -> str:
                             "SECOND/MINUTE/HOUR/DAY/WEEK, got "
                             f"{args[1]!r}"
                         )
-                    u = toks[2].upper().rstrip("S")
-                    secs = int(toks[1]) * _INTERVAL_SECONDS[u]
+                    u = parts[2].upper().rstrip("S")
+                    secs = int(parts[1]) * _INTERVAL_SECONDS[u]
                     off = 259200 if u == "WEEK" else 0
                     st = (
                         f"floor((unix_timestamp({args[0]}) + {off}) "
@@ -8684,11 +8706,7 @@ def translate(sql: str) -> str:
                     # options the path syntax cannot carry — use
                     # sources.read_table for those.
                     path = args[0].strip()
-                    if not (
-                        len(path) >= 2
-                        and path[0] == path[-1]
-                        and path[0] in "'\""
-                    ):
+                    if not is_quoted(path):
                         raise ValueError("file() needs a literal path")
                     p = path[1:-1]
                     fmt = (
@@ -9089,11 +9107,7 @@ def translate(sql: str) -> str:
                     idx = args[1].strip()
                     if idx.isdigit():
                         out.append(f"({args[0]}).col{idx}")
-                    elif (
-                        len(idx) >= 3
-                        and idx[0] == idx[-1]
-                        and idx[0] in "'\""
-                    ):
+                    elif len(idx) >= 3 and is_quoted(idx):
                         out.append(f"({args[0]}).{idx[1:-1]}")
                     else:
                         raise ValueError(
@@ -9434,11 +9448,7 @@ def translate(sql: str) -> str:
                     # CH format('{}', x) braces → format_string
                     # positional %s; needs a literal pattern
                     fmt_lit = args[0].strip()
-                    if not (
-                        len(fmt_lit) >= 2
-                        and fmt_lit[0] == fmt_lit[-1]
-                        and fmt_lit[0] in "'\""
-                    ):
+                    if not is_quoted(fmt_lit):
                         raise ValueError(
                             "format() needs a literal pattern (the "
                             "{}-to-%s conversion happens at translate "
@@ -9653,11 +9663,7 @@ def translate(sql: str) -> str:
                     # replacement is a LITERAL without backreferences
                     # (the prefix group shifts every group number).
                     repl = args[2].strip()
-                    is_lit = (
-                        len(repl) >= 2
-                        and repl[0] == repl[-1]
-                        and repl[0] in "'\""
-                    )
+                    is_lit = is_quoted(repl)
                     if not is_lit or re.search(
                         r"[\\$]\d", repl[1:-1]
                     ):
@@ -9979,7 +9985,8 @@ def translate(sql: str) -> str:
             i = j
             continue
         out.append(c)
-        i += 1
+        i = j
+    out.append(sql[i:])
     return "".join(out)
 
 

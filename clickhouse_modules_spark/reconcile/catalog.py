@@ -21,11 +21,12 @@ The catalog is a few kilobytes, so it never touches Spark's file I/O:
 - On disk, ``save(path)`` writes the six tables with pyarrow into a
   fresh version directory ``<path>/v-<uuid>/<table>.parquet``, then
   commits it with one ``os.replace`` of the pointer file
-  ``<path>/CURRENT``, which names the live version. Only then is the
-  version the pointer named before deleted. A crash at any step leaves
-  the old catalog or the new one, and a crashed save's version
-  directory is never named. ``load`` reads the version the pointer
-  names.
+  ``<path>/CURRENT``, which names the live version. Only then are the
+  other version directories and pointer temp files deleted: the version
+  the pointer named before and anything a crashed save left. A crash at
+  any step leaves the old catalog or the new one, and a crashed save's
+  version directory is never named. ``load`` reads the version the
+  pointer names.
 
 ``checkpoint()`` stays public because callers (the playbook benchmark)
 call it before ``save``: it snapshots the replaced tables to Arrow, so
@@ -190,19 +191,23 @@ class Catalog:
         return dc_replace(self, snapshots={**self.snapshots, **fresh}, **dfs)
 
     def save(self, path: str) -> None:
-        """Write a new version and commit it by replacing the pointer."""
+        """Write a new version and commit it by replacing the pointer.
+        After the commit, every other version directory and pointer
+        temp file goes: the replaced version and whatever an earlier
+        save left when it crashed."""
         version = f"v-{uuid.uuid4().hex}"
         os.makedirs(os.path.join(path, version))
         tables = {**self.snapshots, **self._replaced()}
         for name in TABLES:
             pq.write_table(tables[name], os.path.join(path, version, f"{name}.parquet"))
-        pointer = Path(path, POINTER)
-        old = pointer.read_text() if pointer.exists() else None
         tmp = Path(path, f"{POINTER}.{uuid.uuid4().hex}.tmp")
         tmp.write_text(version)
-        os.replace(tmp, pointer)
-        if old is not None:
-            shutil.rmtree(os.path.join(path, old))
+        os.replace(tmp, Path(path, POINTER))
+        for entry in os.listdir(path):
+            if entry.startswith("v-") and entry != version:
+                shutil.rmtree(os.path.join(path, entry))
+            elif entry.startswith(f"{POINTER}.") and entry.endswith(".tmp"):
+                os.remove(os.path.join(path, entry))
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "Catalog":

@@ -1,8 +1,9 @@
 """The package's configuration surface, checked from source with ``ast``
 (no Spark): which environment variables it reads, that no query
 function in ``queries/`` is left without a caller, that the
-warehouse's commit and FINAL merge each live in one place, and that the
-reconcile catalog stays off Spark's file I/O."""
+warehouse's commit and FINAL merge each live in one place, that the
+reconcile catalog stays off Spark's file I/O, and that one lexer reads
+ClickHouse SQL text."""
 
 from __future__ import annotations
 
@@ -257,3 +258,68 @@ def test_reconcile_catalog_is_arrow_local():
                 spark_io.add(f"{module}:{fn}")
     assert builders == {"reconcile/catalog.py:local_relation"}, builders
     assert not spark_io, f"Spark file I/O in reconcile/: {spark_io}"
+
+
+def _quote_checks(path: str) -> set[str]:
+    """Functions (``Class.method`` for methods) that compare against a
+    string constant made only of quote characters, or read ch_sql's
+    ``_QUOTES``: the places that decide what a string literal is."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    found: set[str] = set()
+
+    def quote_only(node) -> bool:
+        return (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and node.value != ""
+            and set(node.value) <= {"'", '"'}
+        )
+
+    def visit(node, scope: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef) and scope == "<module>":
+                for item in child.body:
+                    if isinstance(item, ast.FunctionDef):
+                        visit(item, f"{child.name}.{item.name}")
+                continue
+            if isinstance(child, ast.FunctionDef) and scope == "<module>":
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Compare) and any(
+                quote_only(x) for x in [child.left, *child.comparators]
+            ):
+                found.add(scope)
+            if (
+                isinstance(child, ast.Name)
+                and child.id == "_QUOTES"
+                and isinstance(child.ctx, ast.Load)
+            ):
+                found.add(scope)
+            visit(child, scope)
+
+    visit(tree, "<module>")
+    return found
+
+
+def test_one_sql_lexer():
+    # every scan of ClickHouse SQL text reads ch_sql.lex's token stream:
+    # only the lexer decides where a string literal starts and ends
+    lexer = {"is_quoted"} | {
+        f"Tokens.{n.name}"
+        for n in ast.walk(ast.parse(open(CH_SQL, encoding="utf-8").read()))
+        if isinstance(n, ast.FunctionDef)
+    }
+    outside = sorted(
+        f"{os.path.basename(path)}:{fn}"
+        for path in (CH_SQL, DDL)
+        for fn in _quote_checks(path)
+        if not (path == CH_SQL and fn in lexer)
+    )
+    assert not outside, f"quote scanning outside the lexer: {outside}"
+    scanners = {
+        "_top_level_words", "_find_close", "_find_close_bracket",
+        "_find_open", "_split_top", "_split_and", "_subst_ident",
+        "_is_ident_char", "_sub_outside_strings",
+    } & (_defined(CH_SQL) | _defined(DDL))
+    assert not scanners, f"hand-rolled scanners: {sorted(scanners)}"

@@ -188,4 +188,11 @@ def test_catalog_save_crash_at_every_step_leaves_old_or_new(
         got = _catalog_rows(spark, root)
         assert got in (old, new), f"crash at call {k}"
         seen.add("old" if got == old else "new")
+        # the next clean save removes what the crashed one left behind
+        new_cat.save(root)
+        with open(os.path.join(root, POINTER)) as f:
+            live = f.read()
+        assert sorted(os.listdir(root)) == sorted([POINTER, live]), (
+            f"crash at call {k}"
+        )
     assert seen == {"old", "new"}
