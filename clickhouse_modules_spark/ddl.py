@@ -88,19 +88,18 @@ import os
 import re
 import shutil
 import uuid
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, field, asdict, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql.types import StructType
 
 from clickhouse_modules_spark.functions.ch_sql import (
     STATE_BASES,
+    QueryContext,
     agg_sql_for_role,
     ch_sql,
-    deregister_table,
+    dictionary,
     lex,
-    register_dictionary,
-    register_merged_view,
-    register_sampling_key,
     translate,
 )
 
@@ -989,36 +988,26 @@ class ChWarehouse:
         ]
         return d.groupBy(*by).agg(*aggs).select(*stored, *tail, *part_extra)
 
-    def _register_views(
-        self, session=None, only: set[str] | None = None
-    ) -> dict[str, DataFrame]:
-        """Views for the warehouse tables (those in ``only``, when
-        given): each table's logical frame under its own name and, for
-        the merging MergeTree engines, the logical projection of
-        ``_merge`` under a hidden name that ``FROM t FINAL`` reads. Both
-        come from one read of the live parts."""
-        views: dict[str, DataFrame] = {}
-        for name in self.tables():
-            if only is not None and name not in only:
-                continue
+    def _table_context(self, words: set[str], session=None) -> QueryContext:
+        """The query context of the warehouse tables in ``words``: their
+        logical frames, for the merging engines the ``_merge`` frames
+        that ``FROM t FINAL`` reads, and their SAMPLE BY keys."""
+        views, merged, sampling = {}, {}, {}
+        for name in [t for t in self.tables() if t in words]:
             meta = self.meta(name)
-            # the FINAL/SAMPLE registries are process-global keyed by
-            # view NAME: another warehouse (or a dropped + recreated
-            # table) may have left a different table's entry under it
-            deregister_table(name)
             canon = self._canon_stored(meta, session)
             views[name] = self._logical(meta, canon, session)
             if meta.engine in _MERGING:
-                merged = f"__{name}_final"
-                views[merged] = self._logical(
+                merged[name] = f"__{name}_final"
+                views[merged[name]] = self._logical(
                     meta,
                     None if canon is None else self._merge(meta, canon),
                     session,
                 )
-                register_merged_view(name, merged)
             if meta.sample_by:
-                register_sampling_key(name, meta.sample_by)
-        return views
+                sampling[name] = meta.sample_by
+        ctx = QueryContext(merged=merged, sampling=sampling)
+        return ctx.with_views(views)
 
     # -- statement dispatch --------------------------------------------
 
@@ -1029,22 +1018,14 @@ class ChWarehouse:
             raise ValueError("empty statement")
         kw = head.group(1).upper()
         if kw in ("SELECT", "WITH"):
-            for sysname, builder in (
-                ("parts", self.parts),
-                ("tables", self.tables_info),
-                ("columns", self.columns_info),
-            ):
-                pat = re.compile(rf"\bsystem\.{sysname}\b", re.I)
-                new_stmt = "".join(
-                    text if is_str else pat.sub(f"__system_{sysname}", text)
-                    for text, is_str in lex(stmt).segments()
+            # system.<name> reads the context's __system_<name> frame
+            pat = re.compile(r"\bsystem\.(parts|tables|columns)\b", re.I)
+            stmt = "".join(
+                text if is_str else pat.sub(
+                    lambda m: f"__system_{m.group(1).lower()}", text
                 )
-                if new_stmt != stmt:
-                    stmt = new_stmt
-                    builder().createOrReplaceTempView(
-                        f"__system_{sysname}"
-                    )
-        if kw in ("SELECT", "WITH"):
+                for text, is_str in lex(stmt).segments()
+            )
             om = re.search(
                 r"\bINTO\s+OUTFILE\s+'([^']+)'(?:\s+FORMAT\s+(\w+))?"
                 r"\s*(?:SETTINGS\b.*)?$",
@@ -1148,7 +1129,6 @@ class ChWarehouse:
                 return None
             if self.exists(name):
                 shutil.rmtree(self._dir(name))
-                deregister_table(name)
             elif not m.group(2):
                 raise ValueError(f"table {name} does not exist")
             return None
@@ -1163,7 +1143,6 @@ class ChWarehouse:
             os.rename(self._dir(src), self._dir(dst))
             meta.name = dst
             self._save_meta(meta)
-            deregister_table(src)
             return None
         if kw == "EXCHANGE":
             m = re.match(r"^EXCHANGE\s+TABLES\s+(\w+)\s+AND\s+(\w+)$",
@@ -1179,8 +1158,6 @@ class ChWarehouse:
             ma.name, mb.name = b, a
             self._save_meta(ma)
             self._save_meta(mb)
-            deregister_table(a)
-            deregister_table(b)
             return None
         if kw == "DESCRIBE" or kw == "DESC":
             m = re.match(r"^DESC(?:RIBE)?\s+(TABLE\s+)?(\w+)$", stmt, re.I)
@@ -1266,7 +1243,12 @@ class ChWarehouse:
         )
 
     def query(self, sql: str) -> DataFrame:
-        """CH-dialect SELECT over the warehouse's tables (+ views).
+        """CH-dialect SELECT over the warehouse's tables (+ views)."""
+        return ch_sql(self.spark, sql, self._context(sql))
+
+    def _context(self, sql: str) -> QueryContext:
+        """The query context of ``sql``: the warehouse tables, stored
+        views, dictionaries and ``system.*`` frames it names.
 
         Only tables the statement (transitively, through stored views)
         REFERENCES are loaded: each table load is a file-listing job,
@@ -1274,21 +1256,29 @@ class ChWarehouse:
         499 useless listings. A word-level match over-approximates
         references (a false positive costs one lazy listing, never
         correctness)."""
-        word_sets = [set(re.findall(r"\w+", sql))]
-        view_defs = self._views()
+        words = set(re.findall(r"\w+", sql))
+        view_defs = {d["name"]: d["select"] for d in self._defs("view")}
         # transitive closure: views mentioned pull in their own words
-        changed = True
         seen_views: set[str] = set()
-        while changed:
-            changed = False
-            words = set().union(*word_sets)
-            for vname, vsql in view_defs.items():
-                if vname in words and vname not in seen_views:
-                    seen_views.add(vname)
-                    word_sets.append(set(re.findall(r"\w+", vsql)))
-                    changed = True
-        words = set().union(*word_sets)
-        views = self._register_views(only=words)
+        while new := (view_defs.keys() & words) - seen_views:
+            seen_views.update(new)
+            for v in new:
+                words |= set(re.findall(r"\w+", view_defs[v]))
+        ctx = self._table_context(words)
+        frames = {
+            f"__system_{n}": build() for n, build in (
+                ("parts", self.parts), ("tables", self.tables_info),
+                ("columns", self.columns_info),
+            ) if f"__system_{n}" in words
+        }
+        for d in self._defs("dict"):
+            if d["name"] in words:
+                src = ctx.frames.get(d["source"]) or self.table_df(d["source"])
+                attrs = [a for a in d["attrs"] if a != d["key"]]
+                frames[d["name"]] = dictionary(
+                    src.select(d["key"], *attrs), d["key"]
+                )
+        ctx = replace(ctx, frames={**ctx.frames, **frames})
         # dependency order: a view is evaluable once no OTHER pending
         # view name appears in its SQL (set-iteration order would make
         # view-over-view resolution depend on string hashing)
@@ -1307,25 +1297,20 @@ class ChWarehouse:
                     f"view dependency cycle among {sorted(pending)}"
                 )
             for v in ready:
-                views[v] = ch_sql(self.spark, view_defs[v], views=views)
-                pending.discard(v)
-        for d in self._dicts():
-            if d["name"] in words:
-                src_df = views.get(d["source"]) or self.table_df(d["source"])
-                cols = [d["key"], *[a for a in d["attrs"]
-                                    if a != d["key"]]]
-                register_dictionary(
-                    self.spark, d["name"], src_df.select(*cols), d["key"]
+                ctx = ctx.with_views(
+                    {v: ch_sql(self.spark, view_defs[v], ctx)}
                 )
-        return ch_sql(self.spark, sql, views=views)
+                pending.discard(v)
+        return ctx
 
     def explain(self, sql: str, mode: str = "PLAN") -> str:
         """``EXPLAIN SYNTAX`` → the translated Spark SQL text (what CH
         EXPLAIN SYNTAX is: the rewritten statement); ``EXPLAIN
         [PLAN]`` → Catalyst's formatted physical plan for the
-        translated query (scan pruning / pushed filters visible)."""
+        translated query (scan pruning / pushed filters visible). Both
+        translate in the context ``query`` builds."""
         if mode.upper() == "SYNTAX":
-            return translate(sql)
+            return translate(sql, self._context(sql))
         df = self.query(sql)
         jvm = self.spark._jvm
         return df._jdf.queryExecution().explainString(
@@ -1527,7 +1512,7 @@ class ChWarehouse:
         # creating them, then loops at insert time; failing loudly
         # BEFORE any partial append beats a RecursionError after some.
         sess = df.sparkSession
-        for mv in self._mvs():
+        for mv in self._defs("mv"):
             if mv["source"] != name:
                 continue
             if mv["target"] in _mv_chain or mv["target"] == name:
@@ -1536,9 +1521,9 @@ class ChWarehouse:
                     f"{' -> '.join([*_mv_chain, name, mv['target']])}"
                 )
             words = set(re.findall(r"\w+", mv["select"]))
-            views = self._register_views(session=sess, only=words)
-            views[name] = aligned  # the batch shadows the full table
-            result = ch_sql(sess, mv["select"], views=views)
+            ctx = self._table_context(words, sess)
+            ctx = ctx.with_views({name: aligned})  # the batch shadows the table
+            result = ch_sql(sess, mv["select"], ctx)
             self.insert_df(
                 mv["target"], result,
                 _mv_chain=_mv_chain | {name},
@@ -1549,24 +1534,15 @@ class ChWarehouse:
     def _mv_path(self, name: str) -> str:
         return f"{self.root}/_mv/{name}.json"
 
-    def _mvs(self) -> list[dict]:
+    def _defs(self, kind: str) -> list[dict]:
+        """Stored "mv", "view" or "dict" definitions, by name."""
         out = []
         for e in sorted(os.scandir(f"{self.root}/_mv"), key=lambda x: x.name):
             if e.name.endswith(".json"):
                 with open(e.path) as f:
                     d = json.load(f)
-                if d.get("kind") == "mv":
+                if d.get("kind") == kind:
                     out.append(d)
-        return out
-
-    def _views(self) -> dict[str, str]:
-        out = {}
-        for e in sorted(os.scandir(f"{self.root}/_mv"), key=lambda x: x.name):
-            if e.name.endswith(".json"):
-                with open(e.path) as f:
-                    d = json.load(f)
-                if d.get("kind") == "view":
-                    out[d["name"]] = d["select"]
         return out
 
     def _create_mv(self, stmt: str) -> None:
@@ -1633,7 +1609,8 @@ class ChWarehouse:
                 "CREATE DICTIONARY d (cols) PRIMARY KEY k "
                 "SOURCE(CLICKHOUSE(TABLE 'src')) [LAYOUT(…)] "
                 "[LIFETIME(…)] (other SOURCEs: read the data yourself "
-                "and call functions.ch_sql.register_dictionary)"
+                "and pass functions.ch_sql.dictionary(df, key) in the "
+                "frames of a QueryContext)"
             )
         name = m.group(3)
         keys = [k.strip() for k in m.group(5).split(",")]
@@ -1660,16 +1637,6 @@ class ChWarehouse:
             json.dump({"kind": "dict", "name": name, "source": src,
                        "key": keys[0], "attrs": attrs}, f, indent=1)
         return None
-
-    def _dicts(self) -> list[dict]:
-        out = []
-        for e in sorted(os.scandir(f"{self.root}/_mv"), key=lambda x: x.name):
-            if e.name.endswith(".json"):
-                with open(e.path) as f:
-                    d = json.load(f)
-                if d.get("kind") == "dict":
-                    out.append(d)
-        return out
 
     def _create_view(self, stmt: str) -> None:
         m = re.match(
@@ -1814,12 +1781,15 @@ class ChWarehouse:
                 head = head[: pm.start()].rstrip()
             return head, scope, pred
 
+        # a mutation's expressions read the table's column types
+        ctx = QueryContext(schemas={name: StructType.fromDDL(
+            self._schema_ddl(meta, stored_only=False))})
         if action == "DELETE":
             parts = _split_mutation(body[len("DELETE") :])
             if parts is None:
                 raise ValueError("ALTER DELETE requires WHERE")
             _head, scope, pred_text = parts
-            pred = F.expr(self._alias_subst(meta, translate(pred_text)))
+            pred = F.expr(self._alias_subst(meta, translate(pred_text, ctx)))
             match = F.coalesce(pred.cast("boolean"), F.lit(False))
             if scope is not None:
                 match = match & scope
@@ -1832,7 +1802,7 @@ class ChWarehouse:
             if parts is None:
                 raise ValueError("ALTER UPDATE requires WHERE")
             assign_text, scope, pred_text = parts
-            pred = F.expr(self._alias_subst(meta, translate(pred_text)))
+            pred = F.expr(self._alias_subst(meta, translate(pred_text, ctx)))
             match = F.coalesce(pred.cast("boolean"), F.lit(False))
             if scope is not None:
                 match = match & scope
@@ -1857,7 +1827,7 @@ class ChWarehouse:
                         "INSERT + DELETE instead"
                     )
                 assigns[cname] = self._alias_subst(
-                    meta, translate(am.group(2))
+                    meta, translate(am.group(2), ctx)
                 )
 
             def apply_update(d: DataFrame) -> DataFrame:

@@ -28,24 +28,28 @@ predicate pushdown IS the PREWHERE optimization, applied
 automatically), ``GLOBAL IN``/``GLOBAL JOIN`` (the GLOBAL keyword is
 a CH distributed-execution hint with no Spark equivalent — broadcast
 decisions belong to Catalyst/AQE), and ``dictGet('dict', 'attr',
-key)`` → a correlated scalar subquery over a registered dictionary
-view (Catalyst decorrelates it into a join; see
-``register_dictionary``). ``dictGet`` returns NULL on a missing key
-(CH ``dictGetOrNull``); CH's implicit type-default fill is a silent-
-wrong-answer hazard this engine refuses to copy.
+key)`` → a correlated scalar subquery over a dictionary frame (Catalyst
+decorrelates it into a join; see ``dictionary``). ``dictGet`` returns
+NULL on a missing key (CH ``dictGetOrNull``); CH's implicit type-
+default fill is a silent-wrong-answer hazard this engine refuses to
+copy.
 
-Table-level clauses: ``FROM t FINAL`` (ReplacingMergeTree latest-
-version read; needs ``register_replacing_table``), ``FROM t SAMPLE
-n/d`` (deterministic md5-bucket sample on a ``register_sampling_key``
-column — never a random coin flip), ``ASOF [LEFT] JOIN`` (lateral
-top-1 subquery; Catalyst decorrelates to the one-shuffle window shape
-of operators/asof.py), and ``ORDER BY col WITH FILL [FROM/TO/STEP]``
-(sequence() spine + left join; filled rows are NULL, not CH's silent
-type-default zeros).
+Table-level clauses: ``FROM t FINAL`` (the merged frame of a warehouse
+table, or a ReplacingMergeTree latest-version read over the context's
+replacing keys), ``FROM t SAMPLE n/d`` (deterministic md5-bucket sample
+on the context's sampling key — never a random coin flip), ``ASOF
+[LEFT] JOIN`` (lateral top-1 subquery; Catalyst decorrelates to the
+one-shuffle window shape of operators/asof.py), and ``ORDER BY col
+WITH FILL [FROM/TO/STEP]`` (sequence() spine + left join; filled rows
+are NULL, not CH's silent type-default zeros).
 
 Not a full parser: DDL and clauses inside nested subqueries are out
 of scope and pass through untouched (Spark rejects what it can't
 parse — loudly, not silently).
+
+The views, dictionaries and join tables a statement reads, and what
+the rewrites know of them, come in one :class:`QueryContext` per call,
+never in module state; ``ch_sql`` binds the frames for that call only.
 
 One lexer reads the text: ``lex(sql)`` returns a :class:`Tokens`
 stream, and every scan here and in ``ddl.py`` queries it instead of
@@ -73,9 +77,14 @@ linear to translate.
 from __future__ import annotations
 
 import re
+import uuid
 from bisect import bisect_left
+from collections.abc import Mapping
+from dataclasses import dataclass, field, replace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import ArrayType, StructType
 
 # ------------------------------------------------------------------ lexer
 
@@ -4173,7 +4182,7 @@ def _subscript_base(toks: Tokens, k: int) -> int:
     return starts[b]
 
 
-def _rewrite_subscripts(toks: Tokens) -> str:
+def _rewrite_subscripts(toks: Tokens, ctx: QueryContext) -> str:
     """Rewrite CH bracket syntax to Spark-evaluable calls:
 
     - subscript ``base[idx]`` → ``element_at(base, idx)``: CH array
@@ -4207,7 +4216,7 @@ def _rewrite_subscripts(toks: Tokens) -> str:
             src.append(pos)
             rewritten.append(False)
         close = toks.close_bracket(i)
-        inner = _rewrite_subscripts(lex(sql[i + 1 : close]))
+        inner = _rewrite_subscripts(lex(sql[i + 1 : close]), ctx)
         start = _subscript_base(toks, k)
         is_sub = False
         if start >= 0:
@@ -4229,37 +4238,16 @@ def _rewrite_subscripts(toks: Tokens) -> str:
                 and base.upper() in _BRACKET_LITERAL_KEYWORDS
             ) and not base.isdigit()
         if is_sub:
-            # Spark's element_at needs an INT array index, but CH
-            # subscripts take any integer width — and the tables'
-            # keys are Int64 (r13 fuzz seed 20023: a BIGINT index
-            # expression failed analysis). Cast non-literal INDEX
-            # EXPRESSIONS down to INT, but only when the subscript
-            # can plausibly be an array index (r13 ADVICE: the
-            # unconditional cast broke m[string_col] map lookups
-            # with MAP_FUNCTION_DIFF_TYPES and overflowed bigint
-            # map keys > 2^31). Pass through untouched:
-            #   - string literals and int literals (as before),
-            #   - bare identifiers (m[string_col] / m[key_col]) —
-            #     UNLESS the registered view schemas classify the
-            #     BASE as an array column, where element_at does
-            #     require an INT index (r14 ADVICE: arr[k] with a
-            #     BIGINT index column failed analysis),
-            #   - string-producing call spellings
-            #     (m[concat(a, b)], m[lower(k)]),
-            #   - any index over a syntactic MAP producer
-            #     (map(...)[k], map_from_arrays(...)[k]).
-            # Residual documented gap: an ARITHMETIC index over a
-            # bigint-keyed map (m[k + 1] with keys > 2^31) still
-            # casts and overflows — indistinguishable statically
-            # from the array case that needs the cast.
-            # classification shared with the explicit
-            # arrayElement()/arrayElementOrNull() spellings —
-            # bare-identifier bases resolve against registered
-            # view schemas (r14 ADVICE: an array COLUMN with a
-            # bigint index column needs the cast; syntax alone
-            # can't tell it from a map column; r13 seed 20023
-            # pins ([10,20,30])[k] with k Int64)
-            if _elem_needs_cast(base, inner):
+            # element_at needs an INT array index, but CH subscripts
+            # take any integer width (r13 fuzz seed 20023): cast a
+            # non-literal index to INT when the subscript can be an
+            # array index. Literals, bare identifiers (m[key_col],
+            # unless a view of the context types the base as an
+            # array), string-producing calls and indexes over a
+            # syntactic map pass through, so a map key keeps its type.
+            # Gap: an arithmetic index over a bigint-keyed map
+            # (m[k + 1], keys > 2^31) still casts and overflows.
+            if _elem_needs_cast(base, inner, ctx):
                 inner = f"CAST({inner} AS INT)"
             # try_element_at: Spark 4.1.2 ANSI element_at returns the
             # LAST element for a NULL index (upstream defect,
@@ -4286,8 +4274,9 @@ def _rewrite_dot_index(toks: Tokens) -> str:
     maps to Spark ``struct(...)`` whose auto-named fields are
     ``col1..colN`` (both 1-based, so indices carry over). Float
     literals (``0.5``) are left alone: the token right before the dot
-    must be a ``)``, a ``]`` or a word that is neither all digits nor
-    itself after a dot."""
+    must be a ``)``, a ``]``, a word that is neither all digits nor
+    itself after a dot, or the index of the access just rewritten
+    (``t.1.2`` → ``t.col1.col2``)."""
     sql = toks.sql
     if "." not in toks.marks:
         return sql
@@ -4300,7 +4289,7 @@ def _rewrite_dot_index(toks: Tokens) -> str:
         if ends[k - 1] != i:
             continue
         ws = starts[k - 1]
-        if sql[ws] not in ")]" and not (
+        if pos != i and sql[ws] not in ")]" and not (
             toks.is_word(k - 1)
             and not sql[ws:i].isdigit()
             and not (ws > 0 and sql[ws - 1] == ".")
@@ -4314,9 +4303,9 @@ def _rewrite_dot_index(toks: Tokens) -> str:
     return "".join(out) + sql[pos:] if out else sql
 
 
-def _from_view_cols(toks: Tokens) -> list[str] | None:
+def _from_view_cols(toks: Tokens, ctx: QueryContext) -> list[str] | None:
     """Column list of the statement's SINGLE FROM view, when that view
-    was registered through :func:`ch_sql` — the schema source for
+    is a view of the context — the schema source for
     star-expansion rewrites (APPLY/COLUMNS). None when unknown — and
     deliberately None when the FROM clause joins tables: expanding a
     star over only the left table's schema would silently drop the
@@ -4338,11 +4327,11 @@ def _from_view_cols(toks: Tokens) -> list[str] | None:
             )
             if len(toks.split(lo, hi)) > 1:
                 return None
-            return _VIEW_COLS.get(words[i + 1][2])
+            return ctx.columns(words[i + 1][2])
     return None
 
 
-def _rewrite_column_selectors(toks: Tokens) -> str:
+def _rewrite_column_selectors(toks: Tokens, ctx: QueryContext) -> str:
     """CH column-selector modifiers Spark lacks:
 
     - ``COLUMNS('re')`` → the FROM view's columns matching the regex;
@@ -4352,7 +4341,7 @@ def _rewrite_column_selectors(toks: Tokens) -> str:
     - paren-less ``* EXCEPT col`` → Spark's ``* EXCEPT (col)``.
 
     Expansion needs a schema, so APPLY/COLUMNS require the FROM target
-    to be a ch_sql-registered view — anything else rejects loudly.
+    to be a view of the context — anything else rejects loudly.
     ``* EXCEPT (…)`` alone passes through (shared Spark syntax).
     """
     sql = toks.sql
@@ -4360,7 +4349,7 @@ def _rewrite_column_selectors(toks: Tokens) -> str:
         return sql
     # recurse into parenthesized subqueries first (selector modifiers
     # are per-SELECT; the top-level scan below only sees depth 0)
-    sql = toks.map_subqueries(lambda q: _rewrite_column_selectors(lex(q)))
+    sql = toks.map_subqueries(lambda q: _rewrite_column_selectors(lex(q), ctx))
     if sql != toks.sql:
         toks = lex(sql)
     words = toks.words()
@@ -4374,7 +4363,7 @@ def _rewrite_column_selectors(toks: Tokens) -> str:
     if sel is None or from_ is None:
         return sql
     items = toks.split(sel, from_)
-    cols = _from_view_cols(toks)
+    cols = _from_view_cols(toks, ctx)
     out_items = []
     pat = re.compile(
         r"^(\*|COLUMNS\s*\(\s*('[^']*')\s*\))"
@@ -4438,14 +4427,14 @@ def _rewrite_column_selectors(toks: Tokens) -> str:
     ) + " " + sql[from_:]
 
 
-def _rewrite_select_replace(toks: Tokens) -> str:
+def _rewrite_select_replace(toks: Tokens, ctx: QueryContext) -> str:
     """Rewrite ClickHouse's ``SELECT * REPLACE (expr AS col, …)``
     (sql-reference/statements/select: the REPLACE modifier) — Spark has
     ``* EXCEPT`` but no ``* REPLACE``.
 
-    When the FROM target is a view registered through :func:`ch_sql`
-    (``_VIEW_COLS``), expand the star to the full column list with the
-    replaced columns substituted IN PLACE — exact CH column order.
+    When the FROM target is a view of the context, expand the star to
+    the full column list with the replaced columns substituted IN PLACE
+    — exact CH column order.
     Otherwise fall back to ``* EXCEPT (cols…), expr AS col …``, which
     preserves values but moves replaced columns to the end (documented
     divergence: no schema to anchor positions to)."""
@@ -4492,7 +4481,7 @@ def _rewrite_select_replace(toks: Tokens) -> str:
         if w.upper() == "FROM" and x + 1 < len(words):
             table = words[x + 1][2]
             break
-    cols = _VIEW_COLS.get(table) if table else None
+    cols = ctx.columns(table) if table else None
     if cols is not None and all(c in cols for c in repls):
         proj = ", ".join(
             f"{repls[c]} AS {c}" if c in repls else c for c in cols
@@ -5415,64 +5404,78 @@ _SIM_KERNELS: dict[str, str] = {
     "byteHammingDistance": "__ch_byte_hamming",
 }
 
-# ReplacingMergeTree metadata for FROM … FINAL over a plain view: view
-# name → (key cols, version col). CH resolves FINAL from the table
-# engine's ORDER BY / version; a plain view has no such metadata, so it
-# is registered explicitly.
-_REPLACING: dict[str, tuple[list[str], str]] = {}
+class JoinTable(NamedTuple):
+    """A ``Join(ANY, LEFT, keys)``-engine analog for ``joinGet``: one
+    row per key, and the column types that pick its miss value."""
 
-# Deterministic sampling keys for FROM … SAMPLE n/d: view name → column.
-# CH samples on the table's declared SAMPLE BY key; same idea here.
-_SAMPLING: dict[str, str] = {}
-
-# View schemas captured at ch_sql(views=…) time: view name → column list.
-# Text-level rewrites that need a deterministic tie-break column (ASOF
-# JOIN) read the right table's first column from here.
-_VIEW_COLS: dict[str, list[str]] = {}
-
-# Per-view column → is-array-typed, captured from df.schema at
-# ch_sql(views=…) time. The subscript rewrite consults this to decide
-# whether a bare-identifier base is an array column (index must be
-# cast to INT) or a map/other column (key passes through uncast) —
-# r14 ADVICE: arr[k] with an array COLUMN and a BIGINT index column
-# failed analysis because the bare-base heuristic never cast.
-_VIEW_ARRAY_COLS: dict[str, dict[str, bool]] = {}
+    frame: DataFrame
+    keys: tuple[str, ...]
+    types: Mapping[str, str]
 
 
-def _col_array_class(name: str) -> bool | None:
-    """True if ``name`` is array-typed in EVERY registered view that
-    carries it, False if non-array in every one, None when unknown or
-    conflicting across views (fall back to the syntactic heuristic).
+@dataclass(frozen=True)
+class QueryContext:
+    """What one statement can name beyond the session's own tables, as
+    ClickHouse's per-query ``Context``. Built per call, never changed.
 
-    Registrations accumulate for the session (like _VIEW_COLS — the
-    joinGet tables rely on cross-call persistence), so a column name
-    registered by an EARLIER ch_sql call still votes here; same-name
-    disagreements collapse to None (syntax fallback), but a stale
-    same-named column whose current view was never passed via
-    ``views=`` can misclassify — best-effort metadata, documented
-    (r15 self-review)."""
-    seen: bool | None = None
-    found = False
-    for cols in _VIEW_ARRAY_COLS.values():
-        if name in cols:
-            if found and cols[name] != seen:
-                return None
-            seen = cols[name]
-            found = True
-    return seen if found else None
+    - ``frames``: name → DataFrame; :func:`ch_sql` binds each frame the
+      statement reads under a fresh name for that call.
+    - ``schemas``: the schemas of the frames added as views (star
+      expansion, the ASOF tie-break, ANY JOIN, subscript casts).
+    - ``merged``: table → the frame ``FROM table FINAL`` reads.
+    - ``replacing``: name → (key columns, version column) for FINAL.
+    - ``sampling``: name → the ``SAMPLE BY`` key column.
+    - ``join_tables``: name → :class:`JoinTable`.
+    """
+
+    frames: Mapping[str, DataFrame] = field(default_factory=dict)
+    schemas: Mapping[str, StructType] = field(default_factory=dict)
+    merged: Mapping[str, str] = field(default_factory=dict)
+    replacing: Mapping[str, tuple[tuple[str, ...], str]] = field(
+        default_factory=dict
+    )
+    sampling: Mapping[str, str] = field(default_factory=dict)
+    join_tables: Mapping[str, JoinTable] = field(default_factory=dict)
+
+    def with_views(self, views: Mapping[str, DataFrame]) -> QueryContext:
+        """This context plus ``views``: frames whose schemas it keeps."""
+        if not views:
+            return self
+        schemas = {name: df.schema for name, df in views.items()}
+        return replace(self, frames={**self.frames, **views},
+                       schemas={**self.schemas, **schemas})
+
+    def columns(self, name: str) -> list[str] | None:
+        """The columns of view ``name``; None for any other name."""
+        schema = self.schemas.get(name)
+        return None if schema is None else schema.fieldNames()
 
 
-def _elem_base_class(base: str) -> str | None:
+EMPTY_CONTEXT = QueryContext()
+
+
+def _col_array_class(name: str, ctx: QueryContext) -> bool | None:
+    """True if column ``name`` is array-typed in every view of the
+    context that carries it, False if in none, None when no view has it
+    or the views disagree (fall back to the syntactic heuristic)."""
+    votes = {
+        isinstance(f.dataType, ArrayType)
+        for schema in ctx.schemas.values()
+        for f in schema.fields
+        if f.name.lower() == name
+    }
+    return votes.pop() if len(votes) == 1 else None
+
+
+def _elem_base_class(base: str, ctx: QueryContext) -> str | None:
     """Classify the BASE of a subscript / arrayElement call as
     'array', 'map', or None (unknown), from its syntax plus the
-    registered view schemas (r15 self-review: shared by a[k] and the
-    explicit arrayElement()/arrayElementOrNull() spellings so neither
-    path unconditionally casts a map key to INT)."""
+    context's view schemas (shared by a[k] and arrayElement(), so
+    neither casts a map key to INT)."""
     base_l = base.strip().lower().lstrip("(")
     base_seg = base_l.rstrip(")").split(".")[-1].strip("`")
-    base_cls = (
-        _col_array_class(base_seg) if base_seg.isidentifier() else None
-    )
+    base_cls = (_col_array_class(base_seg, ctx)
+                if base_seg.isidentifier() else None)
     if base_l.startswith(_MAPISH_PREFIXES):
         return "map"
     if _is_arrayish(base_l) or base_cls is True:
@@ -5484,14 +5487,14 @@ def _elem_base_class(base: str) -> str | None:
     return None
 
 
-def _elem_needs_cast(base: str, key: str) -> bool:
+def _elem_needs_cast(base: str, key: str, ctx: QueryContext) -> bool:
     """True when an index expression must be cast to INT for Spark's
     element_at family (array base, non-literal index); False when it
     must pass through uncast (map keys keep the map's key type)."""
     key = key.strip()
     is_str_lit = is_quoted(key)
     is_int_lit = key.lstrip("-").isdigit()
-    cls = _elem_base_class(base)
+    cls = _elem_base_class(base, ctx)
     if cls == "map":
         return False
     if cls == "array":
@@ -5500,43 +5503,6 @@ def _elem_needs_cast(base: str, key: str) -> bool:
         ".", "_").replace("`", "_").isidentifier()
     str_key = key.lower().startswith(_STRINGY_PREFIXES)
     return not (is_str_lit or is_int_lit or is_bare_ident or str_key)
-
-
-# Warehouse tables with a merging MergeTree engine: view name → the
-# hidden view holding its merged rows (ddl.ChWarehouse._merge), which
-# ``FROM name FINAL`` reads instead of the table.
-_MERGED: dict[str, str] = {}
-
-
-def register_merged_view(name: str, merged_view: str) -> None:
-    """Make ``FROM name FINAL`` read ``merged_view``: the view of the
-    table's rows after its engine's merge."""
-    _MERGED[name] = merged_view
-
-
-def register_replacing_table(
-    name: str, key_cols: list[str], version_col: str
-) -> None:
-    """Declare a view as ReplacingMergeTree-like so ``FROM name FINAL``
-    can resolve: latest ``version_col`` per ``key_cols`` wins."""
-    _REPLACING[name] = (list(key_cols), version_col)
-
-
-def deregister_table(name: str) -> None:
-    """Drop FINAL/SAMPLE metadata for a view name (table dropped or
-    renamed — stale entries would silently misresolve a later table
-    that reuses the name)."""
-    _REPLACING.pop(name, None)
-    _MERGED.pop(name, None)
-    _SAMPLING.pop(name, None)
-
-
-def register_sampling_key(name: str, key_col: str) -> None:
-    """Declare the deterministic sampling key for ``FROM name SAMPLE
-    n/d`` (the CH ``SAMPLE BY`` analog). Sampling is an md5-bucket
-    predicate on the key — engine-portable and stable across re-runs,
-    never a random() coin flip."""
-    _SAMPLING[name] = key_col
 
 
 def _sample_predicate_sql(key: str, num: int, den: int) -> str:
@@ -5551,21 +5517,20 @@ def _sample_predicate_sql(key: str, num: int, den: int) -> str:
     return f"{bucket} < {num}"
 
 
-def _rewrite_from_modifiers(toks: Tokens) -> str:
+def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
     """Rewrite CH table modifiers in FROM clauses:
 
     - ``FROM t [AS a] FINAL`` on a warehouse table →
-      ``FROM <merged view> AS t``: the hidden view of the table's rows
-      after its engine's merge (``register_merged_view``; ddl.py
-      builds it with the merge OPTIMIZE FINAL writes).
+      ``FROM <merged view> AS t``: the frame of the table's rows after
+      its engine's merge (``ctx.merged``; ddl.py builds it with the
+      merge OPTIMIZE FINAL writes).
     - ``FROM t [AS a] FINAL`` on a plain view → latest-version-per-key
       subquery (one window over the key exchange, WindowGroupLimit
-      prunes map-side). Requires ``register_replacing_table``.
+      prunes map-side). Requires ``t`` in ``ctx.replacing``.
     - ``FROM t [AS a] [FINAL] SAMPLE n/d`` → deterministic md5-bucket
-      predicate on the registered sampling key over the table, or over
-      the merged view under FINAL (a plain view samples before its
-      FINAL window), so it reaches the scan. Requires
-      ``register_sampling_key``.
+      predicate on the sampling key over the table, or over the merged
+      view under FINAL (a plain view samples before its FINAL window),
+      so it reaches the scan. Requires ``t`` in ``ctx.sampling``.
     """
     sql = toks.sql
     if not {"FINAL", "SAMPLE"} & toks.marks:
@@ -5615,10 +5580,10 @@ def _rewrite_from_modifiers(toks: Tokens) -> str:
                 break
         if not final and sample is None:
             continue
-        merged = _MERGED.get(table) if final else None
+        merged = ctx.merged.get(table) if final else None
         base = merged or table
         if sample is not None:
-            key = _SAMPLING.get(table)
+            key = ctx.sampling.get(table)
             if key is None:
                 raise ValueError(
                     f"SAMPLE on '{table}' needs register_sampling_key()"
@@ -5626,7 +5591,7 @@ def _rewrite_from_modifiers(toks: Tokens) -> str:
             pred = _sample_predicate_sql(key, sample[0], sample[1])
             base = f"(SELECT * FROM {base} WHERE {pred})"
         if final and merged is None:
-            meta = _REPLACING.get(table)
+            meta = ctx.replacing.get(table)
             if meta is None:
                 raise ValueError(
                     f"FINAL on '{table}' needs register_replacing_table() "
@@ -5642,11 +5607,11 @@ def _rewrite_from_modifiers(toks: Tokens) -> str:
             )
         out_alias = alias if alias is not None else table
         rewritten = sql[:fs] + f"FROM {base} AS {out_alias}" + sql[end:]
-        return _rewrite_from_modifiers(lex(rewritten))
+        return _rewrite_from_modifiers(lex(rewritten), ctx)
     return sql
 
 
-def _rewrite_asof_join(toks: Tokens) -> str:
+def _rewrite_asof_join(toks: Tokens, ctx: QueryContext) -> str:
     """Rewrite CH ``<ltable> [lalias] ASOF [LEFT] JOIN <right> [AS r]
     ON <conds>`` into an explicit domain → equi-join → window → join-back
     shape.
@@ -5671,9 +5636,9 @@ def _rewrite_asof_join(toks: Tokens) -> str:
     4. equi-join the (≤1-row-per-domain) result back to the left rows
        on (keys, probe).
 
-    The tie-break is the right table's first column (schema from the
-    ``ch_sql(views=…)`` registration), largest wins backward / smallest
-    forward — deterministic where CH picks arbitrarily.
+    The tie-break is the right table's first column (its schema from
+    the context's views), largest wins backward / smallest forward —
+    deterministic where CH picks arbitrarily.
     """
     sql = toks.sql
     if "ASOF" not in toks.marks:
@@ -5758,7 +5723,7 @@ def _rewrite_asof_join(toks: Tokens) -> str:
         else:
             r_time, probe, backward = rhs, lhs, op == ">="
         direction = "DESC" if backward else "ASC"
-        rcols = _VIEW_COLS.get(table)
+        rcols = ctx.columns(table)
         tiebreak = f"{alias}.{rcols[0]} {direction}, " if rcols else ""
 
         dom_sel = ", ".join(
@@ -5817,7 +5782,7 @@ def _rewrite_asof_join(toks: Tokens) -> str:
                     + f" * EXCEPT ({internals})"
                     + rewritten[rw_words[1][0] - 1 :]
                 )
-        return _rewrite_asof_join(lex(rewritten))
+        return _rewrite_asof_join(lex(rewritten), ctx)
     return sql
 
 
@@ -5999,7 +5964,7 @@ def _rewrite_prewhere(toks: Tokens) -> str:
     return sql
 
 
-def _rewrite_any_join(toks: Tokens) -> str:
+def _rewrite_any_join(toks: Tokens, ctx: QueryContext) -> str:
     """CH ``ANY LEFT/INNER JOIN t USING (keys)`` (either keyword order:
     ``LEFT ANY JOIN`` too) → a plain join against ``t`` deduplicated to
     one row per key.
@@ -6008,7 +5973,7 @@ def _rewrite_any_join(toks: Tokens) -> str:
     reproducible-hostile, so the dedup picks the TOTAL-ORDER minimum
     (row_number over PARTITION BY keys ORDER BY every column — the same
     determinism contract as the DataFrame-side ``joins.any_join``). The
-    right table must be a registered view (``_VIEW_COLS``): the wrapper
+    right table must be a view of the context: the wrapper
     needs its column list to project ``__any_rn`` back out. RIGHT ANY
     JOIN (CH dedups the LEFT side) and ON-form conditions are rejected
     — use the DataFrame API for those shapes.
@@ -6051,7 +6016,7 @@ def _rewrite_any_join(toks: Tokens) -> str:
                 "ANY JOIN supports the USING form only; rewrite ON "
                 "conditions with joins.any_join"
             )
-        cols = _VIEW_COLS.get(table)
+        cols = ctx.columns(table)
         if cols is None:
             raise ValueError(
                 f"ANY JOIN needs {table!r} registered via ch_sql views "
@@ -6104,7 +6069,7 @@ def _rewrite_any_join(toks: Tokens) -> str:
             + f"USING ({', '.join(ukeys)})"
             + sql[using_end:]
         )
-        return _rewrite_any_join(lex(rebuilt))
+        return _rewrite_any_join(lex(rebuilt), ctx)
     return sql
 
 
@@ -6566,8 +6531,8 @@ def _rewrite_hop(toks: Tokens) -> str:
 
 
 # Clause rewrites in the order translate runs them. Each takes the
-# statement's tokens and returns its text, unchanged (the same string)
-# when its trigger word or character is absent.
+# statement's tokens (and the context, if in _CONTEXT_PASSES) and
+# returns its text, the same string when its trigger is absent.
 _CLAUSE_PASSES = (
     _strip_trailing_clauses,
     _rewrite_hop,
@@ -6595,10 +6560,16 @@ _CLAUSE_PASSES = (
     _rewrite_limit_by,
     _rewrite_limit_offset,
 )
+_CONTEXT_PASSES = frozenset({
+    _rewrite_subscripts, _rewrite_column_selectors, _rewrite_select_replace,
+    _rewrite_from_modifiers, _rewrite_asof_join, _rewrite_any_join,
+})
 
 
-def translate(sql: str) -> str:
-    """ClickHouse-dialect SQL text → Spark SQL text.
+def translate(sql: str, ctx: QueryContext = EMPTY_CONTEXT) -> str:
+    """ClickHouse-dialect SQL text → Spark SQL text. The rewrites read
+    what ``ctx`` knows of the statement's tables; the output names them
+    as the statement does, for :func:`ch_sql` to bind.
 
     Clause-rewrite order matters: LIMIT BY runs LAST because it wraps
     the statement in a subquery — any clause rewritten after it would
@@ -6606,7 +6577,8 @@ def translate(sql: str) -> str:
     """
     toks = lex(sql.rstrip().rstrip(";"))
     for rewrite in _CLAUSE_PASSES:
-        sql = rewrite(toks)
+        args = (toks, ctx) if rewrite in _CONTEXT_PASSES else (toks,)
+        sql = rewrite(*args)
         if sql != toks.sql:
             toks = lex(sql)
     sql = toks.sql
@@ -6676,7 +6648,7 @@ def translate(sql: str) -> str:
                 k += 1
             if k < n and sql[k] == "(":
                 close = toks.close(k)
-                args = [translate(a) for a in toks.split(k + 1, close)]
+                args = [translate(a, ctx) for a in toks.split(k + 1, close)]
                 # parameterized aggregate: another '(' right after?
                 k2 = close + 1
                 while k2 < n and sql[k2] in " \t\n":
@@ -6709,7 +6681,7 @@ def translate(sql: str) -> str:
                     # same GROUP BY, no explode, no re-scan.
                     close2 = toks.close(k2)
                     args2 = [
-                        translate(a) for a in toks.split(k2 + 1, close2)
+                        translate(a, ctx) for a in toks.split(k2 + 1, close2)
                     ]
                     out.append(_resample_sql(ident, args, args2))
                     i = close2 + 1
@@ -6738,7 +6710,7 @@ def translate(sql: str) -> str:
                                 )
                             params = params + ["0.5"]  # CH level default
                     args2 = [
-                        translate(a) for a in toks.split(k2 + 1, close2)
+                        translate(a, ctx) for a in toks.split(k2 + 1, close2)
                     ]
                     if param_base != ident:
                         cond = args2[-1]
@@ -9270,20 +9242,20 @@ def translate(sql: str) -> str:
                         f"{args[1]})"
                     )
                 elif ident in ("joinGet", "joinGetOrNull"):
-                    # joinGet('t', 'attr', key…) over a table
-                    # registered via register_join_table — correlated
+                    # joinGet('t', 'attr', key…) over a join table of
+                    # the context (ctx.join_tables) — correlated
                     # scalar subquery (Catalyst decorrelates, AQE
                     # broadcasts the join-table side: the same plan CH
                     # serves from its in-memory hash table). joinGet
                     # returns the attr's TYPE DEFAULT on a miss (types
-                    # captured at registration); joinGetOrNull NULL.
+                    # captured by join_table()); joinGetOrNull NULL.
                     if len(args) < 3:
                         raise ValueError(
                             f"{ident} needs ('table', 'attr', key…)"
                         )
                     jt = args[0].strip().strip("'\"").split(".")[-1]
                     attr = args[1].strip().strip("'\"")
-                    info = _JOIN_TABLES.get(jt)
+                    info = ctx.join_tables.get(jt)
                     if info is None:
                         raise ValueError(
                             f"{ident}: {jt!r} is not registered — "
@@ -9292,7 +9264,7 @@ def translate(sql: str) -> str:
                             "analog), or use an explicit LEFT JOIN / "
                             "dictGet over a registered dictionary"
                         )
-                    jkeys, jtypes = info
+                    jkeys, jtypes = list(info.keys), info.types
                     if len(args) - 2 != len(jkeys):
                         raise ValueError(
                             f"{ident}: {jt!r} is keyed by "
@@ -9718,11 +9690,11 @@ def translate(sql: str) -> str:
                     # ANSI element_at returns the LAST element for a
                     # NULL index (fuzz v6 seed 51694).
                     idx = args[1]
-                    if _elem_needs_cast(args[0], idx):
+                    if _elem_needs_cast(args[0], idx, ctx):
                         idx = f"CAST({idx} AS INT)"
                     expr = f"try_element_at({args[0]}, {idx})"
                     if ident == "arrayElementOrNull" and (
-                        _elem_base_class(args[0]) != "map"
+                        _elem_base_class(args[0], ctx) != "map"
                     ):
                         # CH returns NULL for array index 0; a map
                         # key 0 is a legitimate lookup
@@ -9990,13 +9962,6 @@ def translate(sql: str) -> str:
     return "".join(out)
 
 
-# joinGet's registered Join-engine analogs: name → (key columns,
-# {column: spark simpleString type}) — the types drive CH's
-# type-default miss value (joinGet returns 0/''/epoch on a missing
-# key; joinGetOrNull returns NULL)
-_JOIN_TABLES: dict[str, tuple[list[str], dict[str, str]]] = {}
-
-
 def _join_type_default_sql(spark_type: str | None) -> str:
     """CH type-default literal for a joinGet miss, from a Spark
     simpleString type."""
@@ -10015,21 +9980,16 @@ def _join_type_default_sql(spark_type: str | None) -> str:
     return "''"
 
 
-def register_join_table(
-    spark: SparkSession, name: str, df: DataFrame, key_cols: list[str]
-) -> None:
-    """Register a DataFrame as the analog of a CH ``Join(ANY, LEFT,
-    keys)``-engine table so ``joinGet('name', 'attr', keys…)``
-    rewrites automatically (r13 verdict task 7 — previously a loud
-    reject toward a manual LEFT JOIN).
+def join_table(df: DataFrame, key_cols: list[str]) -> JoinTable:
+    """``df`` as a CH ``Join(ANY, LEFT, keys)``-engine table for a
+    context's ``join_tables``, which ``joinGet('name', 'attr', keys…)``
+    reads as a correlated scalar subquery (Catalyst decorrelates it,
+    AQE broadcasts the small side, as CH's in-memory hash table).
 
     Join(ANY, …) stores ONE row per key; CH keeps the first inserted,
     which is read-order here — so the dedup picks the TOTAL-ORDER
     minimum over every column (the same determinism contract as
-    ``ANY JOIN`` / ``joins.any_join``). The rewrite emits a correlated
-    scalar subquery; Catalyst decorrelates it into a join and AQE
-    broadcasts the (small by construction) join-table side — the same
-    plan shape CH's in-memory hash table serves.
+    ``ANY JOIN`` / ``joins.any_join``).
     """
     from pyspark.sql import Window, functions as F
 
@@ -10039,62 +9999,127 @@ def register_join_table(
         .filter("__jt_rn = 1")
         .drop("__jt_rn")
     )
-    ded.createOrReplaceTempView(name)
-    _JOIN_TABLES[name] = (
-        list(key_cols),
+    return JoinTable(
+        ded,
+        tuple(key_cols),
         {f.name: f.dataType.simpleString() for f in df.schema.fields},
     )
 
 
-def register_dictionary(
-    spark: SparkSession, name: str, df: DataFrame, key_col: str
-) -> None:
-    """Register a DataFrame as a CH-style dictionary for ``dictGet``.
+def dictionary(df: DataFrame, key_col: str) -> DataFrame:
+    """``df`` as a CH-style dictionary for ``dictGet``, for a context's
+    ``frames`` under the dictionary's name. The key column becomes
+    ``__key``, so ``dictGet('name', 'attr', expr)`` is a correlated
+    scalar subquery that needs no schema; Catalyst decorrelates it into
+    a join and AQE broadcasts the dictionary side, as CH serves dictGet
+    from an in-memory hash."""
+    return df.withColumnRenamed(key_col, "__key")
 
-    The key column is exposed under the reserved name ``__key`` so the
-    ``dictGet('name', 'attr', expr)`` rewrite can emit a correlated
-    scalar subquery without knowing the source schema. Dictionaries
-    are small lookup tables by construction — Catalyst decorrelates
-    the subquery into a join and AQE broadcasts the dictionary side,
-    which is exactly how CH serves dictGet (an in-memory hash lookup)
-    re-expressed declaratively.
-    """
-    df.withColumnRenamed(key_col, "__key").createOrReplaceTempView(name)
+
+# Words after a table reference that are not its alias, and the words
+# a walk back from a comma stops at within its paren group (the comma is
+# in a FROM list when the walk stops at FROM or JOIN).
+_NOT_ALIAS = _CLAUSE_STARTERS | {
+    "ANTI", "CLUSTER", "CROSS", "DISTRIBUTE", "EXCEPT", "FULL", "INNER",
+    "INTERSECT", "JOIN", "LATERAL", "LEFT", "MINUS", "NATURAL", "OFFSET",
+    "ON", "OUTER", "PIVOT", "RIGHT", "SEMI", "SORT", "TABLESAMPLE",
+    "UNPIVOT", "USING", "WINDOW",
+}
+_COMMA_SCOPE = _CLAUSE_STARTERS | {
+    "SELECT", "BY", "VIEW", "WINDOW", "VALUES", "WITH", "FROM", "JOIN",
+}
+
+
+def _table_refs(
+    sql: str, names: Mapping[str, DataFrame]
+) -> list[tuple[int, int, str, bool]]:
+    """(start, end, name, aliased) for every word of ``sql`` in a table
+    position — right after FROM or JOIN, or after a comma of a FROM
+    list — that is one of ``names`` (case-insensitively, as Spark
+    resolves views), unless a CTE of that name is defined before it. A
+    word followed by ``.`` or ``(`` is no table reference."""
+    if not names:
+        return []
+    toks = lex(sql)
+    starts, ends, depths = toks.starts, toks.ends, toks.depths
+    n = len(starts)
+
+    def word(k: int) -> str | None:
+        return sql[starts[k] : ends[k]].upper() if toks.is_word(k) else None
+
+    by_lower = {name.lower(): name for name in names}
+    cte_ends: dict[str, int] = {}  # WITH <cte> AS (…): where (…) ends
+    for k in range(n - 2):
+        cte = word(k)
+        if cte and word(k + 1) == "AS" and sql[starts[k + 2]] == "(":
+            cte_ends.setdefault(cte, toks.partner.get(starts[k + 2], 0))
+    refs = []
+    for k in range(1, n):
+        w = word(k)
+        name = w and by_lower.get(w.lower())
+        if not name or (k + 1 < n and sql[starts[k + 1]] in ".(") or (
+            starts[k] > cte_ends.get(w, len(sql))
+        ):
+            continue
+        prev = word(k - 1)
+        if prev is None and sql[starts[k - 1]] == ",":
+            j = k - 2
+            while j >= 0 and depths[j] >= depths[k] and not (
+                depths[j] == depths[k] and word(j) in _COMMA_SCOPE
+            ):
+                j -= 1
+            prev = word(j) if j >= 0 and depths[j] == depths[k] else None
+        if prev in ("FROM", "JOIN"):
+            nxt = word(k + 1) if k + 1 < n else None
+            aliased = nxt is not None and nxt not in _NOT_ALIAS
+            refs.append((starts[k], ends[k], name, aliased))
+    return refs
 
 
 def ch_sql(
     spark: SparkSession,
     sql: str,
-    views: dict[str, DataFrame] | None = None,
+    ctx: QueryContext = EMPTY_CONTEXT,
+    *,
+    views: Mapping[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Run a ClickHouse-dialect SELECT on Spark. ``views`` registers
-    DataFrames as temp views first (name → df)."""
-    for name, df in (views or {}).items():
-        df.createOrReplaceTempView(name)
-        _VIEW_COLS[name] = list(df.columns)
-        from pyspark.sql.types import ArrayType
+    """Run a ClickHouse-dialect SELECT on Spark over the frames of
+    ``ctx`` plus ``views`` (name → DataFrame).
 
-        _VIEW_ARRAY_COLS[name] = {
-            f.name.lower(): isinstance(f.dataType, ArrayType)
-            for f in df.schema.fields
-        }
-    translated = translate(sql)
+    The one binder: each frame a table position names is bound under a
+    fresh view name for this call (as PySpark's ``spark.sql(text,
+    **frames)`` does), and the reference becomes ``<bound> AS <name>``,
+    so qualifiers such as ``kv.k`` still resolve. The views are dropped
+    on return; the analyzed DataFrame keeps the plans it read."""
+    ctx = ctx.with_views(views or {})
+    translated = translate(sql, ctx)
     if "__ch_" in translated:
         # any shared Python kernel (stats CDFs/tests, string
         # encode/decode/similarity) — one registration hook covers
         # them all, and the substring test keeps the common
         # no-kernel path free of the imports
-        from clickhouse_modules_spark.functions.aggkernels import (
-            ensure_agg_udfs,
-        )
-        from clickhouse_modules_spark.functions.stats import (
-            ensure_stat_udfs,
-        )
-        from clickhouse_modules_spark.functions.strkernels import (
-            ensure_str_udfs,
+        from clickhouse_modules_spark.functions import (
+            aggkernels, stats, strkernels,
         )
 
-        ensure_stat_udfs(spark)
-        ensure_str_udfs(spark)
-        ensure_agg_udfs(spark)
-    return spark.sql(translated)
+        stats.ensure_stat_udfs(spark)
+        strkernels.ensure_str_udfs(spark)
+        aggkernels.ensure_agg_udfs(spark)
+    frames = {**ctx.frames,
+              **{name: jt.frame for name, jt in ctx.join_tables.items()}}
+    bound: dict[str, str] = {}
+    out, pos = [], 0
+    try:
+        for s, e, name, aliased in _table_refs(translated, frames):
+            if name not in bound:
+                bound[name] = f"_ctx_{uuid.uuid4().hex}"
+                frames[name].createOrReplaceTempView(bound[name])
+            ref = bound[name] if aliased else (
+                f"{bound[name]} AS {translated[s:e]}"
+            )
+            out += [translated[pos:s], ref]
+            pos = e
+        return spark.sql("".join(out) + translated[pos:])
+    finally:
+        for name, view in bound.items():
+            frames[name].sparkSession.catalog.dropTempView(view)

@@ -374,9 +374,9 @@ def q_chsql_clauses(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_chsql_dictget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CH ``dictGet`` family through the translator: dictionary lookups
-    become correlated scalar subqueries over views registered with
-    ``register_dictionary``; Catalyst decorrelates each into a
-    left outer join and AQE broadcasts the dictionary side — the
+    become correlated scalar subqueries over dictionary frames of the
+    query context (``ch_sql.dictionary``); Catalyst decorrelates each
+    into a left outer join and AQE broadcasts the dictionary side — the
     declarative form of CH's in-memory hash lookup.
 
     Dictionaries are FLAT (keyed directly by the probe column): Spark
@@ -394,8 +394,10 @@ def q_chsql_dictget(spark: SparkSession, sf_dir: str) -> DataFrame:
     geo = n.join(r, n.n_regionkey == r.r_regionkey).select(
         "n_nationkey", "r_name"
     )
-    chs.register_dictionary(spark, "nation_dict", n, "n_nationkey")
-    chs.register_dictionary(spark, "georegion_dict", geo, "n_nationkey")
+    ctx = chs.QueryContext(frames={
+        "nation_dict": chs.dictionary(n, "n_nationkey"),
+        "georegion_dict": chs.dictionary(geo, "n_nationkey"),
+    })
     q = """
     SELECT c_custkey,
            dictGet('nation_dict', 'n_name', c_nationkey) AS nation_name,
@@ -404,7 +406,7 @@ def q_chsql_dictget(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer
     WHERE c_custkey < 500
     """
-    return chs.ch_sql(spark, q, views={"customer": c})
+    return chs.ch_sql(spark, q, ctx, views={"customer": c})
 
 
 @query(
@@ -680,8 +682,8 @@ def q_chsql_extensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     statements tag-unioned:
 
     - ``FROM events FINAL SAMPLE 1/4``: deterministic md5-bucket sample
-      (register_sampling_key) feeding a ReplacingMergeTree latest-
-      version read (register_replacing_table) — count + max id of the
+      (the context's sampling key) feeding a ReplacingMergeTree latest-
+      version read (its replacing keys) — count + max id of the
       per-(user, event_type) winners.
     - ``ASOF LEFT JOIN`` (latest order at-or-before each event) into a
       daily rollup with ``ORDER BY day WITH FILL`` — the lateral top-1
@@ -735,8 +737,6 @@ def q_chsql_extensions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_events(spark, sf_dir)
     o = pscan(spark, f"{sf_dir}/orders.parquet")
-    chs.register_replacing_table("events", ["user_id", "event_type"], "event_id")
-    chs.register_sampling_key("events", "event_id")
     fs = chs.ch_sql(
         spark,
         """
@@ -744,6 +744,10 @@ def q_chsql_extensions(spark: SparkSession, sf_dir: str) -> DataFrame:
                count() AS n, max(event_id) AS extra
         FROM events FINAL SAMPLE 1/4
         """,
+        chs.QueryContext(
+            replacing={"events": (("user_id", "event_type"), "event_id")},
+            sampling={"events": "event_id"},
+        ),
         views={"events": e},
     )
     af_raw = chs.ch_sql(

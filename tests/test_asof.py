@@ -1,13 +1,15 @@
 """As-of join edge cases: ties at equal time, no-prior-row NULLs, and
-inclusive <= semantics (operators/asof.py union+window composition)."""
+inclusive <= semantics (operators/asof.py union+window composition),
+plus asof_join_both's input validation."""
 
 from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import types as T
 
-from clickhouse_modules_spark.operators.asof import asof_join
+from clickhouse_modules_spark.operators.asof import asof_join, asof_join_both
 
 LEFT_SCHEMA = T.StructType(
     [
@@ -210,3 +212,41 @@ def test_both_matches_two_single_calls(spark):
         "ShuffleQueryStage"
     ) <= 2  # one shuffle: exchange node + its materialized stage ref
     assert "Join" not in final
+
+
+def _toy(spark):
+    left = spark.createDataFrame(
+        [(1, 10)], ["k", "t"]
+    )
+    right = spark.createDataFrame(
+        [(1, 9, 100.0, 5)], ["k", "t", "x", "y"]
+    )
+    return left, right
+
+
+def test_asof_join_both_empty_cols_raises(spark):
+    left, right = _toy(spark)
+    with pytest.raises(ValueError, match="empty"):
+        asof_join_both(
+            left, right, "k", "k", "t", "t",
+            backward_cols=[], forward_cols=[],
+        )
+
+
+def test_asof_join_both_divergent_default_tiebreak_raises(spark):
+    left, right = _toy(spark)
+    with pytest.raises(ValueError, match="tie_break"):
+        asof_join_both(
+            left, right, "k", "k", "t", "t",
+            backward_cols=["x"], forward_cols=["y"],
+        )
+
+
+def test_asof_join_both_divergent_ok_with_explicit_tiebreak(spark):
+    left, right = _toy(spark)
+    out = asof_join_both(
+        left, right, "k", "k", "t", "t",
+        backward_cols=["x"], forward_cols=["y"], tie_break="x",
+    )
+    row = out.collect()[0]
+    assert row["back_x"] == 100.0 and row["fwd_y"] is None

@@ -646,13 +646,14 @@ FROM (SELECT 1)""",
 
     def test_typed_dict_get(self, spark):
         from clickhouse_modules_spark.functions.ch_sql import (
-            register_dictionary,
+            QueryContext,
+            dictionary,
         )
 
         df = spark.createDataFrame(
             [(1, "one", 1.5), (2, "two", 2.5)], "k int, name string, w double"
         )
-        register_dictionary(spark, "d3", df, "k")
+        ctx = QueryContext(frames={"d3": dictionary(df, "k")})
         [rd] = ch_sql(
             spark,
             "SELECT dictGetString('d3', 'name', 2) AS s, "
@@ -660,6 +661,7 @@ FROM (SELECT 1)""",
             "dictGetStringOrDefault('d3', 'name', 99, 'missing') AS sd, "
             "dictHas('d3', 1) AS h1, dictHas('d3', 99) AS h0 "
             "FROM (SELECT 1)",
+            ctx,
         ).collect()
         assert rd["s"] == "two" and rd["f"] == 1.5
         assert rd["sd"] == "missing"

@@ -357,11 +357,12 @@ class TestWave5Round2:
         d = spark.createDataFrame(
             [(1, "10.0.0.1"), (2, "::1")], "k bigint, ip string"
         )
-        chs.register_dictionary(spark, "ipd", d, "k")
+        ctx = chs.QueryContext(frames={"ipd": chs.dictionary(d, "k")})
         [r] = chs.ch_sql(
             spark,
             "SELECT dictGetIPv4('ipd', 'ip', 1) AS v4, "
             "dictGetIPv6('ipd', 'ip', 2) AS v6 FROM (SELECT 1)",
+            ctx,
         ).collect()
         assert r["v4"] == "10.0.0.1" and r["v6"] == "::1"
 

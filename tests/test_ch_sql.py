@@ -218,17 +218,19 @@ class TestPrewhereGlobalDict:
 
     def test_dictget_executes_and_missing_key_is_null(self, spark):
         from clickhouse_modules_spark.functions.ch_sql import (
-            register_dictionary,
+            QueryContext,
+            dictionary,
         )
 
         dim = spark.createDataFrame([(1, "one"), (2, "two")], ["k", "name"])
-        register_dictionary(spark, "d_test", dim, "k")
+        ctx = QueryContext(frames={"d_test": dictionary(dim, "k")})
         fact = spark.createDataFrame([(1,), (3,)], ["k"])
         rows = ch_sql(
             spark,
             "SELECT k, dictGet('d_test', 'name', k) AS nm,"
             "       dictGetOrDefault('d_test', 'name', k, 'missing') AS nm2"
             " FROM f",
+            ctx,
             views={"f": fact},
         ).collect()
         got = {r["k"]: (r["nm"], r["nm2"]) for r in rows}
@@ -382,12 +384,13 @@ def test_final_latest_version_per_key(spark):
          (2, "a", 1, 5.0)],
         ["k", "sub", "ver", "val"],
     )
-    chs.register_replacing_table("upserts", ["k", "sub"], "ver")
+    ctx = chs.QueryContext(replacing={"upserts": (("k", "sub"), "ver")})
     rows = {
         (r["k"], r["sub"]): (r["ver"], r["val"])
         for r in ch_sql(
             spark,
             "SELECT k, sub, ver, val FROM upserts FINAL",
+            ctx,
             views={"upserts": log},
         ).collect()
     }
@@ -406,11 +409,11 @@ def test_sample_matches_dataframe_predicate(spark):
     from clickhouse_modules_spark.operators import textprep
 
     df = spark.range(0, 1000).withColumnRenamed("id", "k")
-    chs.register_sampling_key("s_t", "k")
+    ctx = chs.QueryContext(sampling={"s_t": "k"})
     sql_ids = {
         r["k"]
         for r in ch_sql(
-            spark, "SELECT k FROM s_t SAMPLE 1/10", views={"s_t": df}
+            spark, "SELECT k FROM s_t SAMPLE 1/10", ctx, views={"s_t": df}
         ).collect()
     }
     df_ids = {
@@ -428,11 +431,13 @@ def test_sample_composes_with_final(spark):
         [(k, v, float(k * 10 + v)) for k in range(100) for v in (1, 2)],
         ["k", "ver", "val"],
     )
-    chs.register_replacing_table("fs_t", ["k"], "ver")
-    chs.register_sampling_key("fs_t", "k")
+    ctx = chs.QueryContext(
+        replacing={"fs_t": (("k",), "ver")}, sampling={"fs_t": "k"}
+    )
     rows = ch_sql(
         spark,
         "SELECT k, ver FROM fs_t FINAL SAMPLE 1/4",
+        ctx,
         views={"fs_t": log},
     ).collect()
     assert rows and all(r["ver"] == 2 for r in rows)  # FINAL kept latest
@@ -4212,27 +4217,29 @@ class TestRound14FuzzV5Findings:
 
 class TestJoinGet:
     """r14: joinGet/joinGetOrNull automatic rewrite over tables
-    registered via register_join_table (Join(ANY, LEFT, …) analog;
+    built by join_table (Join(ANY, LEFT, …) analog;
     previously a loud reject). CH contract: type-default on miss for
     joinGet, NULL for joinGetOrNull; ANY = one row per key (the
     deterministic total-order minimum, same as ANY JOIN)."""
 
     def test_joinget_hit_miss_defaults(self, spark):
         from clickhouse_modules_spark.functions.ch_sql import (
-            register_join_table,
+            QueryContext,
+            join_table,
         )
 
         jt = spark.createDataFrame(
             [(1, 10, "x"), (1, 5, "y"), (2, 20, "z")],
             "jk int, val int, s string",
         )
-        register_join_table(spark, "jt1", jt, ["jk"])
+        ctx = QueryContext(join_tables={"jt1": join_table(jt, ["jk"])})
         base = spark.createDataFrame([(1,), (2,), (3,)], "k int")
         rows = ch_sql(
             spark,
             "SELECT k, joinGet('jt1', 'val', k) AS v, "
             "joinGet('jt1', 's', k) AS s, "
             "joinGetOrNull('jt1', 'val', k) AS vn FROM t ORDER BY k",
+            ctx,
             views={"t": base},
         ).collect()
         # dup key 1: ANY keeps the total-order minimum row (5, 'y')
@@ -4242,14 +4249,17 @@ class TestJoinGet:
 
     def test_joinget_two_keys_and_errors(self, spark):
         from clickhouse_modules_spark.functions.ch_sql import (
-            register_join_table,
+            QueryContext,
+            join_table,
         )
 
         jt = spark.createDataFrame(
             [(1, "a", 100.0), (1, "b", 200.0)],
             "k1 int, k2 string, price double",
         )
-        register_join_table(spark, "jt2", jt, ["k1", "k2"])
+        ctx = QueryContext(
+            join_tables={"jt2": join_table(jt, ["k1", "k2"])}
+        )
         base = spark.createDataFrame(
             [(1, "a"), (1, "c")], "x int, y string"
         )
@@ -4257,13 +4267,14 @@ class TestJoinGet:
             spark,
             "SELECT x, y, joinGet('jt2', 'price', x, y) AS p "
             "FROM t ORDER BY y",
+            ctx,
             views={"t": base},
         ).collect()
         assert [r["p"] for r in rows] == [100.0, 0.0]
         with pytest.raises(ValueError, match="keyed by"):
-            translate("SELECT joinGet('jt2', 'price', x) FROM t")
+            translate("SELECT joinGet('jt2', 'price', x) FROM t", ctx)
         with pytest.raises(ValueError, match="no column"):
-            translate("SELECT joinGet('jt2', 'nope', x, y) FROM t")
+            translate("SELECT joinGet('jt2', 'nope', x, y) FROM t", ctx)
         with pytest.raises(ValueError, match="not registered"):
             translate("SELECT joinGet('zzz', 'a', x) FROM t")
 

@@ -54,10 +54,12 @@ def test_subst_and_segments_skip_string_literals():
 
 # Token-boundary shapes the golden corpus lacks, with the outputs the
 # character scanners gave before the lexer (quirks included: a keyword
-# glued to a bracket literal, a quoted string before a bracket).
+# glued to a bracket literal, a quoted string before a bracket), except
+# the nested tuple index: t.1.2 is t.col1.col2, as DuckDB's
+# (row(row(1, 2), 3))[1][2] is 2.
 EDGE_SHAPES = [
     ('SELECT t.1.2, t.1a.2, arr[1].2, (a, b).2, f(x)[1].1, 1.5, x1.5 FROM t',
-     'SELECT t.col1.2, t.col1a.2, try_element_at(arr, 1).col2, (a, b).col2, try_element_at(f(x), 1).col1, 1.5D, x1.col5 FROM t'),
+     'SELECT t.col1.col2, t.col1a.2, try_element_at(arr, 1).col2, (a, b).col2, try_element_at(f(x), 1).col1, 1.5D, x1.col5 FROM t'),
     ("SELECT x [1][2], a.b [1][2], f(x) (y)[1], [1,2][1], m['k'], 'abc'[1] FROM t",
      "SELECT try_element_at(try_element_at(x, 1), 2), try_element_at(try_element_at(a.b, 1), 2), f(x) try_element_at((y), 1), try_element_at(array(1, 2), 1), try_element_at(m, 'k'), 'abc'array(1) FROM t"),
     ('SELECT x IN[1], x IN [1, 2], [[1, 2], [3]][1][2], arr[k + 1] FROM t',

@@ -2,8 +2,9 @@
 (no Spark): which environment variables it reads, that no query
 function in ``queries/`` is left without a caller, that the
 warehouse's commit and FINAL merge each live in one place, that the
-reconcile catalog stays off Spark's file I/O, and that one lexer reads
-ClickHouse SQL text."""
+reconcile catalog stays off Spark's file I/O, that one lexer reads
+ClickHouse SQL text, and that each statement names its tables through
+its own query context."""
 
 from __future__ import annotations
 
@@ -323,3 +324,129 @@ def test_one_sql_lexer():
         "_is_ident_char", "_sub_outside_strings",
     } & (_defined(CH_SQL) | _defined(DDL))
     assert not scanners, f"hand-rolled scanners: {sorted(scanners)}"
+
+
+FUNCTIONS = os.path.join(PKG, "functions")
+
+# Methods that change the container they are called on.
+_MUTATORS = {
+    "add", "append", "appendleft", "clear", "discard", "extend", "insert",
+    "pop", "popitem", "remove", "setdefault", "update", "__setitem__",
+    "__delitem__",
+}
+_CONTAINER_CALLS = {
+    "dict", "list", "set", "defaultdict", "OrderedDict", "Counter", "deque",
+    "WeakKeyDictionary", "WeakValueDictionary",
+}
+
+
+def _module_containers(tree: ast.Module) -> set[str]:
+    """Names a module binds at top level to a mutable container. A
+    ``weakref.WeakSet`` is left out: the UDF modules keep one as a
+    per-session registration memo, whose entries are the sessions
+    themselves and go with them, so no statement can see another's."""
+    out: set[str] = set()
+    for n in tree.body:
+        if isinstance(n, ast.Assign):
+            targets, value = n.targets, n.value
+        elif isinstance(n, ast.AnnAssign) and n.value is not None:
+            targets, value = [n.target], n.value
+        else:
+            continue
+        call = value.func if isinstance(value, ast.Call) else None
+        called = (
+            call.id if isinstance(call, ast.Name)
+            else call.attr if isinstance(call, ast.Attribute) else None
+        )
+        if isinstance(
+            value, (ast.Dict, ast.List, ast.Set, ast.DictComp, ast.ListComp,
+                    ast.SetComp)
+        ) or called in _CONTAINER_CALLS:
+            out |= {t.id for t in targets if isinstance(t, ast.Name)}
+    return out
+
+
+def _module_state_writes(path: str) -> set[str]:
+    """``function:name`` for every write inside a function to a module
+    container (item assignment or deletion, augmented assignment, a
+    mutating method call) and every ``global`` statement."""
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read(), path)
+    containers = _module_containers(tree)
+    found: set[str] = set()
+
+    def item_of(node) -> str | None:
+        """The container name of a ``name[key]`` target."""
+        if isinstance(node, ast.Subscript) and isinstance(node.value, ast.Name):
+            return node.value.id
+        return None
+
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for n in ast.walk(fn):
+            names: list[str] = []
+            if isinstance(n, ast.Global):
+                found |= {f"{fn.name}:global {g}" for g in n.names}
+            elif isinstance(n, (ast.Assign, ast.AugAssign, ast.Delete)):
+                targets = (
+                    n.targets if isinstance(n, (ast.Assign, ast.Delete))
+                    else [n.target]
+                )
+                names = [t for t in map(item_of, targets) if t]
+            elif (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and isinstance(n.func.value, ast.Name)
+                and n.func.attr in _MUTATORS
+            ):
+                names = [n.func.value.id]
+            found |= {f"{fn.name}:{x}" for x in names if x in containers}
+    return found
+
+
+def _attr_uses(path: str, attrs: set[str]) -> set[str]:
+    """``function`` (``Class.method`` for methods; ``<module>`` outside
+    any) for every use of one of ``attrs`` as an attribute."""
+    return {
+        f"{os.path.basename(path)}:{fn}"
+        for fn, used in _attrs_by_function(path).items()
+        if used & attrs
+    }
+
+
+def test_one_query_context_per_call():
+    # what a statement may name travels in its QueryContext: functions/
+    # keeps no module state a function writes, ch_sql is the one place
+    # that binds frames to the session, and the name-keyed registries
+    # stay deleted
+    paths = [p for p, _tree in _py_files(FUNCTIONS)]
+    writes = sorted(
+        f"{os.path.basename(p)}:{w}" for p in paths
+        for w in _module_state_writes(p)
+    )
+    assert not writes, f"module state written by functions: {writes}"
+    binds = set().union(*(
+        _attr_uses(p, {
+            "createOrReplaceTempView", "createTempView",
+            "createGlobalTempView", "createOrReplaceGlobalTempView",
+            "registerTempTable",
+        })
+        for p in [*paths, DDL]
+    ))
+    assert binds == {"ch_sql.py:ch_sql"}, sorted(binds)
+    deleted = {
+        "_REPLACING", "_SAMPLING", "_VIEW_COLS", "_VIEW_ARRAY_COLS",
+        "_MERGED", "_JOIN_TABLES", "register_merged_view",
+        "register_replacing_table", "register_sampling_key",
+        "deregister_table", "register_join_table", "register_dictionary",
+    }
+    defined = set()
+    for _path, tree in _py_files(PKG):
+        for n in ast.walk(tree):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef,
+                              ast.ClassDef)):
+                defined.add(n.name)
+            elif isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                defined.add(n.id)
+    assert not deleted & defined, sorted(deleted & defined)

@@ -624,7 +624,7 @@ class TestDictionaryDdl:
 
     def test_unsupported_source_loud(self, wh):
         wh.execute("CREATE TABLE s (k Int32, v Int32) ENGINE = Memory")
-        with pytest.raises(ValueError, match="register_dictionary"):
+        with pytest.raises(ValueError, match="ch_sql.dictionary"):
             wh.execute(
                 "CREATE DICTIONARY d (k Int32, v Int32) PRIMARY KEY k "
                 "SOURCE(MYSQL(HOST 'h' TABLE 't'))"
@@ -1384,11 +1384,10 @@ class TestAggregatingEngine:
 def test_final_registry_not_poisoned_across_warehouses(
     spark, tmp_path
 ):
-    """The FINAL registries are process-global keyed by table NAME and
-    the rewriter checks Summing before Collapsing: a stale entry from
-    another warehouse under the same name used to hijack FINAL (found
-    as a test-order dependency in round 10 — _register_views now
-    deregisters before registering)."""
+    """A stale FINAL entry from another warehouse under the same table
+    name used to hijack FINAL when the registries were process-global
+    (found as a test-order dependency in round 10); each query now
+    reads FINAL from its own query context."""
     wh1 = ChWarehouse(spark, str(tmp_path / "w1"))
     wh1.execute(
         "CREATE TABLE same (k Int32, v Int64) "

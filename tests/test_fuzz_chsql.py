@@ -20,8 +20,9 @@ import pytest
 
 from tools.fuzz_chsql import SF_DIR, TABLES, build_query, compare
 from clickhouse_modules_spark.functions.ch_sql import (
+    QueryContext,
     ch_sql,
-    register_dictionary,
+    dictionary,
 )
 
 OJ_SQL = ("SELECT o_orderkey AS jk, o_custkey, o_totalprice, "
@@ -44,7 +45,7 @@ def duck():
 
 
 @pytest.fixture(scope="module")
-def views(spark):
+def ctx(spark):
     v = {
         t: spark.read.parquet(f"{SF_DIR}/{t}.parquet") for t in TABLES
     }
@@ -54,8 +55,9 @@ def views(spark):
     v["lj"] = v["lineitem"].selectExpr(
         "l_orderkey AS jk", "l_partkey AS jv",
         "l_quantity AS jq", "l_returnflag AS js")
-    register_dictionary(spark, "d1", v["orders"], "o_orderkey")
-    return v
+    return QueryContext(
+        frames={"d1": dictionary(v["orders"], "o_orderkey")}
+    ).with_views(v)
 
 
 # the round-13 defect seeds plus a contiguous window; seeds >= 10000
@@ -85,9 +87,9 @@ SEEDS = sorted({5, 16, 56, 150, 385, 461, 477, 872, 985, 1498, 2311}
 
 
 @pytest.mark.parametrize("seed", SEEDS)
-def test_fuzz_seed(spark, duck, views, seed):
+def test_fuzz_seed(spark, duck, ctx, seed):
     ch, du = build_query(seed)
-    sp_df = ch_sql(spark, ch, views=views).toPandas()
+    sp_df = ch_sql(spark, ch, ctx).toPandas()
     du_df = duck.execute(du).df()
     diff = compare(sp_df, du_df)
     assert diff is None, f"seed {seed}: {diff}\nCH: {ch}\nDUCK: {du}"

@@ -1,5 +1,6 @@
 """Streaming semantics that the finite-replay fixture queries can't show:
-watermark late-data drop and append-mode window closing.
+watermark late-data drop and append-mode window closing, and
+stream_scope's guard against mixing nodata settings.
 
 The staged stream here has REAL late data: batch 1 advances the
 watermark far past an open window; batch 2 replays an event that
@@ -287,3 +288,36 @@ def test_stream_dedup_against_index(spark, tmp_path):
     assert texts == ["another fresh", "fresh doc"]
     # every survivor carries its hash
     assert all(len(r["content_hash"]) == 64 for r in rows)
+
+
+def test_stream_scope_nodata_conflict_raises(spark):
+    # active nodata=False scope; a nested True request would silently
+    # lose its watermark flush under 'first wins' — must raise instead
+    with sw.stream_scope(spark, nodata=False):
+        with pytest.raises(RuntimeError, match="nodata"):
+            with sw.stream_scope(spark, nodata=True):
+                pass  # pragma: no cover
+    # conf restored after the outer scope
+    assert spark.conf.get(
+        "spark.sql.streaming.noDataMicroBatches.enabled"
+    ) == "true"
+
+
+def test_stream_scope_false_under_true_raises(spark):
+    # the guard fires on any mix, in either order: which scope comes
+    # first depends on thread scheduling in the concurrent composites
+    with sw.stream_scope(spark, nodata=True):
+        with pytest.raises(RuntimeError, match="nodata"):
+            with sw.stream_scope(spark, nodata=False):
+                pass  # pragma: no cover
+    assert spark.conf.get(
+        "spark.sql.streaming.noDataMicroBatches.enabled"
+    ) == "true"
+
+
+def test_stream_scope_uniform_false_nested_ok(spark):
+    with sw.stream_scope(spark, nodata=False):
+        with sw.stream_scope(spark, nodata=False):
+            assert spark.conf.get(
+                "spark.sql.streaming.noDataMicroBatches.enabled"
+            ) == "false"

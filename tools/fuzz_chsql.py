@@ -820,7 +820,7 @@ class Gen:
 # Derived views registered by main() for the join/dict shapes:
 #   oj = orders  keyed jk (=o_orderkey, unique) + o_* attrs
 #   lj = lineitem keyed jk (=l_orderkey, DUPLICATE) + jv/jq/js values
-#   d1 = dictionary over orders keyed o_orderkey (register_dictionary)
+#   d1 = dictionary over orders keyed o_orderkey (a ch_sql.dictionary frame)
 OJ_ENV = {
     "int": ["jk", "o_custkey"],
     "float": ["o_totalprice"],
@@ -1278,9 +1278,9 @@ def build_query_v5(rng: random.Random) -> tuple[str, str]:
 #     divisor triple) composed with the full expression grammar.
 #
 # main() registers jt1 = the lj projection of lineitem keyed by jk
-# (duplicate keys) via register_join_table.
+# (duplicate keys) via ch_sql.join_table.
 _JT1_DEFAULT = {"jv": "0", "jq": "CAST(0 AS DOUBLE)", "js": "''"}
-_JT1_ORDER = "jk, jv, jq, js"  # register_join_table dedup total order
+_JT1_ORDER = "jk, jv, jq, js"  # join_table dedup total order
 
 
 def _jt1_dedup_duck() -> str:
@@ -2097,16 +2097,17 @@ def main() -> None:
     con.execute(f"CREATE VIEW oj AS {oj_sql}")
     con.execute(f"CREATE VIEW lj AS {lj_sql}")
     from clickhouse_modules_spark.functions.ch_sql import (
-        register_dictionary,
+        QueryContext,
+        dictionary,
+        join_table,
     )
-    register_dictionary(spark, "d1", views["orders"], "o_orderkey")
     # v6 join-table shape: lineitem projection with DUPLICATE keys —
-    # register_join_table's ANY dedup (total-order min) is the
-    # contract the duck oracle re-derives independently
-    from clickhouse_modules_spark.functions.ch_sql import (
-        register_join_table,
-    )
-    register_join_table(spark, "jt1", views["lj"], ["jk"])
+    # join_table's ANY dedup (total-order min) is the contract the
+    # duck oracle re-derives independently
+    ctx = QueryContext(
+        frames={"d1": dictionary(views["orders"], "o_orderkey")},
+        join_tables={"jt1": join_table(views["lj"], ["jk"])},
+    ).with_views(views)
 
     seeds = [args.only] if args.only is not None else range(
         args.start, args.start + args.n
@@ -2118,7 +2119,7 @@ def main() -> None:
         if args.print_sql or args.only is not None:
             print(f"-- seed {seed}\nCH:   {ch}\nDUCK: {du}")
         try:
-            sp_df = ch_sql(spark, ch, views=views).toPandas()
+            sp_df = ch_sql(spark, ch, ctx).toPandas()
         except Exception as e:
             print(f"ERR   seed {seed}: spark side: "
                   f"{type(e).__name__}: {str(e)[:300]}\n  CH: {ch}")
