@@ -72,14 +72,41 @@ stream's ``marks``; when the trigger is absent, the pass cannot change
 the text, so it returns it at once. Only a pass that changed the text
 makes ``translate`` lex it again, which keeps a long VALUES list
 linear to translate.
+
+The expression walker (``_walk``) then copies the statement token by
+token. A call ``name(args)`` or ``name(params)(args)`` has its arguments
+translated on the same token stream, never lexed again; only an
+argument that is a subquery (first word SELECT or WITH) goes back
+through ``translate`` for its own clause passes. The call is then
+resolved by name, in this order:
+
+1. ``_CALLS[name]``: one handler per ClickHouse function, for every
+   arity and, for a parameterized aggregate, the ``name(params)(args)``
+   form too (``fooIf(params)(args…, cond)`` goes to ``foo``'s handler
+   after the -If wrap, ``_case_when``; ``fooResample(start, end,
+   step)(args…, key)`` goes to ``_resample_sql``); the names that only
+   reject come from ``_REJECTS``, one name → message table;
+2. the name's ``TEMPLATES`` or ``RENAMES`` entry;
+3. the first of ``_FAMILIES`` that claims it: the prefix and suffix
+   families (-ArgMin/-ArgMax, -IfOrNull, ``bitmap*``, ``to*OrNull``,
+   -State/-Merge, -Distinct, -Array, -OrNull, -OrDefault, -If, …), in
+   order;
+4. ``name(args)`` as written (keywords before a paren, such as ``IN`` or
+   ``FROM``, land here).
+
+A handler that maps only some arities of its name passes the others to
+steps 2–4 (``_unmapped``). To add a function: a plain rename or an
+argument template is a ``RENAMES``, ``TEMPLATES`` or ``PARAMETERIZED``
+entry; anything else is a handler ``def _foo(c: Call) -> str``
+registered in ``_CALLS``.
 """
 
 from __future__ import annotations
 
 import re
 import uuid
-from bisect import bisect_left
-from collections.abc import Mapping
+from bisect import bisect_left, bisect_right
+from collections.abc import Callable, Mapping
 from dataclasses import dataclass, field, replace
 from typing import NamedTuple
 
@@ -188,26 +215,40 @@ class Tokens:
             raise ValueError("unbalanced delimiters in SQL")
         return i
 
-    def split(self, lo: int = 0, hi: int | None = None) -> list[str]:
-        """``sql[lo:hi]`` cut at its own top-level commas, each part
-        stripped; [] for blank text."""
-        sql = self.sql
+    def spans(self, lo: int = 0,
+              hi: int | None = None) -> list[tuple[int, int]]:
+        """(start, end) of each part of ``sql[lo:hi]`` cut at its own
+        top-level commas, without the blanks around it; [] for blank
+        text. An empty part is an empty span."""
+        sql, starts, ends = self.sql, self.starts, self.ends
+        depths = self.depths
         if hi is None:
             hi = len(sql)
-        if not sql[lo:hi].strip():
-            return []
-        starts, depths = self.starts, self.depths
         k = bisect_left(starts, lo)
-        base = depths[k] if k < len(starts) else 0
-        parts, start = [], lo
+        if k == len(starts) or starts[k] >= hi:
+            return []
+        base = depths[k]
+        parts: list[tuple[int, int]] = []
+        first = last = -1
         while k < len(starts) and starts[k] < hi:
             s = starts[k]
             if sql[s] == "," and depths[k] == base:
-                parts.append(sql[start:s].strip())
-                start = s + 1
+                parts.append((first, last) if first >= 0 else (s, s))
+                first = -1
+            else:
+                if first < 0:
+                    first = s
+                if sql[s] == "(" and self.partner.get(s, hi) < hi:
+                    k = bisect_left(starts, self.partner[s], k)  # its ")"
+                last = ends[k]
             k += 1
-        parts.append(sql[start:hi].strip())
+        parts.append((first, last) if first >= 0 else (hi, hi))
         return parts
+
+    def split(self, lo: int = 0, hi: int | None = None) -> list[str]:
+        """``sql[lo:hi]`` cut at its own top-level commas, each part
+        stripped; [] for blank text."""
+        return [self.sql[a:b] for a, b in self.spans(lo, hi)]
 
     def cut(self, sep: str) -> list[str]:
         """The text cut at every ``sep`` token, at any depth, unstripped."""
@@ -3766,7 +3807,7 @@ def _bitrotate_sql(
     return _sign_fold(raw, width_bits) if signed else raw
 
 
-def _resample_sql(ident: str, params: list[str], args2: list[str]) -> str:
+def _resample_sql(c: Call) -> str:
     """``<base>Resample(start, end, step)(args…, key)`` → array of the
     base aggregate per key bucket. Bounds must be numeric literals —
     the buckets unroll to conditional aggregates at translate time
@@ -3775,6 +3816,7 @@ def _resample_sql(ident: str, params: list[str], args2: list[str]) -> str:
     ``[start+i·step, min(start+(i+1)·step, end))``; rows outside
     ``[start, end)`` contribute nowhere.
     """
+    ident, params, args2 = c.name, c.params, c.args
     base = ident[: -len("Resample")]
     if base not in IF_COMBINABLE:
         raise ValueError(
@@ -3830,19 +3872,15 @@ def _resample_sql(ident: str, params: list[str], args2: list[str]) -> str:
         lo = start + b * step
         hi = min(lo + step, end)
         cond = f"({key}) >= {lit(lo)} AND ({key}) < {lit(hi)}"
-        wrapped = [f"CASE WHEN {cond} THEN {a} END" for a in vals]
+        wrapped = _case_when([*vals, cond])
         if not vals:
             # zero-arg count base: count the rows whose key lands in
             # the bucket (count(CASE …) skips the NULL non-matches)
             legs.append(f"count(CASE WHEN {cond} THEN 1 END)")
         elif base in ignore_nulls:
             legs.append(ignore_nulls[base].format(wrapped[0]))
-        elif base in TEMPLATES:
-            legs.append(_tmpl_apply(base, TEMPLATES[base], wrapped))
-        elif base in RENAMES:
-            legs.append(f"{RENAMES[base]}({', '.join(wrapped)})")
         else:
-            legs.append(f"{base}({', '.join(wrapped)})")
+            legs.append(_mapped(base, wrapped))
     return f"array({', '.join(legs)})"
 
 
@@ -4050,51 +4088,6 @@ def _regex_capture_groups(pattern: str) -> int:
     return n
 
 
-def _consume_full_frame_over(
-    toks: Tokens, pos: int, ident: str, fn: str
-) -> tuple[str, int] | None:
-    """If ``toks.sql[pos:]`` is an inline ``OVER (spec)``, return the spec
-    with any FULL frame clause removed, plus the index just past the
-    closing paren; ``None`` when no inline OVER follows (named-window
-    references pass through untouched).
-
-    Used by the lag/lead-family translations: Spark's offset window
-    functions REJECT explicit frames, and their semantics equal the CH
-    *InFrame functions' only under the default frame or the full
-    ``ROWS/RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING``
-    idiom — a NARROW frame changes boundary-row results and is rejected
-    loudly rather than silently diverging."""
-    sql = toks.sql
-    n = len(sql)
-    k2 = pos
-    while k2 < n and sql[k2] in " \t\n":
-        k2 += 1
-    k3 = k2 + 4
-    while k3 < n and sql[k3] in " \t\n":
-        k3 += 1
-    if not (sql[k2 : k2 + 4].upper() == "OVER" and k3 < n and sql[k3] == "("):
-        return None
-    oc = toks.close(k3)
-    spec = sql[k3 + 1 : oc]
-    fstart = None
-    for ws, _we, w in lex(spec).words():
-        if w.upper() in ("ROWS", "RANGE"):
-            fstart = ws
-            break
-    if fstart is not None:
-        frame = " ".join(spec[fstart:].upper().split())
-        if frame not in (
-            "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING",
-            "RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING",
-        ):
-            raise ValueError(
-                f"{ident} with a narrow frame ({spec[fstart:].strip()}) "
-                f"has boundary semantics Spark's {fn} cannot express"
-            )
-        spec = spec[:fstart]
-    return spec, oc + 1
-
-
 # Translated (Spark-side) spellings that produce an ARRAY or MAP —
 # the syntactic dispatch for CH's polymorphic length/empty/notEmpty
 # (string length vs container size). Prefix match on the translated
@@ -4216,6 +4209,12 @@ def _rewrite_subscripts(toks: Tokens, ctx: QueryContext) -> str:
             src.append(pos)
             rewritten.append(False)
         close = toks.close_bracket(i)
+        if k > 0 and toks.is_string(k - 1):
+            raise ValueError(
+                f"{sql[toks.starts[k - 1] : close + 1]}: a subscript needs "
+                "an Array or a Map — ClickHouse's arrayElement rejects a "
+                "String; use substring(s, i, 1) for one character"
+            )
         inner = _rewrite_subscripts(lex(sql[i + 1 : close]), ctx)
         start = _subscript_base(toks, k)
         is_sub = False
@@ -4261,7 +4260,14 @@ def _rewrite_subscripts(toks: Tokens, ctx: QueryContext) -> str:
             out.append(f"try_element_at({base}, {inner})")
             src.append(at)
         else:
-            out.append(f"array({inner})")
+            # after IN the brackets are the value list: x IN (a, b)
+            keyword = start >= 0 and not base.isdigit()
+            lit = f"({inner})" if keyword and base.upper() == "IN" else (
+                f"array({inner})"
+            )
+            if keyword and toks.ends[k - 1] == i:
+                lit = " " + lit  # glued to its keyword: IN[1] → IN (1)
+            out.append(lit)
             src.append(i)
         rewritten.append(True)
         pos = close + 1
@@ -4390,11 +4396,11 @@ def _rewrite_column_selectors(toks: Tokens, ctx: QueryContext) -> str:
             continue
         if cols is None:
             raise ValueError(
-                "COLUMNS()/APPLY() expand over a SINGLE registered "
-                "FROM view's schema — register the table as a ch_sql "
-                "view; for joined tables select explicit columns (a "
-                "one-sided star expansion would silently drop the "
-                "other side)"
+                "COLUMNS()/APPLY() expand over a SINGLE FROM table's "
+                "schema — register the table among the statement's views "
+                "or read a warehouse table; for joined tables select "
+                "explicit columns (a one-sided star expansion would "
+                "silently drop the other side)"
             )
         if creg is not None:
             rex = re.compile(creg[1:-1])
@@ -5586,7 +5592,9 @@ def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
             key = ctx.sampling.get(table)
             if key is None:
                 raise ValueError(
-                    f"SAMPLE on '{table}' needs register_sampling_key()"
+                    f"SAMPLE on '{table}' needs a SAMPLE BY key: a "
+                    "warehouse table with one, or its entry in the "
+                    "QueryContext's sampling"
                 )
             pred = _sample_predicate_sql(key, sample[0], sample[1])
             base = f"(SELECT * FROM {base} WHERE {pred})"
@@ -5594,8 +5602,9 @@ def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
             meta = ctx.replacing.get(table)
             if meta is None:
                 raise ValueError(
-                    f"FINAL on '{table}' needs register_replacing_table() "
-                    "or a warehouse table with a merging MergeTree engine"
+                    f"FINAL on '{table}' needs its keys in the "
+                    "QueryContext's replacing entry, or a warehouse table "
+                    "with a merging MergeTree engine"
                 )
             keys, ver = meta
             base = (
@@ -6019,8 +6028,9 @@ def _rewrite_any_join(toks: Tokens, ctx: QueryContext) -> str:
         cols = ctx.columns(table)
         if cols is None:
             raise ValueError(
-                f"ANY JOIN needs {table!r} registered via ch_sql views "
-                "(its column list drives the dedup projection)"
+                f"ANY JOIN needs {table!r} among the statement's views "
+                "or warehouse tables (its column list drives the dedup "
+                "projection)"
             )
         # locate the USING column list. Parenthesized form: the '('
         # must directly follow the USING token (whitespace only), else
@@ -6566,14 +6576,31 @@ _CONTEXT_PASSES = frozenset({
 })
 
 
+class Call:
+    """One call the walker resolves: ``name(args)``, or
+    ``name(params)(args)`` when ``params`` is not None. ``args`` and
+    ``params`` are translated already. ``end`` is the offset in
+    ``toks.sql`` just past the call; a handler that also takes the text
+    after the call (an inline ``OVER (…)``) moves it."""
+
+    __slots__ = ("name", "args", "params", "ctx", "toks", "end")
+
+    def __init__(self, name: str, args: list[str], ctx: QueryContext,
+                 toks: Tokens, end: int):
+        self.name, self.args, self.params = name, args, None
+        self.ctx, self.toks, self.end = ctx, toks, end
+
+
 def translate(sql: str, ctx: QueryContext = EMPTY_CONTEXT) -> str:
     """ClickHouse-dialect SQL text → Spark SQL text. The rewrites read
     what ``ctx`` knows of the statement's tables; the output names them
     as the statement does, for :func:`ch_sql` to bind.
 
-    Clause-rewrite order matters: LIMIT BY runs LAST because it wraps
-    the statement in a subquery — any clause rewritten after it would
-    sit at paren depth 1 where the top-level scanners no longer see it.
+    The statement driver: it lexes the statement once, runs the clause
+    passes over it and hands the tokens to :func:`_walk`. Clause-rewrite
+    order matters: LIMIT BY runs LAST because it wraps the statement in
+    a subquery — any clause rewritten after it would sit at paren depth
+    1 where the top-level scanners no longer see it.
     """
     toks = lex(sql.rstrip().rstrip(";"))
     for rewrite in _CLAUSE_PASSES:
@@ -6581,3385 +6608,3205 @@ def translate(sql: str, ctx: QueryContext = EMPTY_CONTEXT) -> str:
         sql = rewrite(*args)
         if sql != toks.sql:
             toks = lex(sql)
-    sql = toks.sql
-    starts, ends = toks.starts, toks.ends
-    out: list[str] = []
-    i = 0
-    n = len(sql)
-    for tk in range(len(starts)):
-        j = ends[tk]
-        if j <= i:
-            continue  # already emitted with a call or a numeric literal
-        # a numeric literal's exponent can end inside this word
-        s = max(starts[tk], i)
-        out.append(sql[i:s])
-        i = s
-        c = sql[i]
-        if toks.is_string(tk):  # copy string literals verbatim
-            out.append(sql[i:j])
-            i = j
-            continue
-        if c == "=" and sql[i + 1 : i + 2] == "=":
-            out.append("=")  # CH allows ==
-            i += 2
-            continue
-        if toks.is_word(tk):
-            ident = sql[i:j]
-            if ident[0].isdigit():
-                # numeric literal. CH parses 10.0 / 1e6 as Float64;
-                # Spark parses them as DECIMAL / double-with-decimal-
-                # division quirks — a different arithmetic tower
-                # (10.0/3 → DECIMAL(8,6) 3.333333 where CH gives
-                # 3.3333333333333335; fuzz r13 seed 5). Rewrite
-                # fractional/exponent literals to Spark DOUBLE
-                # literals via the D suffix. Hex and plain ints pass
-                # through; already-suffixed forms stay put.
-                if ident[:2].lower() == "0x":
-                    out.append(ident)
-                    i = j
-                    continue
-                tok, j2 = ident, j
-                if (
-                    j2 + 1 < n
-                    and sql[j2] == "."
-                    and sql[j2 + 1].isdigit()
-                ):
-                    k2 = ends[tk + 2]  # the word after the dot
-                    tok, j2 = tok + sql[j2:k2], k2
-                if (
-                    tok[-1] in "eE"
-                    and j2 + 1 < n
-                    and sql[j2] in "+-"
-                    and sql[j2 + 1].isdigit()
-                ):
-                    k2 = j2 + 1
-                    while k2 < n and sql[k2].isdigit():
-                        k2 += 1
-                    tok, j2 = tok + sql[j2:k2], k2
-                low = tok.lower()
-                if ("." in tok or "e" in low) and low[-1] not in "df":
-                    tok += "D"
-                out.append(tok)
-                i = j2
-                continue
-            # identifier followed by '(' → function call
-            k = j
-            while k < n and sql[k] in " \t\n":
-                k += 1
-            if k < n and sql[k] == "(":
-                close = toks.close(k)
-                args = [translate(a, ctx) for a in toks.split(k + 1, close)]
-                # parameterized aggregate: another '(' right after?
-                k2 = close + 1
-                while k2 < n and sql[k2] in " \t\n":
-                    k2 += 1
-                # parameterized base, possibly with the -If combinator:
-                # fooIf(params)(args…, cond) wraps every arg in CASE
-                # WHEN cond before applying foo's template
-                param_base = (
-                    ident
-                    if ident in PARAMETERIZED
-                    else ident[:-2]
-                    if ident.endswith("If") and ident[:-2] in PARAMETERIZED
-                    else None
-                )
-                if (
-                    ident[:1].islower()
-                    and ident.endswith("Resample")
-                    and ident != "Resample"
-                    and k2 < n
-                    and sql[k2] == "("
-                ):
-                    # -Resample combinator: <base>Resample(start, end,
-                    # step)(args…, key) → one array with the base
-                    # aggregate evaluated per [start+i·step,
-                    # min(start+(i+1)·step, end)) bucket of key —
-                    # unrolled at translate time through the -If wrap
-                    # (values outside [start, end) ignored, per the CH
-                    # combinators doc). Still ONE partial aggregation
-                    # pass: every leg is a conditional aggregate in the
-                    # same GROUP BY, no explode, no re-scan.
-                    close2 = toks.close(k2)
-                    args2 = [
-                        translate(a, ctx) for a in toks.split(k2 + 1, close2)
-                    ]
-                    out.append(_resample_sql(ident, args, args2))
-                    i = close2 + 1
-                    continue
-                if param_base is not None and k2 < n and sql[k2] == "(":
-                    close2 = toks.close(k2)
-                    params = args
-                    if param_base in ("quantileGK", "quantilesGK",
-                                      "quantileDD"):
-                        if not params:
-                            if param_base == "quantileDD":
-                                raise ValueError(
-                                    "quantileDD needs the relative "
-                                    "accuracy: quantileDD(rel_acc"
-                                    "[, level])(x)"
-                                )
-                            # CH default accuracy (same as Spark's
-                            # percentile_approx default)
-                            params = ["10000"]
-                        if len(params) == 1:
-                            if param_base == "quantilesGK":
-                                raise ValueError(
-                                    "quantilesGK needs explicit "
-                                    "levels: quantilesGK(accuracy, "
-                                    "l1[, l2, …])(x)"
-                                )
-                            params = params + ["0.5"]  # CH level default
-                    args2 = [
-                        translate(a, ctx) for a in toks.split(k2 + 1, close2)
-                    ]
-                    if param_base != ident:
-                        cond = args2[-1]
-                        args2 = [
-                            f"CASE WHEN {cond} THEN {a} END"
-                            for a in args2[:-1]
-                        ]
-                    if param_base == "meanZTest":
-                        if len(params) != 3 or len(args2) != 2:
-                            raise ValueError(
-                                "meanZTest needs (pop_var_x, "
-                                "pop_var_y, conf_level)(sample, index)"
-                            )
-                        out.append(_mean_ztest_sql(*params, *args2))
-                        i = close2 + 1
-                        continue
-                    if param_base == "mannWhitneyUTest":
-                        out.append(_mwu_sql(params, args2))
-                        i = close2 + 1
-                        continue
-                    if param_base in ("largestTriangleThreeBuckets",
-                                      "lttb"):
-                        if len(params) != 1 or len(args2) != 2:
-                            raise ValueError(
-                                "largestTriangleThreeBuckets needs "
-                                "(n)(x, y)"
-                            )
-                        out.append(
-                            f"__ch_lttb(CAST({args2[0]} AS DOUBLE), "
-                            f"CAST({args2[1]} AS DOUBLE), {params[0]})"
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base == "sparkbar":
-                        if len(params) not in (1, 3) or len(args2) != 2:
-                            raise ValueError(
-                                "sparkbar needs (width[, min_x, "
-                                "max_x])(x, y); x and the bounds must "
-                                "be numeric (for Dates use "
-                                "toUnixTimestamp)"
-                            )
-                        mn = (f"CAST({params[1]} AS DOUBLE)"
-                              if len(params) == 3
-                              else "CAST(NULL AS DOUBLE)")
-                        mx = (f"CAST({params[2]} AS DOUBLE)"
-                              if len(params) == 3
-                              else "CAST(NULL AS DOUBLE)")
-                        out.append(
-                            f"__ch_sparkbar(CAST({args2[0]} AS "
-                            f"DOUBLE), CAST({args2[1]} AS DOUBLE), "
-                            f"{params[0]}, {mn}, {mx})"
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base == "sequenceNextNode":
-                        out.append(_seq_next_node_sql(params, args2))
-                        i = close2 + 1
-                        continue
-                    if param_base == "windowFunnel":
-                        out.append(_window_funnel_sql(params, args2))
-                        i = close2 + 1
-                        continue
-                    if param_base in ("sequenceMatch", "sequenceCount"):
-                        out.append(
-                            _sequence_match_sql(param_base, params, args2)
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base == "sequenceMatchEvents":
-                        raise ValueError(
-                            "sequenceMatchEvents: returns the matched "
-                            "events' timestamps, which the scalar fold "
-                            "cannot carry — use operators.funnel."
-                            "sequence_match (the complete pattern "
-                            "engine); sequenceMatch/sequenceCount ARE "
-                            "mapped"
-                        )
-                    if param_base == "sumMapFilteredWithOverflow":
-                        # wave 6: same keys-restricted reduction; the
-                        # 64-bit-widened sum is a documented delta
-                        # (no wraparound)
-                        param_base = "sumMapFiltered"
-                    if param_base == "sumMapFiltered":
-                        # restrict the pairs to the parameter key list
-                        # BEFORE the sumMap reduction (positional k/v
-                        # alignment kept by filtering zipped structs)
-                        if len(params) != 1 or len(args2) != 2:
-                            raise ValueError(
-                                "sumMapFiltered needs (keys_array)"
-                                "(key_arr, value_arr)"
-                            )
-                        pairs = (
-                            f"filter(zip_with({args2[0]}, {args2[1]}, "
-                            f"(__fk, __fv) -> struct(__fk AS k, "
-                            f"__fv AS v)), "
-                            f"__fp -> array_contains({params[0]}, "
-                            f"__fp.k))"
-                        )
-                        out.append(_map_agg_sql("sumMap", [
-                            f"transform({pairs}, __fp -> __fp.k)",
-                            f"transform({pairs}, __fp -> __fp.v)",
-                        ]))
-                        i = close2 + 1
-                        continue
-                    if param_base in (
-                        "groupArrayMovingSum", "groupArrayMovingAvg"
-                    ):
-                        if len(params) != 1:
-                            raise ValueError(
-                                f"{param_base} takes one window-size "
-                                f"parameter: {param_base}(n)(value, "
-                                "order_key)"
-                            )
-                        out.append(
-                            _moving_agg_sql(param_base, params[0], args2)
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base.startswith("exponentialTimeDecayed"):
-                        if len(params) != 1:
-                            raise ValueError(
-                                f"{param_base}(decay_length)(…) takes "
-                                "one parameter"
-                            )
-                        out.append(
-                            _etd_sql(param_base, params[0], args2)
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base == "groupArrayLast":
-                        # groupArrayLast(n)(x, key[, asc]) — round 12,
-                        # the ordered-key precedent (CH's bare form is
-                        # INSERTION-order dependent): last n values in
-                        # key order, returned in that order. NULL x or
-                        # key skipped, like any CH aggregate.
-                        if len(params) != 1:
-                            raise ValueError(
-                                "groupArrayLast takes one max-size "
-                                "parameter: groupArrayLast(n)(value, "
-                                "order_key[, asc])"
-                            )
-                        if len(args2) not in (2, 3):
-                            raise ValueError(
-                                "groupArrayLast needs an explicit "
-                                "ordering key: groupArrayLast(n)"
-                                "(value, order_key[, asc]) — CH's "
-                                "key-less form is INSERTION-order "
-                                "dependent (block order)"
-                            )
-                        gl_n, gl_v, gl_k = params[0], args2[0], args2[1]
-                        asc = args2[2] if len(args2) == 3 else "true"
-                        try:
-                            if int(gl_n) <= 0:
-                                raise ValueError(
-                                    "groupArrayLast: max size must "
-                                    "be positive"
-                                )
-                        except (TypeError, ValueError) as e:
-                            if "max size" in str(e):
-                                raise
-                        coll = (
-                            f"sort_array(collect_list(CASE WHEN "
-                            f"({gl_v}) IS NOT NULL AND ({gl_k}) IS "
-                            f"NOT NULL THEN struct(({gl_k}) AS k, "
-                            f"({gl_v}) AS v) END), {asc})"
-                        )
-                        out.append(
-                            f"element_at(transform(array({coll}), "
-                            f"__gl -> transform(slice(__gl, "
-                            f"CASE WHEN size(__gl) > ({gl_n}) THEN "
-                            f"size(__gl) - ({gl_n}) + 1 ELSE 1 END, "
-                            f"({gl_n})), __ge -> __ge.v)), 1)"
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base.startswith(
-                        ("quantileExact", "quantilesExact")
-                    ) and PARAMETERIZED[param_base] is None:
-                        out.append(
-                            _exact_quantile_sql(param_base, params, args2)
-                        )
-                        i = close2 + 1
-                        continue
-                    if param_base in ("uniqCombined", "uniqCombined64"):
-                        # HLL precision → approx_count_distinct's
-                        # relative-SD knob (rsd ≈ 1.04/√2^p), computed
-                        # HERE because Spark demands a literal rsd
-                        if len(params) != 1 or len(args2) != 1:
-                            raise ValueError(
-                                f"{param_base}(precision)(x) is the "
-                                "parameterized form"
-                            )
-                        try:
-                            prec_v = int(params[0])
-                        except ValueError:
-                            raise ValueError(
-                                f"{param_base} precision must be a "
-                                "literal integer (it becomes the "
-                                "sketch's literal accuracy knob)"
-                            ) from None
-                        rsd = max(
-                            0.01, min(0.36, 1.04 / (2.0 ** (prec_v / 2)))
-                        )
-                        out.append(
-                            f"approx_count_distinct({args2[0]}, {rsd!r})"
-                        )
-                        i = close2 + 1
-                        continue
-                    fmt = PARAMETERIZED[param_base]
-                    mapping = {f"p{x}": p for x, p in enumerate(params)}
-                    mapping.update({f"a{x}": a for x, a in enumerate(args2)})
-                    mapping["params"] = ", ".join(params)
-                    mapping["params1"] = ", ".join(params[1:])
-                    out.append(fmt.format(**mapping))
-                    i = close2 + 1
-                    continue
-                if (
-                    param_base is None
-                    and k2 < n
-                    and sql[k2] == "("
-                    and ident[:1].islower()
-                    and ident.startswith(_PARAMETRIC_FAMILIES)
-                ):
-                    # two-paren spelling from a known parameterized-
-                    # aggregate family with NO mapping: reject here —
-                    # passing it through emits `name(p)(a)`, which
-                    # Spark rejects far later with an inscrutable
-                    # parse error (this gap hid quantileExactLow &
-                    # friends until round 10)
-                    raise ValueError(
-                        f"{ident}: unmapped parameterized aggregate — "
-                        "check the documented (params)(args) "
-                        "signatures of the mapped spellings, or "
-                        "translate the single-paren form for its "
-                        "specific guidance"
-                    )
-                if ident == "multiIf":
-                    # variadic: c1,v1,c2,v2,...,else → CASE chain
-                    whens = "".join(
-                        f" WHEN {args[x]} THEN {args[x + 1]}"
-                        for x in range(0, len(args) - 1, 2)
-                    )
-                    out.append(f"CASE{whens} ELSE {args[-1]} END")
-                elif ident == "count" and not args:
-                    out.append("count(*)")  # CH allows bare count()
-                elif ident == "tuple" and args:
-                    # explicit positional field names: Spark's struct()
-                    # auto-names LITERAL elements col1..colN but names
-                    # COLUMN elements after the column, so the .N →
-                    # .colN accessor (and every template reaching into
-                    # tuples) silently broke on tuple(x, y) — pin the
-                    # CH positional names on every element
-                    out.append(
-                        "struct("
-                        + ", ".join(
-                            f"{a} AS col{x + 1}"
-                            for x, a in enumerate(args)
-                        )
-                        + ")"
-                    )
-                elif ident == "transform" and len(args) in (3, 4):
-                    # CH's VALUE-MAPPING transform(x, [from], [to]
-                    # [, default]) — not Spark's 2-arg array HOF,
-                    # which passes through untouched below. Unmatched
-                    # values keep x (3-arg) or take the default
-                    # (4-arg), exactly CH's contract.
-                    x, frm, to = args[0], args[1], args[2]
-                    dflt = args[3] if len(args) == 4 else x
-                    out.append(
-                        f"coalesce(element_at("
-                        f"map_from_arrays({frm}, {to}), {x}), {dflt})"
-                    )
-                elif ident == "formatReadableQuantity" and len(args) == 1:
-                    x = args[0]
-                    out.append(
-                        f"CASE WHEN abs({x}) < 1000 THEN "
-                        f"format_string('%.2f', cast({x} as double)) "
-                        f"WHEN abs({x}) < 1000000 THEN concat("
-                        f"format_string('%.2f', cast({x} as double) "
-                        f"/ 1000), ' thousand') "
-                        f"WHEN abs({x}) < 1000000000 THEN concat("
-                        f"format_string('%.2f', cast({x} as double) "
-                        f"/ 1000000), ' million') "
-                        f"ELSE concat(format_string('%.2f', "
-                        f"cast({x} as double) / 1000000000), ' billion') "
-                        f"END"
-                    )
-                elif ident == "arrayReduce" and len(args) == 2:
-                    # literal aggregate name → the matching array fold
-                    # (double accumulation for sum/avg, same contract
-                    # as arraySum/arrayAvg)
-                    agg = args[0].strip().strip("'\"")
-                    arr = args[1]
-                    folds = {
-                        # single-bind + saturated-zero init, same
-                        # contract as the rebuilt arraySum template
-                        # (Int→Int64 sums, Decimal→Decimal(38,s) —
-                        # r13 ADVICE decimal/rebind fixes)
-                        "sum": (
-                            f"element_at(transform(array({arr}), "
-                            f"__chas -> aggregate(__chas, "
-                            f"coalesce(try_element_at(__chas, 1), 0) "
-                            f"* CAST(0 AS BIGINT), "
-                            "(acc, x) -> acc + coalesce(x, 0))), 1)"
-                        ),
-                        "min": f"array_min({arr})",
-                        "max": f"array_max({arr})",
-                        "avg": (
-                            f"(aggregate({arr}, cast(0 as double), "
-                            f"(acc, x) -> acc + x) / size({arr}))"
-                        ),
-                        "count": f"size({arr})",
-                        "uniqExact": f"size(array_distinct({arr}))",
-                        "any": f"element_at({arr}, 1)",
-                    }
-                    if agg not in folds:
-                        raise ValueError(
-                            f"arrayReduce aggregate {args[0]} not supported"
-                        )
-                    out.append(folds[agg])
-                elif ident == "range" and len(args) == 3:
-                    # stepped form (r12): [s, s+st, … toward e), e
-                    # exclusive; the empty case needs an explicit
-                    # guard — Spark's sequence throws when (end−start)
-                    # disagrees with the step sign, where CH returns
-                    # []. The step's SIGN picks the guard direction,
-                    # so it must be a literal (ADVICE r12: a negative
-                    # step used to silently yield [] where CH returns
-                    # the descending range).
-                    s_, e_, st_ = args
-                    st_lit = st_.strip().lstrip("+")
-                    if not (
-                        st_lit.lstrip("-").isdigit()
-                        and int(st_lit) != 0
-                    ):
-                        raise ValueError(
-                            "range(start, end, step) needs a nonzero"
-                            f" literal integer step, got {st_!r} — "
-                            "the step sign picks the emptiness guard"
-                        )
-                    if int(st_lit) > 0:
-                        out.append(
-                            f"(CASE WHEN ({s_}) >= ({e_}) THEN "
-                            f"slice(sequence({s_}, {s_}), 1, 0) ELSE "
-                            f"sequence({s_}, ({e_}) - 1, {st_}) END)"
-                        )
-                    else:
-                        # descending: values > e (e exclusive) —
-                        # sequence is inclusive, so bound at e+1
-                        out.append(
-                            f"(CASE WHEN ({s_}) <= ({e_}) THEN "
-                            f"slice(sequence({s_}, {s_}), 1, 0) ELSE "
-                            f"sequence({s_}, ({e_}) + 1, {st_}) END)"
-                        )
-                elif ident == "range" and len(args) in (1, 2):
-                    # CH range(n)=[0..n-1], range(s,e)=[s..e-1]; Spark's
-                    # sequence() is INCLUSIVE and descends when end <
-                    # start, so the empty case needs the slice guard
-                    # slice length is clamped at 0: a negative length
-                    # THROWS in Spark, while CH returns [] for
-                    # range(s, e) with e < s
-                    if len(args) == 1:
-                        out.append(
-                            f"slice(sequence(0, greatest(({args[0]}) - 1,"
-                            f" 0)), 1, greatest(0, {args[0]}))"
-                        )
-                    else:
-                        out.append(
-                            f"slice(sequence({args[0]}, "
-                            f"greatest(({args[1]}) - 1, {args[0]})), "
-                            f"1, greatest(0, ({args[1]}) - ({args[0]})))"
-                        )
-                elif ident == "toString" and len(args) == 2:
-                    # toString(dt, tz): render in the given zone — the
-                    # 1-arg TEMPLATE would silently DROP the tz arg
-                    # (str.format ignores extras)
-                    out.append(
-                        f"cast(from_utc_timestamp(cast({args[0]} as "
-                        f"timestamp), {args[1]}) as string)"
-                    )
-                elif ident in (
-                    "runningDifference", "runningAccumulate",
-                    "runningDifferenceStartingWithFirstValue",
-                    "neighbor", "rowNumberInAllBlocks",
-                    "rowNumberInBlock", "blockNumber",
-                    "deltaSum", "deltaSumIf",
-                ):
-                    raise ValueError(
-                        f"{ident} is BLOCK-ORDER-dependent (deprecated "
-                        "in ClickHouse itself) — rewrite with a window "
-                        "function (lag/lead/sum/row_number OVER an "
-                        "explicit ORDER BY)"
-                    )
-                elif ident in (
-                    "groupArrayMovingSum", "groupArrayMovingAvg"
-                ) and len(args) >= 2:
-                    out.append(_moving_agg_sql(ident, None, args))
-                elif ident in (
-                    "groupArrayMovingSum", "groupArrayMovingAvg"
-                ):
-                    raise ValueError(
-                        f"{ident}: CH's one-argument form is "
-                        "BLOCK-ORDER-dependent — order the input "
-                        "explicitly: FROM (… ORDER BY key) derives the "
-                        f"key automatically, or write {ident}[(n)]"
-                        "(value, order_key) with the key as the final "
-                        "argument"
-                    )
-                elif ident in ("sumMap", "minMap", "maxMap",
-                               "countMap", "avgMap",
-                               "sumMapWithOverflow",
-                               "minMapWithOverflow",
-                               "maxMapWithOverflow",
-                               "sumMappedArrays", "minMappedArrays",
-                               "maxMappedArrays") and len(args) in (1, 2):
-                    # sumMappedArrays et al. are CH's explicit two-array
-                    # aliases — same semantics, arrays-only spelling;
-                    # countMap/avgMap are the generic -Map combinator
-                    # over count/avg (per-key size / null-safe mean).
-                    # -WithOverflow keeps CH's input-width accumulation
-                    # (wraparound); here sums still widen to 64-bit —
-                    # a documented delta (no wraparound), wave 6
-                    if ident.endswith("MappedArrays") and len(args) != 2:
-                        raise ValueError(
-                            f"{ident} takes (key_arr, value_arr)"
-                        )
-                    base = (
-                        ident[:-12] if ident.endswith("WithOverflow")
-                        else ident
-                    )
-                    out.append(_map_agg_sql(base, args))
-                elif ident in ("sumMapIf", "minMapIf", "maxMapIf",
-                               "countMapIf", "avgMapIf") and (
-                    len(args) in (2, 3)
-                ):
-                    # -Map ∘ -If: null the array args on non-matching
-                    # rows (collect_list drops them before the per-key
-                    # reduction)
-                    cond = args[-1]
-                    wrapped = [
-                        f"(CASE WHEN {cond} THEN {a} END)"
-                        for a in args[:-1]
-                    ]
-                    out.append(_map_agg_sql(ident[:-2], wrapped))
-                elif ident in ("sumMap", "minMap", "maxMap",
-                               "countMap", "avgMap"):
-                    raise ValueError(
-                        f"{ident}: mapped forms are {ident}(key_arr, "
-                        f"val_arr) and {ident}(map_col) — for unbounded "
-                        "key domains prefer the explode + two-level "
-                        "aggregation operator (queries.aggregations "
-                        "sumMap shape)"
-                    )
-                elif ident.lower().endswith(("argmin", "argmax")) and (
-                    ident[: -6] in ("sum", "avg", "min", "max",
-                                    "count", "any")
-                ) and len(args) == 2:
-                    # -ArgMin/-ArgMax combinators: the base aggregate
-                    # over ONLY the rows whose key equals the group's
-                    # extreme key (CH docs: combinators/-ArgMin) — one
-                    # collected fold, key-null rows skipped
-                    base = ident[:-6]
-                    is_min = ident.lower().endswith("argmin")
-                    pairs = (
-                        f"collect_list(CASE WHEN ({args[1]}) IS NOT "
-                        f"NULL THEN struct(({args[1]}) AS k, "
-                        f"({args[0]}) AS v) END)"
-                    )
-                    ext = "array_min" if is_min else "array_max"
-                    vals = (
-                        f"transform(filter(__gp, __ge -> __ge.k <=> "
-                        f"{ext}(transform(__gp, __gx -> __gx.k))), "
-                        f"__ge -> __ge.v)"
-                    )
-                    nn = f"filter({vals}, __gv -> __gv IS NOT NULL)"
-                    if base == "sum":
-                        red = (
-                            f"aggregate(slice({nn}, 2, size({nn})), "
-                            f"try_element_at({nn}, 1) "
-                            f"+ CAST(0 AS BIGINT), "
-                            f"(__ga, __gx) -> __ga + __gx)"
-                        )
-                    elif base == "avg":
-                        red = (
-                            f"try_divide(aggregate({nn}, "
-                            f"cast(0.0 as double), "
-                            f"(__ga, __gx) -> __ga + __gx), size({nn}))"
-                        )
-                    elif base == "min":
-                        red = f"array_min({nn})"
-                    elif base == "max":
-                        red = f"array_max({nn})"
-                    elif base == "count":
-                        red = f"CAST(size({nn}) AS BIGINT)"
-                    else:  # any
-                        red = f"try_element_at({nn}, 1)"
-                    out.append(
-                        f"element_at(transform(array({pairs}), "
-                        f"__gp -> {red}), 1)"
-                    )
-                elif (
-                    (ident.endswith("IfOrNull")
-                     and ident[:-8] in ("sum", "avg", "min", "max",
-                                        "count", "uniqExact", "any"))
-                    or (ident.endswith("OrNullIf")
-                        and ident[:-8] in ("sum", "avg", "min", "max",
-                                           "count", "uniqExact", "any"))
-                ) and len(args) >= 2:
-                    # -If ∘ -OrNull in either combinator order: CASE-
-                    # wrap the value args, NULL on empty match (the
-                    # zero-returning counters get a nullif, the rest
-                    # already NULL on empty)
-                    base = ident[:-8]
-                    cond = args[-1]
-                    wv = [
-                        f"CASE WHEN {cond} THEN {a} END"
-                        for a in args[:-1]
-                    ]
-                    inner = ", ".join(wv)
-                    if base == "count":
-                        out.append(f"nullif(count({inner}), 0)")
-                    elif base == "uniqExact":
-                        out.append(
-                            f"nullif(count(DISTINCT {inner}), 0)"
-                        )
-                    elif base == "any":
-                        out.append(f"any_value({inner}, true)")
-                    else:
-                        out.append(f"{base}({inner})")
-                elif ident in ("corrMatrix", "covarSampMatrix",
-                               "covarPopMatrix") and len(args) >= 2:
-                    # N×N aggregate matrix unrolled to the pairwise
-                    # aggregates — still ONE partial-agg pass (N²/2
-                    # distinct buffers; Catalyst dedupes the symmetric
-                    # repeats it can prove equal)
-                    fn = {
-                        "corrMatrix": "corr",
-                        "covarSampMatrix": "covar_samp",
-                        "covarPopMatrix": "covar_pop",
-                    }[ident]
-                    rows = ", ".join(
-                        "array("
-                        + ", ".join(f"{fn}({ai}, {aj})" for aj in args)
-                        + ")"
-                        for ai in args
-                    )
-                    out.append(f"array({rows})")
-                elif ident in ("corrMatrix", "covarSampMatrix",
-                               "covarPopMatrix"):
-                    raise ValueError(f"{ident} needs ≥2 columns")
-                elif ident == "groupArrayLast":
-                    raise ValueError(
-                        "groupArrayLast: CH's key-less form is "
-                        "INSERTION-order dependent (block-order, like "
-                        "groupArrayMoving*) — write the ordered-key "
-                        "spelling groupArrayLast(n)(value, order_key"
-                        "[, asc]) (r12), or groupArraySorted(n)(x)"
-                    )
-                elif (
-                    ident.startswith(("bitmap", "groupBitmap"))
-                    and ident not in TEMPLATES
-                    and not ident.endswith(
-                        ("State", "Merge", "MergeState")
-                    )
-                ):
-                    # the r13 exact tier maps the documented family
-                    # (TEMPLATES + the groupBitmap* state bases); this
-                    # catches the unmapped tail / arity typos
-                    raise ValueError(
-                        f"{ident}: not in the mapped bitmap family — "
-                        "bitmaps are sorted distinct arrays here "
-                        "(bitmapBuild/To Array/Cardinality/Min/Max/"
-                        "Contains/HasAny/HasAll/And/Or/Xor/Andnot"
-                        "(+Cardinality)/SubsetInRange/SubsetLimit/"
-                        "subBitmap/Transform, groupBitmap[And|Or|Xor]"
-                        "[State|Merge|MergeState] are mapped)"
-                    )
-                elif ident in ("exponentialTimeDecayedAvg",
-                               "exponentialTimeDecayedSum",
-                               "exponentialTimeDecayedCount",
-                               "exponentialTimeDecayedMax"):
-                    raise ValueError(
-                        f"{ident} REQUIRES the parameterized form "
-                        f"{ident}(decay_length)(value, time) — mapped "
-                        "as the GROUP-BY decayed fold (r12); the "
-                        "per-row WINDOW form stays with "
-                        "operators.ema.exponential_time_decayed"
-                    )
-                elif ident == "sequenceNextNode":
-                    raise ValueError(
-                        "sequenceNextNode REQUIRES the parameterized "
-                        "form: sequenceNextNode(direction, base)"
-                        "(timestamp, value, base_condition, event1"
-                        "[, event2, …])"
-                    )
-                elif ident == "sparkbar":
-                    raise ValueError(
-                        "sparkbar: use the parameterized form "
-                        "sparkbar(width[, min_x, max_x])(x, y)"
-                    )
-                elif ident in ("studentTTest", "welchTTest"):
-                    if len(args) != 2:
-                        raise ValueError(
-                            f"{ident} needs (sample, index); the "
-                            "parameterized confidence-interval form "
-                            f"{ident}(cl)(x, i) is unsupported"
-                        )
-                    out.append(_ttest_sql(ident, args[0], args[1]))
-                elif ident == "mannWhitneyUTest" and len(args) == 2:
-                    # bare (no-parameter) spelling: defaults
-                    # 'two-sided', continuity on
-                    out.append(_mwu_sql([], args))
-                elif ident in ("cramersV", "cramersVBiasCorrected",
-                               "theilsU", "contingency") and (
-                    len(args) == 2
-                ):
-                    # categorical association via the grouped-agg
-                    # Python kernel (functions/stats.py); values
-                    # compared as strings (CH hashes the raw values —
-                    # same equivalence classes for categorical data)
-                    kind = {"cramersV": 0, "cramersVBiasCorrected": 1,
-                            "theilsU": 2, "contingency": 3}[ident]
-                    out.append(
-                        f"__ch_assoc(CAST({args[0]} AS STRING), "
-                        f"CAST({args[1]} AS STRING), {kind})"
-                    )
-                elif ident == "proportionsZTest" and len(args) == 6:
-                    out.append(_proportions_ztest_sql(*args))
-                elif ident == "minSampleSizeConversion" and (
-                    len(args) == 4
-                ):
-                    out.append(_min_sample_size_sql(ident, args))
-                elif ident in ("minSampleSizeContinuous",
-                               "minSampleSizeContinous") and (
-                    len(args) == 5  # CH ships the misspelled alias too
-                ):
-                    out.append(
-                        _min_sample_size_sql(
-                            "minSampleSizeContinuous", args
-                        )
-                    )
-                elif ident in ("mannWhitneyUTest", "meanZTest",
-                               "cramersV",
-                               "cramersVBiasCorrected", "theilsU",
-                               "contingency", "proportionsZTest",
-                               "minSampleSizeConversion",
-                               "minSampleSizeContinuous",
-                               "minSampleSizeContinous"):
-                    raise ValueError(
-                        f"{ident}: wrong arity {len(args)} — see the "
-                        "mapped signatures (mannWhitneyUTest(x, idx), "
-                        "assoc(x, y), proportionsZTest(sx, sy, tx, ty,"
-                        " conf, pool), minSampleSizeConversion(base, "
-                        "mde, power, alpha), minSampleSizeContinuous("
-                        "base, sigma, mde, power, alpha))"
-                    )
-                elif ident == "categoricalInformationValue" and (
-                    len(args) == 2
-                ):
-                    # single-category IV via the grouped Python
-                    # kernel (functions/aggkernels.py); returns a
-                    # 1-element array matching CH's Array shape
-                    out.append(
-                        f"__ch_civ(CAST({args[0]} AS STRING), "
-                        f"CAST({args[1]} AS INT))"
-                    )
-                elif ident == "categoricalInformationValue":
-                    raise ValueError(
-                        "categoricalInformationValue: only the "
-                        "single-category form (cat, tag) is mapped — "
-                        "call once per category column for the "
-                        "multi-category spelling"
-                    )
-                elif ident in ("largestTriangleThreeBuckets", "lttb"):
-                    raise ValueError(
-                        f"{ident}: use the parameterized form "
-                        f"{ident}(n)(x, y)"
-                    )
-                elif ident in ("stochasticLinearRegression",
-                               "stochasticLogisticRegression"):
-                    raise ValueError(
-                        f"{ident}: SGD model state is engine-internal "
-                        "— use simpleLinearRegression (mapped to "
-                        "regr_slope/regr_intercept) or Spark MLlib"
-                    )
-                elif ident == "quantileGK" and len(args) == 1:
-                    # bare single-paren spelling: all defaults
-                    # (accuracy 10000, level 0.5 — the median)
-                    out.append(
-                        f"percentile_approx({args[0]}, 0.5, 10000)"
-                    )
-                elif ident in (
-                    "quantileExact", "quantileExactLow",
-                    "quantileExactHigh",
-                ) and len(args) == 1:
-                    # single-paren exact quantiles default to the
-                    # median level (r12 — the median* alias rewrite
-                    # lands here for medianExactLow/High)
-                    out.append(
-                        _exact_quantile_sql(ident, ["0.5"], args)
-                    )
-                elif (
-                    ident.startswith("quantile")
-                    and isinstance(PARAMETERIZED.get(ident), str)
-                    and "{p1}" not in PARAMETERIZED[ident]
-                    and "{params" not in PARAMETERIZED[ident]
-                ):
-                    # single-paren spelling of a template-mapped
-                    # quantile: CH defaults the level to 0.5 (r12 —
-                    # the median* alias rewrite lands here too)
-                    fmt = PARAMETERIZED[ident]
-                    mapping = {"p0": "0.5"}
-                    mapping.update(
-                        {f"a{x}": a for x, a in enumerate(args)}
-                    )
-                    out.append(fmt.format(**mapping))
-                elif ident in ("quantileGK", "quantilesGK"):
-                    raise ValueError(
-                        f"{ident}: use the parameterized form "
-                        f"{ident}(accuracy[, level…])(x) — or "
-                        "quantileGK(x) for all defaults"
-                    )
-                elif ident == "quantileDD":
-                    raise ValueError(
-                        "quantileDD needs the relative accuracy: "
-                        "quantileDD(rel_acc[, level])(x)"
-                    )
-                elif ident == "geohashEncode" and len(args) in (2, 3):
-                    if len(args) == 3:
-                        try:
-                            prec = int(args[2])
-                        except ValueError:
-                            raise ValueError(
-                                "geohashEncode precision must be a "
-                                "literal integer (the bit layout "
-                                "unrolls at translate time)"
-                            ) from None
-                    else:
-                        prec = 12  # CH default
-                    out.append(
-                        _geohash_encode_sql(args[0], args[1], prec)
-                    )
-                elif ident == "geohashDecode" and len(args) == 1:
-                    out.append(_geohash_decode_sql(args[0]))
-                elif ident == "pointInPolygon" and len(args) == 2:
-                    out.append(
-                        _point_in_polygon_sql(args[0], args[1])
-                    )
-                elif ident in ("geohashEncode", "geohashDecode",
-                               "pointInPolygon"):
-                    # wrong arity must stay a LOUD translate-time
-                    # reject, not a silent passthrough that fails (or
-                    # mis-binds) later at Spark analysis
-                    raise ValueError(
-                        f"{ident}: unsupported arity {len(args)} — "
-                        "mapped forms are geohashEncode(lon, lat[, "
-                        "precision]), geohashDecode(s), and the "
-                        "single-ring pointInPolygon((x, y), ring); "
-                        "multi-ring polygons-with-holes need a geo "
-                        "library UDF"
-                    )
-                elif ident == "geohashesInBox" and len(args) == 5:
-                    try:
-                        prec = int(args[4])
-                    except ValueError:
-                        raise ValueError(
-                            "geohashesInBox precision must be a literal "
-                            "integer (the cell math unrolls at "
-                            "translate time)"
-                        ) from None
-                    out.append(
-                        _geohashes_in_box_sql(
-                            args[0], args[1], args[2], args[3], prec
-                        )
-                    )
-                elif ident == "geohashesInBox" or (
-                    ident.startswith("h3") or ident.startswith("s2")
-                ) and ident not in TEMPLATES and ident not in RENAMES:
-                    raise ValueError(
-                        f"{ident}: geohashesInBox(lon_min, lat_min, "
-                        "lon_max, lat_max, literal_precision) is the "
-                        "mapped form; H3/S2 coverings need a geo "
-                        "library UDF"
-                    )
-                elif ident in ("byteSize", "reinterpret") or (
-                    ident.startswith("reinterpretAs")
-                ):
-                    raise ValueError(
-                        f"{ident}: raw-byte reinterpretation depends on "
-                        "the engine's in-memory layout — engine-internal"
-                    )
-                elif ident in ("sleep", "sleepEachRow", "hostName",
-                               "getMacro", "FQDN", "tcpPort",
-                               "partitionID", "getServerPort",
-                               "shardNum", "shardCount",
-                               "currentProfiles", "currentRoles",
-                               "initialQueryID", "queryID",
-                               "blockSize", "dumpColumnStructure",
-                               "defaultValueOfTypeName",
-                               "defaultValueOfArgumentType",
-                               "indexHint",
-                               "generateRandomStructure",
-                               "isDecimalOverflow", "formatRow",
-                               "formatRowNoNewline",
-                               # wave 2
-                               "transactionID", "serverUUID",
-                               "zookeeperSessionUptime", "shardNum",
-                               "shardCount", "hostname", "revision",
-                               "uptime", "buildId", "getSetting",
-                               "getOSKernelVersion", "displayName",
-                               "currentSchemas", "connectionId",
-                               "getClientHTTPHeader",
-                               "filesystemAvailable",
-                               "filesystemCapacity",
-                               "filesystemUnreserved", "isConstant",
-                               "globalVariable", "partitionId",
-                               "lowCardinalityKeys",
-                               "lowCardinalityIndices", "replicate",
-                               "aggThrow", "enabledProfiles",
-                               "defaultProfiles", "enabledRoles",
-                               "defaultRoles", "getSizeOfEnumType",
-                               "blockSerializedSize",
-                               "hasThreadFuzzer"):  # wave 6
-                    raise ValueError(
-                        f"{ident}: server-introspection/debug/wire-"
-                        "format function with no Spark analog"
-                    )
-                elif ident in (
-                    "tuplePlus", "tupleMinus", "tupleMultiply",
-                    "tupleDivide", "tupleIntDiv", "tupleModulo",
-                    "vectorSum", "vectorDifference",
-                ) and len(args) == 2:
-                    # field-wise tuple arithmetic: the arity comes from
-                    # an INLINE tuple literal on either side (the
-                    # engine's struct(col1..colN) convention names the
-                    # other side's fields)
-                    ca = _tuple_components(args[0])
-                    cb = _tuple_components(args[1])
-                    n_fields = len(ca or cb or ())
-                    if not n_fields:
-                        raise ValueError(
-                            f"{ident}: tuple arity is resolved from an "
-                            "inline tuple literal on at least one side "
-                            "— tuple(…)/(…, …) — or spell the fields "
-                            "out (t.col1 + u.col1, …)"
-                        )
-                    if ca and cb and len(ca) != len(cb):
-                        raise ValueError(
-                            f"{ident}: tuple sizes differ "
-                            f"({len(ca)} vs {len(cb)})"
-                        )
-                    op = {
-                        "tuplePlus": "+", "vectorSum": "+",
-                        "tupleMinus": "-", "vectorDifference": "-",
-                        "tupleMultiply": "*", "tupleDivide": "/",
-                        "tupleIntDiv": "DIV", "tupleModulo": "%",
-                    }[ident]
-                    lhs = ca or [
-                        f"({args[0]}).col{x + 1}" for x in range(n_fields)
-                    ]
-                    rhs = cb or [
-                        f"({args[1]}).col{x + 1}" for x in range(n_fields)
-                    ]
-                    out.append(
-                        "struct("
-                        + ", ".join(
-                            f"(({a}) {op} ({b})) AS col{x + 1}"
-                            for x, (a, b) in enumerate(zip(lhs, rhs))
-                        )
-                        + ")"
-                    )
-                elif ident in (
-                    "tupleNegate", "tupleMultiplyByNumber",
-                    "tupleDivideByNumber", "tupleIntDivByNumber",
-                    "tupleModuloByNumber",
-                ) and len(args) in (1, 2):
-                    ca = _tuple_components(args[0])
-                    if not ca:
-                        raise ValueError(
-                            f"{ident}: tuple arity is resolved from an "
-                            "inline tuple literal — tuple(…)/(…, …) — "
-                            "or spell the fields out"
-                        )
-                    if ident == "tupleNegate":
-                        comps = [f"(-({a}))" for a in ca]
-                    else:
-                        op = {
-                            "tupleMultiplyByNumber": "*",
-                            "tupleDivideByNumber": "/",
-                            "tupleIntDivByNumber": "DIV",
-                            "tupleModuloByNumber": "%",
-                        }[ident]
-                        comps = [f"(({a}) {op} ({args[1]}))" for a in ca]
-                    out.append(
-                        "struct("
-                        + ", ".join(
-                            f"{c} AS col{x + 1}"
-                            for x, c in enumerate(comps)
-                        )
-                        + ")"
-                    )
-                elif ident in ("flattenTuple", "tupleToNameValuePairs",
-                               "tupleHammingDistance") or (
-                    ident.startswith("tuple")
-                    and ident[5:6].isupper()
-                    and ident != "tupleElement"  # dispatched below
-                    and ident not in TEMPLATES
-                    and ident not in RENAMES
-                ):
-                    # remaining tuple-typed tail (concat/flatten/
-                    # name-value introspection) — still needs field
-                    # enumeration a text rewrite cannot do generally
-                    raise ValueError(
-                        f"{ident}: needs the struct's field list — "
-                        "spell the fields out (t.col1 + u.col1, …); "
-                        "the arithmetic family (tuplePlus/Minus/"
-                        "Multiply/Divide/Negate/…ByNumber) IS mapped "
-                        "when one side is an inline tuple literal"
-                    )
-                elif ident == "toYearWeek" and len(args) in (1, 2):
-                    # year*100 + week under toWeek's mode semantics
-                    # (MySQL YEARWEEK): mode 0 (default) shifts week-0
-                    # days into the PREVIOUS year's last week; modes
-                    # 1/3 are ISO year·100 + ISO week
-                    t = args[0]
-                    mode = args[1].strip() if len(args) == 2 else "0"
-                    if mode in ("1", "3"):
-                        out.append(
-                            f"(extract(YEAROFWEEK FROM {t}) * 100 "
-                            f"+ weekofyear({t}))"
-                        )
-                    elif mode == "0":
-                        def wk0(d: str) -> str:
-                            off = (
-                                f"pmod(8 - dayofweek("
-                                f"date_trunc('YEAR', {d})), 7)"
-                            )
-                            return f"((dayofyear({d}) - {off} + 6) div 7)"
+    return _walk(toks, 0, len(toks.sql), ctx)
 
-                        prev = f"date_sub(date_trunc('YEAR', {t}), 1)"
-                        out.append(
-                            f"(CASE WHEN {wk0(t)} = 0 THEN "
-                            f"(year({t}) - 1) * 100 + {wk0(prev)} "
-                            f"ELSE year({t}) * 100 + {wk0(t)} END)"
-                        )
-                    else:
-                        raise ValueError(
-                            f"toYearWeek mode {mode} not supported "
-                            "(0, 1, 3 — the toWeek modes)"
-                        )
-                elif ident in ("toTimeWithFixedDate",
-                               "addTupleOfIntervals",
-                               "subtractTupleOfIntervals"):
-                    raise ValueError(
-                        f"{ident}: no static rewrite — add the "
-                        "intervals individually (addDays/addHours/… "
-                        "are mapped, type-preserving)"
-                    )
-                elif ident == "convertCharset":
-                    raise ValueError(
-                        "convertCharset: charset transcoding needs ICU "
-                        "— decode/encode at ingestion, or a pandas "
-                        "kernel for exotic charsets"
-                    )
-                elif ident in (
-                    "multiFuzzyMatchAny",
-                    "multiFuzzyMatchAnyIndex",
-                    "multiFuzzyMatchAllIndices",
-                    "multiFuzzyMatchAnyUTF8",
-                    "multiFuzzyMatchAnyIndexUTF8",
-                    "multiFuzzyMatchAllIndicesUTF8",
-                ) and len(args) == 3:
-                    # r13: LITERAL-pattern tier — Sellers approximate
-                    # substring matching (strkernels.fuzzy_match_
-                    # indices): a pattern matches when some substring
-                    # of the haystack is within edit distance d. CH
-                    # runs hyperscan fuzzy REGEX matching; regex
-                    # metacharacters in a pattern therefore reject
-                    # toward multiMatchAny. Codepoint distances = the
-                    # UTF8 variants' semantics (byte variants coincide
-                    # on ASCII, same note as levenshteinDistanceUTF8).
-                    pats = args[2].strip()
-                    if not (pats.lower().startswith("array(")
-                            and pats.endswith(")")):
-                        raise ValueError(
-                            f"{ident}: needs a literal pattern array "
-                            "(['p1', 'p2', …])"
-                        )
-                    metas = set(".^$*+?()[]{}|\\")
-                    for p_ in lex(pats[6:-1]).split():
-                        p_ = p_.strip()
-                        if not is_quoted(p_):
-                            raise ValueError(
-                                f"{ident}: every pattern must be a "
-                                "string literal"
-                            )
-                        if set(p_[1:-1]) & metas:
-                            raise ValueError(
-                                f"{ident}: pattern {p_} contains "
-                                "regex metacharacters — the fuzzy "
-                                "tier here matches LITERAL patterns "
-                                "(Sellers DP); for plain regex use "
-                                "multiMatchAny (mapped)"
-                            )
-                    idx = (f"__ch_fuzzy_indices({args[0]}, {args[1]}, "
-                           f"{pats})")
-                    base = ident[:-4] if ident.endswith("UTF8") else ident
-                    if base == "multiFuzzyMatchAny":
-                        # boolean like the multiMatchAny mapping
-                        out.append(f"(size({idx}) > 0)")
-                    elif base == "multiFuzzyMatchAnyIndex":
-                        # CH returns SOME matching index (hyperscan
-                        # order is unspecified) — the lowest is the
-                        # deterministic choice; 0 when none match.
-                        # concat(…, array(0)) keeps NULL→NULL while
-                        # supplying the empty-match 0 in ONE kernel
-                        # evaluation.
-                        out.append(
-                            f"try_element_at(concat({idx}, "
-                            f"array(0)), 1)"
-                        )
-                    else:
-                        out.append(idx)
-                elif ident.startswith("multiFuzzyMatch"):
-                    raise ValueError(
-                        f"{ident}: only the 3-arg literal-pattern "
-                        "forms map (Any/AnyIndex/AllIndices, Sellers "
-                        "DP kernel) — for plain regex use "
-                        "multiMatchAny (mapped) or the "
-                        "editDistance/ngramSearch kernels"
-                    )
-                elif ident in ("extractAllGroupsHorizontal",
-                               "extractAllGroupsVertical",
-                               "extractAllGroups") and len(args) == 2:
-                    # static-group-count unroll (the extractGroups
-                    # precedent): Horizontal = one array per GROUP
-                    # across all matches (regexp_extract_all per
-                    # group); Vertical (= bare extractAllGroups) =
-                    # one array per MATCH, transposed from the same
-                    # columns. Literal pattern required — the group
-                    # count is the unroll bound.
-                    pat = args[1].strip()
-                    if not (pat.startswith("'") and pat.endswith("'")):
-                        raise ValueError(
-                            f"{ident} needs a literal pattern "
-                            "(group count is static)"
-                        )
-                    ng = _regex_capture_groups(pat[1:-1])
-                    if ng == 0:
-                        raise ValueError(
-                            f"{ident}: pattern has no capture groups"
-                        )
-                    cols = ", ".join(
-                        f"regexp_extract_all({args[0]}, {pat}, {g})"
-                        for g in range(1, ng + 1)
-                    )
-                    if ident == "extractAllGroupsHorizontal":
-                        out.append(f"array({cols})")
-                    else:
-                        # transpose; sequence(1,0) runs BACKWARDS on
-                        # zero matches, hence the size guard (slice
-                        # gives the typed empty array<array<string>>)
-                        row = ", ".join(
-                            f"element_at(element_at(__eg, {g}), __ei)"
-                            for g in range(1, ng + 1)
-                        )
-                        out.append(
-                            f"element_at(transform(array(array({cols}"
-                            f")), __eg -> CASE WHEN "
-                            f"size(element_at(__eg, 1)) = 0 THEN "
-                            f"slice(__eg, 1, 0) ELSE transform("
-                            f"sequence(1, size(element_at(__eg, 1))), "
-                            f"__ei -> array({row})) END), 1)"
-                        )
-                elif ident in ("ULIDStringToDateTime", "generateULID"):
-                    raise ValueError(
-                        f"{ident}: ULID needs Crockford base32 — use "
-                        "generateUUIDv4/uuid() for ids or a pandas "
-                        "kernel for ULID interop"
-                    )
-                elif ident == "mapApply" and len(args) == 2:
-                    # mapApply((k, v) -> (k', v'), m) — the lambda
-                    # returns a TUPLE, which Spark spells struct();
-                    # zip_with over (keys, values) binds the SAME two
-                    # lambda variables, so params pass through intact
-                    lam, m = args[0], args[1]
-                    depth, pos = 0, -1
-                    for li in range(len(lam) - 1):
-                        c = lam[li]
-                        if c in "([":
-                            depth += 1
-                        elif c in ")]":
-                            depth -= 1
-                        elif depth == 0 and lam[li : li + 2] == "->":
-                            pos = li
-                            break
-                    if pos < 0:
-                        raise ValueError(
-                            "mapApply: first argument must be a "
-                            "lambda ((k, v) -> (k2, v2))"
-                        )
-                    head = lam[:pos].strip()
-                    body = lam[pos + 2 :].strip()
-                    if not (
-                        body.startswith("(") and body.endswith(")")
-                    ):
-                        raise ValueError(
-                            "mapApply: the lambda must return a "
-                            "(key, value) TUPLE literal"
-                        )
-                    parts = lex(body[1:-1]).split()
-                    if len(parts) != 2:
-                        raise ValueError(
-                            "mapApply: the lambda tuple must have "
-                            f"exactly 2 elements, got {len(parts)}"
-                        )
-                    hp = head[1:-1] if (
-                        head.startswith("(") and head.endswith(")")
-                    ) else head
-                    if len([p for p in hp.split(",") if p.strip()]) != 2:
-                        raise ValueError(
-                            "mapApply: the lambda takes exactly "
-                            "(key, value)"
-                        )
-                    out.append(
-                        f"map_from_entries(zip_with(map_keys({m}), "
-                        f"map_values({m}), ({hp}) -> "
-                        f"struct({parts[0].strip()}, "
-                        f"{parts[1].strip()})))"
-                    )
-                elif ident in ("arrayEnumerateUniqRanked",
-                               "arrayEnumerateDenseRanked",
-                               "arrayNormalizedGini",
-                               "solveLinearEquation",
-                               "mapPartialSort", "mapPartialReverseSort",
-                               "mapApply"):
-                    # (plain 1-arg mapSort/mapReverseSort are mapped in
-                    # TEMPLATES; their comparator-lambda forms reject
-                    # via the surplus-argument check there)
-                    raise ValueError(
-                        f"{ident}: no faithful static rewrite — for "
-                        "map lambdas use transform_keys/"
-                        "transform_values (Spark natives); ranked/"
-                        "Gini forms need a pandas kernel"
-                    )
-                elif ident.startswith(("lemmatize", "synonyms",
-                                       "detectLanguage",
-                                       "detectCharset",
-                                       "detectProgrammingLanguage",
-                                       "detectTonality")):
-                    raise ValueError(
-                        f"{ident}: needs NLP model files — for "
-                        "language ID use operators/textstats.py's "
-                        "n-gram heuristic (the pipeline's langid "
-                        "operator)"
-                    )
-                elif ident in ("distinctDynamicTypes",
-                               "distinctJSONPaths",
-                               "distinctJSONPathsAndTypes",
-                               "JSONAllPaths", "JSONAllPathsWithTypes",
-                               "JSONDynamicPaths",
-                               "JSONDynamicPathsWithTypes",
-                               "JSONSharedDataPaths",
-                               "JSONSharedDataPathsWithTypes",
-                               "dynamicType", "dynamicElement",
-                               "variantType", "variantElement",
-                               "isDynamicElementInSharedData"):
-                    raise ValueError(
-                        f"{ident}: Dynamic/Variant/JSON-type "
-                        "introspection is engine-internal — use "
-                        "schema_of_json / json_object_keys"
-                    )
-                elif ident == "arrayReduceInRanges":
-                    raise ValueError(
-                        "arrayReduceInRanges: per-range re-aggregation "
-                        "— explode the ranges and use arrayReduce/"
-                        "aggregate per slice (slice(arr, start, len))"
-                    )
-                elif ident in ("nothing", "kql_array_sort_asc",
-                               "kql_array_sort_desc",
-                               "structureToProtobufSchema",
-                               "structureToCapnProtoSchema",
-                               "formatQuery", "formatQueryOrNull",
-                               "formatQuerySingleLine",
-                               "formatQuerySingleLineOrNull",
-                               "flameGraph"):
-                    raise ValueError(
-                        f"{ident}: engine-internal helper (KQL "
-                        "dialect / schema codegen / CH-dialect "
-                        "pretty-printer) with no Spark analog"
-                    )
-                elif ident in ("bech32Encode", "bech32Decode",
-                               "sqidEncode", "sqidDecode", "crc64"):
-                    raise ValueError(
-                        f"{ident}: niche codec without a stdlib-exact "
-                        "implementation here — base32/base64/base58/"
-                        "punycode/crc32 are mapped"
-                    )
-                elif ident in ("wkt", "svg", "readWKT"):
-                    raise ValueError(
-                        f"{ident}: geometry serialization is out of "
-                        "scope — pointInPolygon/geohash*/"
-                        "greatCircleDistance are the mapped geo surface"
-                    )
-                elif ident in ("initializeAggregation",
-                               "finalizeAggregation"):
-                    raise ValueError(
-                        f"{ident}: the aggregate base of a -State "
-                        "value is not inferable from the argument at "
-                        "translate time — use the explicit xMerge(col)"
-                        " spelling (supported for sum/count/min/max/"
-                        "any/anyLast/avg/uniq/uniqExact states), or "
-                        "compute the final aggregate directly"
-                    )
-                elif ident == "estimateCompressionRatio":
-                    raise ValueError(
-                        "estimateCompressionRatio: estimates CH codec "
-                        "(ZSTD/LZ4/Delta…) behavior this engine does "
-                        "not ship — parquet's own column encodings "
-                        "apply here; compare storage via "
-                        "system.parts/ddl stats instead"
-                    )
-                elif ident == "icebergHash":
-                    raise ValueError(
-                        "icebergHash: Iceberg bucket-transform "
-                        "hashing — use pmod(xxhash64(x), n) for "
-                        "stable bucketing (same caveat as the "
-                        "consistent-hash rejects: moving keys "
-                        "between engines breaks placement anyway)"
-                    )
-                elif ident in ("readWKTPoint", "readWKTPolygon",
-                               "readWKTMultiPolygon", "readWKTRing",
-                               "icebergTruncate"):
-                    raise ValueError(
-                        f"{ident}: out of scope (WKT parsing / "
-                        "Iceberg partition transforms) — "
-                        "pointInPolygon and geohash* are the mapped "
-                        "geo surface"
-                    )
-                elif ident == "runningConcurrency":
-                    raise ValueError(
-                        "runningConcurrency is BLOCK-ORDER-dependent "
-                        "(deprecated in ClickHouse itself) — use "
-                        "maxIntersections or an interval self-join"
-                    )
-                elif ident == "stem":
-                    # round 12: English via the Porter 1980 kernel
-                    # (strkernels.porter_stem — the algorithm Snowball
-                    # 'porter' implements; Snowball's revised 'english'
-                    # differs on a few suffix rules, documented there).
-                    # round 13: French/German/Spanish/Russian via the
-                    # published Snowball rule sets
-                    # (functions/snowball.py — suffix tables only, no
-                    # data files). The kernel stems each whitespace
-                    # token, so both the single-word CH call shape and
-                    # sentence normalization work.
-                    if len(args) != 2:
-                        raise ValueError("stem(language, string)")
-                    lang = args[0].strip().strip("'\"").lower()
-                    kernels = {
-                        "en": "__ch_stem", "english": "__ch_stem",
-                        "porter": "__ch_stem",
-                        "fr": "__ch_stem_fr", "french": "__ch_stem_fr",
-                        "de": "__ch_stem_de", "german": "__ch_stem_de",
-                        "es": "__ch_stem_es", "spanish": "__ch_stem_es",
-                        "ru": "__ch_stem_ru", "russian": "__ch_stem_ru",
-                        "pt": "__ch_stem_pt",
-                        "portuguese": "__ch_stem_pt",
-                        "it": "__ch_stem_it", "italian": "__ch_stem_it",
-                        # round 14: Scandinavian set + Dutch
-                        "sv": "__ch_stem_sv", "swedish": "__ch_stem_sv",
-                        "no": "__ch_stem_no",
-                        "norwegian": "__ch_stem_no",
-                        "da": "__ch_stem_da", "danish": "__ch_stem_da",
-                        "nl": "__ch_stem_nl", "dutch": "__ch_stem_nl",
-                        # round 15: Finnish (published two-level
-                        # algorithm; gradation via step 6(e) only,
-                        # exactly as libstemmer does)
-                        "fi": "__ch_stem_fi",
-                        "finnish": "__ch_stem_fi",
-                    }
-                    if lang not in kernels:
-                        raise ValueError(
-                            f"stem({args[0]}, …): implemented languages"
-                            " are en (Porter 1980), fr, de, es, ru, "
-                            "pt, it, sv, no, da, nl, fi (Snowball "
-                            "rule sets) — the rest are not shipped"
-                        )
-                    out.append(f"{kernels[lang]}({args[1]})")
-                elif ident in ("randomString",
-                               "randomFixedString",
-                               "randomStringUTF8"):
-                    raise ValueError(
-                        f"{ident}: arbitrary-byte random strings — use "
-                        "randomPrintableASCII(n) (mapped) for "
-                        "printable test data"
-                    )
-                elif ident in ("randPoisson", "randBinomial",
-                               "randNegativeBinomial", "randChiSquared",
-                               "randStudentT", "randFisherF",
-                               "randLogNormal"):
-                    raise ValueError(
-                        f"{ident}: no closed-form single-expression "
-                        "sampler — compose from randExponential/"
-                        "randNormal/randBernoulli (all mapped), e.g. "
-                        "lognormal = exp(randNormal(m, s))"
-                    )
-                elif ident.startswith(("wordShingleSimHash",
-                                       "wordShingleMinHash",
-                                       "ngramSimHash", "ngramMinHash")):
-                    raise ValueError(
-                        f"{ident}: sketch-hash scalars are mapped as "
-                        "OPERATORS — operators/dedup.py simhash_dedup /"
-                        " minhash_lsh_dedup (fused Arrow kernels with "
-                        "recall contracts)"
-                    )
-                elif ident.startswith(("simpleJSON", "visitParam")) and (
-                    ident not in TEMPLATES
-                ):
-                    # the *ExtractString forms are mapped above (top-
-                    # level-path delta accepted in an earlier round);
-                    # the REST of the family rejects
-                    raise ValueError(
-                        f"{ident}: the simpleJSON/visitParam family "
-                        "matches the FIRST key occurrence at ANY depth "
-                        "(not a path) — get_json_object cannot "
-                        "reproduce that; use JSONExtract* (mapped, "
-                        "top-level path semantics)"
-                    )
-                elif ident in ("JSONExtractArrayRaw",
-                               "JSONExtractKeysAndValuesRaw"):
-                    raise ValueError(
-                        f"{ident}: RAW re-serialization — "
-                        "get_json_object unquotes scalars; use "
-                        "from_json with an explicit Spark schema"
-                    )
-                elif ident in ("arraySplit", "arrayReverseSplit") and (
-                    len(args) >= 2
-                ):
-                    out.append(
-                        _array_split_sql(
-                            ident == "arrayReverseSplit",
-                            args[0], args[1:],
-                        )
-                    )
-                elif ident in ("arraySplit", "arrayReverseSplit"):
-                    raise ValueError(
-                        f"{ident}: needs (lambda, arr1[, arr2 …])"
-                    )
-                elif ident in ("emptyArrayToSingle",
-                               "arrayReduceInRanges",
-                               "groupArrayInsertAt"):
-                    raise ValueError(
-                        f"{ident}: no static Spark rewrite — "
-                        "emptyArrayToSingle's default element is "
-                        "TYPE-dependent (invisible to a text rewrite);"
-                        " groupArrayInsertAt: "
-                        "map_from_entries(collect_list(struct(pos, x)))"
-                    )
-                elif ident == "JSONExtractKeysAndValues":
-                    vt = args[-1].strip().strip("'\"")
-                    type_map = {"String": "string", "Int64": "bigint",
-                                "UInt64": "bigint", "Float64": "double",
-                                "Bool": "boolean"}
-                    if len(args) != 2 or vt not in type_map:
-                        raise ValueError(
-                            "JSONExtractKeysAndValues supports the "
-                            "(json, 'ScalarType') form only"
-                        )
-                    out.append(
-                        f"map_entries(from_json({args[0]}, "
-                        f"'map<string,{type_map[vt]}>'))"
-                    )
-                elif ident == "JSONType":
-                    raise ValueError(
-                        "JSONType: Spark's JSON reader has no type "
-                        "introspection — branch on try-parses "
-                        "(json_array_length IS NOT NULL → Array, "
-                        "json_object_keys IS NOT NULL → Object)"
-                    )
-                elif ident in ("cityHash64", "sipHash64", "farmHash64",
-                               "farmFingerprint64", "metroHash64",
-                               "halfMD5", "sipHash128", "cityHash128",
-                               "murmurHash2_64", "murmurHash3_64",
-                               "murmurHash3_128", "wyHash64",
-                               "gccMurmurHash", "kafkaMurmurHash",
-                               # wave 8: the keyed/reference SipHash
-                               # spellings share the stable-uniform
-                               # contract (and the same non-parity)
-                               "sipHash64Keyed", "sipHash128Keyed",
-                               "sipHash128Reference",
-                               "sipHash128ReferenceKeyed"):
-                    # NOT bit-compatible with CH (different algorithm/
-                    # seed); the dominant uses — sampling buckets,
-                    # shuffling, grouping — need a stable uniform hash,
-                    # which xxhash64 is. Comparing against CH-computed
-                    # literals will NOT match; hash-value parity is not
-                    # achievable cross-engine here.
-                    out.append(f"xxhash64({', '.join(args)})")
-                elif ident == "makeDateTime64" and len(args) in (
-                    6, 7, 8,
-                ):
-                    # r12: make_timestamp takes fractional seconds, so
-                    # the 7-arg fraction form folds in as
-                    # sec + fraction/10^precision (precision literal,
-                    # CH default 3)
-                    if len(args) == 6:
-                        out.append(
-                            f"make_timestamp({', '.join(args)})"
-                        )
-                    else:
-                        prec = args[7] if len(args) == 8 else "3"
-                        try:
-                            scale = 10 ** int(prec)
-                        except ValueError:
-                            raise ValueError(
-                                "makeDateTime64: precision must be a "
-                                "literal integer"
-                            ) from None
-                        sec = (
-                            f"(CAST({args[5]} AS DOUBLE) + "
-                            f"CAST({args[6]} AS DOUBLE) / {scale})"
-                        )
-                        out.append(
-                            "make_timestamp("
-                            + ", ".join(args[:5])
-                            + f", {sec})"
-                        )
-                elif ident in ("javaHashUTF16LE",):
-                    raise ValueError(
-                        "javaHashUTF16LE: users of this spelling "
-                        "expect EXACT Java hashCode over UTF-16LE "
-                        "bytes, which the BMP-scoped javaHash mapping "
-                        "cannot promise — use javaHash (exact for BMP "
-                        "strings) or xxhash64 for fingerprints"
-                    )
-                elif ident == "JSONRemoveDynamoDBAnnotations":
-                    raise ValueError(
-                        "JSONRemoveDynamoDBAnnotations: DynamoDB "
-                        "export-format rewriter — transform the JSON "
-                        "with from_json/to_json on an explicit schema"
-                    )
-                elif ident == "nested":
-                    raise ValueError(
-                        "nested: constructs CH Nested-type column "
-                        "groups (engine-internal) — use "
-                        "arrays_zip/struct arrays"
-                    )
-                elif ident in ("seriesDecomposeSTL",
-                               "seriesOutliersDetectTukey",
-                               "seriesPeriodDetectFFT"):
-                    raise ValueError(
-                        f"{ident}: signal-processing kernels (STL "
-                        "decomposition / FFT periodograms) are out of "
-                        "scope — compute with numpy in a pandas UDF "
-                        "over the collected series if needed"
-                    )
-                elif ident in ("MD4", "RIPEMD160", "BLAKE3"):
-                    raise ValueError(
-                        f"{ident}: digest not available in the OpenSSL/"
-                        "hashlib baseline — use MD5/SHA-2 (mapped) or "
-                        "xxhash64 for non-cryptographic fingerprints"
-                    )
-                elif ident in ("kostikConsistentHash",
-                               "yandexConsistentHash",
-                               "jumpConsistentHash"):
-                    raise ValueError(
-                        f"{ident}: algorithm-specific bucket placement "
-                        "(moving keys between engines breaks the "
-                        "consistency property anyway) — use "
-                        "pmod(xxhash64(x), n) for stable bucketing"
-                    )
-                elif ident in ("__byteSwapu8", "__byteSwapu16",
-                               "__byteSwapu32", "__byteSwaps8",
-                               "__byteSwaps16",
-                               "__byteSwaps32") and len(args) == 1:
-                    # renamed by _rewrite_byteswap: the inner typed
-                    # cast told us the width and signedness
-                    out.append(
-                        _byteswap_sql(
-                            int(ident[11:]), args[0],
-                            signed=ident[10] == "s",
-                        )
-                    )
-                elif ident == "byteSwap":
-                    raise ValueError(
-                        "byteSwap: WIDTH-dependent (a UInt32 swap and "
-                        "a UInt64 swap differ) — write the width as a "
-                        "typed cast, byteSwap(toUInt32(x)) (8/16/32-"
-                        "bit mapped, r12); 64-bit stays rejected (the "
-                        "swapped UInt64 exceeds BIGINT) — compose "
-                        "shiftleft/shiftrightunsigned masks for that"
-                    )
-                elif ident.startswith("sparseGrams"):
-                    # wave 8: the Hashes/UTF8 variants silently passed
-                    # through to UNRESOLVED_ROUTINE before — same
-                    # reject as the base tokenizer
-                    raise ValueError(
-                        f"{ident}: CH-specific sparse n-gram "
-                        "tokenizer — use tokens()/ngrams() (mapped) or "
-                        "the operators/dedup shingle kernels"
-                    )
-                elif ident in ("colorSRGBToOKLCH", "colorOKLCHToSRGB"):
-                    # wave 8 (25.9, experimental): the OKLab hue/gamma
-                    # conventions aren't pinned by CH docs yet — no
-                    # parity target to implement against
-                    raise ValueError(
-                        f"{ident}: experimental color-space "
-                        "conversion with unpinned output conventions "
-                        "— compute the OKLab transform explicitly "
-                        "over the (r, g, b) columns"
-                    )
-                elif ident.startswith("numericIndexedVector"):
-                    # wave 8 (25.7, experimental): bit-sliced-index
-                    # vector family
-                    raise ValueError(
-                        f"{ident}: experimental BSI vector type — "
-                        "model the vector as map<int,double> and use "
-                        "the map/transform functions, or groupArray"
-                    )
-                elif ident == "roundBankers" and len(args) in (1, 2):
-                    # banker's rounding → Spark bround (HALF_EVEN)
-                    out.append(f"bround({', '.join(args)})")
-                elif ident == "splitByString" and len(args) == 2:
-                    # CH splitByString(sep, s) splits on a LITERAL
-                    # separator; Spark's split takes a REGEX — quote
-                    # every metachar. Decidable only for literal
-                    # separators.
-                    sep = args[0].strip()
-                    if not (sep.startswith("'") and sep.endswith("'")):
-                        raise ValueError(
-                            "splitByString needs a literal separator "
-                            "(Spark's split is regex-based; a dynamic "
-                            "separator cannot be safely quoted)"
-                        )
-                    body = sep[1:-1]
-                    quoted = re.sub(r"([.*+?^${}()|\[\]\\])", r"\\\1", body)
-                    # and re-escape backslashes for the SQL literal
-                    quoted = quoted.replace("\\", "\\\\").replace("'", "''")
-                    out.append(f"split({args[1].strip()}, '{quoted}')")
-                elif ident == "dateName" and len(args) == 2:
-                    # dateName('part', t) → string name/number of the
-                    # part (literal part only)
-                    part = args[0].strip().strip("'\"").lower()
-                    pats = {
-                        "year": "cast(year({0}) as string)",
-                        "quarter": "cast(quarter({0}) as string)",
-                        "month": "date_format({0}, 'MMMM')",
-                        "week": "cast(weekofyear({0}) as string)",
-                        "dayofyear": "cast(dayofyear({0}) as string)",
-                        "day": "cast(day({0}) as string)",
-                        "weekday": "date_format({0}, 'EEEE')",
-                        "hour": "cast(hour({0}) as string)",
-                        "minute": "cast(minute({0}) as string)",
-                        "second": "cast(second({0}) as string)",
-                    }
-                    if part not in pats:
-                        raise ValueError(
-                            f"dateName part {args[0]} not supported"
-                        )
-                    out.append(pats[part].format(args[1]))
-                elif (
-                    re.fullmatch(r"to\w+Or(Null|Zero|Default)", ident)
-                    or ident in ("accurateCast", "accurateCastOrNull",
-                                 "accurateCastOrDefault")
-                ):
-                    # CH's cast-variant contract: OrNull → NULL on
-                    # failure; OrZero → the type default; OrDefault →
-                    # the caller's fallback; accurateCast → THROWS on
-                    # lossy (raise_error branch — a bare non-ANSI cast
-                    # would silently null). "Failure" includes UNSIGNED
-                    # RANGE (UInt8 caps at 255 — the widened signed
-                    # Spark type would happily hold 300) and, for
-                    # accurateCast, FRACTION LOSS (double-round-trip
-                    # inequality); surplus args (e.g. a timezone)
-                    # reject rather than silently drop.
-                    scalar = CH_SCALAR_SPARK
-                    umax = {"UInt8": "255", "UInt16": "65535",
-                            "UInt32": "4294967295", "UInt64": None}
-                    if ident.startswith("accurateCast"):
-                        want_n = 3 if ident.endswith("OrDefault") else 2
-                        if len(args) != want_n:
-                            raise ValueError(
-                                f"{ident} expects {want_n} args "
-                                "(x, 'Type'"
-                                + (", default)" if want_n == 3 else ")")
-                            )
-                        base = args[1].strip().strip("'\"")
-                        sp = scalar.get(base)
-                        if sp is None:
-                            raise ValueError(
-                                f"{ident} type {base!r} not supported"
-                            )
-                        suffix = (
-                            "Null" if ident.endswith("OrNull")
-                            else "Default" if ident.endswith("OrDefault")
-                            else "THROW"
-                        )
-                        extra = args[2:]
-                    else:
-                        cut = ident.rindex("Or")
-                        base, suffix = ident[2:cut], ident[cut + 2 :]
-                        dm = re.fullmatch(r"Decimal(32|64|128)", base)
-                        if dm:
-                            prec = {"32": 9, "64": 18, "128": 38}[
-                                dm.group(1)
-                            ]
-                            if len(args) < 2:
-                                raise ValueError(
-                                    f"{ident} needs a scale argument"
-                                )
-                            sp = f"decimal({prec},{args[1].strip()})"
-                            extra = args[2:]
-                        else:
-                            sp = scalar.get(base)
-                            extra = args[1:]
-                        if sp is None:
-                            raise ValueError(
-                                f"{ident}: no mapping for base type "
-                                f"{base!r}"
-                            )
-                    x = args[0]
-                    want_extra = 1 if suffix == "Default" else 0
-                    if len(extra) != want_extra:
-                        raise ValueError(
-                            f"{ident}: unexpected extra argument(s) — "
-                            "an optional timezone/precision cannot be "
-                            "honored here, raising instead of silently "
-                            "dropping it"
-                        )
-                    tc = f"try_cast({x} as {sp})"
-                    if base in umax:
-                        # out-of-range for the UNSIGNED CH type is a
-                        # cast failure even though the widened signed
-                        # Spark type holds the value
-                        lo = f"try_cast({x} as double) < 0"
-                        hi = (
-                            f" OR try_cast({x} as double) > {umax[base]}"
-                            if umax[base]
-                            else ""
-                        )
-                        tc = f"(CASE WHEN {lo}{hi} THEN NULL ELSE {tc} END)"
-                    if suffix == "Null":
-                        out.append(tc)
-                    elif suffix == "Zero":
-                        zero = {
-                            "string": "''",
-                            "date": "DATE'1970-01-01'",
-                            "timestamp": "TIMESTAMP'1970-01-01 00:00:00'",
-                            "boolean": "false",
-                        }.get(sp, f"cast(0 as {sp})")
-                        out.append(f"coalesce({tc}, {zero})")
-                    elif suffix == "Default":
-                        out.append(
-                            f"coalesce({tc}, cast({extra[0]} as {sp}))"
-                        )
-                    else:  # THROW (accurateCast)
-                        fails = [f"({tc} IS NULL AND ({x}) IS NOT NULL)"]
-                        if sp in ("tinyint", "smallint", "int",
-                                  "bigint", "decimal(38,0)"):
-                            # fraction loss: 1.5 → Int32 must THROW
-                            # (ANSI cast truncates silently)
-                            fails.append(
-                                f"(try_cast({x} as double) IS NOT NULL "
-                                f"AND cast({tc} as double) != "
-                                f"try_cast({x} as double))"
-                            )
-                        out.append(
-                            f"(CASE WHEN {' OR '.join(fails)} THEN "
-                            f"cast(raise_error('accurateCast: value "
-                            f"does not fit {base}') as {sp}) "
-                            f"ELSE {tc} END)"
-                        )
-                elif ident == "toWeek" and len(args) in (1, 2):
-                    # CH toWeek default mode 0: Sunday-first weeks,
-                    # week 0 for days before the year's first Sunday
-                    # (MySQL WEEK(d, 0)); modes 1/3 are the ISO week →
-                    # weekofyear. Other modes rejected loudly.
-                    mode = args[1].strip() if len(args) == 2 else "0"
-                    if mode == "0":
-                        t = args[0]
-                        off = (
-                            f"pmod(8 - dayofweek(date_trunc('YEAR', {t})), 7)"
-                        )
-                        out.append(
-                            f"((dayofyear({t}) - {off} + 6) div 7)"
-                        )
-                    elif mode in ("1", "3"):
-                        out.append(f"weekofyear({args[0]})")
-                    else:
-                        raise ValueError(
-                            f"toWeek mode {mode} not supported (0, 1, 3)"
-                        )
-                elif ident == "numbers" and len(args) in (1, 2):
-                    # CH table function FROM numbers(n) / numbers(
-                    # offset, n) → Spark's range() TVF, aliased to
-                    # CH's column name `number`. Emitted as a subquery
-                    # so it works in any FROM/JOIN position.
-                    if len(args) == 1:
-                        out.append(
-                            f"(SELECT id AS number FROM range({args[0]}))"
-                        )
-                    else:
-                        out.append(
-                            f"(SELECT id AS number FROM range({args[0]}, "
-                            f"({args[0]}) + ({args[1]})))"
-                        )
-                elif ident in ("lagInFrame", "leadInFrame"):
-                    # CH's frame-respecting lag/lead → Spark lag/lead;
-                    # full-frame idiom consumed, narrow frames rejected
-                    # (see _consume_full_frame_over).
-                    fn = "lag" if ident == "lagInFrame" else "lead"
-                    got = _consume_full_frame_over(toks, close + 1, ident, fn)
-                    if got is not None:
-                        spec, nxt = got
-                        out.append(
-                            f"{fn}({', '.join(args)}) "
-                            f"OVER ({translate(spec)})"
-                        )
-                        i = nxt
-                        continue
-                    out.append(f"{fn}({', '.join(args)})")
-                elif ident == "nonNegativeDerivative" and len(args) >= 2:
-                    # CH: per-second rate of change vs the previous row
-                    # in the window, clamped at 0 (counter-reset
-                    # tolerance). Composes as TWO Spark lag() calls
-                    # over the SAME (frame-stripped) window spec:
-                    # greatest(0, Δvalue / Δseconds). First row: lag is
-                    # NULL and greatest() skips NULLs → 0, matching
-                    # CH's default-value-0 first row.
-                    # The optional 3rd interval arg is not supported —
-                    # rejected rather than silently mis-scaled.
-                    if len(args) > 2:
-                        raise ValueError(
-                            "nonNegativeDerivative with an interval "
-                            "argument is not supported; scale the "
-                            "result instead"
-                        )
-                    got = _consume_full_frame_over(
-                        toks, close + 1, ident, "lag"
-                    )
-                    if got is None:
-                        raise ValueError(
-                            "nonNegativeDerivative requires an inline "
-                            "OVER (...) window"
-                        )
-                    spec, nxt = got
-                    ov = f"OVER ({translate(spec)})"
-                    val, ts = args[0], args[1]
-                    out.append(
-                        f"greatest(CAST(0 AS DOUBLE), "
-                        f"(CAST({val} AS DOUBLE) - lag({val}) {ov}) / "
-                        f"(unix_timestamp({ts}) - "
-                        f"unix_timestamp(lag({ts}) {ov})))"
-                    )
-                    i = nxt
-                    continue
-                elif ident in ("dateDiff", "age", "timestampDiff",
-                               "timestamp_diff") and len(args) == 3:
-                    # unit must be a string literal — the rewrite is
-                    # static. dateDiff (+ its timestampDiff aliases)
-                    # counts boundary CROSSINGS (mapped per unit in
-                    # _DATEDIFF_BOUNDARY); age counts COMPLETE units =
-                    # Spark timestampdiff.
-                    u = args[0].strip().strip("'\"").upper()
-                    if ident != "age":
-                        if u not in _DATEDIFF_BOUNDARY:
-                            raise ValueError(
-                                f"dateDiff unit {args[0]} not supported"
-                            )
-                        out.append(
-                            _DATEDIFF_BOUNDARY[u].format(args[1], args[2])
-                        )
-                    else:
-                        if u not in _AGE_UNITS:
-                            raise ValueError(
-                                f"age unit {args[0]} not supported"
-                            )
-                        out.append(
-                            f"timestampdiff({u}, {args[1]}, {args[2]})"
-                        )
-                elif ident == "toStartOfInterval" and len(args) in (
-                    2, 3,
-                ):
-                    # INTERVAL n unit, second-based units only: floor
-                    # the epoch to n·unit_seconds. Month/year intervals
-                    # need calendar arithmetic CH ties to the server
-                    # timezone — rejected rather than approximated.
-                    # 3-arg (r12, CH 24.9+): an explicit ORIGIN defines
-                    # the alignment — floor the origin-relative offset.
-                    parts = args[1].split()
-                    if (
-                        len(parts) != 3
-                        or parts[0].upper() != "INTERVAL"
-                        or not parts[1].isdigit()
-                        or parts[2].upper().rstrip("S") not in _INTERVAL_SECONDS
-                    ):
-                        raise ValueError(
-                            "toStartOfInterval supports INTERVAL n "
-                            "SECOND/MINUTE/HOUR/DAY/WEEK, got "
-                            f"{args[1]!r}"
-                        )
-                    unit = parts[2].upper().rstrip("S")
-                    secs = int(parts[1]) * _INTERVAL_SECONDS[unit]
-                    if len(args) == 3:
-                        # CH's ORIGINAL 3-arg spelling passes a
-                        # TIMEZONE string literal here; only the
-                        # 24.9+ ORIGIN-timestamp form is supported —
-                        # reject the tz spelling loudly instead of
-                        # mis-reading it as an origin (ADVICE r12)
-                        a2 = args[2].strip()
-                        if is_quoted(a2):
-                            raise ValueError(
-                                "toStartOfInterval(t, INTERVAL, "
-                                f"{a2}) timezone variant unsupported"
-                                " — the session timezone is used; "
-                                "pass an origin TIMESTAMP as the "
-                                "3rd argument instead"
-                            )
-                        o = f"unix_timestamp({args[2]})"
-                        out.append(
-                            f"to_timestamp({o} + CAST(floor("
-                            f"(unix_timestamp({args[0]}) - {o}) "
-                            f"/ {secs}) AS BIGINT) * {secs})"
-                        )
-                    else:
-                        # CH aligns week intervals to Monday; epoch 0
-                        # is a Thursday, so shift 3 days pre-floor
-                        off = 259200 if unit == "WEEK" else 0
-                        out.append(
-                            f"to_timestamp(floor((unix_timestamp("
-                            f"{args[0]}) "
-                            f"+ {off}) / {secs}) * {secs} - {off})"
-                        )
-                elif ident in ("tumble", "tumbleStart", "tumbleEnd") \
-                        and len(args) == 2:
-                    # time-window TVF helpers (r12): tumbling windows
-                    # are pure arithmetic — start = the floored
-                    # interval (same machinery as toStartOfInterval),
-                    # end = start + width; tumble() is the (start,
-                    # end) tuple with CH's col1/col2 field names.
-                    # Second-based units only (same constraint and
-                    # reasons as toStartOfInterval).
-                    parts = args[1].split()
-                    if (
-                        len(parts) != 3
-                        or parts[0].upper() != "INTERVAL"
-                        or not parts[1].isdigit()
-                        or parts[2].upper().rstrip("S")
-                        not in _INTERVAL_SECONDS
-                    ):
-                        raise ValueError(
-                            f"{ident} supports INTERVAL n "
-                            "SECOND/MINUTE/HOUR/DAY/WEEK, got "
-                            f"{args[1]!r}"
-                        )
-                    u = parts[2].upper().rstrip("S")
-                    secs = int(parts[1]) * _INTERVAL_SECONDS[u]
-                    off = 259200 if u == "WEEK" else 0
-                    st = (
-                        f"floor((unix_timestamp({args[0]}) + {off}) "
-                        f"/ {secs}) * {secs} - {off}"
-                    )
-                    if ident == "tumbleStart":
-                        out.append(f"to_timestamp({st})")
-                    elif ident == "tumbleEnd":
-                        out.append(f"to_timestamp(({st}) + {secs})")
-                    else:
-                        out.append(
-                            f"struct(to_timestamp({st}) AS col1, "
-                            f"to_timestamp(({st}) + {secs}) AS col2)"
-                        )
-                # (hop/hopStart/hopEnd are lowered by _rewrite_hop
-                # before dispatch: GROUP BY hop → Spark sliding
-                # window() generator, ungrouped → first-window bounds)
-                elif ident.startswith("regionTo") or ident in (
-                    "regionIn", "regionHierarchy",
-                ):
-                    raise ValueError(
-                        f"{ident}: the embedded-geobase dictionaries "
-                        "ship as data files this engine does not "
-                        "have — model regions as a dictionary table "
-                        "and use dictGet"
-                    )
-                elif ident == "toInterval" and len(args) == 2:
-                    # generic toInterval(n, 'unit') (r12, CH 25.x) —
-                    # dispatches onto the typed toIntervalX templates
-                    unit = args[1].strip().strip("'\"").lower()
-                    target = {
-                        "second": "toIntervalSecond",
-                        "minute": "toIntervalMinute",
-                        "hour": "toIntervalHour",
-                        "day": "toIntervalDay",
-                        "week": "toIntervalWeek",
-                        "month": "toIntervalMonth",
-                        "quarter": "toIntervalQuarter",
-                        "year": "toIntervalYear",
-                        "millisecond": "toIntervalMillisecond",
-                        "microsecond": "toIntervalMicrosecond",
-                        "nanosecond": "toIntervalNanosecond",
-                    }.get(unit)
-                    if target is None or unit not in args[1].lower():
-                        raise ValueError(
-                            "toInterval(n, unit): the unit must be a "
-                            "string literal (second…year or "
-                            "sub-second), got " + args[1]
-                        )
-                    out.append(
-                        _tmpl_apply(
-                            target, TEMPLATES[target], [args[0]]
-                        )
-                    )
-                elif ident == "formatDateTime" and len(args) >= 2:
-                    # CH %-specifiers → Spark datetime pattern, literal
-                    # formats only (non-literal formats can't be mapped
-                    # statically — raise rather than emit wrong output).
-                    # A 3rd timezone argument composes the toTimeZone
-                    # mapping: render the same instant in that zone
-                    # (sound because session.py pins the session tz to
-                    # UTC — date_format would otherwise render UTC).
-                    if len(args) > 3:
-                        raise ValueError(
-                            "formatDateTime takes at most 3 arguments"
-                        )
-                    if len(args) == 3:
-                        args = [
-                            f"from_utc_timestamp({args[0]}, {args[2]})",
-                            args[1],
-                        ]
-                    fmt = args[1].strip()
-                    if not (fmt.startswith("'") and fmt.endswith("'")):
-                        raise ValueError(
-                            "formatDateTime needs a literal format string"
-                        )
-                    # pattern-level quotes (literal text) must be
-                    # doubled when embedded in the SQL string literal
-                    pat = _ch_datetime_format(fmt[1:-1]).replace("'", "''")
-                    out.append(f"date_format({args[0]}, '{pat}')")
-                elif ident in ("extract", "extractAll") and len(args) == 2:
-                    # CH extract/extractAll: first capture group when
-                    # the pattern has one, else the whole match.
-                    # Decidable only for literal patterns; group 1 on a
-                    # group-less pattern THROWS under ANSI, so
-                    # non-literal patterns conservatively take the
-                    # whole match. Capture groups are COUNTED (escaped
-                    # '\(' and '(?:' excluded) — substring-'(' would
-                    # pick group 1 on zero-group regexes.
-                    pat = args[1].strip()
-                    grp = (
-                        1
-                        if pat.startswith("'")
-                        and _regex_capture_groups(pat[1:-1]) > 0
-                        else 0
-                    )
-                    fn = (
-                        "regexp_extract_all"
-                        if ident == "extractAll"
-                        else "regexp_extract"
-                    )
-                    out.append(f"{fn}({args[0]}, {args[1]}, {grp})")
-                elif ident == "file":
-                    # CH file() table function → Spark direct-path SQL
-                    # (SELECT … FROM parquet.`/path`). Self-describing
-                    # formats only: CSV/TSV need header/delimiter
-                    # options the path syntax cannot carry — use
-                    # sources.read_table for those.
-                    path = args[0].strip()
-                    if not is_quoted(path):
-                        raise ValueError("file() needs a literal path")
-                    p = path[1:-1]
-                    fmt = (
-                        args[1].strip().strip("'\"").lower()
-                        if len(args) >= 2
-                        else p.rsplit(".", 1)[-1].lower()
-                    )
-                    fmt_map = {
-                        "parquet": "parquet",
-                        "orc": "orc",
-                        "jsoneachrow": "json",
-                        "ndjson": "json",
-                        "jsonlines": "json",
-                        "json": "json",
-                    }
-                    if fmt not in fmt_map:
-                        raise ValueError(
-                            f"file() format {fmt!r} unsupported in SQL "
-                            "position (CSV/TSV need header/delimiter "
-                            "options) — load via sources.read_table and "
-                            "pass it as a view"
-                        )
-                    out.append(f"{fmt_map[fmt]}.`{p}`")
-                elif ident in ("s3", "url", "hdfs", "azureBlobStorage",
-                               "gcs", "s3Cluster", "remote", "remoteSecure",
-                               "cluster", "clusterAllReplicas"):
-                    raise ValueError(
-                        f"{ident}() table function: remote-storage access "
-                        "goes through the cluster's Hadoop FS config — "
-                        "read with spark.read against the fs URL and pass "
-                        "the DataFrame as a view"
-                    )
-                elif ident in ("dateAdd", "dateSub", "timestampAdd",
-                               "timestampSub", "timestamp_add",
-                               "timestamp_sub") and len(args) == 3:
-                    # dateAdd(unit, n, d) → the type-preserving add{U}s
-                    # family (same interval arithmetic, swapped args)
-                    unit = args[0].strip().strip("'\"").lower()
-                    neg = ident.lower().endswith(("sub", "_sub"))
-                    base_name = f"add{unit.capitalize()}s"
-                    if base_name not in TEMPLATES:
-                        raise ValueError(
-                            f"{ident}: unsupported unit {unit!r}"
-                        )
-                    n_arg = f"-({args[1]})" if neg else args[1]
-                    out.append(
-                        _tmpl_apply(
-                            base_name, TEMPLATES[base_name],
-                            [args[2], n_arg],
-                        )
-                    )
-                elif ident in ("multiplyDecimal", "divideDecimal"):
-                    if len(args) != 3:
-                        raise ValueError(
-                            f"{ident}: pass the result scale explicitly "
-                            "(CH defaults it from the operand types, "
-                            "which a text rewrite cannot see)"
-                        )
-                    op = "*" if ident == "multiplyDecimal" else "/"
-                    out.append(
-                        f"cast(({args[0]}) {op} ({args[1]}) "
-                        f"as decimal(38, {args[2]}))"
-                    )
-                elif ident == "now64":
-                    # precision arg accepted ≤6 (Spark timestamps are
-                    # µs); beyond that the extra digits cannot exist.
-                    # A TIMEZONE argument must not drop silently — the
-                    # session is pinned UTC, so the rendered wall-clock
-                    # would differ.
-                    if len(args) >= 2:
-                        raise ValueError(
-                            "now64 with a timezone: compose "
-                            "toTimeZone(now64(), tz) instead — "
-                            "dropping the zone would silently render "
-                            "UTC"
-                        )
-                    if args and args[0].strip():
-                        p_ = args[0].strip()
-                        if p_.isdigit() and int(p_) > 6:
-                            raise ValueError(
-                                "now64 precision > 6: Spark timestamps "
-                                "are microsecond-resolution"
-                            )
-                    out.append("current_timestamp()")
-                elif ident == "extractGroups" and len(args) == 2:
-                    pat = args[1].strip()
-                    if not (pat.startswith("'") and pat.endswith("'")):
-                        raise ValueError(
-                            "extractGroups needs a literal pattern "
-                            "(group count is static)"
-                        )
-                    n_groups = _regex_capture_groups(pat[1:-1])
-                    if n_groups == 0:
-                        raise ValueError(
-                            "extractGroups: pattern has no capture groups"
-                        )
-                    parts = ", ".join(
-                        f"regexp_extract({args[0]}, {pat}, {g})"
-                        for g in range(1, n_groups + 1)
-                    )
-                    out.append(f"array({parts})")
-                elif ident in ("encrypt", "decrypt",
-                               "aes_encrypt_mysql", "aes_decrypt_mysql"):
-                    # Spark's aes_encrypt/aes_decrypt cover the
-                    # deterministic mode; CBC/GCM prepend a random
-                    # IV/nonce in Spark, so their BYTES can never match
-                    # CH's (which takes the IV as an argument) — only
-                    # ECB is mappable byte-for-byte
-                    if len(args) != 3:
-                        raise ValueError(
-                            f"{ident} takes (mode, input, key) — an IV "
-                            "argument only applies to CBC/GCM, which "
-                            "don't map (Spark self-generates the IV)"
-                        )
-                    mode = args[0].strip().strip("'\"").lower()
-                    if not mode.endswith("-ecb"):
-                        raise ValueError(
-                            f"{ident} mode {mode!r}: Spark generates "
-                            "its own IV/nonce for CBC/GCM so the "
-                            "ciphertext layout differs from CH — only "
-                            "the -ecb modes map"
-                        )
-                    if ident.startswith(("encrypt", "aes_encrypt")):
-                        out.append(
-                            f"aes_encrypt({args[1]}, {args[2]}, 'ECB')"
-                        )
-                    else:
-                        out.append(
-                            f"cast(aes_decrypt({args[1]}, {args[2]}, "
-                            f"'ECB') as string)"
-                        )
-                elif ident == "mapConcat":
-                    # CH: FIRST occurrence of a key wins; Spark's
-                    # map_concat THROWS on duplicates — fold through
-                    # the mapUpdate shape with the EARLIER map winning
-                    if len(args) < 2:
-                        raise ValueError("mapConcat needs ≥2 maps")
-                    acc = args[0]
-                    upd = TEMPLATES["mapUpdate"]
-                    for nxt in args[1:]:
-                        # mapUpdate(a, b): b wins → to make the earlier
-                        # acc win, update nxt WITH acc
-                        acc = upd.format(nxt, acc)
-                    out.append(acc)
-                elif ident in ("parseDateTime", "parseDateTimeOrNull",
-                               "parseDateTimeOrZero"):
-                    # CH %-format → Spark pattern via the shared
-                    # formatDateTime converter (literal formats only)
-                    if len(args) != 2:
-                        raise ValueError(
-                            f"{ident}(s, fmt): 2-arg literal-format "
-                            "form only (a timezone argument would "
-                            "silently re-zone — compose toTimeZone)"
-                        )
-                    fmt = args[1].strip()
-                    if not (fmt.startswith("'") and fmt.endswith("'")):
-                        raise ValueError(
-                            f"{ident} needs a literal format string"
-                        )
-                    pat = _ch_datetime_format(fmt[1:-1]).replace("'", "''")
-                    fn = (
-                        "try_to_timestamp"
-                        if ident != "parseDateTime"
-                        else "to_timestamp"
-                    )
-                    expr = f"{fn}({args[0]}, '{pat}')"
-                    if ident == "parseDateTimeOrZero":
-                        expr = (
-                            f"coalesce({expr}, "
-                            "TIMESTAMP'1970-01-01 00:00:00')"
-                        )
-                    out.append(expr)
-                elif ident in ("firstSignificantSubdomain",
-                               "cutToFirstSignificantSubdomain",
-                               "cutToFirstSignificantSubdomainWithWWW",
-                               "firstSignificantSubdomainCustom"):
-                    raise ValueError(
-                        f"{ident}: needs the public-suffix list (a "
-                        "data file, not a function) — join against a "
-                        "suffix table instead"
-                    )
-                elif ident == "decodeHTMLComponent" and len(args) == 1:
-                    # html.unescape kernel — the full HTML5 entity
-                    # table (functions/strkernels.py)
-                    out.append(f"__ch_html_dec({args[0]})")
-                elif ident == "demangle":
-                    raise ValueError(
-                        "demangle: C++ ABI demangling is "
-                        "engine-internal"
-                    )
-                elif ident in ("JSONExtractRaw", "JSONExtractArrayRaw",
-                               "JSONExtractKeysAndValuesRaw",
-                               "JSONAllPaths", "JSONAllPathsWithTypes"):
-                    raise ValueError(
-                        f"{ident}: RAW JSON-text extraction has no "
-                        "faithful Spark analog (get_json_object "
-                        "unquotes scalars) — use the typed "
-                        "JSONExtract* family or from_json with an "
-                        "explicit schema"
-                    )
-                elif ident in _STR_KERNELS and len(args) == 1:
-                    # stdlib-exact Python kernels
-                    # (functions/strkernels.py): punycode is Python's
-                    # RFC 3492 codec, idna the IDNA2003 ToASCII/
-                    # ToUnicode pair, base58 the Bitcoin alphabet with
-                    # leading-zero → '1' padding; throwing CH forms
-                    # return NULL on invalid input, try* forms ''
-                    out.append(f"{_STR_KERNELS[ident]}({args[0]})")
-                elif ident == "mortonEncode" and len(args) == 2:
-                    # 2-D Morton code as a pure JVM bit-interleave
-                    # fold (first argument → even bits, matching CH);
-                    # inputs must fit UInt32 like CH's 2-arg form.
-                    # The result is CH's UInt64 BITS in a signed
-                    # BIGINT: codes with bit 63 set print negative but
-                    # sort/join/decode identically
-                    x_, y_ = args
-                    # shiftright() FUNCTION, not the >> operator: the
-                    # parser rejects '>>' inside struct(...) arguments
-                    # (ambiguous with struct<...> type syntax), and
-                    # this expression nests into mortonDecode's struct
-                    out.append(
-                        "aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
-                        " (__acc, __i) -> __acc"
-                        " + shiftleft(shiftright("
-                        f"CAST({x_} AS BIGINT), __i) & 1, 2 * __i)"
-                        " + shiftleft(shiftright("
-                        f"CAST({y_} AS BIGINT), __i) & 1, 2 * __i + 1))"
-                    )
-                elif ident == "mortonDecode" and len(args) == 2:
-                    dims = args[0].strip()
-                    if dims != "2":
-                        raise ValueError(
-                            "mortonDecode: only the 2-D form is "
-                            "mapped (mortonDecode(2, code))"
-                        )
-                    c_ = args[1]
-                    # promote via 1L * (…), NOT CAST (the parser
-                    # rejects a lambda inside CAST — the nested
-                    # mortonEncode's '->' fails there); shiftright()
-                    # FUNCTION, not '>>' (rejected inside struct(...)
-                    # args); distinct lambda names avoid shadowing the
-                    # nested encode's variables
-                    deint = (
-                        "aggregate(sequence(0, 31), CAST(0 AS BIGINT),"
-                        " (__dacc, __dj) -> __dacc"
-                        " + shiftleft(shiftright("
-                        "CAST(1 AS BIGINT) * ({c}),"
-                        " 2 * __dj + {o}) & 1, __dj))"
-                    )
-                    out.append(
-                        "struct("
-                        + deint.format(c=c_, o=0) + " AS col1, "
-                        + deint.format(c=c_, o=1) + " AS col2)"
-                    )
-                elif ident in ("punycodeEncode", "punycodeDecode",
-                               "tryPunycodeDecode", "idnaEncode",
-                               "tryIdnaEncode", "idnaDecode",
-                               "toBase58", "base58Encode",
-                               "base58Decode", "tryBase58Decode",
-                               "decodeHTMLComponent", "mortonEncode",
-                               "mortonDecode"):
-                    raise ValueError(
-                        f"{ident}: wrong arity {len(args)} — the "
-                        "mapped forms take one string argument "
-                        "(morton: mortonEncode(x, y) / "
-                        "mortonDecode(2, code))"
-                    )
-                elif ident == "hilbertEncode" and len(args) in (1, 2):
-                    # r12: classic xy2d kernel (stats.hilbert_xy2d).
-                    # Locality contract matches CH; curve ORIENTATION
-                    # may differ from CH's lookup tables (the
-                    # cityHash→xxhash intent policy — don't mix
-                    # encodings across engines). 1-arg form is the
-                    # identity, as documented.
-                    if len(args) == 1:
-                        out.append(f"CAST({args[0]} AS BIGINT)")
-                    else:
-                        out.append(
-                            f"__ch_hilbert_enc(CAST({args[0]} AS "
-                            f"BIGINT), CAST({args[1]} AS BIGINT))"
-                        )
-                elif ident == "hilbertDecode" and len(args) == 2:
-                    # hilbertDecode(n, code): n=1 identity tuple,
-                    # n=2 the d2xy inverse (tuple via col1/col2 —
-                    # same shape as mortonDecode)
-                    if args[0].strip() == "1":
-                        out.append(
-                            f"struct(CAST({args[1]} AS BIGINT) "
-                            "AS col1)"
-                        )
-                    elif args[0].strip() == "2":
-                        dec = f"__ch_hilbert_dec(CAST({args[1]} AS BIGINT))"
-                        out.append(
-                            f"struct(element_at({dec}, 1) AS col1, "
-                            f"element_at({dec}, 2) AS col2)"
-                        )
-                    else:
-                        raise ValueError(
-                            "hilbertDecode: the Hilbert curve here "
-                            "is 2-D — n must be the literal 1 or 2"
-                        )
-                elif ident in ("hilbertEncode", "hilbertDecode"):
-                    raise ValueError(
-                        f"{ident}: 2-D forms only — "
-                        f"{ident}(x, y) / hilbertDecode(2, code)"
-                    )
-                elif (
-                    ident.startswith(("__bitRotL", "__bitRotR"))
-                    and len(args) == 2
-                ):
-                    # renamed by the typed-cast pre-pass (r12): the
-                    # inner to*IntW cast told us width and signedness
-                    left = ident.startswith("__bitRotL")
-                    tag = ident[9:]
-                    out.append(
-                        _bitrotate_sql(
-                            int(tag[1:]), left, args[0], args[1],
-                            signed=tag[0] == "s",
-                        )
-                    )
-                elif ident in ("bitRotateLeft", "bitRotateRight"):
-                    raise ValueError(
-                        f"{ident}: rotation width is the CH INTEGER "
-                        "TYPE's width — write it as a typed cast, "
-                        f"{ident}(toUInt32(x), n) (8/16/32-bit mapped,"
-                        " r12); 64-bit rotation can set the sign bit "
-                        "past BIGINT's unsigned range — compose "
-                        "shiftleft/shiftrightunsigned masks for that"
-                    )
-                elif ident in _SIM_KERNELS and len(args) == 2:
-                    # exact fuzzy-similarity kernels
-                    # (functions/strkernels.py): OSA Damerau-
-                    # Levenshtein, Jaro/Jaro-Winkler (prefix ≤ 4,
-                    # p = 0.1), byte-set Jaccard, positional byte
-                    # Hamming + length diff — niche scalar functions
-                    # on short strings, not scan-hot-path material;
-                    # operators.dedup's n-gram Jaccard remains the
-                    # corpus-scale path
-                    out.append(
-                        f"{_SIM_KERNELS[ident]}({args[0]}, {args[1]})"
-                    )
-                elif ident in _SIM_KERNELS:
-                    raise ValueError(
-                        f"{ident}: takes exactly two string arguments"
-                    )
-                elif ident == "toDecimalString" and len(args) == 2:
-                    n_ = args[1].strip()
-                    if not n_.isdigit():
-                        raise ValueError(
-                            "toDecimalString needs a literal precision"
-                        )
-                    # decimal literals break %f (playbook: format_string
-                    # rejects Decimal) — go through double
-                    out.append(
-                        f"format_string('%.{int(n_)}f', "
-                        f"cast({args[0]} as double))"
-                    )
-                elif ident == "regexpQuoteMeta" and len(args) == 1:
-                    # backslash-escape CH's regex metacharacter set
-                    # \ | ( ) ^ $ . [ ] ? * + { : −  (NUL bytes, which
-                    # CH also escapes, cannot appear in a SQL literal
-                    # and are left as-is)
-                    out.append(
-                        f"regexp_replace({args[0]}, "
-                        "'([\\\\\\\\|()^$.\\\\[\\\\]?*+{:-])', "
-                        "'\\\\\\\\$1')"
-                    )
-                elif ident == "bitSlice" and len(args) in (2, 3):
-                    # round 12: Arrow kernel (strkernels.bit_slice) —
-                    # 1-based MSB-first bit offsets over the UTF-8
-                    # bytes, result zero-padded to whole bytes
-                    # (BINARY); negative offset/length follow CH's
-                    # substring conventions
-                    ln = args[2] if len(args) == 3 else "NULL"
-                    out.append(
-                        f"__ch_bitslice({args[0]}, "
-                        f"CAST({args[1]} AS BIGINT), "
-                        f"CAST({ln} AS BIGINT))"
-                    )
-                elif ident == "toRelativeWeekNum":
-                    raise ValueError(
-                        "toRelativeWeekNum: no faithful static "
-                        "rewrite (the epoch alignment is "
-                        "engine-defined) — use toStartOfWeek or "
-                        "dateDiff('week', …) instead"
-                    )
-                elif ident == "tupleElement" and len(args) == 3:
-                    raise ValueError(
-                        "tupleElement: the 3-arg default form only "
-                        "matters for Variant/JSON dynamic tuples — on "
-                        "typed structs a missing field is an ANALYSIS "
-                        "error; use the 2-arg form"
-                    )
-                elif ident == "tupleElement" and len(args) == 2:
-                    # tuple(...) → struct(...) auto-names fields
-                    # col1..colN (1-based like CH); a literal name
-                    # addresses a named-tuple field directly.
-                    idx = args[1].strip()
-                    if idx.isdigit():
-                        out.append(f"({args[0]}).col{idx}")
-                    elif len(idx) >= 3 and is_quoted(idx):
-                        out.append(f"({args[0]}).{idx[1:-1]}")
-                    else:
-                        raise ValueError(
-                            "tupleElement needs a literal index or "
-                            "name — a runtime-computed element cannot "
-                            "be resolved to a struct field statically"
-                        )
-                elif ident == "untuple" and len(args) == 1:
-                    base = args[0].strip()
-                    if not base.replace(".", "").isidentifier():
-                        raise ValueError(
-                            "untuple supports a simple column "
-                            "reference only (expands to col.*)"
-                        )
-                    out.append(f"{base}.*")
-                elif ident in ("dictGet", "dictGetOrNull", "dictGetOrDefault"):
-                    dname = args[0].strip().strip("'\"")
-                    attr = args[1].strip().strip("'\"")
-                    sub = f"(SELECT {attr} FROM {dname} WHERE __key = {args[2]})"
-                    if ident == "dictGetOrDefault":
-                        sub = f"coalesce({sub}, {args[3]})"
-                    out.append(sub)
-                elif (
-                    ident.startswith("dictGet")
-                    and re.fullmatch(
-                        r"dictGet(U?Int(8|16|32|64)|Float(32|64)|String"
-                        r"|Date|DateTime|UUID|IPv4|IPv6)(OrDefault)?",
-                        ident,
-                    )
-                ):
-                    # typed dictGet<Type>[OrDefault] spellings: the
-                    # same attribute subquery with the declared cast
-                    ty_raw = ident[len("dictGet"):]
-                    has_def = ty_raw.endswith("OrDefault")
-                    if has_def:
-                        ty_raw = ty_raw[: -len("OrDefault")]
-                    dd_ty = CH_SCALAR_SPARK[ty_raw]
-                    if len(args) != (4 if has_def else 3):
-                        raise ValueError(
-                            f"{ident}('dict', 'attr', key"
-                            + (", default)" if has_def else ")")
-                            + " is the mapped form"
-                        )
-                    dname = args[0].strip().strip("'\"")
-                    attr = args[1].strip().strip("'\"")
-                    sub = (
-                        f"cast((SELECT {attr} FROM {dname} "
-                        f"WHERE __key = {args[2]}) as {dd_ty})"
-                    )
-                    if has_def:
-                        sub = f"coalesce({sub}, cast({args[3]} as {dd_ty}))"
-                    out.append(sub)
-                elif ident in ("overlay", "overlayUTF8") and (
-                    len(args) in (3, 4)
-                ):
-                    # wave 7 (24.7): overlay(s, replace, offset[, len])
-                    # — Spark's overlay shares the 1-based contract;
-                    # the byte/char distinction is moot for the
-                    # single-byte data the engine's columns carry
-                    tail = f", {args[3]}" if len(args) == 4 else ""
-                    out.append(
-                        f"overlay({args[0]}, {args[1]}, "
-                        f"{args[2]}{tail})"
-                    )
-                elif ident == "UUIDToNum":
-                    # wave 7, narrowed in r15: the default big-endian
-                    # variant is byte-identical to the r10
-                    # UUIDStringToNum mapping (this engine keeps UUIDs
-                    # as canonical strings, so the two names coincide).
-                    # UUIDStringToNum/UUIDNumToString themselves stay
-                    # on template dispatch (r10 mappings, pinned in
-                    # tests/test_audit_r10.py) — r14's blanket reject
-                    # here shadowed them and shipped a regression.
-                    variant = (
-                        args[1].strip() if len(args) == 2 else "1"
-                    )
-                    if len(args) in (1, 2) and variant == "1":
-                        out.append(
-                            f"unhex(replace({args[0]}, '-', ''))"
-                        )
-                    elif len(args) == 2 and variant == "2":
-                        # Microsoft mixed-endian: bytes reversed
-                        # within the first three dash groups (4+2+2),
-                        # tail unchanged. Single-bind the UUID via the
-                        # transform wrapper (hex pairs are re-read 9×).
-                        out.append(
-                            "element_at(transform(array(replace("
-                            f"{args[0]}, '-', '')), __uh -> unhex("
-                            "concat(substring(__uh, 7, 2), "
-                            "substring(__uh, 5, 2), "
-                            "substring(__uh, 3, 2), "
-                            "substring(__uh, 1, 2), "
-                            "substring(__uh, 11, 2), "
-                            "substring(__uh, 9, 2), "
-                            "substring(__uh, 15, 2), "
-                            "substring(__uh, 13, 2), "
-                            "substring(__uh, 17)))), 1)"
-                        )
-                    else:
-                        raise ValueError(
-                            "UUIDToNum: variant must be the literal 1 "
-                            "(big-endian, default) or 2 (Microsoft "
-                            "mixed-endian)"
-                        )
-                elif ident == "dictGetAll":
-                    raise ValueError(
-                        "dictGetAll: returns EVERY match of a "
-                        "RegExpTree dictionary (unsupported layout) — "
-                        "express the rule set as a table and use a "
-                        "JOIN, or dictGet for single-value lookups"
-                    )
-                elif ident.startswith("timeSeries") and (
-                    ident.endswith("ToGrid")
-                    or ident in ("timeSeriesFromGrid",)
-                ):
-                    # 25.6 experimental PromQL-resampling family
-                    raise ValueError(
-                        f"{ident}: the experimental PromQL grid-"
-                        "resampling family needs aligned-grid state — "
-                        "resample declaratively: group by "
-                        "toStartOfInterval(ts, INTERVAL n SECOND) and "
-                        "fill gaps with ORDER BY … WITH FILL"
-                    )
-                elif ident == "dictHas" and len(args) == 2:
-                    dname = args[0].strip().strip("'\"")
-                    out.append(
-                        f"((SELECT count(1) FROM {dname} "
-                        f"WHERE __key = {args[1]}) > 0)"
-                    )
-                elif ident in ("dictGetHierarchy", "dictGetChildren",
-                               "dictGetDescendants", "dictIsIn"):
-                    raise ValueError(
-                        f"{ident}: hierarchical-dictionary traversal "
-                        "is recursive — flatten the hierarchy at load "
-                        "or use an iterative self-join"
-                    )
-                elif ident == "throwIf" and len(args) in (1, 2):
-                    # wave 6: assert_true throws when its condition is
-                    # FALSE — throwIf throws when TRUE; CH returns 0
-                    # when it doesn't throw (the CASE supplies it,
-                    # assert_true yields NULL)
-                    msg = f", {args[1]}" if len(args) == 2 else ""
-                    out.append(
-                        f"(CASE WHEN assert_true(NOT CAST({args[0]} "
-                        f"AS BOOLEAN){msg}) IS NULL THEN 0 END)"
-                    )
-                elif ident == "groupConcat" and len(args) in (2, 3):
-                    # wave 6: the non-parameterized delimiter form
-                    # groupConcat(x, sep) (24.x docs); the limit tail
-                    # is order-dependent → reject
-                    if len(args) == 3:
-                        raise ValueError(
-                            "groupConcat(x, sep, limit): the limit "
-                            "keeps the FIRST n values in insertion "
-                            "order (block-order) — drop the limit or "
-                            "use groupArraySorted + array_join"
-                        )
-                    out.append(
-                        f"array_join(collect_list({args[0]}), "
-                        f"{args[1]})"
-                    )
-                elif ident in ("joinGet", "joinGetOrNull"):
-                    # joinGet('t', 'attr', key…) over a join table of
-                    # the context (ctx.join_tables) — correlated
-                    # scalar subquery (Catalyst decorrelates, AQE
-                    # broadcasts the join-table side: the same plan CH
-                    # serves from its in-memory hash table). joinGet
-                    # returns the attr's TYPE DEFAULT on a miss (types
-                    # captured by join_table()); joinGetOrNull NULL.
-                    if len(args) < 3:
-                        raise ValueError(
-                            f"{ident} needs ('table', 'attr', key…)"
-                        )
-                    jt = args[0].strip().strip("'\"").split(".")[-1]
-                    attr = args[1].strip().strip("'\"")
-                    info = ctx.join_tables.get(jt)
-                    if info is None:
-                        raise ValueError(
-                            f"{ident}: {jt!r} is not registered — "
-                            "call register_join_table(spark, name, "
-                            "df, key_cols) first (the Join-engine "
-                            "analog), or use an explicit LEFT JOIN / "
-                            "dictGet over a registered dictionary"
-                        )
-                    jkeys, jtypes = list(info.keys), info.types
-                    if len(args) - 2 != len(jkeys):
-                        raise ValueError(
-                            f"{ident}: {jt!r} is keyed by "
-                            f"{jkeys} — pass {len(jkeys)} key "
-                            f"expression(s), got {len(args) - 2}"
-                        )
-                    if attr not in jtypes:
-                        raise ValueError(
-                            f"{ident}: {jt!r} has no column "
-                            f"{attr!r} (columns: {sorted(jtypes)})"
-                        )
-                    cond = " AND ".join(
-                        f"{k} = ({a})"
-                        for k, a in zip(jkeys, args[2:])
-                    )
-                    sub = f"(SELECT {attr} FROM {jt} WHERE {cond})"
-                    if ident == "joinGet":
-                        sub = (
-                            f"coalesce({sub}, "
-                            f"{_join_type_default_sql(jtypes[attr])})"
-                        )
-                    out.append(sub)
-                elif ident == "quantilePrometheusHistogram":
-                    raise ValueError(
-                        "quantilePrometheusHistogram: needs Prometheus "
-                        "bucket metadata — compute from the raw "
-                        "observations with quantileExact*/quantileGK"
-                    )
-                elif ident in ("snowflakeIDToDateTime",
-                               "snowflakeIDToDateTime64") and (
-                    len(args) in (1, 2)
-                ):
-                    # NEW-style snowflake pair: epoch param defaults 0
-                    # (the deprecated snowflakeToDateTime keeps the
-                    # Twitter epoch — separate mapping). The 64 variant
-                    # returns DateTime64(3) — timestamp_millis keeps
-                    # the same ms precision (wave 6)
-                    ep = args[1] if len(args) == 2 else "0"
-                    out.append(
-                        f"timestamp_millis(({args[0]} DIV 4194304) "
-                        f"+ ({ep}))"
-                    )
-                elif ident == "dateTime64ToSnowflakeID" and (
-                    len(args) in (1, 2)
-                ):
-                    # millisecond-precision sibling of
-                    # dateTimeToSnowflakeID (r12): ID = (ms − epoch)
-                    # << 22; epoch param defaults 0 like the new pair
-                    ep = args[1] if len(args) == 2 else "0"
-                    out.append(
-                        f"((unix_millis(CAST({args[0]} AS TIMESTAMP))"
-                        f" - ({ep})) * 4194304)"
-                    )
-                elif ident == "dateTimeToSnowflakeID" and (
-                    len(args) in (1, 2)
-                ):
-                    ep = args[1] if len(args) == 2 else "0"
-                    out.append(
-                        f"shiftleft(unix_millis(cast({args[0]} as "
-                        f"timestamp)) - ({ep}), 22)"
-                    )
-                elif ident in ("arrayShiftLeft", "arrayShiftRight") and (
-                    len(args) in (2, 3)
-                ):
-                    # negative n flips direction (CH contract); the
-                    # 2-arg form fills with NULL where CH uses the
-                    # TYPE DEFAULT (0/'') — a text rewrite cannot
-                    # synthesize that; pass the fill explicitly for
-                    # CH-exact output
-                    sh_a, sh_n = args[0], args[1]
-                    fill = (
-                        args[2]
-                        if len(args) == 3
-                        else f"try_element_at({sh_a}, size({sh_a}) + 1)"
-                    )
-                    mag = f"least(abs({sh_n}), size({sh_a}))"
-                    left = (
-                        f"concat(slice({sh_a}, cast({mag} as int) + 1, "
-                        f"size({sh_a})), array_repeat({fill}, "
-                        f"cast({mag} as int)))"
-                    )
-                    right = (
-                        f"concat(array_repeat({fill}, "
-                        f"cast({mag} as int)), slice({sh_a}, 1, "
-                        f"size({sh_a}) - cast({mag} as int)))"
-                    )
-                    if ident == "arrayShiftRight":
-                        left, right = right, left
-                    out.append(
-                        f"(CASE WHEN ({sh_n}) < 0 THEN {right} "
-                        f"ELSE {left} END)"
-                    )
-                elif ident in ("bitTestAll", "bitTestAny") and (
-                    len(args) >= 2
-                ):
-                    # variadic bit probes: ALL/ANY of the listed bit
-                    # positions set
-                    joiner = " AND " if ident == "bitTestAll" else " OR "
-                    out.append(
-                        "("
-                        + joiner.join(
-                            f"(shiftright({args[0]}, "
-                            f"cast({b} as int)) & 1) = 1"
-                            for b in args[1:]
-                        )
-                        + ")"
-                    )
-                elif ident in ("arraySort", "arrayReverseSort") and (
-                    len(args) == 2 and "->" in args[0]
-                ):
-                    # key-lambda sort: Spark array_sort's second arg is
-                    # a COMPARATOR, not a key — build (key, elem)
-                    # structs, sort (struct order = key then elem),
-                    # extract. Ties break on the element, not input
-                    # position (CH is stable; documented delta).
-                    sorted_pairs = (
-                        f"array_sort(zip_with(transform({args[1]}, "
-                        f"{args[0]}), {args[1]}, "
-                        "(__sk, __sv) -> struct(__sk AS col1, "
-                        "__sv AS col2)))"
-                    )
-                    if ident == "arrayReverseSort":
-                        sorted_pairs = f"reverse({sorted_pairs})"
-                    out.append(
-                        f"transform({sorted_pairs}, __sp -> __sp.col2)"
-                    )
-                elif ident == "arrayReverseSort" and len(args) == 1:
-                    out.append(f"reverse(array_sort({args[0]}))")
-                elif ident == "arrayPartialSort" and len(args) == 2:
-                    # CH leaves elements past `limit` in UNSPECIFIED
-                    # order — a fully sorted array is a legal (and the
-                    # only deterministic) refinement
-                    out.append(f"array_sort({args[1]})")
-                elif (
-                    ident == "arrayPartialReverseSort"
-                    and len(args) == 2
-                ):
-                    # same refinement, descending (r12)
-                    out.append(f"reverse(array_sort({args[1]}))")
-                elif ident in ("trunc", "truncate") and len(args) in (1, 2):
-                    # CH trunc is NUMERIC round-toward-zero; Spark's
-                    # trunc is DATE truncation — never pass through
-                    if len(args) == 1:
-                        out.append(
-                            f"(sign({args[0]}) * floor(abs({args[0]})))"
-                        )
-                    else:
-                        out.append(
-                            f"(sign({args[0]}) * floor(abs({args[0]}) "
-                            f"* pow(10, {args[1]})) / pow(10, {args[1]}))"
-                        )
-                elif ident == "format" and len(args) >= 1:
-                    # CH format('{}', x) braces → format_string
-                    # positional %s; needs a literal pattern
-                    fmt_lit = args[0].strip()
-                    if not is_quoted(fmt_lit):
-                        raise ValueError(
-                            "format() needs a literal pattern (the "
-                            "{}-to-%s conversion happens at translate "
-                            "time)"
-                        )
-                    body = fmt_lit[1:-1]
-                    conv = []
-                    fi = 0
-                    while fi < len(body):
-                        ch2 = body[fi]
-                        if ch2 == "{" and fi + 1 < len(body) and (
-                            body[fi + 1] == "{"
-                        ):
-                            conv.append("{")
-                            fi += 2
-                        elif ch2 == "}" and fi + 1 < len(body) and (
-                            body[fi + 1] == "}"
-                        ):
-                            conv.append("}")
-                            fi += 2
-                        elif ch2 == "{":
-                            j2 = body.index("}", fi)
-                            idx_s = body[fi + 1 : j2]
-                            if idx_s == "":
-                                conv.append("%s")
-                            else:
-                                conv.append(f"%{int(idx_s) + 1}$s")
-                            fi = j2 + 1
-                        elif ch2 == "%":
-                            conv.append("%%")
-                            fi += 1
-                        else:
-                            conv.append(ch2)
-                            fi += 1
-                    new_fmt = "".join(conv).replace("'", "\\'")
-                    casts = ", ".join(
-                        f"cast({a} as string)" for a in args[1:]
-                    )
-                    out.append(
-                        f"format_string('{new_fmt}'"
-                        + (f", {casts}" if casts else "")
-                        + ")"
-                    )
-                elif ident == "JSONExtract" and len(args) == 3:
-                    # typed extraction: literal CH scalar type → cast
-                    ch_ty = args[2].strip().strip("'\"")
-                    base_ty = ch_ty.replace("Nullable(", "").rstrip(")")
-                    ty_map = {
-                        "String": "string",
-                        "Bool": "boolean",
-                        "Date": "date",
-                        "DateTime": "timestamp",
-                        "Float32": "double",
-                        "Float64": "double",
-                    }
-                    for w in (8, 16, 32, 64):
-                        ty_map[f"Int{w}"] = "bigint"
-                        ty_map[f"UInt{w}"] = "bigint"
-                    if base_ty not in ty_map:
-                        raise ValueError(
-                            f"JSONExtract type {ch_ty!r}: scalar tiers "
-                            "only (Int*/UInt*/Float*/String/Bool/Date/"
-                            "DateTime) — arrays/tuples need from_json "
-                            "with an explicit Spark schema"
-                        )
-                    out.append(
-                        f"cast(get_json_object({args[0]}, "
-                        f"concat('$.', {args[1]})) as {ty_map[base_ty]})"
-                    )
-                elif ident == "toDecimal256" and len(args) == 2:
-                    # CH scale goes to 76; Spark stops at decimal(38)
-                    # — validate the literal scale here so the cap is
-                    # a loud documented reject, not a late Spark error
-                    try:
-                        sc256 = int(args[1])
-                    except ValueError:
-                        raise ValueError(
-                            "toDecimal256 scale must be a literal "
-                            "integer"
-                        ) from None
-                    if sc256 > 38:
-                        raise ValueError(
-                            f"toDecimal256(x, {sc256}): scale exceeds "
-                            "the decimal(38) cap Spark can represent"
-                        )
-                    out.append(f"cast({args[0]} as decimal(38, {sc256}))")
-                elif ident == "toDateTime64" and len(args) in (2, 3):
-                    if len(args) == 3:
-                        raise ValueError(
-                            "toDateTime64 timezone argument is not "
-                            "supported (session timezone is pinned "
-                            "UTC) — use toTimeZone for display shifts"
-                        )
-                    try:
-                        prec_dt = int(args[1])
-                    except ValueError:
-                        raise ValueError(
-                            "toDateTime64 precision must be a literal "
-                            "integer"
-                        ) from None
-                    if prec_dt >= 6:
-                        # Spark timestamps are micros — 6 is the cap
-                        out.append(f"cast({args[0]} as timestamp)")
-                    else:
-                        scale_dt = 10 ** (6 - prec_dt)
-                        out.append(
-                            f"timestamp_micros((unix_micros(cast("
-                            f"{args[0]} as timestamp)) DIV {scale_dt})"
-                            f" * {scale_dt})"
-                        )
-                elif ident in ("makeDate", "makeDate32") and (
-                    len(args) in (2, 3)
-                ):
-                    if len(args) == 3:
-                        out.append(f"make_date({', '.join(args)})")
-                    else:
-                        # CH 2-arg form: (year, day_of_year)
-                        out.append(
-                            f"date_add(make_date({args[0]}, 1, 1), "
-                            f"cast({args[1]} as int) - 1)"
-                        )
-                elif ident == "arrayPartialShuffle" and len(args) in (1, 2):
-                    # CH shuffles the first `limit` elements and leaves
-                    # the REST in unspecified order — a full shuffle is
-                    # a legal refinement of both halves (the seeded
-                    # 3-arg form rejects: Spark SQL's shuffle exposes
-                    # no seed)
-                    out.append(f"shuffle({args[0]})")
-                elif ident == "arrayPartialShuffle":
-                    raise ValueError(
-                        "arrayPartialShuffle: the seeded form cannot "
-                        "be reproduced (Spark SQL's shuffle() has no "
-                        "seed argument) — drop the seed for an "
-                        "unseeded shuffle"
-                    )
-                elif ident in ("changeYear", "changeMonth", "changeDay",
-                               "changeHour", "changeMinute",
-                               "changeSecond") and len(args) == 2:
-                    # recompose via make_timestamp with ONE field
-                    # swapped. Always returns a DateTime (CH preserves
-                    # Date-in → Date-out; a text rewrite cannot branch
-                    # on the runtime type — cast the result if needed).
-                    # Out-of-range values error under ANSI, like CH
-                    # throws. Fraction preserved via the formatted
-                    # seconds.
-                    x = f"cast({args[0]} as timestamp)"
-                    parts = {
-                        "changeYear": 0, "changeMonth": 1,
-                        "changeDay": 2, "changeHour": 3,
-                        "changeMinute": 4, "changeSecond": 5,
-                    }
-                    comps = [
-                        f"year({x})", f"month({x})", f"day({x})",
-                        f"hour({x})", f"minute({x})",
-                        f"cast(date_format({x}, 'ss.SSSSSS') "
-                        f"as decimal(9, 6))",
-                    ]
-                    comps[parts[ident]] = f"({args[1]})"
-                    out.append(f"make_timestamp({', '.join(comps)})")
-                elif ident == "cutURLParameter" and len(args) == 2:
-                    # remove name=value (and its separator) from the
-                    # query string: mid-position 'k=v&', then a
-                    # trailing '&k=v', then a lone '?k=v' keeping the
-                    # '?' (CH's observed shapes). Param name regex-
-                    # quoted as an expression, so non-literal names
-                    # work too.
-                    qk = (
-                        f"regexp_replace({args[1]}, "
-                        "'([\\\\\\\\|()^$.\\\\[\\\\]?*+{:-])', "
-                        "'\\\\\\\\$1')"
-                    )
-                    s1 = (
-                        f"regexp_replace({args[0]}, "
-                        f"concat('([?&])', {qk}, '=[^&#]*&'), '$1')"
-                    )
-                    s2 = (
-                        f"regexp_replace({s1}, "
-                        f"concat('&', {qk}, '=[^&#]*'), '')"
-                    )
-                    out.append(
-                        f"regexp_replace({s2}, "
-                        f"concat('\\\\?', {qk}, '=[^&#]*'), '?')"
-                    )
-                elif ident == "generateUUIDv7" and not args:
-                    # real RFC 9562 v7 layout: 48-bit unix millis,
-                    # version nibble 7, variant 10xx, random tail
-                    # (md5-of-rand hex as the entropy source)
-                    ts12 = (
-                        "lpad(lower(hex(unix_millis("
-                        "current_timestamp()))), 12, '0')"
-                    )
-                    rnd = "md5(cast(rand() as string))"
-                    out.append(
-                        f"concat(substring({ts12}, 1, 8), '-', "
-                        f"substring({ts12}, 9, 4), '-7', "
-                        f"substring({rnd}, 1, 3), '-', "
-                        f"elt(cast(floor(rand() * 4) + 1 as int), "
-                        f"'8', '9', 'a', 'b'), "
-                        f"substring({rnd}, 4, 3), '-', "
-                        f"substring({rnd}, 8, 12))"
-                    )
-                elif ident == "topK" and len(args) == 1:
-                    # bare spelling: CH defaults k = 10
-                    out.append(
-                        PARAMETERIZED["topK"].format(
-                            p0="10", a0=args[0], params="10", params1=""
-                        )
-                    )
-                elif ident == "replaceRegexpOne" and len(args) == 3:
-                    # first-match-only regex replace: anchor a lazy
-                    # prefix group and re-emit it. Only safe when the
-                    # replacement is a LITERAL without backreferences
-                    # (the prefix group shifts every group number).
-                    repl = args[2].strip()
-                    is_lit = is_quoted(repl)
-                    if not is_lit or re.search(
-                        r"[\\$]\d", repl[1:-1]
-                    ):
-                        raise ValueError(
-                            "replaceRegexpOne: only literal "
-                            "replacements without backreferences are "
-                            "supported (the implementation prepends a "
-                            "capture group, shifting group numbers) — "
-                            "use replaceRegexpAll or splice manually"
-                        )
-                    # the user pattern goes inside a NON-CAPTURING
-                    # group: a bare top-level alternation ('a|b')
-                    # appended after the lazy-prefix anchor would bind
-                    # loosely — '^((?:.*?))a|b' lets the 'b' branch
-                    # match unanchored anywhere (not first-occurrence)
-                    # with an empty $1
-                    out.append(
-                        f"regexp_replace({args[0]}, "
-                        f"concat('(?s)^((?:.*?))(?:', {args[1]}, ')'), "
-                        f"concat('$1', {repl}))"
-                    )
-                elif (
-                    ident in ("length", "empty", "notEmpty")
-                    and len(args) == 1
-                    and _is_arrayish(args[0])
-                ):
-                    # CH length/empty/notEmpty are POLYMORPHIC —
-                    # string length AND array/map size — where Spark's
-                    # length is string-only (r13 fuzz seed 20021:
-                    # length(splitByChar('-', s)) failed analysis).
-                    # A static translator can't see column types, so
-                    # dispatch on the translated argument's SYNTAX:
-                    # known array/map-producing spellings → size().
-                    # Array-typed COLUMN references still need the CH
-                    # spelling's string form replaced by size() at the
-                    # call site — documented delta.
-                    if ident == "length":
-                        out.append(f"size({args[0]})")
-                    elif ident == "empty":
-                        out.append(f"(size({args[0]}) = 0)")
-                    else:
-                        out.append(f"(size({args[0]}) > 0)")
-                elif ident in (
-                    "arrayElement", "arrayElementOrNull"
-                ) and len(args) == 2:
-                    # explicit-call spellings of the subscript
-                    # operator — CH arrayElement works on maps too,
-                    # so the index cast follows the same array-vs-map
-                    # classification as a[k] (r15 self-review: the
-                    # unconditional CAST broke arrayElement(m, 'key')
-                    # under ANSI). try_element_at because 4.1.2's
-                    # ANSI element_at returns the LAST element for a
-                    # NULL index (fuzz v6 seed 51694).
-                    idx = args[1]
-                    if _elem_needs_cast(args[0], idx, ctx):
-                        idx = f"CAST({idx} AS INT)"
-                    expr = f"try_element_at({args[0]}, {idx})"
-                    if ident == "arrayElementOrNull" and (
-                        _elem_base_class(args[0], ctx) != "map"
-                    ):
-                        # CH returns NULL for array index 0; a map
-                        # key 0 is a legitimate lookup
-                        expr = (
-                            f"(CASE WHEN ({idx}) = 0 THEN NULL "
-                            f"ELSE {expr} END)"
-                        )
-                    out.append(expr)
-                elif ident in TEMPLATES:
-                    out.append(_tmpl_apply(ident, TEMPLATES[ident], args))
-                elif ident in RENAMES:
-                    out.append(f"{RENAMES[ident]}({', '.join(args)})")
-                elif (
-                    ident[:1].islower()
-                    and ident.endswith(
-                        ("State", "Merge", "MergeState", "SimpleState")
-                    )
-                ):
-                    # -State/-Merge combinators (round 12): supported
-                    # for the plain-state bases (sum/count/min/max/
-                    # any/anyLast/avg/uniq/uniqExact — see _STATE_SQL);
-                    # everything else still rejects loudly inside
-                    # _state_combinator_sql with the alternatives.
-                    out.append(_state_combinator_sql(ident, args))
-                elif ident[:1].islower() and ident.endswith("Resample"):
-                    # single-paren spelling — the combinator REQUIRES
-                    # the parameterized form (handled above)
-                    raise ValueError(
-                        f"{ident}: use the parameterized form "
-                        f"{ident}(start, end, step)(args…, key)"
-                    )
-                elif (
-                    ident.endswith("Distinct")
-                    and ident[: -len("Distinct")]
-                    in ("sum", "avg", "count", "min", "max", "groupArray")
-                    and len(args) == 1
-                ):
-                    # -Distinct combinator: aggregate over the distinct
-                    # value set (clickhouse combinators doc)
-                    base = ident[: -len("Distinct")]
-                    fn = RENAMES.get(base, base)
-                    out.append(f"{fn}(DISTINCT {args[0]})")
-                elif (
-                    ident.endswith("Array")
-                    and ident[: -len("Array")] in ("sum", "min", "max", "count", "avg")
-                    and len(args) == 1
-                ) or (
-                    ident.endswith("ArrayIf")
-                    and ident[: -len("ArrayIf")] in (
-                        "sum", "min", "max", "count", "avg")
-                    and len(args) == 2
-                ):
-                    # -Array combinator: aggregate over all elements of
-                    # the group's arrays — composes a per-row array fold
-                    # with the scalar aggregate (stays one partial agg,
-                    # no explode). -ArrayIf additionally CASE-nulls the
-                    # array on non-matching rows (size(NULL) is NULL,
-                    # so the element counts skip them too)
-                    if ident.endswith("ArrayIf"):
-                        base = ident[: -len("ArrayIf")]
-                        a = f"(CASE WHEN {args[1]} THEN {args[0]} END)"
-                    else:
-                        base = ident[: -len("Array")]
-                        a = args[0]
-                    fold = (
-                        f"aggregate({a}, cast(0 as double),"
-                        f" (acc, x) -> acc + x)"
-                    )
-                    if base == "avg":
-                        out.append(f"(sum({fold}) / sum(size({a})))")
-                    elif base == "count":
-                        # counts ELEMENTS across the group's arrays,
-                        # not rows
-                        out.append(f"sum(size({a}))")
-                    elif base == "sum":
-                        out.append(f"sum({fold})")
-                    else:  # min/max over all elements
-                        out.append(f"{base}(array_{base}({a}))")
-                elif ident == "medianArray" and len(args) == 1:
-                    # median over ALL elements of the group's arrays
-                    # (r12): collected-flatten + the exact element
-                    # selection at ⌊0.5·n⌋ (the QuantileExact formula —
-                    # a deterministic refinement of CH's sampling
-                    # median, like the other exact-tier mappings)
-                    out.append(
-                        "element_at(transform(array(array_sort("
-                        f"flatten(collect_list({args[0]})))), __ma -> "
-                        "CASE WHEN size(__ma) = 0 THEN NULL ELSE "
-                        "element_at(__ma, CAST(floor(0.5 * "
-                        "size(__ma)) AS INT) + 1) END), 1)"
-                    )
-                elif ident.endswith("OrNull") and ident[:-6] in (
-                    "median", "medianExact", "medianTDigest",
-                    "medianTiming",
-                ) and len(args) == 1:
-                    # median family (r12): the percentile mappings
-                    # already return NULL on empty groups — apply the
-                    # base template directly
-                    base = ident[:-6]
-                    out.append(
-                        _tmpl_apply(base, TEMPLATES[base], args)
-                    )
-                elif ident.endswith("OrNull") and ident[:-6] in (
-                    "sum", "avg", "min", "max", "any", "anyLast",
-                    "count", "uniq", "uniqExact",
-                ):
-                    # -OrNull: NULL instead of the default on empty
-                    # groups. Spark's sum/avg/min/max/any_value already
-                    # return NULL there, so those map to the base; the
-                    # zero-returning counters get a nullif
-                    base = ident[:-6]
-                    inner = ", ".join(args) if args else "*"
-                    if base == "count":
-                        out.append(f"nullif(count({inner}), 0)")
-                    elif base in ("uniq", "uniqExact"):
-                        fn = (
-                            "approx_count_distinct"
-                            if base == "uniq" else "count"
-                        )
-                        d = "DISTINCT " if base == "uniqExact" else ""
-                        out.append(f"nullif({fn}({d}{inner}), 0)")
-                    elif base in ("any", "anyLast"):
-                        # ignore-nulls flag: CH aggregates skip NULLs,
-                        # so any([NULL, 5]) is 5, not NULL (matches the
-                        # -IfOrNull branch's any_value(x, true))
-                        out.append(f"any_value({inner}, true)")
-                    else:
-                        out.append(f"{base}({inner})")
-                elif ident.endswith("OrDefault") and ident[:-9] in (
-                    "sum", "count",
-                ):
-                    # -OrDefault: the TYPE default on empty groups —
-                    # synthesizable only where that default is the
-                    # numeric 0 (sum/count); other bases reject below
-                    base = ident[:-9]
-                    inner = ", ".join(args) if args else "*"
-                    if base == "count":
-                        out.append(f"count({inner})")  # already 0
-                    else:
-                        out.append(f"coalesce(sum({inner}), 0)")
-                elif ident.endswith("OrDefault") and ident[:-9] in (
-                    "avg", "min", "max", "any", "anyLast",
-                ):
-                    raise ValueError(
-                        f"{ident}: the empty-group TYPE default is not "
-                        "derivable at translate time — write "
-                        f"coalesce({ident[:-9]}(x), <default>) with "
-                        "the default you mean"
-                    )
-                elif ident == "retention" and args:
-                    # retention(c1, …, ck) → [r1, r1∧r2, …] where
-                    # rj = "condition j fired on SOME event in the
-                    # group" — per-flag bool_or, gated on the anchor
-                    # (CH returns Array(UInt8), hence the INT casts)
-                    flags = ["CAST(bool_or(CAST(({0}) AS BOOLEAN)) "
-                             "AS INT)".format(args[0])]
-                    for a in args[1:]:
-                        flags.append(
-                            f"CAST(bool_or(CAST(({args[0]}) AS "
-                            f"BOOLEAN)) AND bool_or(CAST(({a}) AS "
-                            f"BOOLEAN)) AS INT)"
-                        )
-                    out.append("array(" + ", ".join(flags) + ")")
-                elif ident == "caseWithExpression" and len(args) >= 3:
-                    # caseWithExpression(x, w1, r1, …, else) →
-                    # CASE x WHEN w1 THEN r1 … ELSE else END
-                    if len(args) % 2 != 0:
-                        raise ValueError(
-                            "caseWithExpression needs (x, when1, "
-                            "then1, …, else) — pairs plus a REQUIRED "
-                            "trailing else"
-                        )
-                    whens = "".join(
-                        f" WHEN {args[x]} THEN {args[x + 1]}"
-                        for x in range(1, len(args) - 1, 2)
-                    )
-                    out.append(
-                        f"CASE {args[0]}{whens} ELSE {args[-1]} END"
-                    )
-                elif ident in ("countIfDistinct", "countDistinctIf",
-                               "sumDistinctIf", "sumIfDistinct") and (
-                    len(args) == 2
-                ):
-                    # -If ∘ -Distinct compositions (both orders spell
-                    # the same thing in CH)
-                    fn = "count" if ident.startswith("count") else "sum"
-                    out.append(
-                        f"{fn}(DISTINCT CASE WHEN {args[1]} "
-                        f"THEN {args[0]} END)"
-                    )
-                elif ident == "JSONMergePatch" and len(args) >= 2:
-                    # RFC 7386 merge kernel, folded pairwise for the
-                    # variadic spelling
-                    acc = args[0]
-                    for nxt in args[1:]:
-                        acc = f"__ch_json_merge({acc}, {nxt})"
-                    out.append(acc)
-                elif ident in ("cutIPv6", "IPv6CIDRToRange"):
-                    raise ValueError(
-                        f"{ident}: needs 128-bit address arithmetic — "
-                        "use isIPAddressInRange (mapped) for "
-                        "membership tests, or IPv4CIDRToRange for v4"
-                    )
-                elif ident.startswith("polygon") or ident.startswith(
-                    "multiPolygon"
-                ):
-                    raise ValueError(
-                        f"{ident}: computational-geometry family (boost"
-                        "::geometry in CH) — out of scope; "
-                        "pointInPolygon IS mapped for containment"
-                    )
-                elif ident in ("evalMLMethod", "catboostEvaluate"):
-                    raise ValueError(
-                        f"{ident}: evaluates a server-side ML model "
-                        "artifact — export the model and score with a "
-                        "pandas_udf instead"
-                    )
-                elif ident in ("hasColumnInTable", "errorCodeToName"):
-                    raise ValueError(
-                        f"{ident}: server-catalog introspection — use "
-                        "spark.catalog / DESCRIBE from the driver"
-                    )
-                elif (
-                    ident.endswith("If")
-                    and ident[:-2] in IF_COMBINABLE
-                    and len(args) >= 2
-                ):
-                    # generic -If combinator: wrap every value arg in
-                    # CASE WHEN cond, then dispatch the base aggregate
-                    # through its own TEMPLATES/RENAMES entry
-                    base = ident[:-2]
-                    cond = args[-1]
-                    wrapped = [
-                        f"CASE WHEN {cond} THEN {a} END" for a in args[:-1]
-                    ]
-                    # value-picking aggregates must skip the NULLs the
-                    # CASE wrap manufactures for non-matching rows
-                    ignore_nulls = {
-                        "any": "any_value({0}, true)",
-                        "anyLast": "any_value({0}, true)",
-                        "anyHeavy": "any_value({0}, true)",
-                        "first": "first({0}, true)",
-                        "last": "last({0}, true)",
-                    }
-                    if base in ignore_nulls:
-                        out.append(ignore_nulls[base].format(wrapped[0]))
-                    elif base in TEMPLATES:
-                        out.append(_tmpl_apply(base, TEMPLATES[base], wrapped))
-                    elif base in RENAMES:
-                        out.append(
-                            f"{RENAMES[base]}({', '.join(wrapped)})"
-                        )
-                    else:
-                        out.append(f"{base}({', '.join(wrapped)})")
-                else:
-                    out.append(f"{ident}({', '.join(args)})")
-                i = close + 1
-                continue
-            out.append(ident)
-            i = j
-            continue
-        out.append(c)
+
+_SUBQUERY_HEADS = frozenset({"SELECT", "WITH"})
+
+
+def _args(toks: Tokens, lo: int, hi: int, ctx: QueryContext) -> list[str]:
+    """The translated arguments inside the paren group ``toks.sql[lo:hi]``.
+    A subquery (first word SELECT or WITH) is a statement of its own and
+    goes through :func:`translate`; any other argument is walked on the
+    same tokens, never lexed again."""
+    out = []
+    for a, b in toks.spans(lo, hi):
+        head = toks.sql[a : toks.ends[toks.at(a)]] if a < b else ""
+        if head.upper() in _SUBQUERY_HEADS:
+            out.append(translate(toks.sql[a:b], ctx))
+        else:
+            out.append(_walk(toks, a, b, ctx))
+    return out
+
+
+def _skip_blank(sql: str, k: int, hi: int) -> int:
+    while k < hi and sql[k] in " \t\n":
+        k += 1
+    return k
+
+
+def _walk(toks: Tokens, lo: int, hi: int, ctx: QueryContext) -> str:
+    """The expression walker: ``toks.sql[lo:hi]`` with ``==`` as ``=``,
+    fractional and exponent literals as Spark doubles, and every call
+    ``name(args)`` / ``name(params)(args)`` through :func:`_call`.
+    String literals are copied verbatim."""
+    sql, starts, ends = toks.sql, toks.starts, toks.ends
+    out: list[str] = []
+    i = lo
+    tk = toks.at(lo)
+    while tk < len(starts) and starts[tk] < hi:
+        s, j = starts[tk], ends[tk]
+        if s > i:  # (s < i: a numeric literal's exponent ended in this word)
+            out.append(sql[i:s])
+            i = s
+        c = sql[i]
+        if not (c.isalnum() or c == "_"):
+            if c == "=" and sql[i + 1 : i + 2] == "=":
+                out.append("=")  # CH allows ==
+                j = i + 2
+            else:
+                out.append(sql[i:j])  # one character, or a string literal
+        elif c.isdigit():
+            if sql[i:j].isdigit() and sql[j : j + 1] != ".":
+                out.append(sql[i:j])  # a plain integer
+            else:
+                text, j = _number(toks, tk, i, j, hi)
+                out.append(text)
+        else:
+            k = _skip_blank(sql, j, hi)
+            if k < hi and sql[k] == "(":
+                text, j = _call(toks, sql[i:j], k, hi, ctx)
+                out.append(text)
+            else:
+                out.append(sql[i:j])
+        # past a call or a literal, go on at the token that ends after it
+        tk = tk + 1 if j == ends[tk] else bisect_right(ends, j, tk)
         i = j
-    out.append(sql[i:])
+    out.append(sql[i:hi])
     return "".join(out)
+
+
+def _number(toks: Tokens, tk: int, i: int, j: int, hi: int) -> tuple[str, int]:
+    """The numeric literal that starts at offset ``i`` of word ``tk``,
+    and the offset past it. CH parses 10.0 / 1e6 as Float64; Spark
+    parses them as DECIMAL / double-with-decimal-division quirks — a
+    different arithmetic tower (10.0/3 → DECIMAL(8,6) 3.333333 where CH
+    gives 3.3333333333333335; fuzz r13 seed 5). Fractional/exponent
+    literals become Spark DOUBLE literals via the D suffix. Hex and
+    plain ints pass through; already-suffixed forms stay put."""
+    sql = toks.sql
+    tok = sql[i:j]
+    if tok[:2].lower() == "0x":
+        return tok, j
+    if j + 1 < hi and sql[j] == "." and sql[j + 1].isdigit():
+        k = toks.ends[tk + 2]  # the word after the dot
+        tok, j = tok + sql[j:k], k
+    if tok[-1] in "eE" and j + 1 < hi and sql[j] in "+-" and (
+        sql[j + 1].isdigit()
+    ):
+        k = j + 1
+        while k < hi and sql[k].isdigit():
+            k += 1
+        tok, j = tok + sql[j:k], k
+    low = tok.lower()
+    if ("." in tok or "e" in low) and low[-1] not in "df":
+        tok += "D"
+    return tok, j
+
+
+def _call(toks: Tokens, name: str, k: int, hi: int,
+          ctx: QueryContext) -> tuple[str, int]:
+    """The Spark SQL of the call of ``name`` whose paren group opens at
+    offset ``k``, and the offset past it. A second paren group right
+    after is part of the call when :func:`_param_handler` claims it."""
+    sql = toks.sql
+    close = toks.close(k)
+    c = Call(name, _args(toks, k + 1, close, ctx), ctx, toks, close + 1)
+    k2 = _skip_blank(sql, close + 1, hi)
+    handler = _param_handler(name) if k2 < hi and sql[k2] == "(" else None
+    if handler is None:
+        handler = _CALLS.get(name, _unmapped)
+    else:
+        close2 = toks.close(k2)
+        c.params, c.args = c.args, _args(toks, k2 + 1, close2, ctx)
+        c.end = close2 + 1
+    return handler(c), c.end
+
+
+def _param_handler(name: str):
+    """The handler of ``name(params)(args)``, or None when a paren group
+    after ``name(…)`` is not part of the call."""
+    if name[:1].islower() and name.endswith("Resample"):
+        return _resample_sql
+    if name in PARAMETERIZED or (
+        name.endswith("If") and name[:-2] in PARAMETERIZED
+    ):
+        return _parameterized
+    if name[:1].islower() and name.startswith(_PARAMETRIC_FAMILIES):
+        # two-paren spelling from a known parameterized-aggregate family
+        # with NO mapping: reject here — passing it through emits
+        # `name(p)(a)`, which Spark rejects far later with an
+        # inscrutable parse error (this gap hid quantileExactLow &
+        # friends until round 10)
+        raise ValueError(
+            f"{name}: unmapped parameterized aggregate — check the documented "
+            "(params)(args) signatures of the mapped spellings, or translate "
+            "the single-paren form for its specific guidance"
+        )
+    return None
+
+
+def _parameterized(c: Call) -> str:
+    """``base(params)(args)`` through ``_CALLS[base]``, else through the
+    base's PARAMETERIZED template. ``baseIf(params)(args…, cond)`` takes
+    every value argument through the -If wrap first."""
+    if c.name not in PARAMETERIZED:
+        c.name, c.args = c.name[:-2], _case_when(c.args)
+    return _CALLS.get(c.name, _param_template)(c)
+
+
+def _param_template(c: Call) -> str:
+    mapping = {f"p{x}": p for x, p in enumerate(c.params)}
+    mapping.update({f"a{x}": a for x, a in enumerate(c.args)})
+    mapping["params"] = ", ".join(c.params)
+    mapping["params1"] = ", ".join(c.params[1:])
+    return PARAMETERIZED[c.name].format(**mapping)
+
+
+def _case_when(args: list[str]) -> list[str]:
+    """The -If wrap: every value argument, NULL on the rows where the
+    trailing condition argument is false."""
+    cond = args[-1]
+    return [f"CASE WHEN {cond} THEN {a} END" for a in args[:-1]]
+
+
+def _mapped(name: str, args: list[str]) -> str:
+    """``name(args)`` through its TEMPLATES or RENAMES entry, else as
+    written."""
+    if name in TEMPLATES:
+        return _tmpl_apply(name, TEMPLATES[name], args)
+    return f"{RENAMES.get(name, name)}({', '.join(args)})"
+
+
+def _unmapped(c: Call) -> str:
+    """A call that no ``_CALLS`` entry maps at its arity: its TEMPLATES
+    or RENAMES entry, else the first of ``_FAMILIES`` that claims it,
+    else ``name(args)`` as written."""
+    if c.name not in TEMPLATES and c.name not in RENAMES:
+        for claims, handler in _FAMILIES:
+            if claims(c):
+                return handler(c)
+    return _mapped(c.name, c.args)
+
+
+def _params_only(handler):
+    """``handler`` for ``name(params)(args)``; the single-paren call is
+    unmapped."""
+    return lambda c: _unmapped(c) if c.params is None else handler(c)
+
+
+def _rejecting(msg: str):
+    """A handler that rejects its call with ``msg``, ``{name}`` filled."""
+    def reject(c: Call) -> str:
+        raise ValueError(msg.format(name=c.name))
+    return reject
+
+
+def _by_name(groups) -> dict:
+    """name → value from ``(value, "name name …")`` groups."""
+    return {n: value for value, names in groups for n in names.split()}
+
+
+# ------------------------------------------------------------ call handlers
+# Each takes a Call and returns its Spark SQL. A handler that maps only
+# some arities of its name passes the others to _unmapped, where the
+# name would land without its _CALLS entry.
+
+
+def _multi_if(c: Call) -> str:
+    # variadic: c1,v1,c2,v2,...,else → CASE chain
+    a = c.args
+    whens = "".join(
+        f" WHEN {a[x]} THEN {a[x + 1]}" for x in range(0, len(a) - 1, 2)
+    )
+    return f"CASE{whens} ELSE {a[-1]} END"
+
+
+def _count(c: Call) -> str:
+    return _unmapped(c) if c.args else "count(*)"  # CH allows bare count()
+
+
+def _tuple(c: Call) -> str:
+    if not c.args:
+        return _unmapped(c)
+    # explicit positional field names: Spark's struct() auto-names
+    # LITERAL elements col1..colN but names COLUMN elements after the
+    # column, so the .N → .colN accessor (and every template reaching
+    # into tuples) silently broke on tuple(x, y) — pin the CH positional
+    # names on every element
+    return "struct(" + ", ".join(
+        f"{a} AS col{x + 1}" for x, a in enumerate(c.args)
+    ) + ")"
+
+
+def _transform(c: Call) -> str:
+    # CH's VALUE-MAPPING transform(x, [from], [to][, default]) — not
+    # Spark's 2-arg array HOF, which passes through untouched. Unmatched
+    # values keep x (3-arg) or take the default (4-arg), exactly CH's
+    # contract.
+    if len(c.args) not in (3, 4):
+        return _unmapped(c)
+    x, frm, to = c.args[:3]
+    dflt = c.args[3] if len(c.args) == 4 else x
+    return f"coalesce(element_at(map_from_arrays({frm}, {to}), {x}), {dflt})"
+
+
+def _format_readable_quantity(c: Call) -> str:
+    if len(c.args) != 1:
+        return _unmapped(c)
+    x = c.args[0]
+    return (
+        f"CASE WHEN abs({x}) < 1000 THEN format_string('%.2f', cast({x} as "
+        f"double)) WHEN abs({x}) < 1000000 THEN concat(format_string('%.2f', "
+        f"cast({x} as double) / 1000), ' thousand') WHEN abs({x}) < "
+        f"1000000000 THEN concat(format_string('%.2f', cast({x} as double) / "
+        f"1000000), ' million') ELSE concat(format_string('%.2f', cast({x} as "
+        "double) / 1000000000), ' billion') END"
+    )
+
+
+def _array_reduce(c: Call) -> str:
+    # literal aggregate name → the matching array fold (double
+    # accumulation for sum/avg, same contract as arraySum/arrayAvg)
+    if len(c.args) != 2:
+        return _unmapped(c)
+    agg = c.args[0].strip().strip("'\"")
+    arr = c.args[1]
+    folds = {
+        # single-bind + saturated-zero init, same contract as the
+        # rebuilt arraySum template (Int→Int64 sums, Decimal→
+        # Decimal(38,s) — r13 ADVICE decimal/rebind fixes)
+        "sum": (
+            f"element_at(transform(array({arr}), __chas -> aggregate(__chas, "
+            "coalesce(try_element_at(__chas, 1), 0) * CAST(0 AS BIGINT), "
+            "(acc, x) -> acc + coalesce(x, 0))), 1)"
+        ),
+        "min": f"array_min({arr})",
+        "max": f"array_max({arr})",
+        "avg": (
+            f"(aggregate({arr}, cast(0 as double), (acc, x) -> acc + x) / "
+            f"size({arr}))"
+        ),
+        "count": f"size({arr})",
+        "uniqExact": f"size(array_distinct({arr}))",
+        "any": f"element_at({arr}, 1)",
+    }
+    if agg not in folds:
+        raise ValueError(f"arrayReduce aggregate {c.args[0]} not supported")
+    return folds[agg]
+
+
+def _range(c: Call) -> str:
+    args = c.args
+    if len(args) == 3:
+        # stepped form (r12): [s, s+st, … toward e), e exclusive; the
+        # empty case needs an explicit guard — Spark's sequence throws
+        # when (end−start) disagrees with the step sign, where CH
+        # returns []. The step's SIGN picks the guard direction, so it
+        # must be a literal (ADVICE r12: a negative step used to
+        # silently yield [] where CH returns the descending range).
+        s_, e_, st_ = args
+        st_lit = st_.strip().lstrip("+")
+        if not (st_lit.lstrip("-").isdigit() and int(st_lit) != 0):
+            raise ValueError(
+                "range(start, end, step) needs a nonzero literal integer "
+                f"step, got {st_!r} — the step sign picks the emptiness guard"
+            )
+        if int(st_lit) > 0:
+            return (
+                f"(CASE WHEN ({s_}) >= ({e_}) THEN slice(sequence({s_}, "
+                f"{s_}), 1, 0) ELSE sequence({s_}, ({e_}) - 1, {st_}) END)"
+            )
+        # descending: values > e (e exclusive) — sequence is inclusive,
+        # so bound at e+1
+        return (
+            f"(CASE WHEN ({s_}) <= ({e_}) THEN slice(sequence({s_}, {s_}), 1, "
+            f"0) ELSE sequence({s_}, ({e_}) + 1, {st_}) END)"
+        )
+    # CH range(n)=[0..n-1], range(s,e)=[s..e-1]; Spark's sequence() is
+    # INCLUSIVE and descends when end < start, so the empty case needs
+    # the slice guard; slice length is clamped at 0: a negative length
+    # THROWS in Spark, while CH returns [] for range(s, e) with e < s
+    if len(args) == 1:
+        return (
+            f"slice(sequence(0, greatest(({args[0]}) - 1, 0)), 1, greatest(0, "
+            f"{args[0]}))"
+        )
+    if len(args) == 2:
+        return (
+            f"slice(sequence({args[0]}, greatest(({args[1]}) - 1, "
+            f"{args[0]})), 1, greatest(0, ({args[1]}) - ({args[0]})))"
+        )
+    return _unmapped(c)
+
+
+def _to_string(c: Call) -> str:
+    # toString(dt, tz): render in the given zone — the 1-arg TEMPLATE
+    # would silently DROP the tz arg (str.format ignores extras)
+    if len(c.args) != 2:
+        return _unmapped(c)
+    return (
+        f"cast(from_utc_timestamp(cast({c.args[0]} as timestamp), "
+        f"{c.args[1]}) as string)"
+    )
+
+
+def _moving_agg(c: Call) -> str:
+    if c.params is not None:
+        if len(c.params) != 1:
+            raise ValueError(
+                f"{c.name} takes one window-size parameter: "
+                f"{c.name}(n)(value, order_key)"
+            )
+        return _moving_agg_sql(c.name, c.params[0], c.args)
+    if len(c.args) >= 2:
+        return _moving_agg_sql(c.name, None, c.args)
+    raise ValueError(
+        f"{c.name}: CH's one-argument form is BLOCK-ORDER-dependent — order "
+        "the input explicitly: FROM (… ORDER BY key) derives the key "
+        f"automatically, or write {c.name}[(n)](value, order_key) with the "
+        "key as the final argument"
+    )
+
+
+_MAP_AGGS = ("sumMap", "minMap", "maxMap", "countMap", "avgMap")
+
+
+def _map_agg(c: Call) -> str:
+    # sumMappedArrays et al. are CH's explicit two-array aliases — same
+    # semantics, arrays-only spelling; countMap/avgMap are the generic
+    # -Map combinator over count/avg (per-key size / null-safe mean).
+    # -WithOverflow keeps CH's input-width accumulation (wraparound);
+    # here sums still widen to 64-bit — a documented delta (no
+    # wraparound), wave 6
+    name, args = c.name, c.args
+    if len(args) in (1, 2):
+        if name.endswith("MappedArrays") and len(args) != 2:
+            raise ValueError(f"{name} takes (key_arr, value_arr)")
+        base = name[:-12] if name.endswith("WithOverflow") else name
+        return _map_agg_sql(base, args)
+    if name in _MAP_AGGS:
+        raise ValueError(
+            f"{name}: mapped forms are {name}(key_arr, val_arr) and "
+            f"{name}(map_col) — for unbounded key domains prefer the explode "
+            "+ two-level aggregation operator (queries.aggregations sumMap "
+            "shape)"
+        )
+    return _unmapped(c)
+
+
+def _map_agg_if(c: Call) -> str:
+    # -Map ∘ -If: null the array args on non-matching rows (collect_list
+    # drops them before the per-key reduction)
+    if len(c.args) not in (2, 3):
+        return _unmapped(c)
+    return _map_agg_sql(c.name[:-2], [f"({w})" for w in _case_when(c.args)])
+
+
+_ARG_EXTREME_BASES = ("sum", "avg", "min", "max", "count", "any")
+
+
+def _arg_extreme(c: Call) -> str:
+    # -ArgMin/-ArgMax combinators: the base aggregate over ONLY the rows
+    # whose key equals the group's extreme key (CH docs:
+    # combinators/-ArgMin) — one collected fold, key-null rows skipped
+    args = c.args
+    base = c.name[:-6]
+    pairs = (
+        f"collect_list(CASE WHEN ({args[1]}) IS NOT NULL THEN "
+        f"struct(({args[1]}) AS k, ({args[0]}) AS v) END)"
+    )
+    ext = "array_min" if c.name.lower().endswith("argmin") else "array_max"
+    vals = (
+        f"transform(filter(__gp, __ge -> __ge.k <=> {ext}(transform(__gp, "
+        "__gx -> __gx.k))), __ge -> __ge.v)"
+    )
+    nn = f"filter({vals}, __gv -> __gv IS NOT NULL)"
+    red = {
+        "sum": (
+            f"aggregate(slice({nn}, 2, size({nn})), try_element_at({nn}, 1) + "
+            "CAST(0 AS BIGINT), (__ga, __gx) -> __ga + __gx)"
+        ),
+        "avg": (
+            f"try_divide(aggregate({nn}, cast(0.0 as double), (__ga, __gx) -> "
+            f"__ga + __gx), size({nn}))"
+        ),
+        "min": f"array_min({nn})",
+        "max": f"array_max({nn})",
+        "count": f"CAST(size({nn}) AS BIGINT)",
+        "any": f"try_element_at({nn}, 1)",
+    }[base]
+    return f"element_at(transform(array({pairs}), __gp -> {red}), 1)"
+
+
+_OR_NULL_IF_BASES = ("sum", "avg", "min", "max", "count", "uniqExact", "any")
+
+
+def _if_or_null(c: Call) -> str:
+    # -If ∘ -OrNull in either combinator order: CASE-wrap the value
+    # args, NULL on empty match (the zero-returning counters get a
+    # nullif, the rest already NULL on empty)
+    base = c.name[:-8]
+    inner = ", ".join(_case_when(c.args))
+    if base == "count":
+        return f"nullif(count({inner}), 0)"
+    if base == "uniqExact":
+        return f"nullif(count(DISTINCT {inner}), 0)"
+    if base == "any":
+        return f"any_value({inner}, true)"
+    return f"{base}({inner})"
+
+
+_MATRIX_AGGS = {
+    "corrMatrix": "corr",
+    "covarSampMatrix": "covar_samp",
+    "covarPopMatrix": "covar_pop",
+}
+
+
+def _matrix_agg(c: Call) -> str:
+    # N×N aggregate matrix unrolled to the pairwise aggregates — still
+    # ONE partial-agg pass (N²/2 distinct buffers; Catalyst dedupes the
+    # symmetric repeats it can prove equal)
+    if len(c.args) < 2:
+        raise ValueError(f"{c.name} needs ≥2 columns")
+    fn = _MATRIX_AGGS[c.name]
+    rows = ", ".join(
+        "array(" + ", ".join(f"{fn}({ai}, {aj})" for aj in c.args) + ")"
+        for ai in c.args
+    )
+    return f"array({rows})"
+
+
+def _group_array_last(c: Call) -> str:
+    # groupArrayLast(n)(x, key[, asc]) — round 12, the ordered-key
+    # precedent (CH's bare form is INSERTION-order dependent): last n
+    # values in key order, returned in that order. NULL x or key
+    # skipped, like any CH aggregate.
+    if c.params is None:
+        raise ValueError(
+            "groupArrayLast: CH's key-less form is INSERTION-order dependent "
+            "(block-order, like groupArrayMoving*) — write the ordered-key "
+            "spelling groupArrayLast(n)(value, order_key[, asc]) (r12), or "
+            "groupArraySorted(n)(x)"
+        )
+    params, args2 = c.params, c.args
+    if len(params) != 1:
+        raise ValueError(
+            "groupArrayLast takes one max-size parameter: "
+            "groupArrayLast(n)(value, order_key[, asc])"
+        )
+    if len(args2) not in (2, 3):
+        raise ValueError(
+            "groupArrayLast needs an explicit ordering key: "
+            "groupArrayLast(n)(value, order_key[, asc]) — CH's key-less form "
+            "is INSERTION-order dependent (block order)"
+        )
+    gl_n, gl_v, gl_k = params[0], args2[0], args2[1]
+    asc = args2[2] if len(args2) == 3 else "true"
+    try:
+        if int(gl_n) <= 0:
+            raise ValueError("groupArrayLast: max size must be positive")
+    except (TypeError, ValueError) as e:
+        if "max size" in str(e):
+            raise
+    coll = (
+        f"sort_array(collect_list(CASE WHEN ({gl_v}) IS NOT NULL AND ({gl_k}) "
+        f"IS NOT NULL THEN struct(({gl_k}) AS k, ({gl_v}) AS v) END), {asc})"
+    )
+    return (
+        f"element_at(transform(array({coll}), __gl -> transform(slice(__gl, "
+        f"CASE WHEN size(__gl) > ({gl_n}) THEN size(__gl) - ({gl_n}) + 1 ELSE "
+        f"1 END, ({gl_n})), __ge -> __ge.v)), 1)"
+    )
+
+
+def _time_decayed(c: Call) -> str:
+    if c.params is None:
+        raise ValueError(
+            f"{c.name} REQUIRES the parameterized form "
+            f"{c.name}(decay_length)(value, time) — mapped as the GROUP-BY "
+            "decayed fold (r12); the per-row WINDOW form stays with "
+            "operators.ema.exponential_time_decayed"
+        )
+    if len(c.params) != 1:
+        raise ValueError(f"{c.name}(decay_length)(…) takes one parameter")
+    return _etd_sql(c.name, c.params[0], c.args)
+
+
+def _seq_next_node(c: Call) -> str:
+    if c.params is None:
+        raise ValueError(
+            "sequenceNextNode REQUIRES the parameterized form: "
+            "sequenceNextNode(direction, base)(timestamp, value, "
+            "base_condition, event1[, event2, …])"
+        )
+    return _seq_next_node_sql(c.params, c.args)
+
+
+def _sparkbar(c: Call) -> str:
+    params, args2 = c.params, c.args
+    if params is None:
+        raise ValueError(
+            "sparkbar: use the parameterized form sparkbar(width[, min_x, "
+            "max_x])(x, y)"
+        )
+    if len(params) not in (1, 3) or len(args2) != 2:
+        raise ValueError(
+            "sparkbar needs (width[, min_x, max_x])(x, y); x and the bounds "
+            "must be numeric (for Dates use toUnixTimestamp)"
+        )
+    bounds = (
+        f"CAST({params[1]} AS DOUBLE), CAST({params[2]} AS DOUBLE)"
+        if len(params) == 3
+        else "CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)"
+    )
+    return (
+        f"__ch_sparkbar(CAST({args2[0]} AS DOUBLE), CAST({args2[1]} AS "
+        f"DOUBLE), {params[0]}, {bounds})"
+    )
+
+
+def _ttest(c: Call) -> str:
+    if len(c.args) != 2:
+        raise ValueError(
+            f"{c.name} needs (sample, index); the parameterized "
+            f"confidence-interval form {c.name}(cl)(x, i) is unsupported"
+        )
+    return _ttest_sql(c.name, c.args[0], c.args[1])
+
+
+def _stats_arity(c: Call) -> ValueError:
+    return ValueError(
+        f"{c.name}: wrong arity {len(c.args)} — see the mapped signatures "
+        "(mannWhitneyUTest(x, idx), assoc(x, y), proportionsZTest(sx, sy, tx, "
+        "ty, conf, pool), minSampleSizeConversion(base, mde, power, alpha), "
+        "minSampleSizeContinuous(base, sigma, mde, power, alpha))"
+    )
+
+
+def _mann_whitney(c: Call) -> str:
+    if c.params is not None:
+        return _mwu_sql(c.params, c.args)
+    if len(c.args) == 2:
+        # bare (no-parameter) spelling: defaults 'two-sided', continuity on
+        return _mwu_sql([], c.args)
+    raise _stats_arity(c)
+
+
+def _mean_ztest(c: Call) -> str:
+    if c.params is None:
+        raise _stats_arity(c)
+    if len(c.params) != 3 or len(c.args) != 2:
+        raise ValueError(
+            "meanZTest needs (pop_var_x, pop_var_y, conf_level)(sample, index)"
+        )
+    return _mean_ztest_sql(*c.params, *c.args)
+
+
+_ASSOC_KINDS = {
+    "cramersV": 0, "cramersVBiasCorrected": 1, "theilsU": 2,
+    "contingency": 3,
+}
+
+
+def _assoc(c: Call) -> str:
+    # categorical association via the grouped-agg Python kernel
+    # (functions/stats.py); values compared as strings (CH hashes the
+    # raw values — same equivalence classes for categorical data)
+    if len(c.args) != 2:
+        raise _stats_arity(c)
+    return (
+        f"__ch_assoc(CAST({c.args[0]} AS STRING), CAST({c.args[1]} AS "
+        f"STRING), {_ASSOC_KINDS[c.name]})"
+    )
+
+
+def _proportions_ztest(c: Call) -> str:
+    if len(c.args) != 6:
+        raise _stats_arity(c)
+    return _proportions_ztest_sql(*c.args)
+
+
+def _min_sample_size(c: Call) -> str:
+    # CH ships the misspelled minSampleSizeContinous alias too
+    conversion = c.name == "minSampleSizeConversion"
+    if len(c.args) != (4 if conversion else 5):
+        raise _stats_arity(c)
+    kind = c.name if conversion else "minSampleSizeContinuous"
+    return _min_sample_size_sql(kind, c.args)
+
+
+def _civ(c: Call) -> str:
+    # single-category IV via the grouped Python kernel
+    # (functions/aggkernels.py); returns a 1-element array matching CH's
+    # Array shape
+    if len(c.args) != 2:
+        raise ValueError(
+            "categoricalInformationValue: only the single-category form (cat, "
+            "tag) is mapped — call once per category column for the "
+            "multi-category spelling"
+        )
+    return (
+        f"__ch_civ(CAST({c.args[0]} AS STRING), CAST({c.args[1]} AS INT))"
+    )
+
+
+def _lttb(c: Call) -> str:
+    if c.params is None:
+        raise ValueError(
+            f"{c.name}: use the parameterized form {c.name}(n)(x, y)"
+        )
+    if len(c.params) != 1 or len(c.args) != 2:
+        raise ValueError("largestTriangleThreeBuckets needs (n)(x, y)")
+    return (
+        f"__ch_lttb(CAST({c.args[0]} AS DOUBLE), CAST({c.args[1]} AS DOUBLE), "
+        f"{c.params[0]})"
+    )
+
+
+def _quantile_gk(c: Call) -> str:
+    """quantileGK / quantilesGK / quantileDD: the parameterized forms
+    with CH's defaults filled in; bare quantileGK(x) is the median."""
+    if c.params is None:
+        if c.name == "quantileGK" and len(c.args) == 1:
+            # bare single-paren spelling: all defaults (accuracy 10000,
+            # level 0.5 — the median)
+            return f"percentile_approx({c.args[0]}, 0.5, 10000)"
+        if c.name == "quantileDD":
+            raise ValueError(
+                "quantileDD needs the relative accuracy: quantileDD(rel_acc[, "
+                "level])(x)"
+            )
+        raise ValueError(
+            f"{c.name}: use the parameterized form {c.name}(accuracy[, "
+            "level…])(x) — or quantileGK(x) for all defaults"
+        )
+    if not c.params:
+        if c.name == "quantileDD":
+            raise ValueError(
+                "quantileDD needs the relative accuracy: quantileDD(rel_acc[, "
+                "level])(x)"
+            )
+        # CH default accuracy (same as Spark's percentile_approx default)
+        c.params = ["10000"]
+    if len(c.params) == 1:
+        if c.name == "quantilesGK":
+            raise ValueError(
+                "quantilesGK needs explicit levels: quantilesGK(accuracy, "
+                "l1[, l2, …])(x)"
+            )
+        c.params = c.params + ["0.5"]  # CH level default
+    return _param_template(c)
+
+
+_MEDIAN_LEVEL_EXACT = ("quantileExact", "quantileExactLow",
+                       "quantileExactHigh")
+
+
+def _exact_quantile(c: Call) -> str:
+    if c.params is not None:
+        return _exact_quantile_sql(c.name, c.params, c.args)
+    if c.name in _MEDIAN_LEVEL_EXACT and len(c.args) == 1:
+        # single-paren exact quantiles default to the median level (r12
+        # — the median* alias rewrite lands here for medianExactLow/High)
+        return _exact_quantile_sql(c.name, ["0.5"], c.args)
+    return _unmapped(c)
+
+
+def _quantile_level(c: Call) -> str:
+    # single-paren spelling of a template-mapped quantile: CH defaults
+    # the level to 0.5 (r12 — the median* alias rewrite lands here too)
+    c.params = ["0.5"]
+    return _param_template(c)
+
+
+def _geo_arity(c: Call) -> ValueError:
+    # wrong arity must stay a LOUD translate-time reject, not a silent
+    # passthrough that fails (or mis-binds) later at Spark analysis
+    return ValueError(
+        f"{c.name}: unsupported arity {len(c.args)} — mapped forms are "
+        "geohashEncode(lon, lat[, precision]), geohashDecode(s), and the "
+        "single-ring pointInPolygon((x, y), ring); multi-ring "
+        "polygons-with-holes need a geo library UDF"
+    )
+
+
+def _geohash_encode(c: Call) -> str:
+    if len(c.args) not in (2, 3):
+        raise _geo_arity(c)
+    prec = 12  # CH default
+    if len(c.args) == 3:
+        try:
+            prec = int(c.args[2])
+        except ValueError:
+            raise ValueError(
+                "geohashEncode precision must be a literal integer (the bit "
+                "layout unrolls at translate time)"
+            ) from None
+    return _geohash_encode_sql(c.args[0], c.args[1], prec)
+
+
+def _geohash_decode(c: Call) -> str:
+    if len(c.args) != 1:
+        raise _geo_arity(c)
+    return _geohash_decode_sql(c.args[0])
+
+
+def _point_in_polygon(c: Call) -> str:
+    if len(c.args) != 2:
+        raise _geo_arity(c)
+    return _point_in_polygon_sql(c.args[0], c.args[1])
+
+
+_GEO_COVERING = (
+    "{name}: geohashesInBox(lon_min, lat_min, lon_max, lat_max, "
+    "literal_precision) is the mapped form; H3/S2 coverings need a geo "
+    "library UDF"
+)
+
+
+def _geohashes_in_box(c: Call) -> str:
+    if len(c.args) != 5:
+        raise ValueError(_GEO_COVERING.format(name=c.name))
+    try:
+        prec = int(c.args[4])
+    except ValueError:
+        raise ValueError(
+            "geohashesInBox precision must be a literal integer (the cell "
+            "math unrolls at translate time)"
+        ) from None
+    return _geohashes_in_box_sql(*c.args[:4], prec)
+
+
+_TUPLE_OPS = {
+    "tuplePlus": "+", "vectorSum": "+",
+    "tupleMinus": "-", "vectorDifference": "-",
+    "tupleMultiply": "*", "tupleDivide": "/",
+    "tupleIntDiv": "DIV", "tupleModulo": "%",
+}
+
+
+def _tuple_arith(c: Call) -> str:
+    # field-wise tuple arithmetic: the arity comes from an INLINE tuple
+    # literal on either side (the engine's struct(col1..colN) convention
+    # names the other side's fields)
+    if len(c.args) != 2:
+        return _unmapped(c)
+    ca = _tuple_components(c.args[0])
+    cb = _tuple_components(c.args[1])
+    n_fields = len(ca or cb or ())
+    if not n_fields:
+        raise ValueError(
+            f"{c.name}: tuple arity is resolved from an inline tuple literal "
+            "on at least one side — tuple(…)/(…, …) — or spell the fields out "
+            "(t.col1 + u.col1, …)"
+        )
+    if ca and cb and len(ca) != len(cb):
+        raise ValueError(
+            f"{c.name}: tuple sizes differ ({len(ca)} vs {len(cb)})"
+        )
+    op = _TUPLE_OPS[c.name]
+    lhs = ca or [f"({c.args[0]}).col{x + 1}" for x in range(n_fields)]
+    rhs = cb or [f"({c.args[1]}).col{x + 1}" for x in range(n_fields)]
+    return "struct(" + ", ".join(
+        f"(({a}) {op} ({b})) AS col{x + 1}"
+        for x, (a, b) in enumerate(zip(lhs, rhs))
+    ) + ")"
+
+
+_TUPLE_SCALAR_OPS = {
+    "tupleMultiplyByNumber": "*", "tupleDivideByNumber": "/",
+    "tupleIntDivByNumber": "DIV", "tupleModuloByNumber": "%",
+}
+
+
+def _tuple_scalar(c: Call) -> str:
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    ca = _tuple_components(c.args[0])
+    if not ca:
+        raise ValueError(
+            f"{c.name}: tuple arity is resolved from an inline tuple literal "
+            "— tuple(…)/(…, …) — or spell the fields out"
+        )
+    if c.name == "tupleNegate":
+        comps = [f"(-({a}))" for a in ca]
+    else:
+        op = _TUPLE_SCALAR_OPS[c.name]
+        comps = [f"(({a}) {op} ({c.args[1]}))" for a in ca]
+    return "struct(" + ", ".join(
+        f"{x} AS col{k + 1}" for k, x in enumerate(comps)
+    ) + ")"
+
+
+def _to_year_week(c: Call) -> str:
+    # year*100 + week under toWeek's mode semantics (MySQL YEARWEEK):
+    # mode 0 (default) shifts week-0 days into the PREVIOUS year's last
+    # week; modes 1/3 are ISO year·100 + ISO week
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    t = c.args[0]
+    mode = c.args[1].strip() if len(c.args) == 2 else "0"
+    if mode in ("1", "3"):
+        return f"(extract(YEAROFWEEK FROM {t}) * 100 + weekofyear({t}))"
+    if mode != "0":
+        raise ValueError(
+            f"toYearWeek mode {mode} not supported (0, 1, 3 — the toWeek "
+            "modes)"
+        )
+
+    def wk0(d: str) -> str:
+        off = f"pmod(8 - dayofweek(date_trunc('YEAR', {d})), 7)"
+        return f"((dayofyear({d}) - {off} + 6) div 7)"
+
+    prev = f"date_sub(date_trunc('YEAR', {t}), 1)"
+    return (
+        f"(CASE WHEN {wk0(t)} = 0 THEN (year({t}) - 1) * 100 + {wk0(prev)} "
+        f"ELSE year({t}) * 100 + {wk0(t)} END)"
+    )
+
+
+def _multi_fuzzy_match(c: Call) -> str:
+    # r13: LITERAL-pattern tier — Sellers approximate substring matching
+    # (strkernels.fuzzy_match_indices): a pattern matches when some
+    # substring of the haystack is within edit distance d. CH runs
+    # hyperscan fuzzy REGEX matching; regex metacharacters in a pattern
+    # therefore reject toward multiMatchAny. Codepoint distances = the
+    # UTF8 variants' semantics (byte variants coincide on ASCII, same
+    # note as levenshteinDistanceUTF8).
+    name, args = c.name, c.args
+    if len(args) != 3:
+        return _unmapped(c)
+    pats = args[2].strip()
+    if not (pats.lower().startswith("array(") and pats.endswith(")")):
+        raise ValueError(
+            f"{name}: needs a literal pattern array (['p1', 'p2', …])"
+        )
+    metas = set(".^$*+?()[]{}|\\")
+    for p_ in lex(pats[6:-1]).split():
+        p_ = p_.strip()
+        if not is_quoted(p_):
+            raise ValueError(
+                f"{name}: every pattern must be a string literal"
+            )
+        if set(p_[1:-1]) & metas:
+            raise ValueError(
+                f"{name}: pattern {p_} contains regex metacharacters — the "
+                "fuzzy tier here matches LITERAL patterns (Sellers DP); for "
+                "plain regex use multiMatchAny (mapped)"
+            )
+    idx = f"__ch_fuzzy_indices({args[0]}, {args[1]}, {pats})"
+    base = name[:-4] if name.endswith("UTF8") else name
+    if base == "multiFuzzyMatchAny":
+        return f"(size({idx}) > 0)"  # boolean like the multiMatchAny mapping
+    if base == "multiFuzzyMatchAnyIndex":
+        # CH returns SOME matching index (hyperscan order is
+        # unspecified) — the lowest is the deterministic choice; 0 when
+        # none match. concat(…, array(0)) keeps NULL→NULL while
+        # supplying the empty-match 0 in ONE kernel evaluation.
+        return f"try_element_at(concat({idx}, array(0)), 1)"
+    return idx
+
+
+def _extract_all_groups(c: Call) -> str:
+    # static-group-count unroll (the extractGroups precedent):
+    # Horizontal = one array per GROUP across all matches
+    # (regexp_extract_all per group); Vertical (= bare extractAllGroups)
+    # = one array per MATCH, transposed from the same columns. Literal
+    # pattern required — the group count is the unroll bound.
+    if len(c.args) != 2:
+        return _unmapped(c)
+    pat = c.args[1].strip()
+    if not (pat.startswith("'") and pat.endswith("'")):
+        raise ValueError(
+            f"{c.name} needs a literal pattern (group count is static)"
+        )
+    ng = _regex_capture_groups(pat[1:-1])
+    if ng == 0:
+        raise ValueError(f"{c.name}: pattern has no capture groups")
+    cols = ", ".join(
+        f"regexp_extract_all({c.args[0]}, {pat}, {g})"
+        for g in range(1, ng + 1)
+    )
+    if c.name == "extractAllGroupsHorizontal":
+        return f"array({cols})"
+    # transpose; sequence(1,0) runs BACKWARDS on zero matches, hence the
+    # size guard (slice gives the typed empty array<array<string>>)
+    row = ", ".join(
+        f"element_at(element_at(__eg, {g}), __ei)" for g in range(1, ng + 1)
+    )
+    return (
+        f"element_at(transform(array(array({cols})), __eg -> CASE WHEN "
+        "size(element_at(__eg, 1)) = 0 THEN slice(__eg, 1, 0) ELSE "
+        "transform(sequence(1, size(element_at(__eg, 1))), __ei -> "
+        f"array({row})) END), 1)"
+    )
+
+
+_NO_STATIC_REWRITE = (
+    "{name}: no faithful static rewrite — for map lambdas use "
+    "transform_keys/transform_values (Spark natives); ranked/Gini forms need "
+    "a pandas kernel"
+)
+
+
+def _map_apply(c: Call) -> str:
+    # mapApply((k, v) -> (k', v'), m) — the lambda returns a TUPLE,
+    # which Spark spells struct(); zip_with over (keys, values) binds
+    # the SAME two lambda variables, so params pass through intact
+    if len(c.args) != 2:
+        raise ValueError(_NO_STATIC_REWRITE.format(name=c.name))
+    lam, m = c.args
+    depth, pos = 0, -1
+    for li in range(len(lam) - 1):
+        ch = lam[li]
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif depth == 0 and lam[li : li + 2] == "->":
+            pos = li
+            break
+    if pos < 0:
+        raise ValueError(
+            "mapApply: first argument must be a lambda ((k, v) -> (k2, v2))"
+        )
+    head = lam[:pos].strip()
+    body = lam[pos + 2 :].strip()
+    if not (body.startswith("(") and body.endswith(")")):
+        raise ValueError(
+            "mapApply: the lambda must return a (key, value) TUPLE literal"
+        )
+    parts = lex(body[1:-1]).split()
+    if len(parts) != 2:
+        raise ValueError(
+            "mapApply: the lambda tuple must have exactly 2 elements, got "
+            f"{len(parts)}"
+        )
+    hp = head[1:-1] if head.startswith("(") and head.endswith(")") else head
+    if len([p for p in hp.split(",") if p.strip()]) != 2:
+        raise ValueError("mapApply: the lambda takes exactly (key, value)")
+    return (
+        f"map_from_entries(zip_with(map_keys({m}), map_values({m}), ({hp}) -> "
+        f"struct({parts[0].strip()}, {parts[1].strip()})))"
+    )
+
+
+# round 12: English via the Porter 1980 kernel (strkernels.porter_stem —
+# the algorithm Snowball 'porter' implements; Snowball's revised
+# 'english' differs on a few suffix rules, documented there). round 13:
+# French/German/Spanish/Russian via the published Snowball rule sets
+# (functions/snowball.py — suffix tables only, no data files). The
+# kernel stems each whitespace token, so both the single-word CH call
+# shape and sentence normalization work.
+_STEM_KERNELS = {
+    "en": "__ch_stem", "english": "__ch_stem", "porter": "__ch_stem",
+    "fr": "__ch_stem_fr", "french": "__ch_stem_fr",
+    "de": "__ch_stem_de", "german": "__ch_stem_de",
+    "es": "__ch_stem_es", "spanish": "__ch_stem_es",
+    "ru": "__ch_stem_ru", "russian": "__ch_stem_ru",
+    "pt": "__ch_stem_pt", "portuguese": "__ch_stem_pt",
+    "it": "__ch_stem_it", "italian": "__ch_stem_it",
+    # round 14: Scandinavian set + Dutch
+    "sv": "__ch_stem_sv", "swedish": "__ch_stem_sv",
+    "no": "__ch_stem_no", "norwegian": "__ch_stem_no",
+    "da": "__ch_stem_da", "danish": "__ch_stem_da",
+    "nl": "__ch_stem_nl", "dutch": "__ch_stem_nl",
+    # round 15: Finnish (published two-level algorithm; gradation via
+    # step 6(e) only, exactly as libstemmer does)
+    "fi": "__ch_stem_fi", "finnish": "__ch_stem_fi",
+}
+
+
+def _stem(c: Call) -> str:
+    if len(c.args) != 2:
+        raise ValueError("stem(language, string)")
+    lang = c.args[0].strip().strip("'\"").lower()
+    if lang not in _STEM_KERNELS:
+        raise ValueError(
+            f"stem({c.args[0]}, …): implemented languages are en (Porter "
+            "1980), fr, de, es, ru, pt, it, sv, no, da, nl, fi (Snowball rule "
+            "sets) — the rest are not shipped"
+        )
+    return f"{_STEM_KERNELS[lang]}({c.args[1]})"
+
+
+def _array_split(c: Call) -> str:
+    if len(c.args) < 2:
+        raise ValueError(f"{c.name}: needs (lambda, arr1[, arr2 …])")
+    return _array_split_sql(
+        c.name == "arrayReverseSplit", c.args[0], c.args[1:]
+    )
+
+
+_JSON_KV_TYPES = {"String": "string", "Int64": "bigint", "UInt64": "bigint",
+                  "Float64": "double", "Bool": "boolean"}
+
+
+def _json_keys_and_values(c: Call) -> str:
+    vt = c.args[-1].strip().strip("'\"")
+    if len(c.args) != 2 or vt not in _JSON_KV_TYPES:
+        raise ValueError(
+            "JSONExtractKeysAndValues supports the (json, 'ScalarType') form "
+            "only"
+        )
+    return (
+        f"map_entries(from_json({c.args[0]}, "
+        f"'map<string,{_JSON_KV_TYPES[vt]}>'))"
+    )
+
+
+def _xxhash(c: Call) -> str:
+    # NOT bit-compatible with CH (different algorithm/seed); the dominant
+    # uses — sampling buckets, shuffling, grouping — need a stable
+    # uniform hash, which xxhash64 is. Comparing against CH-computed
+    # literals will NOT match; hash-value parity is not achievable
+    # cross-engine here.
+    return f"xxhash64({', '.join(c.args)})"
+
+
+def _make_datetime64(c: Call) -> str:
+    # r12: make_timestamp takes fractional seconds, so the 7-arg fraction
+    # form folds in as sec + fraction/10^precision (precision literal,
+    # CH default 3)
+    args = c.args
+    if len(args) not in (6, 7, 8):
+        return _unmapped(c)
+    if len(args) == 6:
+        return f"make_timestamp({', '.join(args)})"
+    prec = args[7] if len(args) == 8 else "3"
+    try:
+        scale = 10 ** int(prec)
+    except ValueError:
+        raise ValueError(
+            "makeDateTime64: precision must be a literal integer"
+        ) from None
+    sec = (
+        f"(CAST({args[5]} AS DOUBLE) + CAST({args[6]} AS DOUBLE) / {scale})"
+    )
+    return "make_timestamp(" + ", ".join(args[:5]) + f", {sec})"
+
+
+def _byte_swap(c: Call) -> str:
+    # renamed by _rewrite_byteswap: the inner typed cast told us the
+    # width and signedness
+    if len(c.args) != 1:
+        return _unmapped(c)
+    return _byteswap_sql(int(c.name[11:]), c.args[0], signed=c.name[10] == "s")
+
+
+def _round_bankers(c: Call) -> str:
+    # banker's rounding → Spark bround (HALF_EVEN)
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    return f"bround({', '.join(c.args)})"
+
+
+def _split_by_string(c: Call) -> str:
+    # CH splitByString(sep, s) splits on a LITERAL separator; Spark's
+    # split takes a REGEX — quote every metachar. Decidable only for
+    # literal separators.
+    if len(c.args) != 2:
+        return _unmapped(c)
+    sep = c.args[0].strip()
+    if not (sep.startswith("'") and sep.endswith("'")):
+        raise ValueError(
+            "splitByString needs a literal separator (Spark's split is "
+            "regex-based; a dynamic separator cannot be safely quoted)"
+        )
+    quoted = re.sub(r"([.*+?^${}()|\[\]\\])", r"\\\1", sep[1:-1])
+    # and re-escape backslashes for the SQL literal
+    quoted = quoted.replace("\\", "\\\\").replace("'", "''")
+    return f"split({c.args[1].strip()}, '{quoted}')"
+
+
+_DATE_NAME_PARTS = {
+    "year": "cast(year({0}) as string)",
+    "quarter": "cast(quarter({0}) as string)",
+    "month": "date_format({0}, 'MMMM')",
+    "week": "cast(weekofyear({0}) as string)",
+    "dayofyear": "cast(dayofyear({0}) as string)",
+    "day": "cast(day({0}) as string)",
+    "weekday": "date_format({0}, 'EEEE')",
+    "hour": "cast(hour({0}) as string)",
+    "minute": "cast(minute({0}) as string)",
+    "second": "cast(second({0}) as string)",
+}
+
+
+def _date_name(c: Call) -> str:
+    # dateName('part', t) → string name/number of the part (literal part
+    # only)
+    if len(c.args) != 2:
+        return _unmapped(c)
+    part = c.args[0].strip().strip("'\"").lower()
+    if part not in _DATE_NAME_PARTS:
+        raise ValueError(f"dateName part {c.args[0]} not supported")
+    return _DATE_NAME_PARTS[part].format(c.args[1])
+
+
+def _sum_map_filtered(c: Call) -> str:
+    # restrict the pairs to the parameter key list BEFORE the sumMap
+    # reduction (positional k/v alignment kept by filtering zipped
+    # structs); wave 6: -WithOverflow is the same keys-restricted
+    # reduction, the 64-bit-widened sum a documented delta (no
+    # wraparound)
+    if len(c.params) != 1 or len(c.args) != 2:
+        raise ValueError(
+            "sumMapFiltered needs (keys_array)(key_arr, value_arr)"
+        )
+    pairs = (
+        f"filter(zip_with({c.args[0]}, {c.args[1]}, (__fk, __fv) -> "
+        "struct(__fk AS k, __fv AS v)), __fp -> "
+        f"array_contains({c.params[0]}, __fp.k))"
+    )
+    return _map_agg_sql("sumMap", [
+        f"transform({pairs}, __fp -> __fp.k)",
+        f"transform({pairs}, __fp -> __fp.v)",
+    ])
+
+
+def _uniq_combined(c: Call) -> str:
+    # HLL precision → approx_count_distinct's relative-SD knob (rsd ≈
+    # 1.04/√2^p), computed HERE because Spark demands a literal rsd
+    if len(c.params) != 1 or len(c.args) != 1:
+        raise ValueError(f"{c.name}(precision)(x) is the parameterized form")
+    try:
+        prec_v = int(c.params[0])
+    except ValueError:
+        raise ValueError(
+            f"{c.name} precision must be a literal integer (it becomes the "
+            "sketch's literal accuracy knob)"
+        ) from None
+    rsd = max(0.01, min(0.36, 1.04 / (2.0 ** (prec_v / 2))))
+    return f"approx_count_distinct({c.args[0]}, {rsd!r})"
+
+
+def _sequence_match_events(c: Call) -> str:
+    raise ValueError(
+        "sequenceMatchEvents: returns the matched events' timestamps, which "
+        "the scalar fold cannot carry — use operators.funnel.sequence_match "
+        "(the complete pattern engine); sequenceMatch/sequenceCount ARE mapped"
+    )
+
+
+_UNSIGNED_MAX = {"UInt8": "255", "UInt16": "65535", "UInt32": "4294967295",
+                 "UInt64": None}
+_ZERO_OF = {
+    "string": "''",
+    "date": "DATE'1970-01-01'",
+    "timestamp": "TIMESTAMP'1970-01-01 00:00:00'",
+    "boolean": "false",
+}
+
+
+def _cast_variant(c: Call) -> str:
+    """``to<Type>OrNull|OrZero|OrDefault`` and ``accurateCast*``: CH's
+    cast-variant contract. OrNull → NULL on failure; OrZero → the type
+    default; OrDefault → the caller's fallback; accurateCast → THROWS on
+    lossy (raise_error branch — a bare non-ANSI cast would silently
+    null). "Failure" includes UNSIGNED RANGE (UInt8 caps at 255 — the
+    widened signed Spark type would happily hold 300) and, for
+    accurateCast, FRACTION LOSS (double-round-trip inequality); surplus
+    args (e.g. a timezone) reject rather than silently drop."""
+    name, args = c.name, c.args
+    if name.startswith("accurateCast"):
+        want_n = 3 if name.endswith("OrDefault") else 2
+        if len(args) != want_n:
+            raise ValueError(
+                f"{name} expects {want_n} args (x, 'Type'"
+                + (", default)" if want_n == 3 else ")")
+            )
+        base = args[1].strip().strip("'\"")
+        sp = CH_SCALAR_SPARK.get(base)
+        if sp is None:
+            raise ValueError(f"{name} type {base!r} not supported")
+        suffix = (
+            "Null" if name.endswith("OrNull")
+            else "Default" if name.endswith("OrDefault")
+            else "THROW"
+        )
+        extra = args[2:]
+    else:
+        cut = name.rindex("Or")
+        base, suffix = name[2:cut], name[cut + 2 :]
+        dm = re.fullmatch(r"Decimal(32|64|128)", base)
+        if dm:
+            prec = {"32": 9, "64": 18, "128": 38}[dm.group(1)]
+            if len(args) < 2:
+                raise ValueError(f"{name} needs a scale argument")
+            sp = f"decimal({prec},{args[1].strip()})"
+            extra = args[2:]
+        else:
+            sp = CH_SCALAR_SPARK.get(base)
+            extra = args[1:]
+        if sp is None:
+            raise ValueError(f"{name}: no mapping for base type {base!r}")
+    x = args[0]
+    if len(extra) != (1 if suffix == "Default" else 0):
+        raise ValueError(
+            f"{name}: unexpected extra argument(s) — an optional "
+            "timezone/precision cannot be honored here, raising instead of "
+            "silently dropping it"
+        )
+    tc = f"try_cast({x} as {sp})"
+    if base in _UNSIGNED_MAX:
+        # out-of-range for the UNSIGNED CH type is a cast failure even
+        # though the widened signed Spark type holds the value
+        lo = f"try_cast({x} as double) < 0"
+        hi = (
+            f" OR try_cast({x} as double) > {_UNSIGNED_MAX[base]}"
+            if _UNSIGNED_MAX[base]
+            else ""
+        )
+        tc = f"(CASE WHEN {lo}{hi} THEN NULL ELSE {tc} END)"
+    if suffix == "Null":
+        return tc
+    if suffix == "Zero":
+        return f"coalesce({tc}, {_ZERO_OF.get(sp, f'cast(0 as {sp})')})"
+    if suffix == "Default":
+        return f"coalesce({tc}, cast({extra[0]} as {sp}))"
+    # THROW (accurateCast)
+    fails = [f"({tc} IS NULL AND ({x}) IS NOT NULL)"]
+    if sp in ("tinyint", "smallint", "int", "bigint", "decimal(38,0)"):
+        # fraction loss: 1.5 → Int32 must THROW (ANSI cast truncates
+        # silently)
+        fails.append(
+            f"(try_cast({x} as double) IS NOT NULL AND cast({tc} as double) "
+            f"!= try_cast({x} as double))"
+        )
+    return (
+        f"(CASE WHEN {' OR '.join(fails)} THEN "
+        f"cast(raise_error('accurateCast: value does not fit {base}') as "
+        f"{sp}) ELSE {tc} END)"
+    )
+
+
+def _to_week(c: Call) -> str:
+    # CH toWeek default mode 0: Sunday-first weeks, week 0 for days
+    # before the year's first Sunday (MySQL WEEK(d, 0)); modes 1/3 are
+    # the ISO week → weekofyear. Other modes rejected loudly.
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    t = c.args[0]
+    mode = c.args[1].strip() if len(c.args) == 2 else "0"
+    if mode == "0":
+        off = f"pmod(8 - dayofweek(date_trunc('YEAR', {t})), 7)"
+        return f"((dayofyear({t}) - {off} + 6) div 7)"
+    if mode in ("1", "3"):
+        return f"weekofyear({t})"
+    raise ValueError(f"toWeek mode {mode} not supported (0, 1, 3)")
+
+
+def _numbers(c: Call) -> str:
+    # CH table function FROM numbers(n) / numbers(offset, n) → Spark's
+    # range() TVF, aliased to CH's column name `number`. Emitted as a
+    # subquery so it works in any FROM/JOIN position.
+    args = c.args
+    if len(args) == 1:
+        return f"(SELECT id AS number FROM range({args[0]}))"
+    if len(args) == 2:
+        return (
+            f"(SELECT id AS number FROM range({args[0]}, ({args[0]}) + "
+            f"({args[1]})))"
+        )
+    return _unmapped(c)
+
+
+def _full_frame_over(c: Call, fn: str) -> str | None:
+    """If an inline ``OVER (spec)`` follows the call, the translated spec
+    with any FULL frame clause removed, and ``c.end`` moves past it;
+    None when no inline OVER follows (named-window references pass
+    through untouched).
+
+    Used by the lag/lead-family translations: Spark's offset window
+    functions REJECT explicit frames, and their semantics equal the CH
+    *InFrame functions' only under the default frame or the full
+    ``ROWS/RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING``
+    idiom — a NARROW frame changes boundary-row results and is rejected
+    loudly rather than silently diverging."""
+    toks = c.toks
+    sql = toks.sql
+    n = len(sql)
+    k2 = _skip_blank(sql, c.end, n)
+    k3 = _skip_blank(sql, k2 + 4, n)
+    if not (sql[k2 : k2 + 4].upper() == "OVER" and k3 < n and sql[k3] == "("):
+        return None
+    oc = toks.close(k3)
+    hi = oc
+    depth = toks.depths[toks.at(k3)] + 1
+    for k in range(toks.at(k3 + 1), toks.at(oc)):
+        if toks.depths[k] == depth and toks.is_word(k) and (
+            sql[toks.starts[k] : toks.ends[k]].upper() in ("ROWS", "RANGE")
+        ):
+            hi = toks.starts[k]
+            frame = " ".join(sql[hi:oc].upper().split())
+            if frame not in (
+                "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING",
+                "RANGE BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING",
+            ):
+                raise ValueError(
+                    f"{c.name} with a narrow frame ({sql[hi:oc].strip()}) has "
+                    f"boundary semantics Spark's {fn} cannot express"
+                )
+            break
+    c.end = oc + 1
+    spec = sql[k3 + 1 : hi].rstrip().rstrip(";")
+    return _walk(toks, k3 + 1, k3 + 1 + len(spec), c.ctx)
+
+
+def _lag_in_frame(c: Call) -> str:
+    # CH's frame-respecting lag/lead → Spark lag/lead; full-frame idiom
+    # consumed, narrow frames rejected (see _full_frame_over)
+    fn = "lag" if c.name == "lagInFrame" else "lead"
+    spec = _full_frame_over(c, fn)
+    call = f"{fn}({', '.join(c.args)})"
+    return call if spec is None else f"{call} OVER ({spec})"
+
+
+def _non_negative_derivative(c: Call) -> str:
+    # CH: per-second rate of change vs the previous row in the window,
+    # clamped at 0 (counter-reset tolerance). Composes as TWO Spark lag()
+    # calls over the SAME (frame-stripped) window spec: greatest(0,
+    # Δvalue / Δseconds). First row: lag is NULL and greatest() skips
+    # NULLs → 0, matching CH's default-value-0 first row. The optional
+    # 3rd interval arg is not supported — rejected rather than silently
+    # mis-scaled.
+    if len(c.args) < 2:
+        return _unmapped(c)
+    if len(c.args) > 2:
+        raise ValueError(
+            "nonNegativeDerivative with an interval argument is not "
+            "supported; scale the result instead"
+        )
+    spec = _full_frame_over(c, "lag")
+    if spec is None:
+        raise ValueError(
+            "nonNegativeDerivative requires an inline OVER (...) window"
+        )
+    ov = f"OVER ({spec})"
+    val, ts = c.args
+    return (
+        f"greatest(CAST(0 AS DOUBLE), (CAST({val} AS DOUBLE) - lag({val}) "
+        f"{ov}) / (unix_timestamp({ts}) - unix_timestamp(lag({ts}) {ov})))"
+    )
+
+
+def _date_diff(c: Call) -> str:
+    # unit must be a string literal — the rewrite is static. dateDiff (+
+    # its timestampDiff aliases) counts boundary CROSSINGS (mapped per
+    # unit in _DATEDIFF_BOUNDARY); age counts COMPLETE units = Spark
+    # timestampdiff.
+    args = c.args
+    if len(args) != 3:
+        return _unmapped(c)
+    u = args[0].strip().strip("'\"").upper()
+    if c.name != "age":
+        if u not in _DATEDIFF_BOUNDARY:
+            raise ValueError(f"dateDiff unit {args[0]} not supported")
+        return _DATEDIFF_BOUNDARY[u].format(args[1], args[2])
+    if u not in _AGE_UNITS:
+        raise ValueError(f"age unit {args[0]} not supported")
+    return f"timestampdiff({u}, {args[1]}, {args[2]})"
+
+
+def _interval_seconds(c: Call, what: str) -> tuple[int, str]:
+    """The seconds and the unit of the ``INTERVAL n UNIT`` second
+    argument; second-based units only — month/year intervals need
+    calendar arithmetic CH ties to the server timezone, rejected rather
+    than approximated."""
+    parts = c.args[1].split()
+    if (
+        len(parts) != 3
+        or parts[0].upper() != "INTERVAL"
+        or not parts[1].isdigit()
+        or parts[2].upper().rstrip("S") not in _INTERVAL_SECONDS
+    ):
+        raise ValueError(
+            f"{what} supports INTERVAL n SECOND/MINUTE/HOUR/DAY/WEEK, got "
+            f"{c.args[1]!r}"
+        )
+    unit = parts[2].upper().rstrip("S")
+    return int(parts[1]) * _INTERVAL_SECONDS[unit], unit
+
+
+def _to_start_of_interval(c: Call) -> str:
+    # floor the epoch to n·unit_seconds. 3-arg (r12, CH 24.9+): an
+    # explicit ORIGIN defines the alignment — floor the origin-relative
+    # offset.
+    args = c.args
+    if len(args) not in (2, 3):
+        return _unmapped(c)
+    secs, unit = _interval_seconds(c, "toStartOfInterval")
+    if len(args) == 3:
+        # CH's ORIGINAL 3-arg spelling passes a TIMEZONE string literal
+        # here; only the 24.9+ ORIGIN-timestamp form is supported —
+        # reject the tz spelling loudly instead of mis-reading it as an
+        # origin (ADVICE r12)
+        a2 = args[2].strip()
+        if is_quoted(a2):
+            raise ValueError(
+                f"toStartOfInterval(t, INTERVAL, {a2}) timezone variant "
+                "unsupported — the session timezone is used; pass an origin "
+                "TIMESTAMP as the 3rd argument instead"
+            )
+        o = f"unix_timestamp({args[2]})"
+        return (
+            f"to_timestamp({o} + CAST(floor((unix_timestamp({args[0]}) - {o}) "
+            f"/ {secs}) AS BIGINT) * {secs})"
+        )
+    # CH aligns week intervals to Monday; epoch 0 is a Thursday, so
+    # shift 3 days pre-floor
+    off = 259200 if unit == "WEEK" else 0
+    return (
+        f"to_timestamp(floor((unix_timestamp({args[0]}) + {off}) / {secs}) * "
+        f"{secs} - {off})"
+    )
+
+
+def _tumble(c: Call) -> str:
+    # time-window TVF helpers (r12): tumbling windows are pure
+    # arithmetic — start = the floored interval (same machinery as
+    # toStartOfInterval), end = start + width; tumble() is the (start,
+    # end) tuple with CH's col1/col2 field names. Second-based units
+    # only (same constraint and reasons as toStartOfInterval).
+    # (hop/hopStart/hopEnd are lowered by _rewrite_hop before dispatch:
+    # GROUP BY hop → Spark sliding window() generator, ungrouped →
+    # first-window bounds)
+    if len(c.args) != 2:
+        return _unmapped(c)
+    secs, unit = _interval_seconds(c, c.name)
+    off = 259200 if unit == "WEEK" else 0
+    st = (
+        f"floor((unix_timestamp({c.args[0]}) + {off}) / {secs}) * {secs} - "
+        f"{off}"
+    )
+    if c.name == "tumbleStart":
+        return f"to_timestamp({st})"
+    if c.name == "tumbleEnd":
+        return f"to_timestamp(({st}) + {secs})"
+    return (
+        f"struct(to_timestamp({st}) AS col1, to_timestamp(({st}) + {secs}) AS "
+        "col2)"
+    )
+
+
+_INTERVAL_UNITS = ("second", "minute", "hour", "day", "week", "month",
+                   "quarter", "year", "millisecond", "microsecond",
+                   "nanosecond")
+
+
+def _to_interval(c: Call) -> str:
+    # generic toInterval(n, 'unit') (r12, CH 25.x) — dispatches onto the
+    # typed toIntervalX templates
+    if len(c.args) != 2:
+        return _unmapped(c)
+    unit = c.args[1].strip().strip("'\"").lower()
+    if unit not in _INTERVAL_UNITS or unit not in c.args[1].lower():
+        raise ValueError(
+            "toInterval(n, unit): the unit must be a string literal "
+            "(second…year or "
+            "sub-second), got " + c.args[1]
+        )
+    return _mapped(f"toInterval{unit.capitalize()}", [c.args[0]])
+
+
+def _format_datetime(c: Call) -> str:
+    # CH %-specifiers → Spark datetime pattern, literal formats only
+    # (non-literal formats can't be mapped statically — raise rather than
+    # emit wrong output). A 3rd timezone argument composes the toTimeZone
+    # mapping: render the same instant in that zone (sound because
+    # session.py pins the session tz to UTC — date_format would
+    # otherwise render UTC).
+    args = c.args
+    if len(args) < 2:
+        return _unmapped(c)
+    if len(args) > 3:
+        raise ValueError("formatDateTime takes at most 3 arguments")
+    if len(args) == 3:
+        args = [f"from_utc_timestamp({args[0]}, {args[2]})", args[1]]
+    fmt = args[1].strip()
+    if not (fmt.startswith("'") and fmt.endswith("'")):
+        raise ValueError("formatDateTime needs a literal format string")
+    # pattern-level quotes (literal text) must be doubled when embedded
+    # in the SQL string literal
+    pat = _ch_datetime_format(fmt[1:-1]).replace("'", "''")
+    return f"date_format({args[0]}, '{pat}')"
+
+
+def _extract(c: Call) -> str:
+    # CH extract/extractAll: first capture group when the pattern has
+    # one, else the whole match. Decidable only for literal patterns;
+    # group 1 on a group-less pattern THROWS under ANSI, so non-literal
+    # patterns conservatively take the whole match. Capture groups are
+    # COUNTED (escaped '\(' and '(?:' excluded) — substring-'(' would
+    # pick group 1 on zero-group regexes.
+    if len(c.args) != 2:
+        return _unmapped(c)
+    pat = c.args[1].strip()
+    grp = 1 if pat.startswith("'") and _regex_capture_groups(pat[1:-1]) else 0
+    fn = "regexp_extract_all" if c.name == "extractAll" else "regexp_extract"
+    return f"{fn}({c.args[0]}, {c.args[1]}, {grp})"
+
+
+_FILE_FORMATS = {
+    "parquet": "parquet", "orc": "orc", "jsoneachrow": "json",
+    "ndjson": "json", "jsonlines": "json", "json": "json",
+}
+
+
+def _file(c: Call) -> str:
+    # CH file() table function → Spark direct-path SQL (SELECT … FROM
+    # parquet.`/path`). Self-describing formats only: CSV/TSV need
+    # header/delimiter options the path syntax cannot carry — use
+    # sources.read_table for those.
+    path = c.args[0].strip()
+    if not is_quoted(path):
+        raise ValueError("file() needs a literal path")
+    p = path[1:-1]
+    fmt = (
+        c.args[1].strip().strip("'\"").lower()
+        if len(c.args) >= 2
+        else p.rsplit(".", 1)[-1].lower()
+    )
+    if fmt not in _FILE_FORMATS:
+        raise ValueError(
+            f"file() format {fmt!r} unsupported in SQL position (CSV/TSV need "
+            "header/delimiter options) — load via sources.read_table and pass "
+            "it as a view"
+        )
+    return f"{_FILE_FORMATS[fmt]}.`{p}`"
+
+
+def _date_add(c: Call) -> str:
+    # dateAdd(unit, n, d) → the type-preserving add{U}s family (same
+    # interval arithmetic, swapped args)
+    if len(c.args) != 3:
+        return _unmapped(c)
+    unit = c.args[0].strip().strip("'\"").lower()
+    base_name = f"add{unit.capitalize()}s"
+    if base_name not in TEMPLATES:
+        raise ValueError(f"{c.name}: unsupported unit {unit!r}")
+    neg = c.name.lower().endswith(("sub", "_sub"))
+    n_arg = f"-({c.args[1]})" if neg else c.args[1]
+    return _mapped(base_name, [c.args[2], n_arg])
+
+
+def _decimal_arith(c: Call) -> str:
+    if len(c.args) != 3:
+        raise ValueError(
+            f"{c.name}: pass the result scale explicitly (CH defaults it from "
+            "the operand types, which a text rewrite cannot see)"
+        )
+    op = "*" if c.name == "multiplyDecimal" else "/"
+    return (
+        f"cast(({c.args[0]}) {op} ({c.args[1]}) as decimal(38, {c.args[2]}))"
+    )
+
+
+def _now64(c: Call) -> str:
+    # precision arg accepted ≤6 (Spark timestamps are µs); beyond that
+    # the extra digits cannot exist. A TIMEZONE argument must not drop
+    # silently — the session is pinned UTC, so the rendered wall-clock
+    # would differ.
+    if len(c.args) >= 2:
+        raise ValueError(
+            "now64 with a timezone: compose toTimeZone(now64(), tz) instead — "
+            "dropping the zone would silently render UTC"
+        )
+    p_ = c.args[0].strip() if c.args else ""
+    if p_.isdigit() and int(p_) > 6:
+        raise ValueError(
+            "now64 precision > 6: Spark timestamps are microsecond-resolution"
+        )
+    return "current_timestamp()"
+
+
+def _extract_groups(c: Call) -> str:
+    if len(c.args) != 2:
+        return _unmapped(c)
+    pat = c.args[1].strip()
+    if not (pat.startswith("'") and pat.endswith("'")):
+        raise ValueError(
+            "extractGroups needs a literal pattern (group count is static)"
+        )
+    n_groups = _regex_capture_groups(pat[1:-1])
+    if n_groups == 0:
+        raise ValueError("extractGroups: pattern has no capture groups")
+    parts = ", ".join(
+        f"regexp_extract({c.args[0]}, {pat}, {g})"
+        for g in range(1, n_groups + 1)
+    )
+    return f"array({parts})"
+
+
+def _aes(c: Call) -> str:
+    # Spark's aes_encrypt/aes_decrypt cover the deterministic mode;
+    # CBC/GCM prepend a random IV/nonce in Spark, so their BYTES can
+    # never match CH's (which takes the IV as an argument) — only ECB is
+    # mappable byte-for-byte
+    if len(c.args) != 3:
+        raise ValueError(
+            f"{c.name} takes (mode, input, key) — an IV argument only applies "
+            "to CBC/GCM, which don't map (Spark self-generates the IV)"
+        )
+    mode = c.args[0].strip().strip("'\"").lower()
+    if not mode.endswith("-ecb"):
+        raise ValueError(
+            f"{c.name} mode {mode!r}: Spark generates its own IV/nonce for "
+            "CBC/GCM so the ciphertext layout differs from CH — only the -ecb "
+            "modes map"
+        )
+    if c.name.startswith(("encrypt", "aes_encrypt")):
+        return f"aes_encrypt({c.args[1]}, {c.args[2]}, 'ECB')"
+    return f"cast(aes_decrypt({c.args[1]}, {c.args[2]}, 'ECB') as string)"
+
+
+def _map_concat(c: Call) -> str:
+    # CH: FIRST occurrence of a key wins; Spark's map_concat THROWS on
+    # duplicates — fold through the mapUpdate shape with the EARLIER map
+    # winning
+    if len(c.args) < 2:
+        raise ValueError("mapConcat needs ≥2 maps")
+    acc = c.args[0]
+    for nxt in c.args[1:]:
+        # mapUpdate(a, b): b wins → to make the earlier acc win, update
+        # nxt WITH acc
+        acc = TEMPLATES["mapUpdate"].format(nxt, acc)
+    return acc
+
+
+def _parse_datetime(c: Call) -> str:
+    # CH %-format → Spark pattern via the shared formatDateTime
+    # converter (literal formats only)
+    if len(c.args) != 2:
+        raise ValueError(
+            f"{c.name}(s, fmt): 2-arg literal-format form only (a timezone "
+            "argument would silently re-zone — compose toTimeZone)"
+        )
+    fmt = c.args[1].strip()
+    if not (fmt.startswith("'") and fmt.endswith("'")):
+        raise ValueError(f"{c.name} needs a literal format string")
+    pat = _ch_datetime_format(fmt[1:-1]).replace("'", "''")
+    fn = "to_timestamp" if c.name == "parseDateTime" else "try_to_timestamp"
+    expr = f"{fn}({c.args[0]}, '{pat}')"
+    if c.name == "parseDateTimeOrZero":
+        expr = f"coalesce({expr}, TIMESTAMP'1970-01-01 00:00:00')"
+    return expr
+
+
+def _kernel_arity(c: Call) -> ValueError:
+    return ValueError(
+        f"{c.name}: wrong arity {len(c.args)} — the mapped forms take one "
+        "string argument (morton: mortonEncode(x, y) / mortonDecode(2, code))"
+    )
+
+
+def _html_decode(c: Call) -> str:
+    # html.unescape kernel — the full HTML5 entity table
+    # (functions/strkernels.py)
+    if len(c.args) != 1:
+        raise _kernel_arity(c)
+    return f"__ch_html_dec({c.args[0]})"
+
+
+# _STR_KERNELS names whose wrong arity rejects; the rest pass through
+_ONE_STRING_KERNELS = frozenset(
+    "punycodeEncode punycodeDecode tryPunycodeDecode idnaEncode tryIdnaEncode "
+    "idnaDecode toBase58 base58Encode base58Decode "
+    "tryBase58Decode".split()
+)
+
+
+def _str_kernel(c: Call) -> str:
+    # stdlib-exact Python kernels (functions/strkernels.py): punycode is
+    # Python's RFC 3492 codec, idna the IDNA2003 ToASCII/ToUnicode pair,
+    # base58 the Bitcoin alphabet with leading-zero → '1' padding;
+    # throwing CH forms return NULL on invalid input, try* forms ''
+    if len(c.args) == 1:
+        return f"{_STR_KERNELS[c.name]}({c.args[0]})"
+    if c.name in _ONE_STRING_KERNELS:
+        raise _kernel_arity(c)
+    return _unmapped(c)
+
+
+def _morton_encode(c: Call) -> str:
+    # 2-D Morton code as a pure JVM bit-interleave fold (first argument
+    # → even bits, matching CH); inputs must fit UInt32 like CH's 2-arg
+    # form. The result is CH's UInt64 BITS in a signed BIGINT: codes
+    # with bit 63 set print negative but sort/join/decode identically
+    if len(c.args) != 2:
+        raise _kernel_arity(c)
+    x_, y_ = c.args
+    # shiftright() FUNCTION, not the >> operator: the parser rejects
+    # '>>' inside struct(...) arguments (ambiguous with struct<...> type
+    # syntax), and this expression nests into mortonDecode's struct
+    return (
+        "aggregate(sequence(0, 31), CAST(0 AS BIGINT), (__acc, __i) -> __acc "
+        f"+ shiftleft(shiftright(CAST({x_} AS BIGINT), __i) & 1, 2 * __i) + "
+        f"shiftleft(shiftright(CAST({y_} AS BIGINT), __i) & 1, 2 * __i + 1))"
+    )
+
+
+def _morton_decode(c: Call) -> str:
+    if len(c.args) != 2:
+        raise _kernel_arity(c)
+    if c.args[0].strip() != "2":
+        raise ValueError(
+            "mortonDecode: only the 2-D form is mapped (mortonDecode(2, code))"
+        )
+    # promote via 1L * (…), NOT CAST (the parser rejects a lambda inside
+    # CAST — the nested mortonEncode's '->' fails there); shiftright()
+    # FUNCTION, not '>>' (rejected inside struct(...) args); distinct
+    # lambda names avoid shadowing the nested encode's variables
+    deint = (
+        "aggregate(sequence(0, 31), CAST(0 AS BIGINT), (__dacc, __dj) -> "
+        "__dacc + shiftleft(shiftright(CAST(1 AS BIGINT) * ({c}), 2 * __dj + "
+        "{o}) & 1, __dj))"
+    )
+    return (
+        "struct("
+        + deint.format(c=c.args[1], o=0) + " AS col1, "
+        + deint.format(c=c.args[1], o=1) + " AS col2)"
+    )
+
+
+def _hilbert_2d(c: Call) -> ValueError:
+    return ValueError(
+        f"{c.name}: 2-D forms only — {c.name}(x, y) / hilbertDecode(2, code)"
+    )
+
+
+def _hilbert_encode(c: Call) -> str:
+    # r12: classic xy2d kernel (stats.hilbert_xy2d). Locality contract
+    # matches CH; curve ORIENTATION may differ from CH's lookup tables
+    # (the cityHash→xxhash intent policy — don't mix encodings across
+    # engines). 1-arg form is the identity, as documented.
+    if len(c.args) == 1:
+        return f"CAST({c.args[0]} AS BIGINT)"
+    if len(c.args) == 2:
+        return (
+            f"__ch_hilbert_enc(CAST({c.args[0]} AS BIGINT), CAST({c.args[1]} "
+            "AS BIGINT))"
+        )
+    raise _hilbert_2d(c)
+
+
+def _hilbert_decode(c: Call) -> str:
+    # hilbertDecode(n, code): n=1 identity tuple, n=2 the d2xy inverse
+    # (tuple via col1/col2 — same shape as mortonDecode)
+    if len(c.args) != 2:
+        raise _hilbert_2d(c)
+    n = c.args[0].strip()
+    if n == "1":
+        return f"struct(CAST({c.args[1]} AS BIGINT) AS col1)"
+    if n == "2":
+        dec = f"__ch_hilbert_dec(CAST({c.args[1]} AS BIGINT))"
+        return (
+            f"struct(element_at({dec}, 1) AS col1, element_at({dec}, 2) AS "
+            "col2)"
+        )
+    raise ValueError(
+        "hilbertDecode: the Hilbert curve here is 2-D — n must be the literal "
+        "1 or 2"
+    )
+
+
+def _bit_rotate(c: Call) -> str:
+    # renamed by the typed-cast pre-pass (r12): the inner to*IntW cast
+    # told us width and signedness
+    tag = c.name[9:]
+    return _bitrotate_sql(
+        int(tag[1:]), c.name.startswith("__bitRotL"), c.args[0], c.args[1],
+        signed=tag[0] == "s",
+    )
+
+
+def _sim_kernel(c: Call) -> str:
+    # exact fuzzy-similarity kernels (functions/strkernels.py): OSA
+    # Damerau-Levenshtein, Jaro/Jaro-Winkler (prefix ≤ 4, p = 0.1),
+    # byte-set Jaccard, positional byte Hamming + length diff — niche
+    # scalar functions on short strings, not scan-hot-path material;
+    # operators.dedup's n-gram Jaccard remains the corpus-scale path
+    if len(c.args) != 2:
+        raise ValueError(f"{c.name}: takes exactly two string arguments")
+    return f"{_SIM_KERNELS[c.name]}({c.args[0]}, {c.args[1]})"
+
+
+def _to_decimal_string(c: Call) -> str:
+    if len(c.args) != 2:
+        return _unmapped(c)
+    n_ = c.args[1].strip()
+    if not n_.isdigit():
+        raise ValueError("toDecimalString needs a literal precision")
+    # decimal literals break %f (playbook: format_string rejects
+    # Decimal) — go through double
+    return f"format_string('%.{int(n_)}f', cast({c.args[0]} as double))"
+
+
+# backslash-escape CH's regex metacharacter set \ | ( ) ^ $ . [ ] ? * + {
+# : −  (NUL bytes, which CH also escapes, cannot appear in a SQL literal
+# and are left as-is)
+_QUOTE_META = "'([\\\\\\\\|()^$.\\\\[\\\\]?*+{:-])', '\\\\\\\\$1'"
+
+
+def _regexp_quote_meta(c: Call) -> str:
+    if len(c.args) != 1:
+        return _unmapped(c)
+    return f"regexp_replace({c.args[0]}, {_QUOTE_META})"
+
+
+def _bit_slice(c: Call) -> str:
+    # round 12: Arrow kernel (strkernels.bit_slice) — 1-based MSB-first
+    # bit offsets over the UTF-8 bytes, result zero-padded to whole
+    # bytes (BINARY); negative offset/length follow CH's substring
+    # conventions
+    if len(c.args) not in (2, 3):
+        return _unmapped(c)
+    ln = c.args[2] if len(c.args) == 3 else "NULL"
+    return (
+        f"__ch_bitslice({c.args[0]}, CAST({c.args[1]} AS BIGINT), CAST({ln} "
+        "AS BIGINT))"
+    )
+
+
+def _tuple_element(c: Call) -> str:
+    if len(c.args) == 3:
+        raise ValueError(
+            "tupleElement: the 3-arg default form only matters for "
+            "Variant/JSON dynamic tuples — on typed structs a missing field "
+            "is an ANALYSIS error; use the 2-arg form"
+        )
+    if len(c.args) != 2:
+        return _unmapped(c)
+    # tuple(...) → struct(...) auto-names fields col1..colN (1-based like
+    # CH); a literal name addresses a named-tuple field directly.
+    idx = c.args[1].strip()
+    if idx.isdigit():
+        return f"({c.args[0]}).col{idx}"
+    if len(idx) >= 3 and is_quoted(idx):
+        return f"({c.args[0]}).{idx[1:-1]}"
+    raise ValueError(
+        "tupleElement needs a literal index or name — a runtime-computed "
+        "element cannot be resolved to a struct field statically"
+    )
+
+
+def _untuple(c: Call) -> str:
+    if len(c.args) != 1:
+        return _unmapped(c)
+    base = c.args[0].strip()
+    if not base.replace(".", "").isidentifier():
+        raise ValueError(
+            "untuple supports a simple column reference only (expands to "
+            "col.*)"
+        )
+    return f"{base}.*"
+
+
+def _dict_get(c: Call) -> str:
+    dname = c.args[0].strip().strip("'\"")
+    attr = c.args[1].strip().strip("'\"")
+    sub = f"(SELECT {attr} FROM {dname} WHERE __key = {c.args[2]})"
+    if c.name == "dictGetOrDefault":
+        sub = f"coalesce({sub}, {c.args[3]})"
+    return sub
+
+
+def _dict_get_typed(c: Call) -> str:
+    # typed dictGet<Type>[OrDefault] spellings: the same attribute
+    # subquery with the declared cast
+    ty_raw = c.name[len("dictGet"):]
+    has_def = ty_raw.endswith("OrDefault")
+    if has_def:
+        ty_raw = ty_raw[: -len("OrDefault")]
+    dd_ty = CH_SCALAR_SPARK[ty_raw]
+    if len(c.args) != (4 if has_def else 3):
+        raise ValueError(
+            f"{c.name}('dict', 'attr', key"
+            + (", default)" if has_def else ")")
+            + " is the mapped form"
+        )
+    dname = c.args[0].strip().strip("'\"")
+    attr = c.args[1].strip().strip("'\"")
+    sub = (
+        f"cast((SELECT {attr} FROM {dname} WHERE __key = {c.args[2]}) as "
+        f"{dd_ty})"
+    )
+    if has_def:
+        sub = f"coalesce({sub}, cast({c.args[3]} as {dd_ty}))"
+    return sub
+
+
+def _overlay(c: Call) -> str:
+    # wave 7 (24.7): overlay(s, replace, offset[, len]) — Spark's overlay
+    # shares the 1-based contract; the byte/char distinction is moot for
+    # the single-byte data the engine's columns carry
+    if len(c.args) not in (3, 4):
+        return _unmapped(c)
+    tail = f", {c.args[3]}" if len(c.args) == 4 else ""
+    return f"overlay({c.args[0]}, {c.args[1]}, {c.args[2]}{tail})"
+
+
+def _uuid_to_num(c: Call) -> str:
+    # wave 7, narrowed in r15: the default big-endian variant is
+    # byte-identical to the r10 UUIDStringToNum mapping (this engine
+    # keeps UUIDs as canonical strings, so the two names coincide).
+    # UUIDStringToNum/UUIDNumToString themselves stay on template
+    # dispatch (r10 mappings, pinned in tests/test_audit_r10.py) — r14's
+    # blanket reject here shadowed them and shipped a regression.
+    variant = c.args[1].strip() if len(c.args) == 2 else "1"
+    if len(c.args) in (1, 2) and variant == "1":
+        return f"unhex(replace({c.args[0]}, '-', ''))"
+    if len(c.args) == 2 and variant == "2":
+        # Microsoft mixed-endian: bytes reversed within the first three
+        # dash groups (4+2+2), tail unchanged. Single-bind the UUID via
+        # the transform wrapper (hex pairs are re-read 9×).
+        return (
+            f"element_at(transform(array(replace({c.args[0]}, '-', '')), __uh "
+            "-> unhex(concat(substring(__uh, 7, 2), substring(__uh, 5, 2), "
+            "substring(__uh, 3, 2), substring(__uh, 1, 2), substring(__uh, "
+            "11, 2), substring(__uh, 9, 2), substring(__uh, 15, 2), "
+            "substring(__uh, 13, 2), substring(__uh, 17)))), 1)"
+        )
+    raise ValueError(
+        "UUIDToNum: variant must be the literal 1 (big-endian, default) or 2 "
+        "(Microsoft mixed-endian)"
+    )
+
+
+def _dict_has(c: Call) -> str:
+    if len(c.args) != 2:
+        return _unmapped(c)
+    dname = c.args[0].strip().strip("'\"")
+    return (
+        f"((SELECT count(1) FROM {dname} WHERE __key = {c.args[1]}) > 0)"
+    )
+
+
+def _throw_if(c: Call) -> str:
+    # wave 6: assert_true throws when its condition is FALSE — throwIf
+    # throws when TRUE; CH returns 0 when it doesn't throw (the CASE
+    # supplies it, assert_true yields NULL)
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    msg = f", {c.args[1]}" if len(c.args) == 2 else ""
+    return (
+        f"(CASE WHEN assert_true(NOT CAST({c.args[0]} AS BOOLEAN){msg}) IS "
+        "NULL THEN 0 END)"
+    )
+
+
+def _group_concat(c: Call) -> str:
+    # wave 6: the non-parameterized delimiter form groupConcat(x, sep)
+    # (24.x docs); the limit tail is order-dependent → reject
+    if c.params is not None:
+        return _param_template(c)
+    if len(c.args) not in (2, 3):
+        return _unmapped(c)
+    if len(c.args) == 3:
+        raise ValueError(
+            "groupConcat(x, sep, limit): the limit keeps the FIRST n values "
+            "in insertion order (block-order) — drop the limit or use "
+            "groupArraySorted + array_join"
+        )
+    return f"array_join(collect_list({c.args[0]}), {c.args[1]})"
+
+
+def _join_get(c: Call) -> str:
+    # joinGet('t', 'attr', key…) over a join table of the context
+    # (ctx.join_tables) — correlated scalar subquery (Catalyst
+    # decorrelates, AQE broadcasts the join-table side: the same plan CH
+    # serves from its in-memory hash table). joinGet returns the attr's
+    # TYPE DEFAULT on a miss (types captured by join_table());
+    # joinGetOrNull NULL.
+    name, args = c.name, c.args
+    if len(args) < 3:
+        raise ValueError(f"{name} needs ('table', 'attr', key…)")
+    jt = args[0].strip().strip("'\"").split(".")[-1]
+    attr = args[1].strip().strip("'\"")
+    info = c.ctx.join_tables.get(jt)
+    if info is None:
+        raise ValueError(
+            f"{name}: {jt!r} is not registered as a join table — add "
+            "join_table(df, key_cols) to the QueryContext's join_tables (the "
+            "Join-engine analog), or use an explicit LEFT JOIN / dictGet over "
+            "a dictionary"
+        )
+    jkeys, jtypes = list(info.keys), info.types
+    if len(args) - 2 != len(jkeys):
+        raise ValueError(
+            f"{name}: {jt!r} is keyed by {jkeys} — pass {len(jkeys)} key "
+            f"expression(s), got {len(args) - 2}"
+        )
+    if attr not in jtypes:
+        raise ValueError(
+            f"{name}: {jt!r} has no column {attr!r} (columns: "
+            f"{sorted(jtypes)})"
+        )
+    cond = " AND ".join(f"{k} = ({a})" for k, a in zip(jkeys, args[2:]))
+    sub = f"(SELECT {attr} FROM {jt} WHERE {cond})"
+    if name == "joinGet":
+        sub = f"coalesce({sub}, {_join_type_default_sql(jtypes[attr])})"
+    return sub
+
+
+def _snowflake_to_datetime(c: Call) -> str:
+    # NEW-style snowflake pair: epoch param defaults 0 (the deprecated
+    # snowflakeToDateTime keeps the Twitter epoch — separate mapping).
+    # The 64 variant returns DateTime64(3) — timestamp_millis keeps the
+    # same ms precision (wave 6)
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    ep = c.args[1] if len(c.args) == 2 else "0"
+    return f"timestamp_millis(({c.args[0]} DIV 4194304) + ({ep}))"
+
+
+def _datetime64_to_snowflake(c: Call) -> str:
+    # millisecond-precision sibling of dateTimeToSnowflakeID (r12): ID =
+    # (ms − epoch) << 22; epoch param defaults 0 like the new pair
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    ep = c.args[1] if len(c.args) == 2 else "0"
+    return (
+        f"((unix_millis(CAST({c.args[0]} AS TIMESTAMP)) - ({ep})) * 4194304)"
+    )
+
+
+def _datetime_to_snowflake(c: Call) -> str:
+    if len(c.args) not in (1, 2):
+        return _unmapped(c)
+    ep = c.args[1] if len(c.args) == 2 else "0"
+    return (
+        f"shiftleft(unix_millis(cast({c.args[0]} as timestamp)) - ({ep}), 22)"
+    )
+
+
+def _array_shift(c: Call) -> str:
+    # negative n flips direction (CH contract); the 2-arg form fills
+    # with NULL where CH uses the TYPE DEFAULT (0/'') — a text rewrite
+    # cannot synthesize that; pass the fill explicitly for CH-exact
+    # output
+    if len(c.args) not in (2, 3):
+        return _unmapped(c)
+    sh_a, sh_n = c.args[0], c.args[1]
+    fill = (
+        c.args[2] if len(c.args) == 3
+        else f"try_element_at({sh_a}, size({sh_a}) + 1)"
+    )
+    mag = f"least(abs({sh_n}), size({sh_a}))"
+    left = (
+        f"concat(slice({sh_a}, cast({mag} as int) + 1, size({sh_a})), "
+        f"array_repeat({fill}, cast({mag} as int)))"
+    )
+    right = (
+        f"concat(array_repeat({fill}, cast({mag} as int)), slice({sh_a}, 1, "
+        f"size({sh_a}) - cast({mag} as int)))"
+    )
+    if c.name == "arrayShiftRight":
+        left, right = right, left
+    return f"(CASE WHEN ({sh_n}) < 0 THEN {right} ELSE {left} END)"
+
+
+def _bit_test(c: Call) -> str:
+    # variadic bit probes: ALL/ANY of the listed bit positions set
+    if len(c.args) < 2:
+        return _unmapped(c)
+    joiner = " AND " if c.name == "bitTestAll" else " OR "
+    return "(" + joiner.join(
+        f"(shiftright({c.args[0]}, cast({b} as int)) & 1) = 1"
+        for b in c.args[1:]
+    ) + ")"
+
+
+def _array_sort(c: Call) -> str:
+    args = c.args
+    if len(args) == 2 and "->" in args[0]:
+        # key-lambda sort: Spark array_sort's second arg is a
+        # COMPARATOR, not a key — build (key, elem) structs, sort
+        # (struct order = key then elem), extract. Ties break on the
+        # element, not input position (CH is stable; documented delta).
+        sorted_pairs = (
+            f"array_sort(zip_with(transform({args[1]}, {args[0]}), {args[1]}, "
+            "(__sk, __sv) -> struct(__sk AS col1, __sv AS col2)))"
+        )
+        if c.name == "arrayReverseSort":
+            sorted_pairs = f"reverse({sorted_pairs})"
+        return f"transform({sorted_pairs}, __sp -> __sp.col2)"
+    if c.name == "arrayReverseSort" and len(args) == 1:
+        return f"reverse(array_sort({args[0]}))"
+    return _unmapped(c)
+
+
+def _array_partial_sort(c: Call) -> str:
+    # CH leaves elements past `limit` in UNSPECIFIED order — a fully
+    # sorted array is a legal (and the only deterministic) refinement;
+    # the reverse spelling (r12) descends
+    if len(c.args) != 2:
+        return _unmapped(c)
+    if c.name == "arrayPartialSort":
+        return f"array_sort({c.args[1]})"
+    return f"reverse(array_sort({c.args[1]}))"
+
+
+def _trunc(c: Call) -> str:
+    # CH trunc is NUMERIC round-toward-zero; Spark's trunc is DATE
+    # truncation — never pass through
+    a = c.args
+    if len(a) == 1:
+        return f"(sign({a[0]}) * floor(abs({a[0]})))"
+    if len(a) == 2:
+        return (
+            f"(sign({a[0]}) * floor(abs({a[0]}) * pow(10, {a[1]})) / pow(10, "
+            f"{a[1]}))"
+        )
+    return _unmapped(c)
+
+
+def _format(c: Call) -> str:
+    # CH format('{}', x) braces → format_string positional %s; needs a
+    # literal pattern
+    if not c.args:
+        return _unmapped(c)
+    fmt_lit = c.args[0].strip()
+    if not is_quoted(fmt_lit):
+        raise ValueError(
+            "format() needs a literal pattern (the {}-to-%s conversion "
+            "happens at translate time)"
+        )
+    body = fmt_lit[1:-1]
+    conv = []
+    fi = 0
+    while fi < len(body):
+        ch2 = body[fi]
+        if ch2 == "{" and body[fi + 1 : fi + 2] == "{":
+            conv.append("{")
+            fi += 2
+        elif ch2 == "}" and body[fi + 1 : fi + 2] == "}":
+            conv.append("}")
+            fi += 2
+        elif ch2 == "{":
+            j2 = body.index("}", fi)
+            idx_s = body[fi + 1 : j2]
+            conv.append("%s" if idx_s == "" else f"%{int(idx_s) + 1}$s")
+            fi = j2 + 1
+        elif ch2 == "%":
+            conv.append("%%")
+            fi += 1
+        else:
+            conv.append(ch2)
+            fi += 1
+    new_fmt = "".join(conv).replace("'", "\\'")
+    casts = ", ".join(f"cast({a} as string)" for a in c.args[1:])
+    return f"format_string('{new_fmt}'" + (f", {casts}" if casts else "") + ")"
+
+
+_JSON_EXTRACT_TYPES = {
+    "String": "string", "Bool": "boolean", "Date": "date",
+    "DateTime": "timestamp", "Float32": "double", "Float64": "double",
+    **{f"{u}Int{w}": "bigint" for u in ("", "U") for w in (8, 16, 32, 64)},
+}
+
+
+def _json_extract(c: Call) -> str:
+    # typed extraction: literal CH scalar type → cast
+    if len(c.args) != 3:
+        return _unmapped(c)
+    ch_ty = c.args[2].strip().strip("'\"")
+    base_ty = ch_ty.replace("Nullable(", "").rstrip(")")
+    if base_ty not in _JSON_EXTRACT_TYPES:
+        raise ValueError(
+            f"JSONExtract type {ch_ty!r}: scalar tiers only "
+            "(Int*/UInt*/Float*/String/Bool/Date/DateTime) — arrays/tuples "
+            "need from_json with an explicit Spark schema"
+        )
+    return (
+        f"cast(get_json_object({c.args[0]}, concat('$.', {c.args[1]})) as "
+        f"{_JSON_EXTRACT_TYPES[base_ty]})"
+    )
+
+
+def _to_decimal256(c: Call) -> str:
+    # CH scale goes to 76; Spark stops at decimal(38) — validate the
+    # literal scale here so the cap is a loud documented reject, not a
+    # late Spark error
+    if len(c.args) != 2:
+        return _unmapped(c)
+    try:
+        sc256 = int(c.args[1])
+    except ValueError:
+        raise ValueError(
+            "toDecimal256 scale must be a literal integer"
+        ) from None
+    if sc256 > 38:
+        raise ValueError(
+            f"toDecimal256(x, {sc256}): scale exceeds the decimal(38) cap "
+            "Spark can represent"
+        )
+    return f"cast({c.args[0]} as decimal(38, {sc256}))"
+
+
+def _to_datetime64(c: Call) -> str:
+    if len(c.args) not in (2, 3):
+        return _unmapped(c)
+    if len(c.args) == 3:
+        raise ValueError(
+            "toDateTime64 timezone argument is not supported (session "
+            "timezone is pinned UTC) — use toTimeZone for display shifts"
+        )
+    try:
+        prec_dt = int(c.args[1])
+    except ValueError:
+        raise ValueError(
+            "toDateTime64 precision must be a literal integer"
+        ) from None
+    if prec_dt >= 6:
+        # Spark timestamps are micros — 6 is the cap
+        return f"cast({c.args[0]} as timestamp)"
+    scale_dt = 10 ** (6 - prec_dt)
+    return (
+        f"timestamp_micros((unix_micros(cast({c.args[0]} as timestamp)) DIV "
+        f"{scale_dt}) * {scale_dt})"
+    )
+
+
+def _make_date(c: Call) -> str:
+    if len(c.args) == 3:
+        return f"make_date({', '.join(c.args)})"
+    if len(c.args) == 2:
+        # CH 2-arg form: (year, day_of_year)
+        return (
+            f"date_add(make_date({c.args[0]}, 1, 1), cast({c.args[1]} as int) "
+            "- 1)"
+        )
+    return _unmapped(c)
+
+
+def _array_partial_shuffle(c: Call) -> str:
+    # CH shuffles the first `limit` elements and leaves the REST in
+    # unspecified order — a full shuffle is a legal refinement of both
+    # halves (the seeded 3-arg form rejects: Spark SQL's shuffle exposes
+    # no seed)
+    if len(c.args) not in (1, 2):
+        raise ValueError(
+            "arrayPartialShuffle: the seeded form cannot be reproduced (Spark "
+            "SQL's shuffle() has no seed argument) — drop the seed for an "
+            "unseeded shuffle"
+        )
+    return f"shuffle({c.args[0]})"
+
+
+_CHANGE_PARTS = ("changeYear", "changeMonth", "changeDay", "changeHour",
+                 "changeMinute", "changeSecond")
+
+
+def _change_part(c: Call) -> str:
+    # recompose via make_timestamp with ONE field swapped. Always returns
+    # a DateTime (CH preserves Date-in → Date-out; a text rewrite cannot
+    # branch on the runtime type — cast the result if needed).
+    # Out-of-range values error under ANSI, like CH throws. Fraction
+    # preserved via the formatted seconds.
+    if len(c.args) != 2:
+        return _unmapped(c)
+    x = f"cast({c.args[0]} as timestamp)"
+    comps = [
+        f"year({x})", f"month({x})", f"day({x})",
+        f"hour({x})", f"minute({x})",
+        f"cast(date_format({x}, 'ss.SSSSSS') as decimal(9, 6))",
+    ]
+    comps[_CHANGE_PARTS.index(c.name)] = f"({c.args[1]})"
+    return f"make_timestamp({', '.join(comps)})"
+
+
+def _cut_url_parameter(c: Call) -> str:
+    # remove name=value (and its separator) from the query string:
+    # mid-position 'k=v&', then a trailing '&k=v', then a lone '?k=v'
+    # keeping the '?' (CH's observed shapes). Param name regex-quoted as
+    # an expression, so non-literal names work too.
+    if len(c.args) != 2:
+        return _unmapped(c)
+    qk = f"regexp_replace({c.args[1]}, {_QUOTE_META})"
+    s1 = (
+        f"regexp_replace({c.args[0]}, concat('([?&])', {qk}, '=[^&#]*&'), "
+        "'$1')"
+    )
+    s2 = f"regexp_replace({s1}, concat('&', {qk}, '=[^&#]*'), '')"
+    return f"regexp_replace({s2}, concat('\\\\?', {qk}, '=[^&#]*'), '?')"
+
+
+def _uuid_v7(c: Call) -> str:
+    # real RFC 9562 v7 layout: 48-bit unix millis, version nibble 7,
+    # variant 10xx, random tail (md5-of-rand hex as the entropy source)
+    if c.args:
+        return _unmapped(c)
+    ts12 = "lpad(lower(hex(unix_millis(current_timestamp()))), 12, '0')"
+    rnd = "md5(cast(rand() as string))"
+    return (
+        f"concat(substring({ts12}, 1, 8), '-', substring({ts12}, 9, 4), '-7', "
+        f"substring({rnd}, 1, 3), '-', elt(cast(floor(rand() * 4) + 1 as "
+        f"int), '8', '9', 'a', 'b'), substring({rnd}, 4, 3), '-', "
+        f"substring({rnd}, 8, 12))"
+    )
+
+
+def _top_k(c: Call) -> str:
+    if c.params is None:
+        if len(c.args) != 1:
+            return _unmapped(c)
+        c.params = ["10"]  # bare spelling: CH defaults k = 10
+    return _param_template(c)
+
+
+def _replace_regexp_one(c: Call) -> str:
+    # first-match-only regex replace: anchor a lazy prefix group and
+    # re-emit it. Only safe when the replacement is a LITERAL without
+    # backreferences (the prefix group shifts every group number).
+    if len(c.args) != 3:
+        return _unmapped(c)
+    repl = c.args[2].strip()
+    if not is_quoted(repl) or re.search(r"[\\$]\d", repl[1:-1]):
+        raise ValueError(
+            "replaceRegexpOne: only literal replacements without "
+            "backreferences are supported (the implementation prepends a "
+            "capture group, shifting group numbers) — use replaceRegexpAll or "
+            "splice manually"
+        )
+    # the user pattern goes inside a NON-CAPTURING group: a bare
+    # top-level alternation ('a|b') appended after the lazy-prefix
+    # anchor would bind loosely — '^((?:.*?))a|b' lets the 'b' branch
+    # match unanchored anywhere (not first-occurrence) with an empty $1
+    return (
+        f"regexp_replace({c.args[0]}, concat('(?s)^((?:.*?))(?:', "
+        f"{c.args[1]}, ')'), concat('$1', {repl}))"
+    )
+
+
+_SIZE_FORMS = {
+    "length": "size({0})", "empty": "(size({0}) = 0)",
+    "notEmpty": "(size({0}) > 0)",
+}
+
+
+def _container_size(c: Call) -> str:
+    # CH length/empty/notEmpty are POLYMORPHIC — string length AND
+    # array/map size — where Spark's length is string-only (r13 fuzz
+    # seed 20021: length(splitByChar('-', s)) failed analysis). A static
+    # translator can't see column types, so dispatch on the translated
+    # argument's SYNTAX: known array/map-producing spellings → size().
+    # Array-typed COLUMN references still need the CH spelling's string
+    # form replaced by size() at the call site — documented delta.
+    if len(c.args) != 1 or not _is_arrayish(c.args[0]):
+        return _unmapped(c)
+    return _SIZE_FORMS[c.name].format(c.args[0])
+
+
+def _array_element(c: Call) -> str:
+    # explicit-call spellings of the subscript operator — CH
+    # arrayElement works on maps too, so the index cast follows the same
+    # array-vs-map classification as a[k] (r15 self-review: the
+    # unconditional CAST broke arrayElement(m, 'key') under ANSI).
+    # try_element_at because 4.1.2's ANSI element_at returns the LAST
+    # element for a NULL index (fuzz v6 seed 51694).
+    if len(c.args) != 2:
+        return _unmapped(c)
+    base, idx = c.args
+    if _elem_needs_cast(base, idx, c.ctx):
+        idx = f"CAST({idx} AS INT)"
+    expr = f"try_element_at({base}, {idx})"
+    if c.name == "arrayElementOrNull" and (
+        _elem_base_class(base, c.ctx) != "map"
+    ):
+        # CH returns NULL for array index 0; a map key 0 is a legitimate
+        # lookup
+        expr = f"(CASE WHEN ({idx}) = 0 THEN NULL ELSE {expr} END)"
+    return expr
+
+
+def _median_array(c: Call) -> str:
+    # median over ALL elements of the group's arrays (r12):
+    # collected-flatten + the exact element selection at ⌊0.5·n⌋ (the
+    # QuantileExact formula — a deterministic refinement of CH's
+    # sampling median, like the other exact-tier mappings)
+    if len(c.args) != 1:
+        return _unmapped(c)
+    return (
+        "element_at(transform(array(array_sort(flatten(collect_list("
+        f"{c.args[0]})))), __ma -> CASE WHEN size(__ma) = 0 THEN NULL "
+        "ELSE element_at(__ma, CAST(floor(0.5 * size(__ma)) AS INT) + 1) "
+        "END), 1)"
+    )
+
+
+def _retention(c: Call) -> str:
+    # retention(c1, …, ck) → [r1, r1∧r2, …] where rj = "condition j
+    # fired on SOME event in the group" — per-flag bool_or, gated on the
+    # anchor (CH returns Array(UInt8), hence the INT casts)
+    if not c.args:
+        return _unmapped(c)
+    first = c.args[0]
+    flags = [f"CAST(bool_or(CAST(({first}) AS BOOLEAN)) AS INT)"]
+    for a in c.args[1:]:
+        flags.append(
+            f"CAST(bool_or(CAST(({first}) AS BOOLEAN)) AND bool_or(CAST(({a}) "
+            "AS BOOLEAN)) AS INT)"
+        )
+    return "array(" + ", ".join(flags) + ")"
+
+
+def _case_with_expression(c: Call) -> str:
+    # caseWithExpression(x, w1, r1, …, else) → CASE x WHEN w1 THEN r1 …
+    # ELSE else END
+    a = c.args
+    if len(a) < 3:
+        return _unmapped(c)
+    if len(a) % 2 != 0:
+        raise ValueError(
+            "caseWithExpression needs (x, when1, then1, …, else) — pairs plus "
+            "a REQUIRED trailing else"
+        )
+    whens = "".join(
+        f" WHEN {a[x]} THEN {a[x + 1]}" for x in range(1, len(a) - 1, 2)
+    )
+    return f"CASE {a[0]}{whens} ELSE {a[-1]} END"
+
+
+def _distinct_if(c: Call) -> str:
+    # -If ∘ -Distinct compositions (both orders spell the same thing in
+    # CH)
+    if len(c.args) != 2:
+        return _unmapped(c)
+    fn = "count" if c.name.startswith("count") else "sum"
+    return f"{fn}(DISTINCT CASE WHEN {c.args[1]} THEN {c.args[0]} END)"
+
+
+def _json_merge_patch(c: Call) -> str:
+    # RFC 7386 merge kernel, folded pairwise for the variadic spelling
+    if len(c.args) < 2:
+        return _unmapped(c)
+    acc = c.args[0]
+    for nxt in c.args[1:]:
+        acc = f"__ch_json_merge({acc}, {nxt})"
+    return acc
+
+
+# --------------------------------------------------- combinator families
+
+
+def _distinct_combinator(c: Call) -> str:
+    # -Distinct combinator: aggregate over the distinct value set
+    # (clickhouse combinators doc)
+    base = c.name[: -len("Distinct")]
+    return f"{RENAMES.get(base, base)}(DISTINCT {c.args[0]})"
+
+
+def _array_combinator(c: Call) -> str:
+    # -Array combinator: aggregate over all elements of the group's
+    # arrays — composes a per-row array fold with the scalar aggregate
+    # (stays one partial agg, no explode). -ArrayIf additionally
+    # CASE-nulls the array on non-matching rows (size(NULL) is NULL, so
+    # the element counts skip them too)
+    if c.name.endswith("ArrayIf"):
+        base = c.name[: -len("ArrayIf")]
+        a = f"({_case_when(c.args)[0]})"
+    else:
+        base = c.name[: -len("Array")]
+        a = c.args[0]
+    fold = f"aggregate({a}, cast(0 as double), (acc, x) -> acc + x)"
+    if base == "avg":
+        return f"(sum({fold}) / sum(size({a})))"
+    if base == "count":
+        return f"sum(size({a}))"  # counts ELEMENTS, not rows
+    if base == "sum":
+        return f"sum({fold})"
+    return f"{base}(array_{base}({a}))"  # min/max over all elements
+
+
+def _or_null(c: Call) -> str:
+    # -OrNull: NULL instead of the default on empty groups. Spark's
+    # sum/avg/min/max/any_value already return NULL there, so those map
+    # to the base; the zero-returning counters get a nullif. The median
+    # family (r12): the percentile mappings already return NULL on empty
+    # groups — apply the base template directly.
+    base = c.name[:-6]
+    if base in _MEDIANS:
+        return _tmpl_apply(base, TEMPLATES[base], c.args)
+    inner = ", ".join(c.args) if c.args else "*"
+    if base == "count":
+        return f"nullif(count({inner}), 0)"
+    if base == "uniq":
+        return f"nullif(approx_count_distinct({inner}), 0)"
+    if base == "uniqExact":
+        return f"nullif(count(DISTINCT {inner}), 0)"
+    if base in ("any", "anyLast"):
+        # ignore-nulls flag: CH aggregates skip NULLs, so any([NULL, 5])
+        # is 5, not NULL (matches the -IfOrNull branch's any_value(x,
+        # true))
+        return f"any_value({inner}, true)"
+    return f"{base}({inner})"
+
+
+def _or_default(c: Call) -> str:
+    # -OrDefault: the TYPE default on empty groups — synthesizable only
+    # where that default is the numeric 0 (sum/count)
+    base = c.name[:-9]
+    inner = ", ".join(c.args) if c.args else "*"
+    if base == "count":
+        return f"count({inner})"  # already 0
+    if base == "sum":
+        return f"coalesce(sum({inner}), 0)"
+    raise ValueError(
+        f"{c.name}: the empty-group TYPE default is not derivable at "
+        f"translate time — write coalesce({base}(x), <default>) with the "
+        "default you mean"
+    )
+
+
+# value-picking aggregates must skip the NULLs the -If wrap manufactures
+# for non-matching rows
+_IGNORE_NULLS = {
+    "any": "any_value({0}, true)",
+    "anyLast": "any_value({0}, true)",
+    "anyHeavy": "any_value({0}, true)",
+    "first": "first({0}, true)",
+    "last": "last({0}, true)",
+}
+
+
+def _if_combinator(c: Call) -> str:
+    # generic -If combinator: wrap every value arg in CASE WHEN cond,
+    # then dispatch the base aggregate through its own TEMPLATES/RENAMES
+    # entry
+    base, wrapped = c.name[:-2], _case_when(c.args)
+    if base in _IGNORE_NULLS:
+        return _IGNORE_NULLS[base].format(wrapped[0])
+    return _mapped(base, wrapped)
+
+
+# ---------------------------------------------------------- call tables
+
+_REINTERPRET = (
+    "{name}: raw-byte reinterpretation depends on the engine's in-memory "
+    "layout — engine-internal"
+)
+_TUPLE_FIELDS = (
+    "{name}: needs the struct's field list — spell the fields out (t.col1 + "
+    "u.col1, …); the arithmetic family "
+    "(tuplePlus/Minus/Multiply/Divide/Negate/…ByNumber) IS mapped when one "
+    "side is an inline tuple literal"
+)
+_GEOBASE = (
+    "{name}: the embedded-geobase dictionaries ship as data files this engine "
+    "does not have — model regions as a dictionary table and use dictGet"
+)
+
+# Names that only reject: name → message (``{name}`` is the call's name).
+_REJECTS: dict[str, str] = {
+    name: msg
+    for msg, names in (
+        (
+            "{name} is BLOCK-ORDER-dependent (deprecated in ClickHouse "
+            "itself) — rewrite with a window function "
+            "(lag/lead/sum/row_number OVER an "
+            "explicit ORDER BY)",
+            "runningDifference runningAccumulate "
+            "runningDifferenceStartingWithFirstValue neighbor "
+            "rowNumberInAllBlocks rowNumberInBlock blockNumber deltaSum "
+            "deltaSumIf",
+        ),
+        (
+            "{name}: SGD model state is engine-internal — use "
+            "simpleLinearRegression (mapped to "
+            "regr_slope/regr_intercept) or Spark MLlib",
+            "stochasticLinearRegression stochasticLogisticRegression",
+        ),
+        (_REINTERPRET, "byteSize reinterpret"),
+        (
+            "{name}: server-introspection/debug/wire-"
+            "format function with no Spark analog",
+            "sleep sleepEachRow hostName getMacro FQDN tcpPort partitionID "
+            "getServerPort shardNum shardCount currentProfiles currentRoles "
+            "initialQueryID queryID blockSize dumpColumnStructure "
+            "defaultValueOfTypeName defaultValueOfArgumentType indexHint "
+            "generateRandomStructure isDecimalOverflow formatRow "
+            "formatRowNoNewline "
+            # wave 2
+            "transactionID serverUUID zookeeperSessionUptime hostname "
+            "revision uptime buildId getSetting getOSKernelVersion "
+            "displayName currentSchemas connectionId getClientHTTPHeader "
+            "filesystemAvailable filesystemCapacity filesystemUnreserved "
+            "isConstant globalVariable partitionId lowCardinalityKeys "
+            "lowCardinalityIndices replicate aggThrow enabledProfiles "
+            "defaultProfiles enabledRoles defaultRoles getSizeOfEnumType "
+            "blockSerializedSize "
+            "hasThreadFuzzer",  # wave 6
+        ),
+        (_TUPLE_FIELDS,
+         "flattenTuple tupleToNameValuePairs tupleHammingDistance"),
+        (
+            "{name}: no static rewrite — add the intervals individually "
+            "(addDays/addHours/… "
+            "are mapped, type-preserving)",
+            "toTimeWithFixedDate addTupleOfIntervals "
+            "subtractTupleOfIntervals",
+        ),
+        (
+            "convertCharset: charset transcoding needs ICU — decode/encode at "
+            "ingestion, or a pandas "
+            "kernel for exotic charsets",
+            "convertCharset",
+        ),
+        (
+            "{name}: ULID needs Crockford base32 — use generateUUIDv4/uuid() "
+            "for ids or a pandas "
+            "kernel for ULID interop",
+            "ULIDStringToDateTime generateULID",
+        ),
+        # (plain 1-arg mapSort/mapReverseSort are mapped in TEMPLATES;
+        # their comparator-lambda forms reject via the surplus-argument
+        # check there)
+        (_NO_STATIC_REWRITE,
+         "arrayEnumerateUniqRanked arrayEnumerateDenseRanked "
+         "arrayNormalizedGini solveLinearEquation mapPartialSort "
+         "mapPartialReverseSort"),
+        (
+            "{name}: Dynamic/Variant/JSON-type introspection is "
+            "engine-internal — use "
+            "schema_of_json / json_object_keys",
+            "distinctDynamicTypes distinctJSONPaths distinctJSONPathsAndTypes "
+            "JSONAllPaths JSONAllPathsWithTypes JSONDynamicPaths "
+            "JSONDynamicPathsWithTypes JSONSharedDataPaths "
+            "JSONSharedDataPathsWithTypes dynamicType dynamicElement "
+            "variantType variantElement isDynamicElementInSharedData",
+        ),
+        (
+            "arrayReduceInRanges: per-range re-aggregation — explode the "
+            "ranges and use arrayReduce/"
+            "aggregate per slice (slice(arr, start, len))",
+            "arrayReduceInRanges",
+        ),
+        (
+            "{name}: engine-internal helper (KQL dialect / schema codegen / "
+            "CH-dialect "
+            "pretty-printer) with no Spark analog",
+            "nothing kql_array_sort_asc kql_array_sort_desc "
+            "structureToProtobufSchema structureToCapnProtoSchema formatQuery "
+            "formatQueryOrNull formatQuerySingleLine "
+            "formatQuerySingleLineOrNull flameGraph",
+        ),
+        (
+            "{name}: niche codec without a stdlib-exact implementation here — "
+            "base32/base64/base58/"
+            "punycode/crc32 are mapped",
+            "bech32Encode bech32Decode sqidEncode sqidDecode crc64",
+        ),
+        (
+            "{name}: geometry serialization is out of scope — "
+            "pointInPolygon/geohash*/"
+            "greatCircleDistance are the mapped geo surface",
+            "wkt svg readWKT",
+        ),
+        (
+            "{name}: the aggregate base of a -State value is not inferable "
+            "from the argument at translate time — use the explicit "
+            "xMerge(col) spelling (supported for "
+            "sum/count/min/max/any/anyLast/avg/uniq/uniqExact states), or "
+            "compute the final aggregate directly",
+            "initializeAggregation finalizeAggregation",
+        ),
+        (
+            "estimateCompressionRatio: estimates CH codec (ZSTD/LZ4/Delta…) "
+            "behavior this engine does not ship — parquet's own column "
+            "encodings apply here; compare storage via "
+            "system.parts/ddl stats instead",
+            "estimateCompressionRatio",
+        ),
+        (
+            "icebergHash: Iceberg bucket-transform hashing — use "
+            "pmod(xxhash64(x), n) for stable bucketing (same caveat as the "
+            "consistent-hash rejects: moving keys "
+            "between engines breaks placement anyway)",
+            "icebergHash",
+        ),
+        (
+            "{name}: out of scope (WKT parsing / Iceberg partition "
+            "transforms) — pointInPolygon and geohash* are the mapped "
+            "geo surface",
+            "readWKTPoint readWKTPolygon readWKTMultiPolygon readWKTRing "
+            "icebergTruncate",
+        ),
+        (
+            "runningConcurrency is BLOCK-ORDER-dependent (deprecated in "
+            "ClickHouse itself) — use "
+            "maxIntersections or an interval self-join",
+            "runningConcurrency",
+        ),
+        (
+            "{name}: arbitrary-byte random strings — use "
+            "randomPrintableASCII(n) (mapped) for "
+            "printable test data",
+            "randomString randomFixedString randomStringUTF8",
+        ),
+        (
+            "{name}: no closed-form single-expression sampler — compose from "
+            "randExponential/randNormal/randBernoulli (all mapped), e.g. "
+            "lognormal = exp(randNormal(m, s))",
+            "randPoisson randBinomial randNegativeBinomial randChiSquared "
+            "randStudentT randFisherF randLogNormal",
+        ),
+        (
+            "{name}: RAW re-serialization — get_json_object unquotes scalars; "
+            "use "
+            "from_json with an explicit Spark schema",
+            "JSONExtractArrayRaw JSONExtractKeysAndValuesRaw",
+        ),
+        (
+            "{name}: no static Spark rewrite — emptyArrayToSingle's default "
+            "element is TYPE-dependent (invisible to a text rewrite); "
+            "groupArrayInsertAt: "
+            "map_from_entries(collect_list(struct(pos, x)))",
+            "emptyArrayToSingle groupArrayInsertAt",
+        ),
+        (
+            "JSONType: Spark's JSON reader has no type introspection — branch "
+            "on try-parses (json_array_length IS NOT NULL → Array, "
+            "json_object_keys IS NOT NULL → Object)",
+            "JSONType",
+        ),
+        (
+            "javaHashUTF16LE: users of this spelling expect EXACT Java "
+            "hashCode over UTF-16LE bytes, which the BMP-scoped javaHash "
+            "mapping cannot promise — use javaHash (exact for BMP "
+            "strings) or xxhash64 for fingerprints",
+            "javaHashUTF16LE",
+        ),
+        (
+            "JSONRemoveDynamoDBAnnotations: DynamoDB export-format rewriter — "
+            "transform the JSON "
+            "with from_json/to_json on an explicit schema",
+            "JSONRemoveDynamoDBAnnotations",
+        ),
+        (
+            "nested: constructs CH Nested-type column groups "
+            "(engine-internal) — use "
+            "arrays_zip/struct arrays",
+            "nested",
+        ),
+        (
+            "{name}: signal-processing kernels (STL decomposition / FFT "
+            "periodograms) are out of scope — compute with numpy in a pandas "
+            "UDF "
+            "over the collected series if needed",
+            "seriesDecomposeSTL seriesOutliersDetectTukey "
+            "seriesPeriodDetectFFT",
+        ),
+        (
+            "{name}: digest not available in the OpenSSL/hashlib baseline — "
+            "use MD5/SHA-2 (mapped) or "
+            "xxhash64 for non-cryptographic fingerprints",
+            "MD4 RIPEMD160 BLAKE3",
+        ),
+        (
+            "{name}: algorithm-specific bucket placement (moving keys between "
+            "engines breaks the consistency property anyway) — use "
+            "pmod(xxhash64(x), n) for stable bucketing",
+            "kostikConsistentHash yandexConsistentHash jumpConsistentHash",
+        ),
+        (
+            "byteSwap: WIDTH-dependent (a UInt32 swap and a UInt64 swap "
+            "differ) — write the width as a typed cast, byteSwap(toUInt32(x)) "
+            "(8/16/32-bit mapped, r12); 64-bit stays rejected (the swapped "
+            "UInt64 exceeds BIGINT) — compose "
+            "shiftleft/shiftrightunsigned masks for that",
+            "byteSwap",
+        ),
+        # wave 8 (25.9, experimental): the OKLab hue/gamma conventions
+        # aren't pinned by CH docs yet — no parity target to implement
+        # against
+        (
+            "{name}: experimental color-space conversion with unpinned output "
+            "conventions — compute the OKLab transform explicitly "
+            "over the (r, g, b) columns",
+            "colorSRGBToOKLCH colorOKLCHToSRGB",
+        ),
+        (_GEOBASE, "regionIn regionHierarchy"),
+        (
+            "{name}() table function: remote-storage access goes through the "
+            "cluster's Hadoop FS config — read with spark.read against the fs "
+            "URL and pass "
+            "the DataFrame as a view",
+            "s3 url hdfs azureBlobStorage gcs s3Cluster remote "
+            "remoteSecure cluster clusterAllReplicas",
+        ),
+        (
+            "{name}: needs the public-suffix list (a data file, not a "
+            "function) — join against a "
+            "suffix table instead",
+            "firstSignificantSubdomain cutToFirstSignificantSubdomain "
+            "cutToFirstSignificantSubdomainWithWWW "
+            "firstSignificantSubdomainCustom",
+        ),
+        (
+            "demangle: C++ ABI demangling is "
+            "engine-internal",
+            "demangle",
+        ),
+        (
+            "{name}: RAW JSON-text extraction has no faithful Spark analog "
+            "(get_json_object unquotes scalars) — use the typed JSONExtract* "
+            "family or from_json with an "
+            "explicit schema",
+            "JSONExtractRaw",
+        ),
+        (
+            "{name}: rotation width is the CH INTEGER TYPE's width — write it "
+            "as a typed cast, {name}(toUInt32(x), n) (8/16/32-bit mapped, "
+            "r12); 64-bit rotation can set the sign bit past BIGINT's "
+            "unsigned range — compose "
+            "shiftleft/shiftrightunsigned masks for that",
+            "bitRotateLeft bitRotateRight",
+        ),
+        (
+            "toRelativeWeekNum: no faithful static rewrite (the epoch "
+            "alignment is engine-defined) — use toStartOfWeek or "
+            "dateDiff('week', …) instead",
+            "toRelativeWeekNum",
+        ),
+        (
+            "dictGetAll: returns EVERY match of a RegExpTree dictionary "
+            "(unsupported layout) — express the rule set as a table and use a "
+            "JOIN, or dictGet for single-value lookups",
+            "dictGetAll",
+        ),
+        (
+            "{name}: hierarchical-dictionary traversal is recursive — flatten "
+            "the hierarchy at load "
+            "or use an iterative self-join",
+            "dictGetHierarchy dictGetChildren dictGetDescendants dictIsIn",
+        ),
+        (
+            "quantilePrometheusHistogram: needs Prometheus bucket metadata — "
+            "compute from the raw "
+            "observations with quantileExact*/quantileGK",
+            "quantilePrometheusHistogram",
+        ),
+        (
+            "{name}: needs 128-bit address arithmetic — use "
+            "isIPAddressInRange (mapped) for "
+            "membership tests, or IPv4CIDRToRange for v4",
+            "cutIPv6 IPv6CIDRToRange",
+        ),
+        (
+            "{name}: evaluates a server-side ML model artifact — export the "
+            "model and score with a "
+            "pandas_udf instead",
+            "evalMLMethod catboostEvaluate",
+        ),
+        (
+            "{name}: server-catalog introspection — use "
+            "spark.catalog / DESCRIBE from the driver",
+            "hasColumnInTable errorCodeToName",
+        ),
+    )
+    for name in names.split()
+}
+
+# Call name → handler. The single-paren call and the parameterized call
+# ``name(params)(args)`` of a name share its entry.
+_CALLS: dict[str, Callable[[Call], str]] = {
+    **{name: _rejecting(msg) for name, msg in _REJECTS.items()},
+    **_by_name((
+        (_multi_if, "multiIf"),
+        (_count, "count"),
+        (_tuple, "tuple"),
+        (_transform, "transform"),
+        (_format_readable_quantity, "formatReadableQuantity"),
+        (_array_reduce, "arrayReduce"),
+        (_range, "range"),
+        (_to_string, "toString"),
+        (_moving_agg, "groupArrayMovingSum groupArrayMovingAvg"),
+        (_map_agg, "sumMap minMap maxMap countMap avgMap sumMapWithOverflow "
+                   "minMapWithOverflow maxMapWithOverflow sumMappedArrays "
+                   "minMappedArrays maxMappedArrays"),
+        (_map_agg_if, "sumMapIf minMapIf maxMapIf countMapIf avgMapIf"),
+        (_matrix_agg, "corrMatrix covarSampMatrix covarPopMatrix"),
+        (_group_array_last, "groupArrayLast"),
+        (_time_decayed, "exponentialTimeDecayedAvg exponentialTimeDecayedSum "
+                        "exponentialTimeDecayedCount "
+                        "exponentialTimeDecayedMax"),
+        (_seq_next_node, "sequenceNextNode"),
+        (_sparkbar, "sparkbar"),
+        (_ttest, "studentTTest welchTTest"),
+        (_mann_whitney, "mannWhitneyUTest"),
+        (_mean_ztest, "meanZTest"),
+        (_assoc, "cramersV cramersVBiasCorrected theilsU contingency"),
+        (_proportions_ztest, "proportionsZTest"),
+        (_min_sample_size, "minSampleSizeConversion minSampleSizeContinuous "
+                           "minSampleSizeContinous"),
+        (_civ, "categoricalInformationValue"),
+        (_lttb, "largestTriangleThreeBuckets lttb"),
+        (_quantile_gk, "quantileGK quantilesGK quantileDD"),
+        (_exact_quantile, "quantileExact quantilesExact quantileExactLow "
+                          "quantileExactHigh quantileExactExclusive "
+                          "quantilesExactLow quantilesExactHigh "
+                          "quantilesExactExclusive"),
+        (_params_only(_sum_map_filtered),
+         "sumMapFiltered sumMapFilteredWithOverflow"),
+        (_params_only(_uniq_combined), "uniqCombined uniqCombined64"),
+        (_params_only(lambda c: _window_funnel_sql(c.params, c.args)),
+         "windowFunnel"),
+        (_params_only(
+            lambda c: _sequence_match_sql(c.name, c.params, c.args)),
+         "sequenceMatch sequenceCount"),
+        (_params_only(_sequence_match_events), "sequenceMatchEvents"),
+        (_geohash_encode, "geohashEncode"),
+        (_geohash_decode, "geohashDecode"),
+        (_point_in_polygon, "pointInPolygon"),
+        (_geohashes_in_box, "geohashesInBox"),
+        (_tuple_arith, "tuplePlus tupleMinus tupleMultiply tupleDivide "
+                       "tupleIntDiv tupleModulo vectorSum vectorDifference"),
+        (_tuple_scalar, "tupleNegate tupleMultiplyByNumber "
+                        "tupleDivideByNumber tupleIntDivByNumber "
+                        "tupleModuloByNumber"),
+        (_to_year_week, "toYearWeek"),
+        (_multi_fuzzy_match, "multiFuzzyMatchAny multiFuzzyMatchAnyIndex "
+                             "multiFuzzyMatchAllIndices "
+                             "multiFuzzyMatchAnyUTF8 "
+                             "multiFuzzyMatchAnyIndexUTF8 "
+                             "multiFuzzyMatchAllIndicesUTF8"),
+        (_extract_all_groups, "extractAllGroupsHorizontal "
+                              "extractAllGroupsVertical extractAllGroups"),
+        (_map_apply, "mapApply"),
+        (_stem, "stem"),
+        (_array_split, "arraySplit arrayReverseSplit"),
+        (_json_keys_and_values, "JSONExtractKeysAndValues"),
+        (_xxhash, "cityHash64 sipHash64 farmHash64 farmFingerprint64 "
+                  "metroHash64 halfMD5 sipHash128 cityHash128 murmurHash2_64 "
+                  "murmurHash3_64 murmurHash3_128 wyHash64 gccMurmurHash "
+                  "kafkaMurmurHash "
+                  # wave 8: the keyed/reference SipHash spellings share
+                  # the stable-uniform contract (and the same non-parity)
+                  "sipHash64Keyed sipHash128Keyed sipHash128Reference "
+                  "sipHash128ReferenceKeyed"),
+        (_make_datetime64, "makeDateTime64"),
+        (_byte_swap, "__byteSwapu8 __byteSwapu16 __byteSwapu32 __byteSwaps8 "
+                     "__byteSwaps16 __byteSwaps32"),
+        (_round_bankers, "roundBankers"),
+        (_split_by_string, "splitByString"),
+        (_date_name, "dateName"),
+        (_cast_variant, "accurateCast accurateCastOrNull "
+                        "accurateCastOrDefault"),
+        (_to_week, "toWeek"),
+        (_numbers, "numbers"),
+        (_lag_in_frame, "lagInFrame leadInFrame"),
+        (_non_negative_derivative, "nonNegativeDerivative"),
+        (_date_diff, "dateDiff age timestampDiff timestamp_diff"),
+        (_to_start_of_interval, "toStartOfInterval"),
+        (_tumble, "tumble tumbleStart tumbleEnd"),
+        (_to_interval, "toInterval"),
+        (_format_datetime, "formatDateTime"),
+        (_extract, "extract extractAll"),
+        (_file, "file"),
+        (_date_add, "dateAdd dateSub timestampAdd timestampSub timestamp_add "
+                    "timestamp_sub"),
+        (_decimal_arith, "multiplyDecimal divideDecimal"),
+        (_now64, "now64"),
+        (_extract_groups, "extractGroups"),
+        (_aes, "encrypt decrypt aes_encrypt_mysql aes_decrypt_mysql"),
+        (_map_concat, "mapConcat"),
+        (_parse_datetime, "parseDateTime parseDateTimeOrNull "
+                          "parseDateTimeOrZero"),
+        (_html_decode, "decodeHTMLComponent"),
+        (_str_kernel, " ".join(_STR_KERNELS)),
+        (_morton_encode, "mortonEncode"),
+        (_morton_decode, "mortonDecode"),
+        (_hilbert_encode, "hilbertEncode"),
+        (_hilbert_decode, "hilbertDecode"),
+        (_sim_kernel, " ".join(_SIM_KERNELS)),
+        (_to_decimal_string, "toDecimalString"),
+        (_regexp_quote_meta, "regexpQuoteMeta"),
+        (_bit_slice, "bitSlice"),
+        (_tuple_element, "tupleElement"),
+        (_untuple, "untuple"),
+        (_dict_get, "dictGet dictGetOrNull dictGetOrDefault"),
+        (_overlay, "overlay overlayUTF8"),
+        (_uuid_to_num, "UUIDToNum"),
+        (_dict_has, "dictHas"),
+        (_throw_if, "throwIf"),
+        (_group_concat, "groupConcat"),
+        (_join_get, "joinGet joinGetOrNull"),
+        (_snowflake_to_datetime, "snowflakeIDToDateTime "
+                                 "snowflakeIDToDateTime64"),
+        (_datetime64_to_snowflake, "dateTime64ToSnowflakeID"),
+        (_datetime_to_snowflake, "dateTimeToSnowflakeID"),
+        (_array_shift, "arrayShiftLeft arrayShiftRight"),
+        (_bit_test, "bitTestAll bitTestAny"),
+        (_array_sort, "arraySort arrayReverseSort"),
+        (_array_partial_sort, "arrayPartialSort arrayPartialReverseSort"),
+        (_trunc, "trunc truncate"),
+        (_format, "format"),
+        (_json_extract, "JSONExtract"),
+        (_to_decimal256, "toDecimal256"),
+        (_to_datetime64, "toDateTime64"),
+        (_make_date, "makeDate makeDate32"),
+        (_array_partial_shuffle, "arrayPartialShuffle"),
+        (_change_part, " ".join(_CHANGE_PARTS)),
+        (_cut_url_parameter, "cutURLParameter"),
+        (_uuid_v7, "generateUUIDv7"),
+        (_top_k, "topK"),
+        (_replace_regexp_one, "replaceRegexpOne"),
+        (_container_size, "length empty notEmpty"),
+        (_array_element, "arrayElement arrayElementOrNull"),
+        (_median_array, "medianArray"),
+        (_retention, "retention"),
+        (_case_with_expression, "caseWithExpression"),
+        (_distinct_if, "countIfDistinct countDistinctIf sumDistinctIf "
+                       "sumIfDistinct"),
+        (_json_merge_patch, "JSONMergePatch"),
+    )),
+}
+
+_MEDIANS = ("median", "medianExact", "medianTDigest", "medianTiming")
+_OR_NULL_BASES = ("sum", "avg", "min", "max", "any", "anyLast", "count",
+                  "uniq", "uniqExact")
+_OR_DEFAULT_BASES = ("sum", "count", "avg", "min", "max", "any", "anyLast")
+_DISTINCT_BASES = ("sum", "avg", "count", "min", "max", "groupArray")
+_ARRAY_BASES = ("sum", "min", "max", "count", "avg")
+_TYPED_DICT_GET = re.compile(
+    r"dictGet(U?Int(8|16|32|64)|Float(32|64)|String"
+    r"|Date|DateTime|UUID|IPv4|IPv6)(OrDefault)?"
+)
+
+# Prefix and suffix families, in the order they are tried when a name
+# misses _CALLS and TEMPLATES/RENAMES: (claims(call), handler).
+_FAMILIES: tuple = (
+    (lambda c: c.name.lower().endswith(("argmin", "argmax"))
+     and c.name[:-6] in _ARG_EXTREME_BASES and len(c.args) == 2,
+     _arg_extreme),
+    (lambda c: c.name.endswith(("IfOrNull", "OrNullIf"))
+     and c.name[:-8] in _OR_NULL_IF_BASES and len(c.args) >= 2,
+     _if_or_null),
+    # the r13 exact tier maps the documented family (TEMPLATES + the
+    # groupBitmap* state bases); this catches the unmapped tail / arity
+    # typos
+    (lambda c: c.name.startswith(("bitmap", "groupBitmap"))
+     and not c.name.endswith(("State", "Merge", "MergeState")),
+     _rejecting(
+         "{name}: not in the mapped bitmap family — bitmaps are sorted "
+         "distinct arrays here (bitmapBuild/To Array/Cardinality/Min/Max/"
+         "Contains/HasAny/HasAll/And/Or/Xor/Andnot(+Cardinality)/"
+         "SubsetInRange/SubsetLimit/subBitmap/Transform, "
+         "groupBitmap[And|Or|Xor][State|Merge|MergeState] are mapped)"
+     )),
+    (lambda c: c.name.startswith("quantile")
+     and isinstance(PARAMETERIZED.get(c.name), str)
+     and "{p1}" not in PARAMETERIZED[c.name]
+     and "{params" not in PARAMETERIZED[c.name],
+     _quantile_level),
+    (lambda c: c.name.startswith(("h3", "s2")), _rejecting(_GEO_COVERING)),
+    (lambda c: c.name.startswith("reinterpretAs"), _rejecting(_REINTERPRET)),
+    # remaining tuple-typed tail (concat/flatten/name-value
+    # introspection) — still needs field enumeration a text rewrite
+    # cannot do generally
+    (lambda c: c.name.startswith("tuple") and c.name[5:6].isupper()
+     and c.name != "tupleElement",
+     _rejecting(_TUPLE_FIELDS)),
+    (lambda c: c.name.startswith("multiFuzzyMatch"), _rejecting(
+        "{name}: only the 3-arg literal-pattern forms map "
+        "(Any/AnyIndex/AllIndices, Sellers DP kernel) — for plain regex use "
+        "multiMatchAny (mapped) or the editDistance/ngramSearch kernels"
+    )),
+    (lambda c: c.name.startswith((
+        "lemmatize", "synonyms", "detectLanguage", "detectCharset",
+        "detectProgrammingLanguage", "detectTonality")),
+     _rejecting(
+         "{name}: needs NLP model files — for language ID use "
+         "operators/textstats.py's n-gram heuristic (the pipeline's langid "
+         "operator)"
+     )),
+    (lambda c: c.name.startswith((
+        "wordShingleSimHash", "wordShingleMinHash", "ngramSimHash",
+        "ngramMinHash")),
+     _rejecting(
+         "{name}: sketch-hash scalars are mapped as OPERATORS — "
+         "operators/dedup.py simhash_dedup / minhash_lsh_dedup (fused Arrow "
+         "kernels with recall contracts)"
+     )),
+    # the *ExtractString forms are mapped in TEMPLATES (top-level-path
+    # delta accepted in an earlier round); the REST of the family
+    # rejects
+    (lambda c: c.name.startswith(("simpleJSON", "visitParam")), _rejecting(
+        "{name}: the simpleJSON/visitParam family matches the FIRST key "
+        "occurrence at ANY depth (not a path) — get_json_object cannot "
+        "reproduce that; use JSONExtract* (mapped, top-level path semantics)"
+    )),
+    # wave 8: the Hashes/UTF8 variants silently passed through to
+    # UNRESOLVED_ROUTINE before — same reject as the base tokenizer
+    (lambda c: c.name.startswith("sparseGrams"), _rejecting(
+        "{name}: CH-specific sparse n-gram tokenizer — use tokens()/ngrams() "
+        "(mapped) or the operators/dedup shingle kernels"
+    )),
+    # wave 8 (25.7, experimental): bit-sliced-index vector family
+    (lambda c: c.name.startswith("numericIndexedVector"), _rejecting(
+        "{name}: experimental BSI vector type — model the vector as "
+        "map<int,double> and use the map/transform functions, or groupArray"
+    )),
+    (lambda c: re.fullmatch(r"to\w+Or(Null|Zero|Default)", c.name),
+     _cast_variant),
+    (lambda c: c.name.startswith("regionTo"), _rejecting(_GEOBASE)),
+    (lambda c: c.name.startswith(("__bitRotL", "__bitRotR"))
+     and len(c.args) == 2,
+     _bit_rotate),
+    (lambda c: _TYPED_DICT_GET.fullmatch(c.name), _dict_get_typed),
+    # 25.6 experimental PromQL-resampling family
+    (lambda c: c.name.startswith("timeSeries") and (
+        c.name.endswith("ToGrid") or c.name == "timeSeriesFromGrid"),
+     _rejecting(
+         "{name}: the experimental PromQL grid-resampling family needs "
+         "aligned-grid state — resample declaratively: group by "
+         "toStartOfInterval(ts, INTERVAL n SECOND) and fill gaps with ORDER "
+         "BY … WITH FILL"
+     )),
+    # -State/-Merge combinators (round 12): supported for the plain-state
+    # bases (sum/count/min/max/any/anyLast/avg/uniq/uniqExact — see
+    # _STATE_SQL); everything else still rejects loudly inside
+    # _state_combinator_sql with the alternatives.
+    (lambda c: c.name[:1].islower() and c.name.endswith(
+        ("State", "Merge", "MergeState", "SimpleState")),
+     lambda c: _state_combinator_sql(c.name, c.args)),
+    # single-paren spelling — the combinator REQUIRES the parameterized
+    # form
+    (lambda c: c.name[:1].islower() and c.name.endswith("Resample"),
+     _rejecting(
+         "{name}: use the parameterized form {name}(start, end, step)(args…, "
+         "key)"
+     )),
+    (lambda c: c.name.endswith("Distinct")
+     and c.name[: -len("Distinct")] in _DISTINCT_BASES
+     and len(c.args) == 1,
+     _distinct_combinator),
+    (lambda c: (c.name.endswith("Array")
+                and c.name[: -len("Array")] in _ARRAY_BASES
+                and len(c.args) == 1)
+     or (c.name.endswith("ArrayIf")
+         and c.name[: -len("ArrayIf")] in _ARRAY_BASES
+         and len(c.args) == 2),
+     _array_combinator),
+    (lambda c: c.name.endswith("OrNull") and (
+        c.name[:-6] in _OR_NULL_BASES
+        or (c.name[:-6] in _MEDIANS and len(c.args) == 1)),
+     _or_null),
+    (lambda c: c.name.endswith("OrDefault")
+     and c.name[:-9] in _OR_DEFAULT_BASES,
+     _or_default),
+    (lambda c: c.name.startswith(("polygon", "multiPolygon")), _rejecting(
+        "{name}: computational-geometry family (boost::geometry in CH) — out "
+        "of scope; pointInPolygon IS mapped for containment"
+    )),
+    (lambda c: c.name.endswith("If") and c.name[:-2] in IF_COMBINABLE
+     and len(c.args) >= 2,
+     _if_combinator),
+)
 
 
 def _join_type_default_sql(spark_type: str | None) -> str:

@@ -343,7 +343,7 @@ class TestWave5Round2:
         assert str(r["e"]) == "2024-03-05 15:00:00"
         assert r["t2"] == r["e"]
         # r15: hop is no longer a reject — ungrouped hop() returns the
-        # FIRST-window bounds tuple (tests/test_hop_r15.py pins both
+        # FIRST-window bounds tuple (tests/test_ch_sql.py pins both
         # the grouped sliding-window form and this one)
         out = translate(
             "SELECT hop(t, INTERVAL 1 MINUTE, INTERVAL 1 HOUR) "

@@ -3,9 +3,13 @@ parameterized-aggregate form; end-to-end execution on Spark."""
 
 from __future__ import annotations
 
+import datetime as dt
+
 import pytest
+from pyspark.sql import functions as F
 
 from clickhouse_modules_spark.functions.ch_sql import ch_sql, translate
+from clickhouse_modules_spark.functions.strkernels import bit_slice
 
 
 @pytest.mark.parametrize(
@@ -398,7 +402,7 @@ def test_final_latest_version_per_key(spark):
 
 
 def test_final_unregistered_raises(spark):
-    with pytest.raises(ValueError, match="register_replacing_table"):
+    with pytest.raises(ValueError, match="QueryContext's replacing entry"):
         ch_sql(spark, "SELECT * FROM nope FINAL", views={"nope": spark.range(1)})
 
 
@@ -4351,3 +4355,313 @@ class TestTopKTwoPhase:
         # top3 by (count desc, value asc) = ['0','1','2']
         assert list(r["t"]) == ["0", "1", "2"]
         assert abs(r["e"] - 2.807) < 0.01
+
+
+# ---------------------------------------------------------------- hop
+# r15: CH hopping windows (previously a loud reject).
+#
+# - GROUP BY hop(t, INTERVAL h, INTERVAL w) → Spark's native sliding
+#   window(t, 'w seconds', 'h seconds'): the TimeWindowing rule explodes
+#   each row into its ~w/h window memberships before the aggregate.
+# - Ungrouped hop()/hopStart()/hopEnd(): CH's documented behavior is the
+#   FIRST window containing the row — start = (floor((ts-w)/h)+1)*h.
+
+
+def _df(spark, secs):
+    rows = [(dt.datetime(2026, 1, 1, 0, 0, 0)
+             + dt.timedelta(seconds=s),) for s in secs]
+    return spark.createDataFrame(rows, "ts timestamp")
+
+
+class TestHopGrouped:
+    def test_counts_match_membership(self, spark):
+        df = _df(spark, [0, 1, 4, 7, 12])
+        rows = ch_sql(
+            spark,
+            "SELECT hopStart(ts, INTERVAL 5 SECOND, INTERVAL 10 "
+            "SECOND) AS ws, count() AS n FROM t "
+            "GROUP BY hop(ts, INTERVAL 5 SECOND, INTERVAL 10 SECOND)",
+            views={"t": df},
+        ).orderBy("ws").collect()
+        # every row belongs to exactly 2 windows (w/h = 2): total
+        # membership = 2 * 5 rows
+        assert sum(r["n"] for r in rows) == 10
+        base = dt.datetime(2026, 1, 1)
+        got = {(r["ws"] - base).total_seconds(): r["n"] for r in rows}
+        # hand-derived memberships for ts in {0,1,4,7,12}
+        assert got == {-5.0: 3, 0.0: 4, 5.0: 2, 10.0: 1}
+
+    def test_hop_end_and_struct_select(self, spark):
+        df = _df(spark, [0, 7])
+        rows = ch_sql(
+            spark,
+            "SELECT hop(ts, INTERVAL 5 SECOND, INTERVAL 10 SECOND) "
+            "AS hw, hopEnd(ts, INTERVAL 5 SECOND, INTERVAL 10 "
+            "SECOND) AS we, count() AS n FROM t "
+            "GROUP BY hop(ts, INTERVAL 5 SECOND, INTERVAL 10 SECOND)",
+            views={"t": df},
+        ).collect()
+        for r in rows:
+            assert r["hw"]["end"] == r["we"]
+            assert (r["hw"]["end"] - r["hw"]["start"]).total_seconds() \
+                == 10
+
+    def test_matches_explicit_explode(self, spark):
+        # independent spelling: explode candidate window starts and
+        # filter membership — must agree with the native generator
+        df = _df(spark, list(range(0, 60, 7)) + [3, 11, 29])
+        df.createOrReplaceTempView("hop_src")
+        native = ch_sql(
+            spark,
+            "SELECT hopStart(ts, INTERVAL 10 SECOND, INTERVAL 30 "
+            "SECOND) AS ws, count() AS n FROM hop_src "
+            "GROUP BY hop(ts, INTERVAL 10 SECOND, INTERVAL 30 SECOND)",
+            views={"hop_src": df},
+        )
+        manual = spark.sql(
+            "SELECT to_timestamp(s) AS ws, count(*) AS n FROM ("
+            "SELECT explode(sequence("
+            "CAST((floor((unix_timestamp(ts) - 30) / 10) + 1) * 10 "
+            "AS BIGINT), "
+            "CAST(floor(unix_timestamp(ts) / 10) * 10 AS BIGINT), "
+            "10)) AS s FROM hop_src) GROUP BY s"
+        )
+        a = {(r["ws"], r["n"]) for r in native.collect()}
+        b = {(r["ws"], r["n"]) for r in manual.collect()}
+        assert a == b
+
+
+class TestHopUngrouped:
+    def test_first_window_bounds(self, spark):
+        df = _df(spark, [0, 7, 12])
+        rows = ch_sql(
+            spark,
+            "SELECT ts, hopStart(ts, INTERVAL 5 SECOND, INTERVAL 10 "
+            "SECOND) AS a, hopEnd(ts, INTERVAL 5 SECOND, INTERVAL 10 "
+            "SECOND) AS b FROM t",
+            views={"t": df},
+        ).orderBy("ts").collect()
+        base = dt.datetime(2026, 1, 1)
+        starts = [(r["a"] - base).total_seconds() for r in rows]
+        ends = [(r["b"] - base).total_seconds() for r in rows]
+        # first window containing t: largest coverage, earliest start
+        assert starts == [-5.0, 0.0, 5.0]
+        assert ends == [5.0, 10.0, 15.0]
+
+    def test_mismatched_group_spec_rejected(self):
+        # select-side hopStart must use the SAME intervals as the
+        # grouped hop — silently mapping it to the grouped window
+        # would answer a different question (r15 self-review)
+        with pytest.raises(ValueError, match="same"):
+            translate(
+                "SELECT hopStart(ts, INTERVAL 1 SECOND, INTERVAL 4 "
+                "SECOND) AS ws FROM t GROUP BY hop(ts, INTERVAL 2 "
+                "SECOND, INTERVAL 4 SECOND)"
+            )
+
+    def test_hop_inside_string_literal_untouched(self):
+        out = translate("SELECT 'hop(a, b, c)' AS s FROM t")
+        assert "'hop(a, b, c)'" in out
+
+    def test_week_unit_rejected(self):
+        with pytest.raises(ValueError, match="SECOND/MINUTE/HOUR/DAY"):
+            translate(
+                "SELECT hopStart(ts, INTERVAL 1 WEEK, INTERVAL 2 "
+                "WEEK) FROM t"
+            )
+
+    def test_subquery_group_by_hop(self, spark):
+        df = _df(spark, [0, 1, 4, 7, 12])
+        rows = ch_sql(
+            spark,
+            "SELECT max(n) AS mx FROM (SELECT hopStart(ts, INTERVAL "
+            "5 SECOND, INTERVAL 10 SECOND) AS ws, count() AS n FROM "
+            "t GROUP BY hop(ts, INTERVAL 5 SECOND, INTERVAL 10 "
+            "SECOND))",
+            views={"t": df},
+        ).collect()
+        assert rows[0]["mx"] == 4
+
+
+class TestHopUnionBranches:
+    def test_unparenthesized_union_rewrites_both_branches(self):
+        from clickhouse_modules_spark.functions.ch_sql import translate
+
+        sql = (
+            "SELECT hopStart(ts, INTERVAL 1 HOUR, INTERVAL 2 HOUR) "
+            "AS s, count() FROM a "
+            "GROUP BY hop(ts, INTERVAL 1 HOUR, INTERVAL 2 HOUR) "
+            "UNION ALL "
+            "SELECT hopStart(ts, INTERVAL 1 HOUR, INTERVAL 2 HOUR), "
+            "count() FROM b "
+            "GROUP BY hop(ts, INTERVAL 1 HOUR, INTERVAL 2 HOUR)"
+        )
+        out = translate(sql)
+        # each branch's GROUP BY must carry its own full window()
+        # generator — r15 self-review: the second branch's hop used
+        # to collapse to a bare `window` (treated as select-side)
+        assert out.count("window(ts, '7200 seconds', '3600 seconds')") == 2
+
+
+# ------------------------------------------------- round-12 stragglers
+# Reject-straggler conversions: byteSwap (typed-cast width dispatch),
+# bitSlice (Arrow kernel), groupArrayLast (ordered-key form).
+
+
+class TestByteSwap:
+    def test_ch_doc_value_and_widths(self, spark):
+        # byteSwap(3351772109) = 3455829959 is the CH documentation's
+        # own example (UInt32); 16- and 8-bit widths pinned alongside
+        [r] = ch_sql(
+            spark,
+            "SELECT byteSwap(toUInt32(x)) AS w32, "
+            "byteSwap(toUInt16(y)) AS w16, "
+            "byteSwap(toUInt8(z)) AS w8 FROM t",
+            views={
+                "t": spark.sql(
+                    "SELECT 3351772109 AS x, 4660 AS y, 129 AS z"
+                )
+            },
+        ).collect()
+        assert r["w32"] == 3455829959
+        assert r["w16"] == 13330  # 0x1234 -> 0x3412
+        assert r["w8"] == 129     # 1-byte swap is identity
+
+    def test_signed_width_and_roundtrip(self, spark):
+        [r] = ch_sql(
+            spark,
+            "SELECT byteSwap(toUInt32(byteSwap(toUInt32(x)))) AS rt "
+            "FROM t",
+            views={"t": spark.sql("SELECT 305419896 AS x")},
+        ).collect()
+        assert r["rt"] == 305419896  # swap is an involution
+
+    def test_bare_and_64bit_reject(self):
+        with pytest.raises(ValueError, match="typed cast"):
+            translate("SELECT byteSwap(x) FROM t")
+        with pytest.raises(ValueError, match="typed cast"):
+            # 64-bit stays rejected (swapped UInt64 exceeds BIGINT)
+            translate("SELECT byteSwap(toUInt64(x)) FROM t")
+
+
+class TestBitSlice:
+    def test_kernel_hand_vectors(self):
+        # 'H' = 01001000, 'e' = 01100101
+        assert bit_slice("Hello", 1, 8) == b"H"
+        assert bit_slice("Hello", 9, 8) == b"e"
+        # bits 2..9 of 'He' = 1001000 0 -> 10010000 = 0x90
+        assert bit_slice("Hello", 2, 8) == b"\x90"
+        # sub-byte slice zero-pads right: 0100 -> 01000000 = '@'
+        assert bit_slice("Hello", 1, 4) == b"@"
+        # omitted length runs to the end
+        assert bit_slice("Hello", 33, None) == b"o"
+        # negative offset counts from the end
+        assert bit_slice("Hello", -8, None) == b"o"
+        # negative length stops |length| bits before the end
+        assert bit_slice("Hi", 1, -8) == b"H"
+        # out-of-range -> empty
+        assert bit_slice("Hi", 99, 8) == b""
+
+    def test_sql_surface(self, spark):
+        [r] = ch_sql(
+            spark,
+            "SELECT bitSlice(s, 9, 8) AS b2, bitSlice(s, 33) AS tail "
+            "FROM t",
+            views={"t": spark.sql("SELECT 'Hello' AS s")},
+        ).collect()
+        assert bytes(r["b2"]) == b"e"
+        assert bytes(r["tail"]) == b"o"
+
+    def test_wrong_arity_untouched(self):
+        # 1-arg bitSlice is not a CH spelling - passes through to a
+        # normal unresolved-function error downstream, no silent map
+        assert "bitSlice(s)" in translate("SELECT bitSlice(s) FROM t")
+
+
+class TestGroupArrayLast:
+    def _df(self, spark):
+        return spark.createDataFrame(
+            [(1, 10), (2, 20), (3, 30), (4, 40), (5, None)],
+            "t int, v int",
+        )
+
+    def test_last_n_by_key(self, spark):
+        [r] = ch_sql(
+            spark,
+            "SELECT groupArrayLast(2)(v, t) AS l2, "
+            "groupArrayLast(10)(v, t) AS l10, "
+            "groupArrayLast(2)(v, t, false) AS l2d FROM t",
+            views={"t": self._df(spark)},
+        ).collect()
+        # NULL v skipped; last 2 in t order = [30, 40]
+        assert r["l2"] == [30, 40]
+        assert r["l10"] == [10, 20, 30, 40]  # n > size: whole group
+        assert r["l2d"] == [20, 10]  # descending key order
+
+    def test_rejects(self):
+        with pytest.raises(ValueError, match="ordered-key spelling"):
+            translate("SELECT groupArrayLast(v) FROM t")
+        with pytest.raises(ValueError, match="ordering key"):
+            translate("SELECT groupArrayLast(2)(v) FROM t")
+        with pytest.raises(ValueError, match="positive"):
+            translate("SELECT groupArrayLast(0)(v, t) FROM t")
+
+
+class TestByteSwapSigned:
+    def test_signed_reinterpretation(self, spark):
+        # CH reinterprets the swapped pattern in the input TYPE:
+        # Int16 -2 = 0xFFFE -> 0xFEFF = -257 (self-review r12 catch:
+        # the first cut returned the unsigned 65279)
+        [r] = ch_sql(
+            spark,
+            "SELECT byteSwap(toInt16(-2)) AS s16, "
+            "byteSwap(toInt32(-2)) AS s32, "
+            "byteSwap(toInt16(258)) AS p16, "
+            "byteSwap(toInt8(-5)) AS s8 FROM (SELECT 1)",
+        ).collect()
+        assert r["s16"] == -257
+        assert r["s32"] == -16777217  # 0xFFFFFFFE -> 0xFEFFFFFF
+        assert r["p16"] == 513        # 0x0102 -> 0x0201
+        assert r["s8"] == -5          # 1-byte swap is identity
+
+    def test_signed_roundtrip(self, spark):
+        [r] = ch_sql(
+            spark,
+            "SELECT byteSwap(toInt32(byteSwap(toInt32(-123456)))) "
+            "AS rt FROM (SELECT 1)",
+        ).collect()
+        assert r["rt"] == -123456
+
+
+class TestBitRotate:
+    def test_rotate_values(self, spark):
+        [r] = ch_sql(
+            spark,
+            # CH doc example: bitRotateLeft(255, 10) on UInt8-width
+            # pattern: 0xFF rotated is still 0xFF
+            "SELECT bitRotateLeft(toUInt8(255), 10) AS a8, "
+            "bitRotateLeft(toUInt32(1), 4) AS l32, "
+            "bitRotateRight(toUInt32(1), 4) AS r32, "
+            "bitRotateLeft(toUInt16(4660), 8) AS l16, "
+            "bitRotateLeft(toUInt32(x), 0) AS z FROM t",
+            views={"t": spark.sql("SELECT 3351772109 AS x")},
+        ).collect()
+        assert r["a8"] == 255
+        assert r["l32"] == 16
+        assert r["r32"] == 0x10000000  # 1 >>> 4 wraps to bit 28
+        assert r["l16"] == 0x3412      # 0x1234 rot8 = byteswap
+        assert r["z"] == 3351772109    # rotate by 0 = identity
+
+    def test_signed_and_inverse(self, spark):
+        [r] = ch_sql(
+            spark,
+            "SELECT bitRotateRight(toInt16(bitRotateLeft("
+            "toInt16(-12345), 5)), 5) AS rt, "
+            "bitRotateLeft(toInt16(-32768), 1) AS s FROM (SELECT 1)",
+        ).collect()
+        assert r["rt"] == -12345       # rotate is invertible
+        assert r["s"] == 1             # 0x8000 rot1 = 0x0001
+        with pytest.raises(ValueError, match="typed cast"):
+            translate("SELECT bitRotateLeft(x, 3) FROM t")
+        with pytest.raises(ValueError, match="typed cast"):
+            translate("SELECT bitRotateLeft(toUInt64(x), 3) FROM t")

@@ -60,10 +60,10 @@ def test_subst_and_segments_skip_string_literals():
 EDGE_SHAPES = [
     ('SELECT t.1.2, t.1a.2, arr[1].2, (a, b).2, f(x)[1].1, 1.5, x1.5 FROM t',
      'SELECT t.col1.col2, t.col1a.2, try_element_at(arr, 1).col2, (a, b).col2, try_element_at(f(x), 1).col1, 1.5D, x1.col5 FROM t'),
-    ("SELECT x [1][2], a.b [1][2], f(x) (y)[1], [1,2][1], m['k'], 'abc'[1] FROM t",
-     "SELECT try_element_at(try_element_at(x, 1), 2), try_element_at(try_element_at(a.b, 1), 2), f(x) try_element_at((y), 1), try_element_at(array(1, 2), 1), try_element_at(m, 'k'), 'abc'array(1) FROM t"),
+    ("SELECT x [1][2], a.b [1][2], f(x) (y)[1], [1,2][1], m['k'] FROM t",
+     "SELECT try_element_at(try_element_at(x, 1), 2), try_element_at(try_element_at(a.b, 1), 2), f(x) try_element_at((y), 1), try_element_at(array(1, 2), 1), try_element_at(m, 'k') FROM t"),
     ('SELECT x IN[1], x IN [1, 2], [[1, 2], [3]][1][2], arr[k + 1] FROM t',
-     'SELECT x INarray(1), x IN array(1, 2), try_element_at(try_element_at(array(array(1, 2), array(3)), 1), 2), try_element_at(arr, CAST(k + 1 AS INT)) FROM t'),
+     'SELECT x IN(1), x IN(1, 2), try_element_at(try_element_at(array(array(1, 2), array(3)), 1), 2), try_element_at(arr, CAST(k + 1 AS INT)) FROM t'),
     ('SELECT 1e+10abc, 1.5e-3, 2E5, 0x1F, 3.0d FROM t',
      'SELECT 1e+10Dabc, 1.5e-3D, 2E5D, 0x1F, 3.0d FROM t'),
     ('SELECT a == b, \'it\'\'s\', "q(" FROM t WHERE s = \'x)\'',
@@ -74,6 +74,12 @@ EDGE_SHAPES = [
 @pytest.mark.parametrize("sql, want", EDGE_SHAPES)
 def test_edge_shapes_translate_as_before(sql, want):
     assert ch_sql.translate(sql) == want
+
+
+def test_subscript_on_a_string_literal_raises():
+    # ClickHouse's arrayElement takes an Array or a Map, never a String
+    with pytest.raises(ValueError, match="arrayElement rejects a String"):
+        ch_sql.translate("SELECT 'abc'[1] FROM t")
 
 
 def test_call_rewrites_leave_string_literals_alone():
@@ -92,6 +98,23 @@ def test_translate_lexes_a_values_statement_about_once(monkeypatch):
     # one lexer pass over the statement plus the first row's arguments;
     # before the lexer every clause pass rescanned the whole text
     stmt = _values_statement(800)
+    handed: list[int] = []
+    real = ch_sql.lex
+
+    def counting(sql: str):
+        handed.append(len(sql))
+        return real(sql)
+
+    monkeypatch.setattr(ch_sql, "lex", counting)
+    ch_sql.translate(stmt)
+    assert sum(handed) <= 2 * len(stmt), (sum(handed), len(stmt))
+
+
+def test_argument_translation_is_linear_in_nesting(monkeypatch):
+    # arguments are walked on the statement's own tokens: a 60-deep
+    # plus(…(x, 1)…, 1) hands lex about the statement once, where
+    # lexing every argument again handed it ~30 times as much
+    stmt = "SELECT " + "plus(" * 60 + "x" + ", 1)" * 60 + " FROM t"
     handed: list[int] = []
     real = ch_sql.lex
 

@@ -326,6 +326,46 @@ def test_one_sql_lexer():
     assert not scanners, f"hand-rolled scanners: {sorted(scanners)}"
 
 
+def test_ch_sql_dispatches_calls_by_name():
+    # translate() is a statement driver, an expression walker and one
+    # handler table: no function in ch_sql.py runs past 300 lines, and
+    # neither the driver nor the walker picks a rewrite by comparing the
+    # call name with a string constant
+    tree = ast.parse(open(CH_SQL, encoding="utf-8").read())
+    funcs = {n.name: n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef)}
+    long = sorted(
+        f"{name}: {n.end_lineno - n.lineno + 1} lines"
+        for name, n in funcs.items()
+        if n.end_lineno - n.lineno + 1 > 300
+    )
+    assert not long, long
+
+    def is_text(node) -> bool:
+        if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+            return any(map(is_text, node.elts))
+        return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+    def is_name(node) -> bool:
+        while isinstance(node, (ast.Subscript, ast.Attribute, ast.Call)):
+            node = node.func if isinstance(node, ast.Call) else node.value
+        return isinstance(node, ast.Name) and node.id in ("ident", "name")
+
+    compares = []
+    for fn in ("translate", "_walk", "_call", "_args"):
+        for n in ast.walk(funcs.get(fn, ast.Pass())):
+            operands = [n.left, *n.comparators] if isinstance(
+                n, ast.Compare) else []
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("startswith", "endswith")
+            ):
+                operands = [n.func.value, *n.args]
+            if any(map(is_name, operands)) and any(map(is_text, operands)):
+                compares.append(f"{fn}:{n.lineno}")
+    assert not compares, f"call names compared with text: {compares}"
+
+
 FUNCTIONS = os.path.join(PKG, "functions")
 
 # Methods that change the container they are called on.
