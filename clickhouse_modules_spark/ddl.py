@@ -94,8 +94,10 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.types import StructType
 
 from clickhouse_modules_spark.functions.ch_sql import (
+    CH_SCALAR_SPARK,
     STATE_BASES,
     QueryContext,
+    _table_refs,
     agg_sql_for_role,
     ch_sql,
     dictionary,
@@ -106,36 +108,6 @@ from clickhouse_modules_spark.functions.ch_sql import (
 # ---------------------------------------------------------------------------
 # CH type → Spark type
 # ---------------------------------------------------------------------------
-
-_SIMPLE_TYPES: dict[str, str] = {
-    # CH unsigned widths that exceed the same-width Spark signed type
-    # are WIDENED (UInt8 max 255 > tinyint max 127 → smallint, etc.).
-    # UInt64 maps to bigint: values above 2^63-1 would wrap — the
-    # practical CH use of UInt64 is ids/counters in int64 range; a
-    # lossless mapping would be decimal(20,0) at ~3× aggregate cost.
-    "Int8": "tinyint",
-    "Int16": "smallint",
-    "Int32": "int",
-    "Int64": "bigint",
-    "UInt8": "smallint",
-    "UInt16": "int",
-    "UInt32": "bigint",
-    "UInt64": "bigint",
-    "Int128": "decimal(38,0)",
-    "Float32": "float",
-    "Float64": "double",
-    "String": "string",
-    "Date": "date",
-    "Date32": "date",
-    "DateTime": "timestamp",
-    "UUID": "string",
-    "Bool": "boolean",
-    "Boolean": "boolean",
-    "IPv4": "string",
-    "IPv6": "string",
-    "JSON": "string",
-    "Object": "string",
-}
 
 _REJECT_TYPES = {
     "UInt128": "exceeds decimal(38) — no lossless Spark scalar",
@@ -227,8 +199,8 @@ def ch_type_to_spark(t: str) -> tuple[str, bool]:
         return "timestamp", False
     if head == "DateTime":
         return "timestamp", False  # DateTime('tz') — session tz is UTC
-    if inner is None and head in _SIMPLE_TYPES:
-        return _SIMPLE_TYPES[head], False
+    if inner is None and head in CH_SCALAR_SPARK:
+        return CH_SCALAR_SPARK[head], False
     raise ValueError(f"unsupported ClickHouse type: {t!r}")
 
 
@@ -1559,7 +1531,11 @@ class ChWarehouse:
                 "the target table explicitly"
             )
         name, target, select = m.group(3), m.group(4), m.group(5).strip()
-        if re.search(rf"\bFROM\s+{target}\b", select, re.I):
+        # the tables the SELECT reads FROM, by the binder's own finder
+        # of table positions: a name inside a string literal is none
+        read = {r.name for r in _table_refs(select, [target, *self.tables()])
+                if r.clause == "FROM"}
+        if target in read:
             raise ValueError(
                 f"materialized view {name} reads FROM its own target "
                 f"{target} — inserting would recurse forever"
@@ -1569,8 +1545,7 @@ class ChWarehouse:
                 return None
             raise ValueError(f"materialized view {name} already exists")
         self.meta(target)  # target must exist
-        sources = [t for t in self.tables() if re.search(
-            rf"\bFROM\s+{t}\b", select, re.I)]
+        sources = [t for t in self.tables() if t in read]
         if len(sources) != 1:
             raise ValueError(
                 f"materialized view must read FROM exactly one warehouse "

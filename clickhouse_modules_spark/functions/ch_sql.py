@@ -73,6 +73,17 @@ the text, so it returns it at once. Only a pass that changed the text
 makes ``translate`` lex it again, which keeps a long VALUES list
 linear to translate.
 
+A pass that finds its trigger reads the clause map, ``toks.clauses()``,
+built once per token stream: the depth-0 text cut into the branches of
+a set operation, and each branch cut into its clauses by the one
+``_CLAUSES`` table, in ClickHouse's grammar order. A pass takes where a
+clause starts and ends from the map, never from a keyword list of its
+own; one that wraps its SELECT in a subquery wraps its own branch only.
+ClickHouse applies a branch's ORDER BY, LIMIT and OFFSET to that branch,
+so the last step parenthesizes a branch that ends in one of them before
+a set operator. ORDER BY or LIMIT at the end of the LAST branch still
+reads as Spark reads it: on the whole result.
+
 The expression walker (``_walk``) then copies the statement token by
 token. A call ``name(args)`` or ``name(params)(args)`` has its arguments
 translated on the same token stream, never lexed again; only an
@@ -106,7 +117,7 @@ from __future__ import annotations
 import re
 import uuid
 from bisect import bisect_left, bisect_right
-from collections.abc import Callable, Mapping
+from collections.abc import Callable, Collection, Mapping
 from dataclasses import dataclass, field, replace
 from typing import NamedTuple
 
@@ -136,7 +147,7 @@ class Tokens:
     """
 
     __slots__ = ("sql", "starts", "ends", "depths", "partner", "marks",
-                 "_words")
+                 "_words", "_clauses")
 
     def __init__(self, sql: str):
         self.sql = sql
@@ -171,6 +182,7 @@ class Tokens:
         self.starts, self.ends, self.depths = starts, ends, depths
         self.partner, self.marks = partner, marks
         self._words: list[tuple[int, int, str]] | None = None
+        self._clauses: tuple[Branch, ...] | None = None
 
     def is_word(self, k: int) -> bool:
         c = self.sql[self.starts[k]]
@@ -193,6 +205,23 @@ class Tokens:
                 if d == 0 and (sql[s].isalnum() or sql[s] == "_")
             ]
         return self._words
+
+    def words_in(self, lo: int, hi: int) -> list[tuple[int, int, str]]:
+        """The :meth:`words` that start in ``sql[lo:hi]``."""
+        words = self.words()
+        return words[bisect_left(words, (lo,)) : bisect_left(words, (hi,))]
+
+    def clauses(self, lo: int = 0,
+                hi: int | None = None) -> tuple[Branch, ...]:
+        """The clause map of ``sql[lo:hi]`` at the paren depth of its
+        first token: its set-operation branches, each cut into its
+        clauses (see ``_CLAUSES``). The map of the whole text is built
+        once, on first use."""
+        if lo or hi is not None:
+            return _clause_map(self, lo, len(self.sql) if hi is None else hi)
+        if self._clauses is None:
+            self._clauses = _clause_map(self, 0, len(self.sql))
+        return self._clauses
 
     def close(self, i: int) -> int:
         """Offset of the ``)`` matching the ``(`` at offset ``i``."""
@@ -319,6 +348,155 @@ def lex(sql: str) -> Tokens:
 def is_quoted(s: str) -> bool:
     """True when ``s`` starts and ends with the same quote character."""
     return len(s) >= 2 and s[0] in _QUOTES and s[-1] == s[0]
+
+
+# ------------------------------------------------------------- clause map
+
+# The clauses of a ClickHouse SELECT by their place in its grammar. Words
+# at the depth of the statement open a clause only at a later place than
+# the clause they are in, so the WITH of ``GROUP BY … WITH TOTALS`` and
+# the FROM of ``ORDER BY … WITH FILL FROM`` stay in their clause's body.
+# ARRAY JOIN and JOIN share a place: a FROM list takes any number of
+# both, in any order; so do OFFSET and FETCH. A set operator ends a
+# branch, and the next branch starts over.
+_CLAUSES = {
+    "WITH": 0, "SELECT": 1, "FROM": 2, "ARRAY JOIN": 3, "JOIN": 3,
+    "PREWHERE": 4, "WHERE": 5, "GROUP BY": 6, "HAVING": 7, "WINDOW": 8,
+    "QUALIFY": 9, "ORDER BY": 10, "LIMIT BY": 11, "LIMIT": 12,
+    "OFFSET": 13, "FETCH": 13, "SETTINGS": 14, "FORMAT": 15,
+    "UNION": 16, "INTERSECT": 16, "EXCEPT": 16,
+}
+_CLAUSE_WORDS = frozenset(w for name in _CLAUSES for w in name.split())
+_SET_RANK = max(_CLAUSES.values())
+_SET_OPERATORS = frozenset(w for w, r in _CLAUSES.items() if r == _SET_RANK)
+# The words of a join's opener before its JOIN (``GLOBAL ANY LEFT JOIN``,
+# ``ASOF JOIN``, ``LEFT ARRAY JOIN``), and those after a set operator
+# (``UNION ALL``) or that start the query after it.
+_JOIN_WORDS = frozenset({
+    "ALL", "ANTI", "ANY", "ARRAY", "ASOF", "CROSS", "FULL", "GLOBAL",
+    "INNER", "LEFT", "LOCAL", "NATURAL", "OUTER", "PASTE", "RIGHT", "SEMI",
+})
+_OPENING_WORDS = _CLAUSE_WORDS | _JOIN_WORDS
+_SET_QUANTIFIERS = ("ALL", "DISTINCT")
+_QUERY_HEADS = ("SELECT", "WITH")
+# SETTINGS and FORMAT: a query's execution-control tail
+_TRAILING_CLAUSES = frozenset(
+    w for w, r in _CLAUSES.items() if _CLAUSES["SETTINGS"] <= r < _SET_RANK)
+
+
+class Clause(NamedTuple):
+    """One clause of a branch, named as in ``_CLAUSES``: ``start`` is
+    the offset of its first keyword, ``body`` the offset past its last
+    one, and ``end`` the offset where the next clause starts or the
+    branch ends."""
+
+    name: str
+    start: int
+    body: int
+    end: int
+
+
+class Branch(NamedTuple):
+    """One query of a set operation: ``sql[lo:hi]`` runs to the end of
+    its last token, from the start of the text or from the first token
+    after a set operator; ``clauses`` are its clauses in order (ARRAY
+    JOIN and JOIN once per join)."""
+
+    lo: int
+    hi: int
+    clauses: tuple[Clause, ...]
+
+    def get(self, name: str) -> Clause | None:
+        return next((c for c in self.clauses if c.name == name), None)
+
+
+def _clause_map(toks: Tokens, lo: int, hi: int) -> tuple[Branch, ...]:
+    """The branches of ``toks.sql[lo:hi]``, read at the depth of its
+    first token. A keyword opens a clause only after the end of an
+    expression (a word, a literal, ``)``, ``]``, ``*`` or a backquote),
+    not as a qualifier (``window.start``) and not as the first word of
+    the clause before it (``SELECT format FROM t``): so ``x = format(…)``
+    and ``GROUP BY window(…)`` are calls."""
+    sql, starts, ends, depths = toks.sql, toks.starts, toks.ends, toks.depths
+    k, n = toks.at(lo), bisect_left(starts, hi)
+    base = depths[k] if k < n else 0
+    # each token upper-cased if it is a word at the range's depth, else ""
+    ups = [
+        sql[s:e].upper() if d == base and (sql[s].isalnum() or sql[s] == "_")
+        else "" for s, e, d in zip(starts[k:n], ends[k:n], depths[k:n])
+    ]
+
+    def word(t: int) -> str:
+        return ups[t - k] if t < n else ""
+
+    def opener(t: int) -> tuple[str, int] | None:
+        """The clause the words from token ``t`` open, and the index of
+        their last token."""
+        w, u = word(t), t
+        while word(u) in _JOIN_WORDS:
+            u += 1
+        if word(u) == "JOIN":
+            return ("ARRAY JOIN" if "ARRAY" in map(word, range(t, u))
+                    else "JOIN"), u
+        if w == "LIMIT" and word(t + 1).isdigit():  # LIMIT n [, m] BY
+            u = t + 1
+            if t + 2 < n and sql[starts[t + 2]] == "," and (
+                word(t + 3).isdigit()
+            ):
+                u = t + 3
+            if word(u + 1) == "BY":
+                return "LIMIT BY", u + 1
+        if f"{w} {word(t + 1)}" in _CLAUSES:  # GROUP BY, ORDER BY
+            return f"{w} {word(t + 1)}", t + 1
+        return (w, t) if w in _CLAUSES else None
+
+    def is_set_operator(t: int) -> bool:
+        """A query follows (``UNION ALL SELECT``, ``EXCEPT (SELECT``),
+        so this is no ``* EXCEPT (col)``."""
+        return word(t) in _SET_OPERATORS and (
+            word(t + 1) in _SET_QUANTIFIERS + _QUERY_HEADS
+            or t + 2 < n and sql[starts[t + 1]] == "("
+            and sql[starts[t + 2] : ends[t + 2]].upper() in _QUERY_HEADS
+        )
+
+    branches: list[Branch] = []
+    found: list[tuple[str, int, int]] = []  # (name, start, body)
+    b_lo, rank, body_tok = lo, -1, k
+
+    def close_branch(b_hi: int) -> None:
+        cuts = [s for _name, s, _body in found[1:]] + [b_hi]
+        branches.append(Branch(b_lo, b_hi, tuple(
+            Clause(*f, end) for f, end in zip(found, cuts))))
+
+    t = k
+    while t < n:
+        if ups[t - k] not in _OPENING_WORDS:
+            if sql[starts[t]] == "(" and starts[t] in toks.partner:
+                t = bisect_left(starts, toks.partner[starts[t]], t)
+            t += 1
+            continue
+        qualified = t + 1 < n and ends[t] == starts[t + 1] and (
+            sql[starts[t + 1]] == ".")
+        if qualified or t > k and not (
+            toks.is_word(t - 1) or toks.is_string(t - 1)
+            or sql[starts[t - 1]] in ")]*`"
+        ):
+            t += 1
+        elif t > k and is_set_operator(t):
+            close_branch(ends[t - 1])
+            t += 2 if word(t + 1) in _SET_QUANTIFIERS else 1
+            b_lo, rank, body_tok, found = (
+                starts[t] if t < n else hi), -1, t, []
+        elif (hit := opener(t)) and (rank < 0 or t > body_tok) and (
+            _CLAUSES[hit[0]] > rank
+            or _CLAUSES[hit[0]] == rank == _CLAUSES["JOIN"]
+        ) and _CLAUSES[hit[0]] != _SET_RANK:
+            found.append((hit[0], starts[t], ends[hit[1]]))
+            rank, body_tok, t = _CLAUSES[hit[0]], hit[1] + 1, hit[1] + 1
+        else:
+            t += 1
+    close_branch(ends[n - 1] if n > k else lo)
+    return tuple(branches)
 
 # name → Spark name (plain rename, argument order preserved)
 RENAMES: dict[str, str] = {
@@ -2612,9 +2790,14 @@ TEMPLATES["IPv4CIDRToRange"] = (
     + " AS col2)), 1)), 1)"
 )
 
-# ONE CH-scalar → Spark-type table for every dispatch that casts by a
-# CH type name (accurateCast*, the cast variants, typed dictGet —
-# hand-maintained copies drifted before this was shared)
+# ONE CH-scalar → Spark-type table: the DDL type map (ddl.py) and every
+# dispatch that casts by a CH type name (accurateCast*, the cast
+# variants, typed dictGet) read it — hand-maintained copies drifted
+# before this was shared. CH unsigned widths that exceed the same-width
+# Spark signed type are WIDENED (UInt8 max 255 > tinyint max 127 →
+# smallint, etc.). UInt64 maps to bigint: values above 2^63-1 would
+# wrap — the practical CH use of UInt64 is ids/counters in int64 range;
+# a lossless mapping would be decimal(20,0) at ~3× aggregate cost.
 CH_SCALAR_SPARK: dict[str, str] = {
     "Int8": "tinyint", "Int16": "smallint",
     "Int32": "int", "Int64": "bigint",
@@ -2624,9 +2807,10 @@ CH_SCALAR_SPARK: dict[str, str] = {
     "Float32": "float", "Float64": "double",
     "String": "string", "Date": "date",
     "Date32": "date", "DateTime": "timestamp",
-    "Bool": "boolean", "UUID": "string",
-    # IP types store as canonical strings (the ddl type map's choice)
+    "Bool": "boolean", "Boolean": "boolean", "UUID": "string",
+    # IP types store as canonical strings, JSON/Object as JSON text
     "IPv4": "string", "IPv6": "string",
+    "JSON": "string", "Object": "string",
 }
 
 PARAMETERIZED["quantileTimingWeighted"] = PARAMETERIZED[
@@ -3605,40 +3789,25 @@ def _rewrite_moving_order(toks: Tokens) -> str:
     # ordering by different keys (UNION ALL) must reject, not silently
     # aggregate the first leg in the second leg's order
     candidates = set()
-    for ws, we, w in toks.words():
-        if w.upper() != "FROM":
+    for b in toks.clauses():
+        frm = b.get("FROM")
+        k = toks.at(frm.body) if frm else len(toks.starts)
+        if k == len(toks.starts) or sql[toks.starts[k]] != "(":
             continue
-        j = we
-        while j < len(sql) and sql[j] in " \t\n":
-            j += 1
-        if j >= len(sql) or sql[j] != "(":
-            continue
-        sub = sql[j + 1 : toks.close(j)]
-        subwords = lex(sub).words()
-        for si, (ss, se, swd) in enumerate(subwords):
-            if (
-                swd.upper() == "ORDER"
-                and si + 1 < len(subwords)
-                and subwords[si + 1][2].upper() == "BY"
-            ):
-                start = subwords[si + 1][1]
-                end = len(sub)
-                ki = si + 2
-                while ki < len(subwords):
-                    kw = subwords[ki][2].upper()
-                    if kw in ("LIMIT", "OFFSET", "SETTINGS"):
-                        end = subwords[ki][0]
-                        break
-                    ki += 1
-                keytext = sub[start:end].strip()
-                up = keytext.upper()
-                this_asc = True
-                if up.endswith(" DESC"):
-                    keytext, this_asc = keytext[:-5].rstrip(), False
-                elif up.endswith(" ASC"):
-                    keytext = keytext[:-4].rstrip()
-                if len(lex(keytext).split()) == 1 and keytext:
-                    candidates.add((keytext, this_asc))
+        sub = lex(sql[toks.starts[k] + 1 : toks.close(toks.starts[k])])
+        for sb in sub.clauses():
+            order = sb.get("ORDER BY")
+            if order is None:
+                continue
+            keytext = sub.sql[order.body : order.end].strip()
+            up = keytext.upper()
+            this_asc = True
+            if up.endswith(" DESC"):
+                keytext, this_asc = keytext[:-5].rstrip(), False
+            elif up.endswith(" ASC"):
+                keytext = keytext[:-4].rstrip()
+            if len(lex(keytext).split()) == 1 and keytext:
+                candidates.add((keytext, this_asc))
     if len(candidates) != 1:
         return sql  # ambiguous (or none) → the loud reject downstream
     (key, asc), = candidates
@@ -4140,17 +4309,13 @@ _STRINGY_PREFIXES = (
 # identifier/')'/']' is a subscript: CH `arr[i]` is 1-BASED while
 # Spark's native `arr[i]` is 0-based, so subscripts must become
 # element_at (1-based in Spark, and key-lookup on maps — matching CH
-# for both container kinds).
-_BRACKET_LITERAL_KEYWORDS = frozenset(
-    {
-        "SELECT", "FROM", "WHERE", "PREWHERE", "HAVING", "AND", "OR",
-        "NOT", "IN", "ON", "WHEN", "THEN", "ELSE", "CASE", "END", "BY",
-        "JOIN", "AS", "ALL", "ANY", "DISTINCT", "UNION", "EXCEPT",
-        "INTERSECT", "BETWEEN", "LIKE", "ILIKE", "IS", "VALUES",
-        "SETTINGS", "LIMIT", "OFFSET", "TOTALS", "ARRAY", "INTERVAL",
-        "USING", "IF", "ELSEIF", "RETURN", "OVER", "PARTITION",
-    }
-)
+# for both container kinds). The clause keywords are among them.
+_BRACKET_LITERAL_KEYWORDS = _CLAUSE_WORDS | {
+    "AND", "OR", "NOT", "IN", "ON", "WHEN", "THEN", "ELSE", "CASE", "END",
+    "AS", "ALL", "ANY", "DISTINCT", "BETWEEN", "LIKE", "ILIKE", "IS",
+    "VALUES", "TOTALS", "INTERVAL", "USING", "IF", "ELSEIF", "RETURN",
+    "OVER", "PARTITION",
+}
 
 
 def _subscript_base(toks: Tokens, k: int) -> int:
@@ -4215,6 +4380,12 @@ def _rewrite_subscripts(toks: Tokens, ctx: QueryContext) -> str:
                 "an Array or a Map — ClickHouse's arrayElement rejects a "
                 "String; use substring(s, i, 1) for one character"
             )
+        if k > 0 and sql[toks.starts[k - 1] : toks.ends[k - 1]].isdigit():
+            raise ValueError(
+                f"{sql[toks.starts[k - 1] : close + 1]}: a subscript needs "
+                "an Array or a Map — ClickHouse's arrayElement rejects a "
+                "number"
+            )
         inner = _rewrite_subscripts(lex(sql[i + 1 : close]), ctx)
         start = _subscript_base(toks, k)
         is_sub = False
@@ -4249,8 +4420,8 @@ def _rewrite_subscripts(toks: Tokens, ctx: QueryContext) -> str:
             if _elem_needs_cast(base, inner, ctx):
                 inner = f"CAST({inner} AS INT)"
             # try_element_at: Spark 4.1.2 ANSI element_at returns the
-            # LAST element for a NULL index (upstream defect,
-            # pinned in tests/test_advice_r15.py; found by
+            # LAST element for a NULL index (upstream defect, pinned
+            # in tests/test_ch_sql.py TestNullIndexSubscript; found by
             # fuzz v6 seed 51694) — CH arr[NULL] is NULL. The
             # try_ variant also turns out-of-range into NULL
             # instead of an ANSI error (CH returns a type
@@ -4309,32 +4480,22 @@ def _rewrite_dot_index(toks: Tokens) -> str:
     return "".join(out) + sql[pos:] if out else sql
 
 
-def _from_view_cols(toks: Tokens, ctx: QueryContext) -> list[str] | None:
-    """Column list of the statement's SINGLE FROM view, when that view
+def _from_view_cols(toks: Tokens, b: Branch,
+                    ctx: QueryContext) -> list[str] | None:
+    """Column list of branch ``b``'s SINGLE FROM view, when that view
     is a view of the context — the schema source for
     star-expansion rewrites (APPLY/COLUMNS). None when unknown — and
     deliberately None when the FROM clause joins tables: expanding a
     star over only the left table's schema would silently drop the
     right table's columns."""
-    sql = toks.sql
-    words = toks.words()
-    for i, (_ws, _we, w) in enumerate(words[:-1]):
-        if w.upper() == "FROM":
-            later = {x[2].upper() for x in words[i + 2 :]}
-            if later & {"JOIN", "ASOF"}:
-                return None
-            # comma cross-join: a ',' at top level inside FROM
-            lo = words[i + 1][1]
-            hi = next(
-                (ws2 for ws2, _we2, w2 in words[i + 2 :]
-                 if w2.upper() in ("WHERE", "GROUP", "ORDER", "LIMIT",
-                                   "HAVING", "SETTINGS", "UNION")),
-                len(sql),
-            )
-            if len(toks.split(lo, hi)) > 1:
-                return None
-            return ctx.columns(words[i + 1][2])
-    return None
+    frm = b.get("FROM")
+    if frm is None or any(c.name.endswith("JOIN") for c in b.clauses):
+        return None
+    table = toks.words_in(frm.body, frm.end)[:1]
+    # comma cross-join: a ',' at top level inside FROM
+    if not table or len(toks.split(frm.body, frm.end)) > 1:
+        return None
+    return ctx.columns(table[0][2])
 
 
 def _rewrite_column_selectors(toks: Tokens, ctx: QueryContext) -> str:
@@ -4358,18 +4519,20 @@ def _rewrite_column_selectors(toks: Tokens, ctx: QueryContext) -> str:
     sql = toks.map_subqueries(lambda q: _rewrite_column_selectors(lex(q), ctx))
     if sql != toks.sql:
         toks = lex(sql)
-    words = toks.words()
-    sel = from_ = None
-    for ws, we, w in words:
-        if w.upper() == "SELECT" and sel is None:
-            sel = we
-        elif w.upper() == "FROM" and sel is not None:
-            from_ = ws
-            break
-    if sel is None or from_ is None:
-        return sql
-    items = toks.split(sel, from_)
-    cols = _from_view_cols(toks, ctx)
+    for b in reversed(toks.clauses()):
+        sel, frm = b.get("SELECT"), b.get("FROM")
+        if sel is not None and frm is not None:
+            sql = (sql[: sel.body] + " "
+                   + _expand_selectors(toks, b, sel.body, frm.start, ctx)
+                   + " " + sql[frm.start :])
+    return sql
+
+
+def _expand_selectors(toks: Tokens, b: Branch, lo: int, hi: int,
+                      ctx: QueryContext) -> str:
+    """The select list ``toks.sql[lo:hi]`` of branch ``b`` with its
+    column selectors expanded (see :func:`_rewrite_column_selectors`)."""
+    cols = _from_view_cols(toks, b, ctx)
     out_items = []
     pat = re.compile(
         r"^(\*|COLUMNS\s*\(\s*('[^']*')\s*\))"
@@ -4377,7 +4540,7 @@ def _rewrite_column_selectors(toks: Tokens, ctx: QueryContext) -> str:
         r"((?:\s+APPLY\s*\(\s*\w+\s*\))*)$",
         re.I | re.S,
     )
-    for item in items:
+    for item in toks.split(lo, hi):
         m = pat.match(item.strip())
         if not m:
             out_items.append(item)
@@ -4428,9 +4591,7 @@ def _rewrite_column_selectors(toks: Tokens, ctx: QueryContext) -> str:
                 expr if not fns else f"{expr} AS `{expr}`"
             )
         out_items.append(", ".join(rendered))
-    return sql[:sel] + " " + ", ".join(
-        i.strip() for i in out_items
-    ) + " " + sql[from_:]
+    return ", ".join(i.strip() for i in out_items)
 
 
 def _rewrite_select_replace(toks: Tokens, ctx: QueryContext) -> str:
@@ -4447,56 +4608,38 @@ def _rewrite_select_replace(toks: Tokens, ctx: QueryContext) -> str:
     sql = toks.sql
     if "REPLACE" not in toks.marks:
         return sql
-    words = toks.words()
-    star = None
-    for wi, (ws, we, w) in enumerate(words):
-        if w.upper() != "SELECT":
-            continue
+    for b in reversed(toks.clauses()):
+        sel = b.get("SELECT")
         # a '*' then REPLACE( at top level right after SELECT?
-        j = we
-        while j < len(sql) and sql[j] in " \t\n":
-            j += 1
-        if j >= len(sql) or sql[j] != "*":
+        k = toks.at(sel.body) if sel else len(toks.starts)
+        if not (k + 2 < len(toks.starts) and sql[toks.starts[k]] == "*"
+                and sql[toks.starts[k + 1] : toks.ends[k + 1]].upper()
+                == "REPLACE" and sql[toks.starts[k + 2]] == "("):
             continue
-        k = j + 1
-        while k < len(sql) and sql[k] in " \t\n":
-            k += 1
-        if sql[k : k + 7].upper() != "REPLACE":
-            continue
-        p = k + 7
-        while p < len(sql) and sql[p] in " \t\n":
-            p += 1
-        if p >= len(sql) or sql[p] != "(":
-            continue
-        close = toks.close(p)
-        star = (wi, j, p, close)
-        break
-    if star is None:
-        return sql
-    wi, star_pos, open_p, close_p = star
-    repls: dict[str, str] = {}
-    for item in toks.split(open_p + 1, close_p):
-        parts = item.rsplit(" AS ", 1) if " AS " in item else item.rsplit(
-            " as ", 1
-        )
-        if len(parts) != 2:
-            raise ValueError(f"* REPLACE item needs 'expr AS col': {item!r}")
-        repls[parts[1].strip().strip("`")] = parts[0].strip()
-    table = None
-    for x, (_s, _e, w) in enumerate(words):
-        if w.upper() == "FROM" and x + 1 < len(words):
-            table = words[x + 1][2]
-            break
-    cols = ctx.columns(table) if table else None
-    if cols is not None and all(c in cols for c in repls):
-        proj = ", ".join(
-            f"{repls[c]} AS {c}" if c in repls else c for c in cols
-        )
-    else:
-        proj = "* EXCEPT (" + ", ".join(repls) + "), " + ", ".join(
-            f"{e} AS {c}" for c, e in repls.items()
-        )
-    return sql[:star_pos] + proj + sql[close_p + 1 :]
+        star_pos, open_p = toks.starts[k], toks.starts[k + 2]
+        close_p = toks.close(open_p)
+        repls: dict[str, str] = {}
+        for item in toks.split(open_p + 1, close_p):
+            parts = item.rsplit(" AS ", 1) if " AS " in item else item.rsplit(
+                " as ", 1
+            )
+            if len(parts) != 2:
+                raise ValueError(
+                    f"* REPLACE item needs 'expr AS col': {item!r}")
+            repls[parts[1].strip().strip("`")] = parts[0].strip()
+        frm = b.get("FROM")
+        table = toks.words_in(frm.body, frm.end)[:1] if frm else []
+        cols = ctx.columns(table[0][2]) if table else None
+        if cols is not None and all(c in cols for c in repls):
+            proj = ", ".join(
+                f"{repls[c]} AS {c}" if c in repls else c for c in cols
+            )
+        else:
+            proj = "* EXCEPT (" + ", ".join(repls) + "), " + ", ".join(
+                f"{e} AS {c}" for c, e in repls.items()
+            )
+        sql = sql[:star_pos] + proj + sql[close_p + 1 :]
+    return sql
 
 
 def _tmpl_apply(name: str, tmpl: str, args: list[str]) -> str:
@@ -4541,19 +4684,13 @@ def _rewrite_scalar_with(toks: Tokens) -> str:
     sql = toks.sql
     if "WITH" not in toks.marks:
         return sql
-    words = toks.words()
-    if not words or words[0][2].upper() != "WITH":
+    b = toks.clauses()[0]
+    with_, sel = b.get("WITH"), b.get("SELECT")
+    if with_ is None or sel is None or with_.start != toks.starts[0]:
         return sql
-    sel = next(
-        (w for w in words[1:] if w[2].upper() == "SELECT"), None
-    )
-    if sel is None:
-        return sql
-    # the WITH list, split on its own top-level commas
-    items = toks.split(words[0][1], sel[0])
     kept: list[str] = []
     scalars: list[tuple[str, str]] = []
-    for it in items:
+    for it in toks.split(with_.body, with_.end):
         s = it.strip()
         if re.match(r"^[A-Za-z_]\w*\s+AS\s*\(", s, re.IGNORECASE):
             kept.append(s)  # standard CTE
@@ -4564,9 +4701,8 @@ def _rewrite_scalar_with(toks: Tokens) -> str:
         scalars.append((m.group(2), m.group(1)))
     if not scalars:
         return sql
-    body = sql[sel[0] :]
     kept_sql = f"WITH {', '.join(kept)} " if kept else ""
-    out = kept_sql + body
+    out = kept_sql + sql[sel.start :]
     for ident, expr in scalars:
         out = lex(out).subst(ident, f"({expr})")
     return out
@@ -4586,123 +4722,87 @@ def _rewrite_distinct_on(toks: Tokens) -> str:
     sql = toks.sql
     if not {"DISTINCT", "ON"} <= toks.marks:
         return sql
-    words = toks.words()
-    di = next(
-        (
-            wi
-            for wi in range(len(words) - 2)
-            if words[wi][2].upper() == "SELECT"
-            and words[wi + 1][2].upper() == "DISTINCT"
-            and words[wi + 2][2].upper() == "ON"
-        ),
-        None,
-    )
-    if di is None:
-        return sql
-    on_end = words[di + 2][1]
-    p = sql.find("(", on_end)
-    if p == -1 or sql[on_end:p].strip():
-        raise ValueError(
-            "DISTINCT ON requires a parenthesized key list"
-        )
-    close = toks.close(p)
-    keys = sql[p + 1 : close].strip()
-    # select list spans to the top-level FROM
-    from_w = next(
-        (w for w in words if w[0] > close and w[2].upper() == "FROM"),
-        None,
-    )
-    if from_w is None:
-        raise ValueError("DISTINCT ON: no FROM clause found")
-    select_list = sql[close + 1 : from_w[0]].strip()
-    # ORDER BY is mandatory (determinism); capture its span
-    oi = next(
-        (
-            wi
-            for wi in range(len(words) - 1)
-            if words[wi][0] > from_w[0]
-            and words[wi][2].upper() == "ORDER"
-            and words[wi + 1][2].upper() == "BY"
-        ),
-        None,
-    )
-    if oi is None:
-        raise ValueError(
-            "DISTINCT ON without ORDER BY is read-order-dependent in "
-            "ClickHouse — add an ORDER BY to make the winner defined"
-        )
-    tail_kw = {"LIMIT", "SETTINGS", "FORMAT"}
-    stop = next(
-        (
-            w
-            for w in words
-            if w[0] > words[oi + 1][1] and w[2].upper() in tail_kw
-        ),
-        None,
-    )
-    order_end = stop[0] if stop is not None else len(sql)
-    order_list = sql[words[oi + 1][1] : order_end].strip()
-    if " WITH" in f" {order_list.upper()} ":
-        raise ValueError(
-            "DISTINCT ON combined with WITH FILL is not supported"
-        )
-    body = sql[from_w[0] : words[oi][0]].strip()
-    tail = sql[order_end:].strip()
-    # CH resolves the ON keys and ORDER BY against BOTH the source
-    # scope and the projection's aliases; the window wrapper below
-    # only sees the projection, so map each key through the select
-    # list (alias as-is, matching expression → its alias, anything
-    # else injected as a hidden column). r14 fuzz seed 40040: ORDER
-    # BY o_orderkey failed analysis when the projection had renamed
-    # it to k.
-    head = f"SELECT {select_list} {body}"
-    res = _scope_resolver(head, "__don_k")
-    if res is None:
-        # DISTINCT-shaped head (can't inject): keep the source-scope
-        # window form, which handles source-column keys only
-        return (
-            f"SELECT * EXCEPT (__don_rn) FROM ("
-            f"SELECT {select_list}, row_number() OVER ("
-            f"PARTITION BY {keys} ORDER BY {order_list}) AS __don_rn "
-            f"{body}) WHERE __don_rn = 1 ORDER BY {order_list}"
-            + (f" {tail}" if tail else "")
-        )
-    keys_r = ", ".join(res(p) for p in lex(keys).split())
-    order_r = res.order(order_list)
-    head2, hidden = res.finish()
-    exc = ", ".join(["__don_rn"] + hidden)
-    return (
-        f"SELECT * EXCEPT ({exc}) FROM ("
-        f"SELECT *, row_number() OVER ("
-        f"PARTITION BY {keys_r} ORDER BY {order_r}) AS __don_rn "
-        f"FROM ({head2})) WHERE __don_rn = 1 ORDER BY {order_r}"
-        + (f" {tail}" if tail else "")
-    )
+    for b in reversed(toks.clauses()):
+        sel = b.get("SELECT")
+        head = toks.words_in(sel.body, sel.end)[:2] if sel else []
+        if [w.upper() for _s, _e, w in head] != ["DISTINCT", "ON"]:
+            continue
+        on_end = head[1][1]
+        p = sql.find("(", on_end)
+        if p == -1 or sql[on_end:p].strip():
+            raise ValueError(
+                "DISTINCT ON requires a parenthesized key list"
+            )
+        close = toks.close(p)
+        keys = sql[p + 1 : close].strip()
+        frm, order = b.get("FROM"), b.get("ORDER BY")
+        if frm is None:
+            raise ValueError("DISTINCT ON: no FROM clause found")
+        # ORDER BY is mandatory (determinism)
+        if order is None:
+            raise ValueError(
+                "DISTINCT ON without ORDER BY is read-order-dependent in "
+                "ClickHouse — add an ORDER BY to make the winner defined"
+            )
+        select_list = sql[close + 1 : frm.start].strip()
+        order_list = sql[order.body : order.end].strip()
+        if " WITH" in f" {order_list.upper()} ":
+            raise ValueError(
+                "DISTINCT ON combined with WITH FILL is not supported"
+            )
+        body = sql[frm.start : order.start].strip()
+        tail = sql[order.end : b.hi].strip()
+        tail = f" {tail}" if tail else ""
+        # CH resolves the ON keys and ORDER BY against BOTH the source
+        # scope and the projection's aliases; the window wrapper below
+        # only sees the projection, so map each key through the select
+        # list (alias as-is, matching expression → its alias, anything
+        # else injected as a hidden column). r14 fuzz seed 40040: ORDER
+        # BY o_orderkey failed analysis when the projection had renamed
+        # it to k.
+        res = _scope_resolver(f"SELECT {select_list} {body}", "__don_k")
+        if res is None:
+            # DISTINCT-shaped head (can't inject): keep the source-scope
+            # window form, which handles source-column keys only
+            new = (
+                f"SELECT * EXCEPT (__don_rn) FROM ("
+                f"SELECT {select_list}, row_number() OVER ("
+                f"PARTITION BY {keys} ORDER BY {order_list}) AS __don_rn "
+                f"{body}) WHERE __don_rn = 1 ORDER BY {order_list}{tail}"
+            )
+        else:
+            keys_r = ", ".join(res(k) for k in lex(keys).split())
+            order_r = res.order(order_list)
+            head2, hidden = res.finish()
+            exc = ", ".join(["__don_rn"] + hidden)
+            new = (
+                f"SELECT * EXCEPT ({exc}) FROM ("
+                f"SELECT *, row_number() OVER ("
+                f"PARTITION BY {keys_r} ORDER BY {order_r}) AS __don_rn "
+                f"FROM ({head2})) WHERE __don_rn = 1 ORDER BY {order_r}{tail}"
+            )
+        sql = sql[: sel.start] + new + sql[b.hi :]
+    return sql
 
 
 def _rewrite_limit_offset(toks: Tokens) -> str:
     """Rewrite ClickHouse/MySQL ``LIMIT offset, count`` (offset FIRST —
     clickhouse.com/docs/sql-reference/statements/select/limit) into
-    Spark's ``LIMIT count OFFSET offset``. Runs after ``_rewrite_limit_by``
-    so only plain (non-BY) comma LIMITs remain at top level."""
+    Spark's ``LIMIT count OFFSET offset``. ``LIMIT n, m BY`` is a LIMIT
+    BY clause of its own, which ``_rewrite_limit_by`` rewrote before."""
     sql = toks.sql
     if not {"LIMIT", ","} <= toks.marks:
         return sql
-    words = toks.words()
-    for wi in range(len(words) - 2):
-        (ls, _le, lw), (_os, oe, ow), (cs, ce, cw) = words[wi : wi + 3]
-        if not (lw.upper() == "LIMIT" and ow.isdigit() and cw.isdigit()):
+    for b in reversed(toks.clauses()):
+        lim = b.get("LIMIT")
+        words = toks.words_in(lim.body, lim.end)[:2] if lim else []
+        if len(words) < 2 or not (
+            words[0][2].isdigit() and words[1][2].isdigit()
+            and sql[words[0][1] : words[1][0]].strip() == ","
+        ):
             continue
-        if sql[oe:cs].strip() != ",":
-            continue
-        nxt = words[wi + 3] if wi + 3 < len(words) else None
-        if nxt is not None and nxt[2].upper() == "BY":
-            continue  # LIMIT n, m BY — handled by _rewrite_limit_by
-        return (
-            sql[:ls]
-            + f"LIMIT {cw} OFFSET {ow}"
-            + _rewrite_limit_offset(lex(sql[ce:]))
-        )
+        (_os, _oe, off), (_cs, ce, count) = words
+        sql = sql[: lim.start] + f"LIMIT {count} OFFSET {off}" + sql[ce:]
     return sql
 
 
@@ -4732,51 +4832,36 @@ def _rewrite_offset_fetch(toks: Tokens) -> str:
     sql = toks.sql
     if "OFFSET" not in toks.marks:
         return sql
-    words = toks.words()
-    for wi in range(len(words) - 1):
-        (os_, _oe, ow) = words[wi]
-        (_ns, ne, nw) = words[wi + 1]
-        if ow.upper() != "OFFSET" or not nw.isdigit():
+    for b in reversed(toks.clauses()):
+        off = b.get("OFFSET")
+        words = toks.words_in(off.start, off.end) if off else []
+        ups = [w.upper() for _s, _e, w in words]  # OFFSET n …
+        if len(words) < 2 or not ups[1].isdigit():
             continue
-        # optional ROW/ROWS
-        k = wi + 2
-        if k < len(words) and words[k][2].upper() in ("ROW", "ROWS"):
-            k += 1
-        if not (k < len(words) and words[k][2].upper() == "FETCH"):
+        n = ups[1]
+        k = 3 if ups[2:3] in (["ROW"], ["ROWS"]) else 2
+        if ups[k : k + 1] != ["FETCH"]:
             # bare OFFSET n [ROWS] — Spark accepts OFFSET but not the
             # ROWS keyword; normalize
-            end = words[k - 1][1] if k - 1 > wi + 1 else ne
-            return sql[:os_] + f"OFFSET {nw}" + sql[end:]
+            sql = sql[: off.start] + f"OFFSET {n}" + sql[words[k - 1][1] :]
+            continue
         # FETCH FIRST|NEXT m ROW[S] ONLY|WITH TIES
-        k += 1
-        if k < len(words) and words[k][2].upper() in ("FIRST", "NEXT"):
-            k += 1
-        if not (k < len(words) and words[k][2].isdigit()):
+        k += 2 if ups[k + 1 : k + 2] in (["FIRST"], ["NEXT"]) else 1
+        if not ups[k : k + 1] or not ups[k].isdigit():
             raise ValueError("FETCH needs a literal row count")
-        m = words[k][2]
-        k += 1
-        if k < len(words) and words[k][2].upper() in ("ROW", "ROWS"):
-            k += 1
-        ties = False
-        if k < len(words) and words[k][2].upper() == "ONLY":
-            k += 1
-        elif (
-            k + 1 < len(words)
-            and words[k][2].upper() == "WITH"
-            and words[k + 1][2].upper() == "TIES"
-        ):
-            ties = True
-            k += 2
+        m = ups[k]
+        k += 2 if ups[k + 1 : k + 2] in (["ROW"], ["ROWS"]) else 1
+        ties = ups[k : k + 2] == ["WITH", "TIES"]
+        k += 2 if ties else 1 if ups[k : k + 1] == ["ONLY"] else 0
         end = words[k - 1][1]
-        if ties:
-            if int(nw) != 0:
-                raise ValueError(
-                    "OFFSET … FETCH … WITH TIES: the rank filter and "
-                    "the row skip do not compose deterministically — "
-                    "use OFFSET+ONLY or LIMIT n WITH TIES"
-                )
-            return sql[:os_] + f"LIMIT {m} WITH TIES" + sql[end:]
-        return sql[:os_] + f"LIMIT {m} OFFSET {nw}" + sql[end:]
+        if ties and int(n) != 0:
+            raise ValueError(
+                "OFFSET … FETCH … WITH TIES: the rank filter and "
+                "the row skip do not compose deterministically — "
+                "use OFFSET+ONLY or LIMIT n WITH TIES"
+            )
+        repl = f"LIMIT {m} WITH TIES" if ties else f"LIMIT {m} OFFSET {n}"
+        sql = sql[: off.start] + repl + sql[end:]
     return sql
 
 
@@ -4794,31 +4879,21 @@ def _rewrite_qualify(toks: Tokens) -> str:
     sql = toks.sql
     if "QUALIFY" not in toks.marks:
         return sql
-    words = toks.words()
-    q_idx = None
-    for wi, (ws, _we, ww) in enumerate(words):
-        if ww.upper() == "QUALIFY":
-            q_idx = wi
-            break
-    if q_idx is None:
-        return sql
-    q_start, q_end = words[q_idx][0], words[q_idx][1]
-    pred_end = len(sql)
-    tail = ""
-    for ts, _te, tw in words[q_idx + 1:]:
-        if tw.upper() in ("ORDER", "LIMIT", "OFFSET", "SETTINGS",
-                          "FORMAT", "UNION", "INTERSECT", "EXCEPT"):
-            pred_end = ts
-            tail = " " + sql[ts:].strip()
-            break
-    pred = sql[q_end:pred_end].strip()
-    if not pred:
-        raise ValueError("QUALIFY needs a predicate")
-    head = sql[:q_start].rstrip()
-    return (
-        f"SELECT * EXCEPT (__q) FROM ("
-        f"SELECT *, ({pred}) AS __q FROM ({head})) WHERE __q{tail}"
-    )
+    for b in reversed(toks.clauses()):
+        q = b.get("QUALIFY")
+        if q is None:
+            continue
+        pred = sql[q.body : q.end].strip()
+        if not pred:
+            raise ValueError("QUALIFY needs a predicate")
+        head = sql[b.lo : q.start].rstrip()
+        tail = sql[q.end : b.hi].strip()
+        sql = sql[: b.lo] + (
+            f"SELECT * EXCEPT (__q) FROM ("
+            f"SELECT *, ({pred}) AS __q FROM ({head})) WHERE __q"
+            + (f" {tail}" if tail else "")
+        ) + sql[b.hi :]
+    return sql
 
 
 def _rewrite_limit_with_ties(toks: Tokens) -> str:
@@ -4831,21 +4906,13 @@ def _rewrite_limit_with_ties(toks: Tokens) -> str:
     sql = toks.sql
     if not {"LIMIT", "WITH", "TIES"} <= toks.marks:
         return sql
-    words = toks.words()
-    hit = None
-    for wi in range(len(words) - 3):
-        (ls, _le, lw) = words[wi]
-        (_ns, _ne, nw) = words[wi + 1]
-        (_ws2, _we2, w2) = words[wi + 2]
-        (_ts3, te3, w3) = words[wi + 3]
-        if lw.upper() != "LIMIT" or not nw.isdigit():
+    for b in reversed(toks.clauses()):
+        lim = b.get("LIMIT")
+        words = toks.words_in(lim.body, lim.end)[:4] if lim else []
+        ups = [w.upper() for _s, _e, w in words]
+        if not ups or not ups[0].isdigit():
             continue
-        if (
-            w2.isdigit()
-            and w3.upper() == "WITH"
-            and wi + 4 < len(words)
-            and words[wi + 4][2].upper() == "TIES"
-        ):
+        if ups[1:2] and ups[1].isdigit() and ups[2:4] == ["WITH", "TIES"]:
             # CH comma form LIMIT off, n WITH TIES — same
             # offset+ties non-composition as the FETCH spelling
             # (and _rewrite_limit_offset would otherwise mangle it
@@ -4855,43 +4922,35 @@ def _rewrite_limit_with_ties(toks: Tokens) -> str:
                 "row skip do not compose deterministically — use "
                 "LIMIT n WITH TIES or a plain offset"
             )
-        if w2.upper() == "WITH" and w3.upper() == "TIES":
-            hit = (ls, te3, int(nw))
-            break
-    if hit is None:
-        return sql
-    limit_start, ties_end, n_rows = hit
-    order_start = order_by_end = None
-    for (os_, _oe, ow), (_bs2, be2, bw2) in zip(words, words[1:]):
-        if os_ >= limit_start:
-            break
-        if ow.upper() == "ORDER" and bw2.upper() == "BY":
-            order_start, order_by_end = os_, be2
-    if order_start is None:
-        raise ValueError(
-            "LIMIT … WITH TIES without ORDER BY is non-deterministic; "
-            "add ORDER BY"
-        )
-    head = sql[:order_start].rstrip()
-    okeys = sql[order_by_end:limit_start].strip()
-    _reject_ordinal_order_keys(okeys, "LIMIT … WITH TIES")
-    tail = sql[ties_end:].strip()
-    # order keys resolve against source scope in CH; the rank wrapper
-    # sees only the head's projection — map through the select list
-    # (r14 fuzz seed 40054: ORDER BY (o_custkey % 3) failed analysis
-    # when the projection had aliased it to g)
-    hidden = ["__rk"]
-    res = _scope_resolver(head, "__wt")
-    if res is not None:
-        okeys = res.order(okeys)
-        head, extra_hidden = res.finish()
-        hidden += extra_hidden
-    return (
-        f"SELECT * EXCEPT ({', '.join(hidden)}) FROM ("
-        f"SELECT *, rank() OVER (ORDER BY {okeys}) AS __rk "
-        f"FROM ({head})) WHERE __rk <= {n_rows} "
-        f"ORDER BY {okeys}" + (f" {tail}" if tail else "")
-    )
+        if ups[1:3] != ["WITH", "TIES"]:
+            continue
+        order = b.get("ORDER BY")
+        if order is None:
+            raise ValueError(
+                "LIMIT … WITH TIES without ORDER BY is non-deterministic; "
+                "add ORDER BY"
+            )
+        head = sql[b.lo : order.start].rstrip()
+        okeys = sql[order.body : lim.start].strip()
+        _reject_ordinal_order_keys(okeys, "LIMIT … WITH TIES")
+        tail = sql[words[2][1] : b.hi].strip()
+        # order keys resolve against source scope in CH; the rank wrapper
+        # sees only the head's projection — map through the select list
+        # (r14 fuzz seed 40054: ORDER BY (o_custkey % 3) failed analysis
+        # when the projection had aliased it to g)
+        hidden = ["__rk"]
+        res = _scope_resolver(head, "__wt")
+        if res is not None:
+            okeys = res.order(okeys)
+            head, extra_hidden = res.finish()
+            hidden += extra_hidden
+        sql = sql[: b.lo] + (
+            f"SELECT * EXCEPT ({', '.join(hidden)}) FROM ("
+            f"SELECT *, rank() OVER (ORDER BY {okeys}) AS __rk "
+            f"FROM ({head})) WHERE __rk <= {ups[0]} "
+            f"ORDER BY {okeys}" + (f" {tail}" if tail else "")
+        ) + sql[b.hi :]
+    return sql
 
 
 def _rewrite_limit_by(toks: Tokens) -> str:
@@ -4907,101 +4966,46 @@ def _rewrite_limit_by(toks: Tokens) -> str:
     sql = toks.sql
     if not {"LIMIT", "BY"} <= toks.marks:
         return sql
-    words = toks.words()
-    hit = None  # (word_idx_after_LIMIT_nums, limit_start, skip, n_rows, by_end)
-    for wi in range(len(words) - 2):
-        (ls, _le, lw), (_ns, ne, nw), (_bs, be, bw) = words[wi : wi + 3]
-        if lw.upper() != "LIMIT" or not nw.isdigit():
+    for b in reversed(toks.clauses()):
+        lb = b.get("LIMIT BY")
+        if lb is None:
             continue
-        if bw.upper() == "BY":
-            hit = (wi, ls, 0, int(nw), be)
-            break
-        if (
-            bw.isdigit()
-            and sql[ne : words[wi + 2][0]].strip() == ","
-            and wi + 3 < len(words)
-            and words[wi + 3][2].upper() == "BY"
-        ):
-            hit = (wi + 1, ls, int(nw), int(bw), words[wi + 3][1])
-            break
-    if hit is None:
-        return sql
-    wi, limit_start, skip, n_rows, by_end = hit
-
-    order_start = order_by_end = None
-    for (os_, _oe, ow), (_bs2, be2, bw2) in zip(words[:wi], words[1:wi]):
-        if ow.upper() == "ORDER" and bw2.upper() == "BY":
-            order_start, order_by_end = os_, be2
-    if order_start is None:
-        raise ValueError(
-            "LIMIT BY without ORDER BY is non-deterministic; add ORDER BY"
-        )
-
-    head = sql[:order_start].rstrip()
-    okeys = sql[order_by_end:limit_start].strip()
-    _reject_ordinal_order_keys(okeys, "LIMIT BY")
-
-    tail = ""
-    by_cols_end = len(sql)
-    for ts, _te, tw in words[wi + 3 :]:
-        if tw.upper() == "LIMIT":
-            by_cols_end = ts
-            tail = " " + sql[ts:].strip()
-            break
-    bcols = sql[by_end:by_cols_end].strip()
-
-    # CH resolves LIMIT BY / ORDER BY expressions against the SOURCE
-    # scope as well as the projection: `SELECT status AS g … LIMIT 2
-    # BY status` is legal even though the projection renamed status
-    # away. The wrapper below only sees the projection, so map each
-    # BY / ORDER key through the head's select list — an alias is used
-    # as-is, a spelling equal to a select item's expression maps to
-    # that item's alias, and anything else is INJECTED as a hidden
-    # column (dropped by the outer EXCEPT) so the window can see it.
-    hidden = ["__rn"]
-    parsed = _head_select_items(head)
-    if parsed is not None:
-        from_pos, items = parsed
-        alias_names = {a for _, a in items if a}
-        expr_to_alias = {" ".join(e.split()): a for e, a in items if a}
-        extra: list[str] = []
-
-        def _resolve(expr: str) -> str:
-            e = expr.strip()
-            if e in alias_names:
-                return e
-            a = expr_to_alias.get(" ".join(e.split()))
-            if a:
-                return a
-            nm = f"__lb{len(extra)}"
-            extra.append(f"({e}) AS {nm}")
-            hidden.append(nm)
-            return nm
-
-        bcols = ", ".join(_resolve(p) for p in lex(bcols).split())
-        oparts = []
-        for part in lex(okeys).split():
-            m = re.match(
-                r"(?is)^(.*?)((?:\s+(?:ASC|DESC))?"
-                r"(?:\s+NULLS\s+(?:FIRST|LAST))?)\s*$",
-                part.strip(),
+        nums = [int(w) for _s, _e, w in toks.words_in(lb.start, lb.body)
+                if w.isdigit()]
+        skip, n_rows = nums if len(nums) == 2 else (0, nums[0])
+        order = b.get("ORDER BY")
+        if order is None:
+            raise ValueError(
+                "LIMIT BY without ORDER BY is non-deterministic; add ORDER BY"
             )
-            oparts.append(_resolve(m.group(1)) + m.group(2))
-        okeys = ", ".join(oparts)
-        if extra:
-            head = head[:from_pos] + ", " + ", ".join(extra) + " " \
-                + head[from_pos:]
-
-    pred = f"__rn <= {skip + n_rows}"
-    if skip:
-        pred = f"__rn > {skip} AND {pred}"
-    return (
-        f"SELECT * EXCEPT ({', '.join(hidden)}) FROM ("
-        f"SELECT *, row_number() OVER ("
-        f"PARTITION BY {bcols} ORDER BY {okeys}) AS __rn "
-        f"FROM ({head})) WHERE {pred} "
-        f"ORDER BY {okeys}{tail}"
-    )
+        head = sql[b.lo : order.start].rstrip()
+        okeys = sql[order.body : lb.start].strip()
+        _reject_ordinal_order_keys(okeys, "LIMIT BY")
+        bcols = sql[lb.body : lb.end].strip()
+        tail = sql[lb.end : b.hi].strip()
+        # CH resolves LIMIT BY / ORDER BY expressions against the SOURCE
+        # scope as well as the projection: `SELECT status AS g … LIMIT 2
+        # BY status` is legal even though the projection renamed status
+        # away. The wrapper below only sees the projection, so each BY /
+        # ORDER key maps through the head's select list (_scope_resolver).
+        hidden = ["__rn"]
+        res = _scope_resolver(head, "__lb")
+        if res is not None:
+            bcols = ", ".join(res(p) for p in lex(bcols).split())
+            okeys = res.order(okeys)
+            head, extra_hidden = res.finish()
+            hidden += extra_hidden
+        pred = f"__rn <= {skip + n_rows}"
+        if skip:
+            pred = f"__rn > {skip} AND {pred}"
+        sql = sql[: b.lo] + (
+            f"SELECT * EXCEPT ({', '.join(hidden)}) FROM ("
+            f"SELECT *, row_number() OVER ("
+            f"PARTITION BY {bcols} ORDER BY {okeys}) AS __rn "
+            f"FROM ({head})) WHERE {pred} "
+            f"ORDER BY {okeys}" + (f" {tail}" if tail else "")
+        ) + sql[b.hi :]
+    return sql
 
 
 def _scope_resolver(head: str, prefix: str):
@@ -5070,35 +5074,24 @@ def _head_select_items(head: str) -> tuple[int, list] | None:
     Only explicit ``AS`` aliases and bare-identifier items are
     recognized; implicit trailing aliases stay unresolved and fall
     through to injection, which is still correct for source columns."""
-    words = lex(head).words()
-    if not words or words[0][2].upper() != "SELECT":
+    toks = lex(head)
+    b = toks.clauses()[0]
+    sel, frm = b.get("SELECT"), b.get("FROM")
+    if sel is None or frm is None or sel.start != toks.starts[0]:
         return None
-    i = 1
-    if len(words) > 1 and words[1][2].upper() == "DISTINCT":
-        return None
-    sel_start = words[i][0] if len(words) > i else len(head)
-    from_pos = None
-    for ws, _we, w in words[i:]:
-        if w.upper() == "FROM":
-            from_pos = ws
-            break
-    if from_pos is None:
+    first = toks.words_in(sel.body, sel.end)[:1]
+    if first and first[0][2].upper() == "DISTINCT":
         return None
     items: list[tuple[str, str | None]] = []
-    for item in lex(head[sel_start:from_pos]).split():
-        iw = lex(item).words()
-        expr, alias = item.strip(), None
+    for a, z in toks.spans(sel.body, frm.start):
+        iw = toks.words_in(a, z)
+        expr, alias = head[a:z], None
         if len(iw) >= 2 and iw[-2][2].upper() == "AS":
-            alias = iw[-1][2]
-            expr = item[: iw[-2][0]].strip()
-        elif (
-            len(iw) == 1
-            and iw[0][0] == 0
-            and iw[0][1] == len(expr)
-        ):
+            alias, expr = iw[-1][2], head[a : iw[-2][0]].strip()
+        elif len(iw) == 1 and iw[0][:2] == (a, z):
             alias = expr
         items.append((expr, alias))
-    return from_pos, items
+    return frm.start, items
 
 
 def _rewrite_array_join(toks: Tokens) -> str:
@@ -5124,51 +5117,46 @@ def _rewrite_array_join(toks: Tokens) -> str:
     sql = toks.sql
     if not {"ARRAY", "JOIN"} <= toks.marks:
         return sql
-    words = toks.words()
-    for wi in range(len(words) - 1):
-        (as_, _ae, aw), (_js, je, jw) = words[wi], words[wi + 1]
-        if aw.upper() != "ARRAY" or jw.upper() != "JOIN":
-            continue
-        left = (
-            wi > 0
-            and words[wi - 1][2].upper() == "LEFT"
+    aj = next((c for b in toks.clauses() for c in b.clauses
+               if c.name == "ARRAY JOIN"), None)
+    if aj is None:
+        return sql
+    pairs = []  # (array_expr, alias)
+    for a, z in toks.spans(aj.body, aj.end):
+        iw = toks.words_in(a, z)
+        as_pos = [x for x in iw if x[2].upper() == "AS"]
+        if not as_pos or iw[-1][2].upper() == "AS":
+            raise ValueError("ARRAY JOIN requires 'AS <alias>' per array")
+        a_start, a_end, _ = as_pos[-1]
+        pairs.append((sql[a:a_start].strip(), sql[a_end:z].strip()))
+    outer = "OUTER " if sql[aj.start : aj.body].upper().startswith(
+        "LEFT") else ""
+    if len(pairs) == 1:
+        expr, alias = pairs[0]
+        view = f"LATERAL VIEW {outer}explode({expr}) __aj AS {alias}"
+    else:
+        fields = ", ".join(
+            [f"'{pairs[0][1]}', __x"]
+            + [f"'{al}', element_at({ex}, __i + 1)" for ex, al in pairs[1:]]
         )
-        clause_start = words[wi - 1][0] if left else as_
-        # the clause body runs to the next top-level clause keyword
-        clause_end = len(sql)
-        for ks, _ke, kw in words[wi + 2 :]:
-            if kw.upper() in _CLAUSE_STARTERS:
-                clause_end = ks
-                break
-        items = toks.split(je, clause_end)
-        pairs = []  # (array_expr, alias)
-        for item in items:
-            iw = lex(item).words()
-            as_pos = [x for x in iw if x[2].upper() == "AS"]
-            if not as_pos or iw[-1][2].upper() == "AS":
-                raise ValueError("ARRAY JOIN requires 'AS <alias>' per array")
-            a_start, a_end, _ = as_pos[-1]
-            pairs.append((item[:a_start].strip(), item[a_end:].strip()))
-        outer = "OUTER " if left else ""
-        if len(pairs) == 1:
-            expr, alias = pairs[0]
-            view = f"LATERAL VIEW {outer}explode({expr}) __aj AS {alias}"
-        else:
-            fields = ", ".join(
-                [f"'{pairs[0][1]}', __x"]
-                + [
-                    f"'{al}', element_at({ex}, __i + 1)"
-                    for ex, al in pairs[1:]
-                ]
-            )
-            aliases = ", ".join(al for _ex, al in pairs)
-            view = (
-                f"LATERAL VIEW {outer}inline(transform({pairs[0][0]}, "
-                f"(__x, __i) -> named_struct({fields}))) __aj AS {aliases}"
-            )
-        rewritten = sql[:clause_start] + view + " " + sql[clause_end:]
-        return _rewrite_array_join(lex(rewritten.rstrip()))
-    return sql
+        aliases = ", ".join(al for _ex, al in pairs)
+        view = (
+            f"LATERAL VIEW {outer}inline(transform({pairs[0][0]}, "
+            f"(__x, __i) -> named_struct({fields}))) __aj AS {aliases}"
+        )
+    rewritten = sql[: aj.start] + view + " " + sql[aj.end :]
+    return _rewrite_array_join(lex(rewritten.rstrip()))
+
+
+def _with_modifier(toks: Tokens, b: Branch,
+                   word: str) -> tuple[int, int] | None:
+    """(start, end) of the first ``WITH <word>`` (TOTALS, FILL) at the
+    top level of branch ``b``."""
+    words = toks.words_in(b.lo, b.hi)
+    return next((
+        (ws, we) for (ws, _e, w), (_s, we, m) in zip(words, words[1:])
+        if w.upper() == "WITH" and m.upper() == word
+    ), None)
 
 
 def _rewrite_with_totals(toks: Tokens) -> str:
@@ -5182,32 +5170,19 @@ def _rewrite_with_totals(toks: Tokens) -> str:
     sql = toks.sql
     if not {"WITH", "TOTALS"} <= toks.marks:
         return sql
-    words = toks.words()
-    for wi in range(len(words) - 1):
-        (ws_, _we, ww), (_ts, te, tw) = words[wi], words[wi + 1]
-        if ww.upper() != "WITH" or tw.upper() != "TOTALS":
+    for b in reversed(toks.clauses()):
+        at = _with_modifier(toks, b, "TOTALS")
+        if at is None:
             continue
-        gb = None
-        for k in range(wi - 1):
-            if (
-                words[k][2].upper() == "GROUP"
-                and words[k + 1][2].upper() == "BY"
-            ):
-                gb = k
-        if gb is None:
+        gb = b.get("GROUP BY")
+        if gb is None or gb.start > at[0]:
             raise ValueError("WITH TOTALS without GROUP BY")
-        keys = [
-            k.strip()
-            for k in lex(sql[words[gb + 1][1] : ws_].strip()).split()
-        ]
+        keys = [k.strip() for k in lex(sql[gb.body : at[0]].strip()).split()]
         sets = f"GROUPING SETS (({', '.join(keys)}), ())"
-        return sql[:ws_] + sets + sql[te:]
+        sql = sql[: at[0]] + sets + sql[at[1] :]
     return sql
 
 
-_CLAUSE_STARTERS = {
-    "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "UNION", "SETTINGS",
-}
 
 # The role→Spark-aggregate vocabulary for SimpleAggregateFunction
 # columns and Summing non-key columns, which ddl.ChWarehouse._merge
@@ -5541,12 +5516,13 @@ def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
     sql = toks.sql
     if not {"FINAL", "SAMPLE"} & toks.marks:
         return sql
-    words = toks.words()
-    for wi, (fs, fe, fw) in enumerate(words):
-        if fw.upper() != "FROM" or wi + 1 >= len(words):
-            continue
-        _ts, te, table = words[wi + 1]
-        k = wi + 2
+    for b in reversed(toks.clauses()):
+        frm = b.get("FROM")
+        words = toks.words_in(frm.body, frm.end) if frm else []
+        if not words or toks.at(words[0][0]) != toks.at(frm.body):
+            continue  # no table name right after FROM: a subquery
+        _ts, te, table = words[0]
+        k = 1
         alias = None
         if k < len(words) and words[k][2].upper() == "AS":
             k += 1
@@ -5554,10 +5530,7 @@ def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
                 alias = words[k][2]
                 k += 1
         elif k < len(words) and words[k][2].upper() not in (
-            _CLAUSE_STARTERS
-            | {"FINAL", "SAMPLE", "JOIN", "ASOF", "LEFT", "RIGHT",
-               "INNER", "FULL", "CROSS", "ARRAY", "PREWHERE", "ON",
-               "USING", "GLOBAL", "LATERAL"}
+            "FINAL", "SAMPLE"
         ):
             alias = words[k][2]
             k += 1
@@ -5571,17 +5544,14 @@ def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
                 end = words[k][1]
                 k += 1
             elif w == "SAMPLE" and k + 1 < len(words):
-                frac = None
                 # SAMPLE n/d  (n, '/', d arrive as two words split by '/')
-                if k + 2 < len(words) and words[k + 1][2].isdigit() and (
+                if not (k + 2 < len(words) and words[k + 1][2].isdigit() and (
                     sql[words[k + 1][1] : words[k + 2][0]].strip() == "/"
-                ) and words[k + 2][2].isdigit():
-                    frac = (int(words[k + 1][2]), int(words[k + 2][2]))
-                    end = words[k + 2][1]
-                    k += 3
-                if frac is None:
+                ) and words[k + 2][2].isdigit()):
                     raise ValueError("SAMPLE supports only the n/d form")
-                sample = frac
+                sample = (int(words[k + 1][2]), int(words[k + 2][2]))
+                end = words[k + 2][1]
+                k += 3
             else:
                 break
         if not final and sample is None:
@@ -5615,8 +5585,7 @@ def _rewrite_from_modifiers(toks: Tokens, ctx: QueryContext) -> str:
                 f"WHERE __rn = 1)"
             )
         out_alias = alias if alias is not None else table
-        rewritten = sql[:fs] + f"FROM {base} AS {out_alias}" + sql[end:]
-        return _rewrite_from_modifiers(lex(rewritten), ctx)
+        sql = sql[: frm.start] + f"FROM {base} AS {out_alias}" + sql[end:]
     return sql
 
 
@@ -5652,147 +5621,142 @@ def _rewrite_asof_join(toks: Tokens, ctx: QueryContext) -> str:
     sql = toks.sql
     if "ASOF" not in toks.marks:
         return sql
-    words = toks.words()
-    for wi in range(len(words) - 1):
-        (as_, _ae, aw) = words[wi]
-        if aw.upper() != "ASOF":
-            continue
-        # left side: "... FROM <ltable> [lalias] ASOF ..."
-        ltable = lalias = None
-        for li in range(wi - 1):
-            if words[li][2].upper() == "FROM" and li + 1 < wi:
-                ltable = words[li + 1][2]
-                lalias = ltable
-                if li + 2 < wi and words[li + 2][2].upper() == "AS":
-                    lalias = words[li + 3][2]
-                elif li + 2 < wi:
-                    lalias = words[li + 2][2]
-        if ltable is None:
-            raise ValueError("ASOF JOIN: could not locate the left table")
-        k = wi + 1
-        left_join = words[k][2].upper() == "LEFT"
-        if left_join:
-            k += 1
-        if words[k][2].upper() != "JOIN":
+    hit = _join_with(toks, "ASOF")
+    if hit is None:
+        if any(w.upper() == "ASOF" for _s, _e, w in toks.words()):
             raise ValueError("ASOF must be followed by [LEFT] JOIN")
-        k += 1
-        table = words[k][2]
-        k += 1
-        alias = table
-        if k < len(words) and words[k][2].upper() == "AS":
-            k += 1
-            alias = words[k][2]
-            k += 1
-        elif k < len(words) and words[k][2].upper() != "ON":
-            alias = words[k][2]
-            k += 1
-        if k >= len(words) or words[k][2].upper() != "ON":
-            raise ValueError("ASOF JOIN requires an ON clause")
-        on_end = len(sql)
-        # the ON conjunction ends at the next clause OR the next join:
-        # without the join terminators, a statement with a second join
-        # after `ASOF JOIN ... ON ...` swallowed that join into the ON
-        # text and produced a garbled rewrite
-        _ON_TERMINATORS = _CLAUSE_STARTERS | {
-            "JOIN", "LEFT", "RIGHT", "INNER", "CROSS", "FULL",
-            "SEMI", "ANTI", "ASOF",
-        }
-        for ts, _te2, tw in words[k + 1 :]:
-            if tw.upper() in _ON_TERMINATORS:
-                on_end = ts
-                break
-        cond = sql[words[k][1] : on_end].strip()
-        # split the conjunction on its top-level ANDs
-        parts, start = [], 0
-        for ws, we, w in lex(cond).words():
-            if w.upper() == "AND":
-                parts.append(cond[start:ws].strip())
-                start = we
-        parts.append(cond[start:].strip())
-        ineqs = [p for p in parts if ("<=" in p or ">=" in p)]
-        if len(ineqs) != 1:
-            raise ValueError(
-                "ASOF JOIN needs exactly one <= or >= condition"
-            )
-        eqs = []
-        for p in parts:
-            if p is ineqs[0] or "=" not in p:
-                continue
-            a, b = [s.strip() for s in p.split("=", 1)]
-            if a.startswith(f"{alias}."):
-                eqs.append((b, a))
-            else:
-                eqs.append((a, b))
-        if not eqs:
-            raise ValueError("ASOF JOIN needs at least one equality key")
-        op = "<=" if "<=" in ineqs[0] else ">="
-        lhs, rhs = [s.strip() for s in ineqs[0].split(op, 1)]
-        if lhs.startswith(f"{alias}."):
-            r_time, probe, backward = lhs, rhs, op == "<="
-        else:
-            r_time, probe, backward = rhs, lhs, op == ">="
-        direction = "DESC" if backward else "ASC"
-        rcols = ctx.columns(table)
-        tiebreak = f"{alias}.{rcols[0]} {direction}, " if rcols else ""
+        return sql
+    b, j, _opener = hit
+    new = _asof_branch(toks, b, j, ctx)
+    return _rewrite_asof_join(lex(sql[: b.lo] + new + sql[b.hi :]), ctx)
 
-        dom_sel = ", ".join(
-            f"{le} AS __dk{i}" for i, (le, _re) in enumerate(eqs)
+
+def _join_with(toks: Tokens, word: str) -> tuple[Branch, Clause, list] | None:
+    """The first join whose opener has ``word`` (ASOF, ANY): its branch,
+    its clause and the words of its opener."""
+    for b in toks.clauses():
+        for j in b.clauses:
+            opener = toks.words_in(j.start, j.body) if j.name == "JOIN" else []
+            if any(w.upper() == word for _s, _e, w in opener):
+                return b, j, opener
+    return None
+
+
+def _asof_branch(toks: Tokens, b: Branch, j: Clause,
+                 ctx: QueryContext) -> str:
+    """Branch ``b`` with its ASOF join ``j`` rewritten (see
+    :func:`_rewrite_asof_join`)."""
+    sql = toks.sql
+    frm = b.get("FROM")
+    left = toks.words_in(frm.body, frm.end) if frm else []
+    if not left:
+        raise ValueError("ASOF JOIN: could not locate the left table")
+    ltable = lalias = left[0][2]
+    if len(left) > 2 and left[1][2].upper() == "AS":
+        lalias = left[2][2]
+    elif len(left) > 1:
+        lalias = left[1][2]
+    words = toks.words_in(j.start, j.end)
+    ups = [w.upper() for _s, _e, w in words]
+    k = ups.index("ASOF")
+    as_ = words[k][0]
+    left_join = ups[k + 1] == "LEFT"
+    k += 3 if left_join else 2
+    table = words[k][2]
+    k += 1
+    alias = table
+    if k < len(words) and ups[k] == "AS":
+        alias = words[k + 1][2]
+        k += 2
+    elif k < len(words) and ups[k] != "ON":
+        alias = words[k][2]
+        k += 1
+    if k >= len(words) or ups[k] != "ON":
+        raise ValueError("ASOF JOIN requires an ON clause")
+    # the ON conjunction ends where the join does: at the next join or
+    # clause
+    cond = sql[words[k][1] : j.end].strip()
+    # split the conjunction on its top-level ANDs
+    parts, start = [], 0
+    for ws, we, w in lex(cond).words():
+        if w.upper() == "AND":
+            parts.append(cond[start:ws].strip())
+            start = we
+    parts.append(cond[start:].strip())
+    ineqs = [p for p in parts if ("<=" in p or ">=" in p)]
+    if len(ineqs) != 1:
+        raise ValueError(
+            "ASOF JOIN needs exactly one <= or >= condition"
         )
-        dom_keys = ", ".join(f"__dk{i}" for i in range(len(eqs)))
-        dom_join = " AND ".join(
-            f"__dom.__dk{i} = {re}" for i, (_le, re) in enumerate(eqs)
-        )
-        back_join = " AND ".join(
-            f"{le} = {alias}.__dk{i}" for i, (le, _re) in enumerate(eqs)
-        )
-        sub = (
-            f"{'LEFT ' if left_join else ''}JOIN ("
-            f"SELECT * EXCEPT (__arn) FROM ("
-            f"SELECT *, row_number() OVER ("
-            f"PARTITION BY {dom_keys}, __dt "
-            f"ORDER BY {r_time} {direction}, {tiebreak}{r_time} {direction}"
-            f") AS __arn "
-            f"FROM (SELECT DISTINCT {dom_sel}, {probe} AS __dt "
-            f"FROM {ltable} AS {lalias}) AS __dom "
-            f"JOIN {table} AS {alias} "
-            f"ON {dom_join} AND {r_time} {op} __dom.__dt"
-            f") WHERE __arn = 1"
-            f") AS {alias} ON {back_join} AND {probe} = {alias}.__dt"
-        )
-        rewritten = sql[:as_] + sub + " " + sql[on_end:]
-        rewritten = rewritten.rstrip()
-        # `SELECT *` through the rewrite would leak the internal
-        # __dk*/__dt bookkeeping columns (they must survive inside the
-        # subquery — the join-back condition references them): strip
-        # them from a bare star select list. Explicit select lists
-        # never see them.
-        rw_words = lex(rewritten).words()
-        if len(rw_words) >= 2 and rw_words[0][2].upper() == "SELECT":
-            internals = ", ".join(
-                [f"{alias}.__dk{i}" for i in range(len(eqs))]
-                + [f"{alias}.__dt"]
-            )
-            # select list text between SELECT and the next word (FROM,
-            # or EXCEPT from a prior chained-ASOF pass)
-            sel_txt = rewritten[rw_words[0][1] : rw_words[1][0]].strip()
-            if sel_txt == "*" and rw_words[1][2].upper() == "EXCEPT":
-                # extend the existing EXCEPT list
-                paren = rewritten.index("(", rw_words[1][1])
-                rewritten = (
-                    rewritten[: paren + 1]
-                    + internals
-                    + ", "
-                    + rewritten[paren + 1 :]
-                )
-            elif sel_txt == "*":
-                se = rw_words[0][1]
-                rewritten = (
-                    rewritten[:se]
-                    + f" * EXCEPT ({internals})"
-                    + rewritten[rw_words[1][0] - 1 :]
-                )
-        return _rewrite_asof_join(lex(rewritten), ctx)
-    return sql
+    eqs = []
+    for p in parts:
+        if p is ineqs[0] or "=" not in p:
+            continue
+        a, b_ = [s.strip() for s in p.split("=", 1)]
+        if a.startswith(f"{alias}."):
+            eqs.append((b_, a))
+        else:
+            eqs.append((a, b_))
+    if not eqs:
+        raise ValueError("ASOF JOIN needs at least one equality key")
+    op = "<=" if "<=" in ineqs[0] else ">="
+    lhs, rhs = [s.strip() for s in ineqs[0].split(op, 1)]
+    if lhs.startswith(f"{alias}."):
+        r_time, probe, backward = lhs, rhs, op == "<="
+    else:
+        r_time, probe, backward = rhs, lhs, op == ">="
+    direction = "DESC" if backward else "ASC"
+    rcols = ctx.columns(table)
+    tiebreak = f"{alias}.{rcols[0]} {direction}, " if rcols else ""
+
+    dom_sel = ", ".join(
+        f"{le} AS __dk{i}" for i, (le, _re) in enumerate(eqs)
+    )
+    dom_keys = ", ".join(f"__dk{i}" for i in range(len(eqs)))
+    dom_join = " AND ".join(
+        f"__dom.__dk{i} = {re}" for i, (_le, re) in enumerate(eqs)
+    )
+    back_join = " AND ".join(
+        f"{le} = {alias}.__dk{i}" for i, (le, _re) in enumerate(eqs)
+    )
+    sub = (
+        f"{'LEFT ' if left_join else ''}JOIN ("
+        f"SELECT * EXCEPT (__arn) FROM ("
+        f"SELECT *, row_number() OVER ("
+        f"PARTITION BY {dom_keys}, __dt "
+        f"ORDER BY {r_time} {direction}, {tiebreak}{r_time} {direction}"
+        f") AS __arn "
+        f"FROM (SELECT DISTINCT {dom_sel}, {probe} AS __dt "
+        f"FROM {ltable} AS {lalias}) AS __dom "
+        f"JOIN {table} AS {alias} "
+        f"ON {dom_join} AND {r_time} {op} __dom.__dt"
+        f") WHERE __arn = 1"
+        f") AS {alias} ON {back_join} AND {probe} = {alias}.__dt"
+    )
+    rewritten = (sql[b.lo : as_] + sub + " " + sql[j.end : b.hi]).rstrip()
+    # `SELECT *` through the rewrite would leak the internal
+    # __dk*/__dt bookkeeping columns (they must survive inside the
+    # subquery — the join-back condition references them): strip
+    # them from a bare star select list. Explicit select lists
+    # never see them.
+    rw = lex(rewritten)
+    sel = rw.clauses()[0].get("SELECT")
+    nxt = rw.words_in(sel.body, sel.end + 1)[:1] if sel else []
+    if not nxt or rewritten[sel.body : nxt[0][0]].strip() != "*":
+        return rewritten
+    internals = ", ".join(
+        [f"{alias}.__dk{i}" for i in range(len(eqs))] + [f"{alias}.__dt"]
+    )
+    if nxt[0][2].upper() == "EXCEPT":  # a chained ASOF pass's list
+        paren = rewritten.index("(", nxt[0][1])
+        return (rewritten[: paren + 1] + internals + ", "
+                + rewritten[paren + 1 :])
+    return (rewritten[: sel.body] + f" * EXCEPT ({internals})"
+            + rewritten[nxt[0][0] - 1 :])
+
+
+_FILL_BOUNDS = ("FROM", "TO", "STEP")
+_FILL_STOPS = _FILL_BOUNDS + ("WITH", "INTERPOLATE")
 
 
 def _rewrite_with_fill(toks: Tokens) -> str:
@@ -5809,63 +5773,39 @@ def _rewrite_with_fill(toks: Tokens) -> str:
     sql = toks.sql
     if not {"WITH", "FILL"} <= toks.marks:
         return sql
-    words = toks.words()
-    for wi in range(len(words) - 1):
-        if (
-            words[wi][2].upper() != "WITH"
-            or words[wi + 1][2].upper() != "FILL"
-        ):
+    for b in reversed(toks.clauses()):
+        at = _with_modifier(toks, b, "FILL")
+        if at is None:
             continue
-        ob = None
-        for k in range(wi - 1):
-            if (
-                words[k][2].upper() == "ORDER"
-                and words[k + 1][2].upper() == "BY"
-            ):
-                ob = k
-        if ob is None:
+        order = b.get("ORDER BY")
+        if order is None or order.start > at[0]:
             raise ValueError("WITH FILL without ORDER BY")
-        col = sql[words[ob + 1][1] : words[wi][0]].strip()
+        col = sql[order.body : at[0]].strip()
         if "," in col:
             raise ValueError("WITH FILL supports a single ORDER BY column")
-        # optional FROM / TO / STEP tail
-        k = wi + 2
-        lo = hi = step = None
-        tail_end = words[wi + 1][1]
-        while k < len(words):
-            w = words[k][2].upper()
-            if w in ("FROM", "TO", "STEP") and k + 1 < len(words):
-                nxt_end = len(sql)
-                for ts, _te3, tw in words[k + 2 :]:
-                    if tw.upper() in (
-                        _CLAUSE_STARTERS | {"FROM", "TO", "STEP", "WITH"}
-                    ):
-                        nxt_end = ts
-                        break
-                val = sql[words[k][1] : nxt_end].strip()
-                if w == "FROM":
-                    lo = val
-                elif w == "TO":
-                    hi = val
-                else:
-                    step = val
-                tail_end = nxt_end
-                k += 2
-                while k < len(words) and words[k][0] < tail_end:
-                    k += 1
-            else:
-                break
+        # optional FROM / TO / STEP: each value runs to the next of them
+        # (or a WITH or INTERPOLATE) or to the end of the ORDER BY clause
+        tail_end = at[1]
+        mods = toks.words_in(tail_end, order.end)
+        bounds: dict[str, str] = {}
+        k = 0
+        while k < len(mods) and mods[k][2].upper() in _FILL_BOUNDS:
+            nxt = next((j for j in range(k + 2, len(mods))
+                        if mods[j][2].upper() in _FILL_STOPS),
+                       len(mods))
+            tail_end = mods[nxt][0] if nxt < len(mods) else order.end
+            bounds[mods[k][2].upper()] = sql[mods[k][1] : tail_end].strip()
+            k = nxt
+        lo, hi, step = map(bounds.get, _FILL_BOUNDS)
         # optional INTERPOLATE (c1, c2, …): carry the previous REAL
         # row's value into fill rows. Only the bare-column (carry)
         # form — CH's `AS expr` form is applied RECURSIVELY down a run
         # of fill rows (each computes from the previous possibly-filled
         # row), which a window function cannot express; reject loudly.
         interp_cols: list[str] = []
-        while k < len(words) and words[k][0] < tail_end:
-            k += 1
-        if k < len(words) and words[k][2].upper() == "INTERPOLATE":
-            p = sql.find("(", words[k][1])
-            if p == -1 or sql[words[k][1] : p].strip():
+        if k < len(mods) and mods[k][2].upper() == "INTERPOLATE":
+            p = sql.find("(", mods[k][1])
+            if p == -1 or sql[mods[k][1] : p].strip():
                 raise ValueError(
                     "INTERPOLATE requires a parenthesized column list"
                 )
@@ -5880,8 +5820,9 @@ def _rewrite_with_fill(toks: Tokens) -> str:
                 )
             interp_cols = [c.strip() for c in body.split(",") if c.strip()]
             tail_end = close + 1
-        head = sql[: words[ob][0]].rstrip()
-        limit_tail = sql[tail_end:].strip()
+        head = sql[b.lo : order.start].rstrip()
+        limit_tail = sql[tail_end : b.hi].strip()
+        limit_tail = f" {limit_tail}" if limit_tail else ""
         lo_e = lo if lo is not None else f"(SELECT min({col}) FROM __q)"
         hi_e = hi if hi is not None else f"(SELECT max({col}) FROM __q)"
         seq = (
@@ -5901,37 +5842,37 @@ def _rewrite_with_fill(toks: Tokens) -> str:
         # spine silently DROPPED rows whose fill value is off the
         # sequence grid (e.g. a real d=3 under STEP 2).
         if not interp_cols:
-            return (
+            new = (
                 f"WITH __q AS ({head}), "
                 f"__spine AS ({spine_body}) "
                 f"SELECT * FROM __spine FULL OUTER JOIN __q USING ({col}) "
-                f"ORDER BY {col}"
-                + (f" {limit_tail}" if limit_tail else "")
+                f"ORDER BY {col}{limit_tail}"
             )
-        # carry-interpolation: a __real marker distinguishes fill rows
-        # (CH interpolates ONLY those — a real row's genuine NULL must
-        # not be backfilled), then last_value IGNORE NULLS over the
-        # preceding real values supplies the carry
-        w_over = (
-            f"OVER (ORDER BY {col} "
-            f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
-        )
-        carries = ", ".join(
-            f"CASE WHEN __real THEN {c} ELSE "
-            f"last_value(CASE WHEN __real THEN {c} END) "
-            f"IGNORE NULLS {w_over} END AS {c}"
-            for c in interp_cols
-        )
-        fill_sql = (
-            f"WITH __q AS (SELECT *, true AS __real FROM ({head})), "
-            f"__spine AS ({spine_body}) "
-            f"SELECT * FROM __spine FULL OUTER JOIN __q USING ({col})"
-        )
-        return (
-            f"SELECT * EXCEPT (__real, {', '.join(interp_cols)}), "
-            f"{carries} FROM ({fill_sql}) ORDER BY {col}"
-            + (f" {limit_tail}" if limit_tail else "")
-        )
+        else:
+            # carry-interpolation: a __real marker distinguishes fill
+            # rows (CH interpolates ONLY those — a real row's genuine
+            # NULL must not be backfilled), then last_value IGNORE NULLS
+            # over the preceding real values supplies the carry
+            w_over = (
+                f"OVER (ORDER BY {col} "
+                f"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+            )
+            carries = ", ".join(
+                f"CASE WHEN __real THEN {c} ELSE "
+                f"last_value(CASE WHEN __real THEN {c} END) "
+                f"IGNORE NULLS {w_over} END AS {c}"
+                for c in interp_cols
+            )
+            fill_sql = (
+                f"WITH __q AS (SELECT *, true AS __real FROM ({head})), "
+                f"__spine AS ({spine_body}) "
+                f"SELECT * FROM __spine FULL OUTER JOIN __q USING ({col})"
+            )
+            new = (
+                f"SELECT * EXCEPT (__real, {', '.join(interp_cols)}), "
+                f"{carries} FROM ({fill_sql}) ORDER BY {col}{limit_tail}"
+            )
+        sql = sql[: b.lo] + new + sql[b.hi :]
     return sql
 
 
@@ -5943,33 +5884,17 @@ def _rewrite_prewhere(toks: Tokens) -> str:
     sql = toks.sql
     if "PREWHERE" not in toks.marks:
         return sql
-    words = toks.words()
-    for wi, (ps, pe, pw) in enumerate(words):
-        if pw.upper() != "PREWHERE":
+    for b in reversed(toks.clauses()):
+        pre, where = b.get("PREWHERE"), b.get("WHERE")
+        if pre is None:
             continue
-        end = len(sql)
-        where_idx = None
-        for k in range(wi + 1, len(words)):
-            if words[k][2].upper() in _CLAUSE_STARTERS:
-                end = words[k][0]
-                if words[k][2].upper() == "WHERE":
-                    where_idx = k
-                break
-        cond = sql[pe:end].strip()
-        if where_idx is not None:
-            # PREWHERE a WHERE b → WHERE (a) AND (b)
-            wend = len(sql)
-            for k in range(where_idx + 1, len(words)):
-                if words[k][2].upper() in _CLAUSE_STARTERS - {"WHERE"}:
-                    wend = words[k][0]
-                    break
-            wcond = sql[words[where_idx][1] : wend].strip()
-            return (
-                sql[:ps]
-                + f"WHERE ({cond}) AND ({wcond}) "
-                + sql[wend:]
-            )
-        return sql[:ps] + f"WHERE {cond} " + sql[end:]
+        cond = sql[pre.body : pre.end].strip()
+        if where is None:
+            sql = sql[: pre.start] + f"WHERE {cond} " + sql[pre.end :]
+        else:  # PREWHERE a WHERE b → WHERE (a) AND (b)
+            wcond = sql[where.body : where.end].strip()
+            sql = (sql[: pre.start] + f"WHERE ({cond}) AND ({wcond}) "
+                   + sql[where.end :])
     return sql
 
 
@@ -5988,99 +5913,78 @@ def _rewrite_any_join(toks: Tokens, ctx: QueryContext) -> str:
     — use the DataFrame API for those shapes.
     """
     sql = toks.sql
-    if "ANY" not in toks.marks:
+    hit = _join_with(toks, "ANY") if "ANY" in toks.marks else None
+    if hit is None:
         return sql
-    words = toks.words()
-    for wi, (ws, _we, w) in enumerate(words):
-        if w.upper() != "ANY":
-            continue
-        prev = words[wi - 1][2].upper() if wi > 0 else ""
-        nxt = words[wi + 1][2].upper() if wi + 1 < len(words) else ""
-        nxt2 = words[wi + 2][2].upper() if wi + 2 < len(words) else ""
-        if prev == "RIGHT" or nxt == "RIGHT":
-            raise ValueError(
-                "RIGHT ANY JOIN (left-side dedup) is not supported in "
-                "SQL — use joins.any_join with swapped sides"
-            )
-        if prev in ("LEFT", "INNER") and nxt == "JOIN":
-            start, jtype, j = words[wi - 1][0], prev, wi + 1
-        elif nxt in ("LEFT", "INNER") and nxt2 == "JOIN":
-            start, jtype, j = ws, nxt, wi + 2
-        elif nxt == "JOIN":
-            start, jtype, j = ws, "INNER", wi + 1
-        else:
-            continue
-        # table [AS] [alias] USING (cols)
-        k = j + 1
-        table = words[k][2]
-        alias = table
+    _b, j, opener = hit
+    return _rewrite_any_join(lex(_any_join(toks, j, opener, ctx)), ctx)
+
+
+def _any_join(toks: Tokens, j: Clause, opener: list,
+              ctx: QueryContext) -> str:
+    """``toks.sql`` with its ANY join ``j`` rewritten (see
+    :func:`_rewrite_any_join`)."""
+    sql = toks.sql
+    ups = [w.upper() for _s, _e, w in opener]
+    if "RIGHT" in ups:
+        raise ValueError(
+            "RIGHT ANY JOIN (left-side dedup) is not supported in "
+            "SQL — use joins.any_join with swapped sides"
+        )
+    start = next(s for (s, _e, _w), u in zip(opener, ups)
+                 if u in ("ANY", "LEFT", "INNER"))
+    jtype = "LEFT" if "LEFT" in ups else "INNER"
+    # table [AS] [alias] USING (cols)
+    words = toks.words_in(j.body, j.end)
+    table = alias = words[0][2]
+    k = 1
+    if k < len(words) and words[k][2].upper() == "AS":
         k += 1
-        if k < len(words) and words[k][2].upper() == "AS":
-            k += 1
-        if k < len(words) and words[k][2].upper() != "USING":
-            alias = words[k][2]
-            k += 1
-        if k >= len(words) or words[k][2].upper() != "USING":
-            raise ValueError(
-                "ANY JOIN supports the USING form only; rewrite ON "
-                "conditions with joins.any_join"
-            )
-        cols = ctx.columns(table)
-        if cols is None:
-            raise ValueError(
-                f"ANY JOIN needs {table!r} among the statement's views "
-                "or warehouse tables (its column list drives the dedup "
-                "projection)"
-            )
-        # locate the USING column list. Parenthesized form: the '('
-        # must directly follow the USING token (whitespace only), else
-        # an unrelated later paren would silently corrupt the rewrite.
-        # CH's legal paren-less form 'USING k1, k2' is consumed word by
-        # word up to the next top-level clause keyword and re-emitted
-        # parenthesized (Spark requires the parens).
-        p = sql.find("(", words[k][1])
-        if p != -1 and not sql[words[k][1] : p].strip():
-            close = toks.close(p)
-            ukeys = [c.strip() for c in sql[p + 1 : close].split(",")]
-            using_end = close + 1
-        else:
-            stop = {
-                "WHERE", "PREWHERE", "GROUP", "ORDER", "LIMIT",
-                "HAVING", "SETTINGS", "UNION", "FORMAT", "WINDOW",
-                "QUALIFY", "JOIN", "LEFT", "RIGHT", "INNER", "FULL",
-                "CROSS", "ANY", "ASOF", "ON",
-            }
-            j2 = k + 1
-            last_end = None
-            while j2 < len(words) and words[j2][2].upper() not in stop:
-                last_end = words[j2][1]
-                j2 += 1
-            if last_end is None:
-                raise ValueError(
-                    "ANY JOIN USING: no key columns found after USING"
-                )
-            ukeys = [
-                c.strip()
-                for c in sql[words[k][1] : last_end].split(",")
-                if c.strip()
-            ]
-            using_end = last_end
-        col_list = ", ".join(cols)
-        order_all = ", ".join(cols)
-        part = ", ".join(ukeys)
-        sub = (
-            f"(SELECT {col_list} FROM (SELECT *, row_number() OVER ("
-            f"PARTITION BY {part} ORDER BY {order_all}) AS __any_rn "
-            f"FROM {table}) WHERE __any_rn = 1)"
+    if k < len(words) and words[k][2].upper() != "USING":
+        alias = words[k][2]
+        k += 1
+    if k >= len(words) or words[k][2].upper() != "USING":
+        raise ValueError(
+            "ANY JOIN supports the USING form only; rewrite ON "
+            "conditions with joins.any_join"
         )
-        rebuilt = (
-            sql[:start]
-            + f"{jtype} JOIN {sub} AS {alias} "
-            + f"USING ({', '.join(ukeys)})"
-            + sql[using_end:]
+    cols = ctx.columns(table)
+    if cols is None:
+        raise ValueError(
+            f"ANY JOIN needs {table!r} among the statement's views "
+            "or warehouse tables (its column list drives the dedup "
+            "projection)"
         )
-        return _rewrite_any_join(lex(rebuilt), ctx)
-    return sql
+    # the USING column list: parenthesized, the '(' right after USING,
+    # or CH's paren-less 'USING k1, k2' up to the end of the join,
+    # re-emitted parenthesized (Spark requires the parens)
+    using = words[k][1]
+    p = sql.find("(", using)
+    if p != -1 and not sql[using:p].strip():
+        close = toks.close(p)
+        ukeys = [c.strip() for c in sql[p + 1 : close].split(",")]
+        using_end = close + 1
+    else:
+        if k + 1 >= len(words):
+            raise ValueError(
+                "ANY JOIN USING: no key columns found after USING"
+            )
+        using_end = words[-1][1]
+        ukeys = [c.strip() for c in sql[using:using_end].split(",")
+                 if c.strip()]
+    col_list = ", ".join(cols)
+    part = ", ".join(ukeys)
+    sub = (
+        f"(SELECT {col_list} FROM (SELECT *, row_number() OVER ("
+        f"PARTITION BY {part} ORDER BY {col_list}) AS __any_rn "
+        f"FROM {table}) WHERE __any_rn = 1)"
+    )
+    return (
+        sql[:start]
+        + f"{jtype} JOIN {sub} AS {alias} "
+        + f"USING ({', '.join(ukeys)})"
+        + sql[using_end:]
+    )
 
 
 def _drop_global(toks: Tokens) -> str:
@@ -6103,31 +6007,26 @@ def _strip_trailing_clauses(toks: Tokens) -> str:
     """Drop CH execution-control tails: ``SETTINGS k=v, …`` (server
     knobs — Spark's equivalents live in the session conf) and
     ``FORMAT Name`` (a client-protocol artifact, meaningless to an
-    engine API that returns DataFrames). Both may only appear at the
-    end of the statement; anything after them is cut with them."""
+    engine API that returns DataFrames). Both may only end a query;
+    anything after them in its branch is cut with them."""
     sql = toks.sql
-    if not {"OUTFILE", "SETTINGS", "FORMAT"} & toks.marks:
+    if "OUTFILE" not in toks.marks and not _TRAILING_CLAUSES & toks.marks:
         return sql
     words = toks.words()
-    for i, (_ws, _we, w) in enumerate(words[:-1]):
-        if w.upper() == "INTO" and words[i + 1][2].upper() == "OUTFILE":
+    for (_ws, _we, w), (_ns, _ne, nw) in zip(words, words[1:]):
+        if w.upper() == "INTO" and nw.upper() == "OUTFILE":
             raise ValueError(
                 "INTO OUTFILE is a client-side write — run the "
                 "statement through ddl.ChWarehouse.execute (which "
                 "writes the file via sources.write_table) or write "
                 "the returned DataFrame yourself"
             )
-    for kw in ("SETTINGS", "FORMAT"):
-        for ws, we, w in words:
-            if ws >= len(sql):
-                break
-            if w.upper() != kw:
-                continue
-            rest = sql[we:].lstrip()
-            if rest.startswith("("):
-                continue  # format(...) the function, not the clause
-            sql = sql[:ws].rstrip()
-            break
+    for b in reversed(toks.clauses()):
+        tail = next(
+            (c for c in b.clauses if c.name in _TRAILING_CLAUSES), None
+        )
+        if tail is not None:
+            sql = sql[: tail.start].rstrip() + sql[b.hi :]
     return sql
 
 
@@ -6183,81 +6082,44 @@ def _rewrite_topk_twophase(toks: Tokens) -> str:
     deterministic Spark-native equivalent.
 
     Conservative scope — anything outside it falls back to the
-    bounded-group template: single top-level SELECT (no UNION /
-    DISTINCT / WITH / ROLLUP / CUBE / TOTALS / GROUPING SETS), literal
-    k, every select item explicitly aliased (or a bare column), topK
-    wrappers referencing nothing but the topK value, ORDER BY tail
-    (if any) referencing output aliases only, no topK inside HAVING.
+    bounded-group template: single top-level SELECT (no set operation,
+    DISTINCT, WITH, WINDOW, QUALIFY, ROLLUP, CUBE, TOTALS or GROUPING
+    SETS), literal k, every select item explicitly aliased (or a bare
+    column), topK wrappers referencing nothing but the topK value,
+    ORDER BY tail (if any) referencing output aliases only, no topK
+    inside HAVING.
     """
     sql = toks.sql
     if "topK" not in sql:
         return sql
-    words = toks.words()
-    if not words or words[0][2].upper() != "SELECT":
+    branches = toks.clauses()
+    if len(branches) != 1:
         return sql
-    uppers = [w[2].upper() for w in words]
-    if uppers[1:2] == ["DISTINCT"] or "UNION" in uppers \
-            or "INTERSECT" in uppers or "EXCEPT" in uppers \
-            or uppers[0] == "WITH" or "WITH" in uppers[:1]:
+    b = branches[0]
+    sel, frm, gb = b.get("SELECT"), b.get("FROM"), b.get("GROUP BY")
+    if sel is None or sel.start != toks.starts[0] or frm is None or (
+        gb is None or b.get("WINDOW") or b.get("QUALIFY")
+    ):
         return sql
-    # clause spans
-    def _find(kw: str, frm: int = 0):
-        for wi in range(frm, len(words)):
-            if words[wi][2].upper() == kw:
-                return wi
-        return None
-
-    fi = _find("FROM")
-    gi = None
-    for wi in range(len(words) - 1):
-        if (
-            words[wi][2].upper() == "GROUP"
-            and words[wi + 1][2].upper() == "BY"
-        ):
-            gi = wi
-    if fi is None or gi is None:
+    first = toks.words_in(sel.body, sel.end)[:1]
+    if first and first[0][2].upper() == "DISTINCT":
         return sql
-    hi = _find("HAVING", gi)
-    tail_i = None
-    for wi in range(gi + 2, len(words)):
-        if words[wi][2].upper() in ("ORDER", "LIMIT", "SETTINGS"):
-            tail_i = wi
-            break
-    select_list = sql[words[0][1] : words[fi][0]].strip()
-    gk_end = (
-        words[hi][0] if hi is not None
-        else (words[tail_i][0] if tail_i is not None else len(sql))
-    )
-    from_where = sql[words[fi][0] : words[gi][0]].strip()
-    group_keys_txt = sql[words[gi + 1][1] : gk_end].strip()
+    having = b.get("HAVING")
+    tail_at = (having or gb).end
+    from_where = sql[frm.start : gb.start].strip()
+    group_keys_txt = sql[gb.body : gb.end].strip()
     if re.search(r"(?i)\bWITH\b|\bGROUPING\b", group_keys_txt):
         return sql
-    having_txt = (
-        sql[words[hi][0] : (words[tail_i][0] if tail_i is not None
-                            else len(sql))].strip()
-        if hi is not None else ""
-    )
+    having_txt = sql[having.start : having.end].strip() if having else ""
     if "topK" in having_txt:
         return sql
-    tail_txt = sql[words[tail_i][0]:].strip() if tail_i is not None else ""
+    tail_txt = sql[tail_at : b.hi].strip()
     gkeys = [g.strip() for g in lex(group_keys_txt).split() if g.strip()]
     if not gkeys:
         return sql
 
-    # parse select items: (body, alias, has_topk)
-    items = []
-    for item in lex(select_list).split():
-        item = item.strip()
-        iw = lex(item).words()
-        alias = None
-        body = item
-        if len(iw) >= 2 and iw[-2][2].upper() == "AS":
-            alias = iw[-1][2]
-            body = item[: iw[-2][0]].strip()
-        elif len(iw) == 1 and iw[0][0] == 0 \
-                and iw[0][1] == len(item):
-            alias = item
-        items.append([body, alias, "topK" in item])
+    # the select items: (body, alias, has_topk)
+    items = [(e, a, "topK" in e) for e, a in _head_select_items(sql)[1]]
     if any(a is None for _b, a, _t in items):
         return sql
     # CH group keys may be select ALIASES (GROUP BY ym) — the counting
@@ -6272,22 +6134,12 @@ def _rewrite_topk_twophase(toks: Tokens) -> str:
         resolved.append(alias_to_body.get(g, g))
     gkeys = resolved
     # ORDER BY tail must reference aliases only
-    if tail_txt.upper().startswith("ORDER"):
-        m = re.match(r"(?is)^ORDER\s+BY\s+(.*?)(\bLIMIT\b.*|$)",
-                     tail_txt)
+    order = b.get("ORDER BY")
+    if order is not None:
         aliases = {a for _b, a, _t in items}
-        for part in lex(m.group(1)).split():
-            lead = re.sub(
-                r"(?is)\s+(ASC|DESC|NULLS\s+(FIRST|LAST))\s*$", "",
-                part.strip(),
-            ).strip()
-            while True:
-                lead2 = re.sub(
-                    r"(?is)\s+(ASC|DESC|NULLS\s+(FIRST|LAST))\s*$",
-                    "", lead).strip()
-                if lead2 == lead:
-                    break
-                lead = lead2
+        for part in toks.split(order.body, order.end):
+            lead = re.sub(r"(?is)(\s+(ASC|DESC|NULLS\s+(FIRST|LAST)))+$",
+                          "", part)
             if lead not in aliases:
                 return sql
 
@@ -6433,7 +6285,9 @@ def _rewrite_hop(toks: Tokens) -> str:
       the (col1, col2) tuple like tumble().
 
     CH arg order is (time, hop_interval, window_interval); Spark's is
-    (time, window_duration, slide_duration) — swapped here.
+    (time, window_duration, slide_duration) — swapped here. Each
+    branch of a set operation has its own GROUP BY, so each is
+    rewritten on its own.
     """
     sql = toks.sql
     if not _HOP_CALL_RE.search(sql):
@@ -6443,49 +6297,25 @@ def _rewrite_hop(toks: Tokens) -> str:
     sql = toks.map_subqueries(lambda q: _rewrite_hop(lex(q)))
     if sql != toks.sql:
         toks = lex(sql)
-    # an UNPARENTHESIZED top-level set operation carries one SELECT
-    # (and one possible GROUP BY hop region) per branch — process
-    # each branch independently so the second branch's GROUP BY is
-    # not mistaken for select-side references to the first's windows
-    # (r15 self-review)
-    words = toks.words()
-    for wi, (ws, _we, w) in enumerate(words):
-        if w.upper() in ("UNION", "INTERSECT", "EXCEPT") and wi > 0:
-            nxt = words[wi + 1] if wi + 1 < len(words) else None
-            cut = (
-                nxt[1]
-                if nxt and nxt[2].upper() in ("ALL", "DISTINCT")
-                else _we
-            )
-            return (
-                _rewrite_hop(lex(sql[:ws]))
-                + sql[ws:cut]
-                + _rewrite_hop(lex(sql[cut:]))
-            )
-    # locate the top-level GROUP BY region (if any)
-    gb_lo = gb_hi = -1
-    for wi, (ws, we, w) in enumerate(words[:-1]):
-        if w.upper() == "GROUP" and words[wi + 1][2].upper() == "BY":
-            gb_lo = words[wi + 1][1]
-            gb_hi = len(sql)
-            for ws2, _we2, w2 in words[wi + 2 :]:
-                if w2.upper() in ("HAVING", "ORDER", "LIMIT",
-                                  "SETTINGS", "UNION", "QUALIFY"):
-                    gb_hi = ws2
-                    break
-            break
-    grouped = gb_lo >= 0 and re.search(
-        r"\bhop\s*\(", sql[gb_lo:gb_hi]
-    ) is not None
+    for b in reversed(toks.clauses()):
+        sql = sql[: b.lo] + _hop_branch(toks, b) + sql[b.hi :]
+    return sql
+
+
+def _hop_branch(toks: Tokens, b: Branch) -> str:
+    """Branch ``b`` of ``toks.sql`` with its hop calls rewritten (see
+    :func:`_rewrite_hop`)."""
+    sql, starts = toks.sql, toks.starts
+    gb = b.get("GROUP BY")
+    gb_lo, gb_hi = (gb.body, gb.end) if gb else (-1, -1)
+    grouped = re.search(r"\bhop\s*\(", sql[gb_lo:gb_hi]) is not None
 
     # the grouped form's (hop, window) spec — select-side
     # hopStart/hopEnd must reference the SAME windows
     gspec: tuple[int, int] | None = None
-
-    starts = toks.starts
     out: list[str] = []
-    pos = 0
-    for k in range(len(starts) - 1):
+    pos = b.lo
+    for k in range(toks.at(b.lo), min(toks.at(b.hi), len(starts) - 1)):
         at = starts[k]
         ident = sql[at : toks.ends[k]]
         open_p = starts[k + 1]
@@ -6537,7 +6367,24 @@ def _rewrite_hop(toks: Tokens) -> str:
                     f"to_timestamp(({st}) + {w}) AS col2)"
                 )
         pos = close + 1
-    return "".join(out) + sql[pos:]
+    return "".join(out) + sql[pos : b.hi]
+
+
+def _parenthesize_branches(toks: Tokens) -> str:
+    """ClickHouse applies ORDER BY, LIMIT and OFFSET to their own query
+    of a set operation; Spark rejects them before a set operator. So each
+    branch before a set operator that ends in one of them gets
+    parentheses."""
+    sql = toks.sql
+    if not _SET_OPERATORS & toks.marks:
+        return sql
+    for b in reversed(toks.clauses()[:-1]):
+        if b.clauses and _CLAUSES["ORDER BY"] <= _CLAUSES[
+            b.clauses[-1].name
+        ] < _CLAUSES["SETTINGS"]:
+            lo = b.clauses[0].start
+            sql = sql[:lo] + f"({sql[lo : b.hi]})" + sql[b.hi :]
+    return sql
 
 
 # Clause rewrites in the order translate runs them. Each takes the
@@ -6598,20 +6445,18 @@ def translate(sql: str, ctx: QueryContext = EMPTY_CONTEXT) -> str:
 
     The statement driver: it lexes the statement once, runs the clause
     passes over it and hands the tokens to :func:`_walk`. Clause-rewrite
-    order matters: LIMIT BY runs LAST because it wraps the statement in
-    a subquery — any clause rewritten after it would sit at paren depth
-    1 where the top-level scanners no longer see it.
+    order matters: a pass that wraps its branch in a subquery (QUALIFY,
+    WITH FILL, WITH TIES, LIMIT BY) runs after the passes whose clauses
+    it would hide at paren depth 1. Last, a branch that still ends in
+    ORDER BY, LIMIT or OFFSET before a set operator gets parentheses.
     """
     toks = lex(sql.rstrip().rstrip(";"))
-    for rewrite in _CLAUSE_PASSES:
+    for rewrite in (*_CLAUSE_PASSES, _parenthesize_branches):
         args = (toks, ctx) if rewrite in _CONTEXT_PASSES else (toks,)
         sql = rewrite(*args)
         if sql != toks.sql:
             toks = lex(sql)
     return _walk(toks, 0, len(toks.sql), ctx)
-
-
-_SUBQUERY_HEADS = frozenset({"SELECT", "WITH"})
 
 
 def _args(toks: Tokens, lo: int, hi: int, ctx: QueryContext) -> list[str]:
@@ -6622,7 +6467,7 @@ def _args(toks: Tokens, lo: int, hi: int, ctx: QueryContext) -> list[str]:
     out = []
     for a, b in toks.spans(lo, hi):
         head = toks.sql[a : toks.ends[toks.at(a)]] if a < b else ""
-        if head.upper() in _SUBQUERY_HEADS:
+        if head.upper() in _QUERY_HEADS:
             out.append(translate(toks.sql[a:b], ctx))
         else:
             out.append(_walk(toks, a, b, ctx))
@@ -6751,6 +6596,11 @@ def _parameterized(c: Call) -> str:
     base's PARAMETERIZED template. ``baseIf(params)(args…, cond)`` takes
     every value argument through the -If wrap first."""
     if c.name not in PARAMETERIZED:
+        if not c.args:
+            raise ValueError(
+                f"{c.name}(…)(): the -If combinator takes the condition "
+                "as its last argument, and the call has no arguments"
+            )
         c.name, c.args = c.name[:-2], _case_when(c.args)
     return _CALLS.get(c.name, _param_template)(c)
 
@@ -9863,28 +9713,31 @@ def dictionary(df: DataFrame, key_col: str) -> DataFrame:
     return df.withColumnRenamed(key_col, "__key")
 
 
-# Words after a table reference that are not its alias, and the words
-# a walk back from a comma stops at within its paren group (the comma is
-# in a FROM list when the walk stops at FROM or JOIN).
-_NOT_ALIAS = _CLAUSE_STARTERS | {
-    "ANTI", "CLUSTER", "CROSS", "DISTRIBUTE", "EXCEPT", "FULL", "INNER",
-    "INTERSECT", "JOIN", "LATERAL", "LEFT", "MINUS", "NATURAL", "OFFSET",
-    "ON", "OUTER", "PIVOT", "RIGHT", "SEMI", "SORT", "TABLESAMPLE",
-    "UNPIVOT", "USING", "WINDOW",
-}
-_COMMA_SCOPE = _CLAUSE_STARTERS | {
-    "SELECT", "BY", "VIEW", "WINDOW", "VALUES", "WITH", "FROM", "JOIN",
+# Words after a table reference that are not its alias.
+_NOT_ALIAS = _CLAUSE_WORDS | _JOIN_WORDS | {
+    "CLUSTER", "DISTRIBUTE", "LATERAL", "MINUS", "ON", "PIVOT", "SORT",
+    "TABLESAMPLE", "UNPIVOT", "USING",
 }
 
 
-def _table_refs(
-    sql: str, names: Mapping[str, DataFrame]
-) -> list[tuple[int, int, str, bool]]:
-    """(start, end, name, aliased) for every word of ``sql`` in a table
-    position — right after FROM or JOIN, or after a comma of a FROM
-    list — that is one of ``names`` (case-insensitively, as Spark
-    resolves views), unless a CTE of that name is defined before it. A
-    word followed by ``.`` or ``(`` is no table reference."""
+class TableRef(NamedTuple):
+    """A table name in ``sql[start:end]``, in the clause ``clause``
+    (FROM or JOIN); ``aliased`` when an alias follows it."""
+
+    start: int
+    end: int
+    name: str
+    aliased: bool
+    clause: str
+
+
+def _table_refs(sql: str, names: Collection[str]) -> list[TableRef]:
+    """Every word of ``sql`` in a table position — the first word of a
+    FROM list item or of a join, in the clause map of the statement or
+    of any parenthesized query in it — that is one of ``names``
+    (case-insensitively, as Spark resolves views), unless a CTE of that
+    name is defined before it. A word followed by ``.`` or ``(`` is no
+    table reference."""
     if not names:
         return []
     toks = lex(sql)
@@ -9900,27 +9753,34 @@ def _table_refs(
         cte = word(k)
         if cte and word(k + 1) == "AS" and sql[starts[k + 2]] == "(":
             cte_ends.setdefault(cte, toks.partner.get(starts[k + 2], 0))
+    queries = [(0, len(sql))] + [
+        (s + 1, toks.partner[s]) for k, s in enumerate(starts[:-1])
+        if sql[s] == "(" and s in toks.partner and word(k + 1) in _QUERY_HEADS
+    ]
     refs = []
-    for k in range(1, n):
-        w = word(k)
-        name = w and by_lower.get(w.lower())
-        if not name or (k + 1 < n and sql[starts[k + 1]] in ".(") or (
-            starts[k] > cte_ends.get(w, len(sql))
-        ):
-            continue
-        prev = word(k - 1)
-        if prev is None and sql[starts[k - 1]] == ",":
-            j = k - 2
-            while j >= 0 and depths[j] >= depths[k] and not (
-                depths[j] == depths[k] and word(j) in _COMMA_SCOPE
-            ):
-                j -= 1
-            prev = word(j) if j >= 0 and depths[j] == depths[k] else None
-        if prev in ("FROM", "JOIN"):
-            nxt = word(k + 1) if k + 1 < n else None
-            aliased = nxt is not None and nxt not in _NOT_ALIAS
-            refs.append((starts[k], ends[k], name, aliased))
-    return refs
+    for lo, hi in queries:
+        for c in (c for b in toks.clauses(lo, hi) for c in b.clauses):
+            if c.name == "FROM":
+                items = toks.spans(c.body, c.end)
+            elif c.name == "JOIN":
+                items = toks.spans(c.body, c.end)[:1]
+            else:
+                continue
+            for a, z in items:
+                k = toks.at(a)
+                w = word(k) if a < z else None
+                name = w and by_lower.get(w.lower())
+                if name and not (k + 1 < n and sql[starts[k + 1]] in ".(") \
+                        and starts[k] <= cte_ends.get(w, len(sql)):
+                    nxt = word(k + 1) if k + 1 < n and starts[k + 1] < z \
+                        else None
+                    refs.append(TableRef(
+                        starts[k], ends[k], name,
+                        nxt is not None and nxt not in _NOT_ALIAS, c.name))
+                if any(word(t) == "LATERAL" and depths[t] == depths[k]
+                       for t in range(k, toks.at(z))):
+                    break  # the aliases of a LATERAL VIEW follow
+    return sorted(refs)
 
 
 def ch_sql(
@@ -9957,7 +9817,7 @@ def ch_sql(
     bound: dict[str, str] = {}
     out, pos = [], 0
     try:
-        for s, e, name, aliased in _table_refs(translated, frames):
+        for s, e, name, aliased, _clause in _table_refs(translated, frames):
             if name not in bound:
                 bound[name] = f"_ctx_{uuid.uuid4().hex}"
                 frames[name].createOrReplaceTempView(bound[name])

@@ -317,6 +317,10 @@ def test_settings_and_format_tails_stripped():
     assert translate("SELECT format('{}', a) FROM t") == (
         "SELECT format_string('%s', cast(a as string)) FROM t"
     )
+    # a call after an operator is no FORMAT clause; the real one goes
+    assert translate(
+        "SELECT a FROM t WHERE s = format('{}', a) FORMAT JSON"
+    ) == "SELECT a FROM t WHERE s = format_string('%s', cast(a as string))"
 
 
 def test_uniqupto_arrayelement_countequal(spark):
@@ -4665,3 +4669,317 @@ class TestBitRotate:
             translate("SELECT bitRotateLeft(x, 3) FROM t")
         with pytest.raises(ValueError, match="typed cast"):
             translate("SELECT bitRotateLeft(toUInt64(x), 3) FROM t")
+
+
+# ---- r14 ADVICE findings: two-phase topK ignores NULL values (NULL
+# must not displace a real value; an all-NULL group returns [], not
+# NULL); a subscript casts a non-INT index when the BASE is an
+# array-typed view column; moduloOrNull / intDivOrNull /
+# positiveModuloOrNull bind the divisor once (guard and operation see
+# the same value).
+
+
+class TestTopKNullSemantics:
+    def test_null_does_not_displace_real_values(self, spark):
+        # group 'g': values a×3, NULL×5, b×1 — CH topK(2) ignores the
+        # NULLs entirely → ['a', 'b']
+        rows = [("g", "a")] * 3 + [("g", None)] * 5 + [("g", "b")]
+        df = spark.createDataFrame(rows, "k string, v string")
+        [r] = ch_sql(
+            spark,
+            "SELECT k, topK(2)(v) AS t FROM t GROUP BY k",
+            views={"t": df},
+        ).collect()
+        assert r["t"] == ["a", "b"]
+
+    def test_all_null_group_returns_empty_array(self, spark):
+        df = spark.createDataFrame(
+            [("g", None), ("g", None), ("h", "x")], "k string, v string"
+        )
+        rows = {
+            r["k"]: r["t"]
+            for r in ch_sql(
+                spark,
+                "SELECT k, topK(2)(v) AS t FROM t GROUP BY k",
+                views={"t": df},
+            ).collect()
+        }
+        assert rows["g"] == []
+        assert rows["h"] == ["x"]
+
+    def test_topk_weighted_template_path_ignores_null(self, spark):
+        # ungrouped → template (not two-phase) path; the struct
+        # collect does not skip NULL v by itself, so the template
+        # needs its own filter (found while building fuzz v6)
+        df = spark.createDataFrame(
+            [("a", 1), (None, 100), ("b", 2)], "v string, w int"
+        )
+        [r] = ch_sql(
+            spark,
+            "SELECT topKWeighted(2)(v, w) AS t FROM t",
+            views={"t": df},
+        ).collect()
+        assert r["t"] == ["b", "a"]
+
+    def test_topk_weighted_ignores_null(self, spark):
+        df = spark.createDataFrame(
+            [("g", "a", 1), ("g", None, 100), ("g", "b", 2)],
+            "k string, v string, w int",
+        )
+        [r] = ch_sql(
+            spark,
+            "SELECT k, topKWeighted(2)(v, w) AS t FROM t GROUP BY k",
+            views={"t": df},
+        ).collect()
+        assert r["t"] == ["b", "a"]
+
+
+class TestSubscriptArrayColumn:
+    def test_array_column_bigint_index(self, spark):
+        # r14 ADVICE: arr[k] with an array COLUMN and BIGINT index
+        # column must cast the index (element_at needs INT)
+        df = spark.createDataFrame(
+            [([10, 20, 30], 2)], "arr array<int>, k bigint"
+        )
+        [r] = ch_sql(
+            spark, "SELECT arr[k] AS x FROM t", views={"t": df}
+        ).collect()
+        assert r["x"] == 20
+
+    def test_map_column_key_still_uncast(self, spark):
+        # the schema-informed path must NOT regress map lookups with
+        # bigint keys > 2^31 (the r13 ADVICE fix this heuristic serves)
+        df = spark.createDataFrame(
+            [({5000000000: "big"}, 5000000000)],
+            "m map<bigint,string>, k bigint",
+        )
+        [r] = ch_sql(
+            spark, "SELECT m[k] AS x FROM t", views={"t": df}
+        ).collect()
+        assert r["x"] == "big"
+
+
+class TestNullIndexSubscript:
+    def test_null_index_returns_null(self, spark):
+        # fuzz v6 seed 51694: Spark 4.1.2's ANSI element_at returns
+        # the LAST element for a NULL index (try_element_at is
+        # correct) — CH arr[NULL] is NULL, so subscripts and
+        # arrayElement must lower to try_element_at
+        df = spark.createDataFrame([(11,), (2,)], "x bigint")
+        rows = ch_sql(
+            spark,
+            "SELECT x, ([10, 20, 30])[nullIf(x, 11)] AS a, "
+            "arrayElement([10, 20, 30], nullIf(x, 11)) AS b FROM t "
+            "ORDER BY x",
+            views={"t": df},
+        ).collect()
+        assert (rows[0]["a"], rows[0]["b"]) == (20, 20)
+        assert (rows[1]["a"], rows[1]["b"]) == (None, None)
+
+
+class TestOrNullDivisorSingleBind:
+    def test_divisor_interpolated_once(self):
+        for fn in ("moduloOrNull", "intDivOrNull",
+                   "positiveModuloOrNull"):
+            out = translate(f"SELECT {fn}(a, rand() * 3) FROM t")
+            # the divisor expression must appear exactly once in the
+            # translated text (bound into the lambda), never re-read
+            # by the zero guard
+            assert out.count("rand()") == 1, (fn, out)
+
+
+class TestArrayElementMapDispatch:
+    """r15 self-review: CH arrayElement works on MAPS too (m[key] is
+    sugar for arrayElement(m, key)), so the explicit-call spelling
+    must use the same array-vs-map index classification as the
+    subscript rewrite — the unconditional CAST(… AS INT) broke
+    arrayElement(map_col, 'key') under ANSI."""
+
+    def test_explicit_call_on_map_string_key(self, spark):
+        df = spark.createDataFrame(
+            [({"k": "v"}, 2)], "m map<string,string>, i bigint"
+        )
+        [r] = ch_sql(
+            spark,
+            "SELECT arrayElement(m, 'k') AS a, "
+            "arrayElementOrNull(m, 'absent') AS b, "
+            "arrayElement([10, 20, 30], i) AS c FROM t",
+            views={"t": df},
+        ).collect()
+        assert r["a"] == "v"
+        assert r["b"] is None
+        assert r["c"] == 20  # bigint index on an array still casts
+
+    def test_map_bigint_key_not_cast(self, spark):
+        # a bigint map key > 2^31 must NOT be cast to INT
+        big = 5_000_000_000
+        df = spark.createDataFrame(
+            [({big: "big"}, big)], "m map<bigint,string>, k bigint"
+        )
+        [r] = ch_sql(
+            spark,
+            "SELECT arrayElement(m, k) AS x FROM t",
+            views={"t": df},
+        ).collect()
+        assert r["x"] == "big"
+
+    def test_or_null_zero_guard_is_array_only(self):
+        out = translate("SELECT arrayElementOrNull(map('a', 1), 'a')")
+        assert "CASE" not in out  # map key 0/'a' is a real lookup
+        out = translate("SELECT arrayElementOrNull([1, 2], x)")
+        assert "CASE WHEN" in out  # array index 0 -> NULL
+
+
+# ---- probe wave 7: the newest CH surface swept against the translator —
+# each name either maps with executed-value pins or loud-rejects naming
+# a working alternative. Of ~60 release-note candidates, eight were new:
+# overlay (24.7), space (23.x), moduloOrNull / intDivOrNull /
+# positiveModuloOrNull (25.x zero-divisor family), UUIDToNum (24.5,
+# variants 1/2 mapped — the default is byte-identical to the
+# UUIDStringToNum mapping; unknown variants reject), dictGetAll
+# (RegExpTree → reject), timeSeries*ToGrid (25.6 experimental PromQL
+# resampling → reject).
+
+
+class TestWave7Mapped:
+    def test_overlay(self, spark):
+        df = spark.createDataFrame([("Spark SQL",)], "s string")
+        [r] = ch_sql(
+            spark,
+            "SELECT overlay(s, 'ANSI ', 7) AS a, "
+            "overlay(s, 'CORE', 7, 3) AS b, "
+            "overlayUTF8(s, 'x', 1) AS c FROM t",
+            views={"t": df},
+        ).collect()
+        # CH overlay semantics == Spark overlay: replace at 1-based
+        # offset; 4-arg form replaces `len` chars
+        assert r["a"] == "Spark ANSI "
+        assert r["b"] == "Spark CORE"
+        assert r["c"] == "xpark SQL"
+
+    def test_space_and_ornull_arithmetic(self, spark):
+        df = spark.createDataFrame([(7, 0), (7, 3)], "a int, b int")
+        rows = ch_sql(
+            spark,
+            "SELECT concat('x', space(2), 'y') AS sp, "
+            "moduloOrNull(a, b) AS m, intDivOrNull(a, b) AS d, "
+            "positiveModuloOrNull(-a, b) AS p FROM t ORDER BY b",
+            views={"t": df},
+        ).collect()
+        assert rows[0]["sp"] == "x  y"
+        # zero divisor → NULL, not an ANSI throw
+        assert (rows[0]["m"], rows[0]["d"], rows[0]["p"]) == (
+            None, None, None
+        )
+        assert (rows[1]["m"], rows[1]["d"], rows[1]["p"]) == (1, 2, 2)
+
+
+class TestWave7Rejects:
+    # r15: the r14 revision of this list also rejected UUIDStringToNum
+    # / UUIDNumToString, shadowing their round-10 byte-exact mappings
+    # (tests/test_audit_r10.py pins them) — a shipped regression. The
+    # reject is now only the unknown-variant UUIDToNum form; the
+    # default/1 and 2 variants are mapped (TestWave7UUIDToNum below).
+    @pytest.mark.parametrize(
+        ("fn", "marker"),
+        [
+            ("UUIDToNum(u, 3)", "variant"),
+            ("UUIDToNum(u, v)", "variant"),
+            ("dictGetAll('d', 'a', k)", "RegExpTree"),
+            ("timeSeriesInstantDeltaToGrid(1, 2, 3, 4)(t, v)",
+             "WITH FILL"),
+            ("timeSeriesRateToGrid(1, 2, 3, 4)(t, v)", "WITH FILL"),
+        ],
+    )
+    def test_loud_reject_names_alternative(self, fn, marker):
+        with pytest.raises(ValueError, match=marker):
+            translate(f"SELECT {fn} FROM t")
+
+
+class TestWave7UUIDToNum:
+    def test_variants_executed(self, spark):
+        df = spark.createDataFrame(
+            [("00112233-4455-6677-8899-aabbccddeeff",)], "u string"
+        )
+        [r] = ch_sql(
+            spark,
+            "SELECT hex(UUIDToNum(u)) AS v1d, "
+            "hex(UUIDToNum(u, 1)) AS v1, "
+            "hex(UUIDToNum(u, 2)) AS v2, "
+            "hex(UUIDStringToNum(u)) AS s1 FROM t",
+            views={"t": df},
+        ).collect()
+        # default == variant 1 == UUIDStringToNum (big-endian bytes)
+        assert r["v1d"] == r["v1"] == r["s1"] \
+            == "00112233445566778899AABBCCDDEEFF"
+        # variant 2: bytes reversed within the first three dash groups
+        # (CH docs example for the Microsoft mixed-endian layout)
+        assert r["v2"] == "33221100554477668899AABBCCDDEEFF"
+
+
+# ---- set operations: each branch keeps its own ORDER BY / LIMIT / OFFSET
+# (ClickHouse applies them to their own query, not to the result), and a
+# pass that wraps its SELECT wraps only its own branch. DuckDB runs the
+# same statement with its branches parenthesized; where DuckDB lacks the
+# clause (LIMIT BY, ARRAY JOIN), it runs the spelled-out equivalent.
+_BRANCH_PROBES = [
+    ("SELECT a FROM t ORDER BY a LIMIT 1 UNION ALL SELECT 9",
+     "(SELECT a FROM t ORDER BY a LIMIT 1) UNION ALL SELECT 9"),
+    ("SELECT DISTINCT ON (a) a, b FROM t ORDER BY b UNION ALL SELECT 1, 2",
+     "(SELECT DISTINCT ON (a) a, b FROM t ORDER BY b) UNION ALL SELECT 1, 2"),
+    ("SELECT a FROM t ORDER BY a LIMIT 1 BY a UNION ALL SELECT 9",
+     "(SELECT a FROM (SELECT a, row_number() OVER (PARTITION BY a ORDER BY a)"
+     " AS rn FROM t) WHERE rn <= 1 ORDER BY a) UNION ALL SELECT 9"),
+    ("SELECT DISTINCT ON (a) a, b FROM t ORDER BY b OFFSET 1",
+     "SELECT DISTINCT ON (a) a, b FROM t ORDER BY b OFFSET 1"),
+    ("SELECT a FROM t ARRAY JOIN [1] AS x WINDOW w AS (ORDER BY a)",
+     "SELECT a FROM t, unnest([1]) AS u(x) WINDOW w AS (ORDER BY a)"),
+]
+
+
+class TestSetOperationBranches:
+    @pytest.mark.parametrize("ch, duck", _BRANCH_PROBES,
+                             ids=["order-limit", "distinct-on", "limit-by",
+                                  "distinct-on-offset", "array-join-window"])
+    def test_branch_clauses_match_duckdb(self, spark, ch, duck):
+        import duckdb
+
+        rows = [(1, 10), (1, 5), (2, 7)]
+        df = spark.createDataFrame(rows, "a bigint, b bigint")
+        got = sorted(tuple(r) for r in ch_sql(spark, ch, views={"t": df})
+                     .collect())
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t (a BIGINT, b BIGINT)")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        assert got == sorted(con.execute(duck).fetchall())
+
+    def test_wrapping_passes_wrap_only_their_branch(self):
+        out = translate(
+            "SELECT 'z' AS g, 99 AS v UNION ALL SELECT g, v FROM t "
+            "QUALIFY row_number() OVER (PARTITION BY g ORDER BY v) = 1"
+        )
+        assert out.startswith("SELECT 'z' AS g, 99 AS v UNION ALL SELECT *")
+
+    def test_column_selector_except_is_no_set_operator(self):
+        assert translate("SELECT * EXCEPT (a) FROM t EXCEPT SELECT 1, 2") \
+            == "SELECT * EXCEPT(a) FROM t EXCEPT SELECT 1, 2"
+
+
+class TestIfCombinatorWithoutArguments:
+    @pytest.mark.parametrize(
+        "call", ["quantileIf(0.5)()", "quantileDDIf()()", "quantilesGKIf(3)()"]
+    )
+    def test_names_the_missing_condition(self, call):
+        with pytest.raises(ValueError, match="condition"):
+            translate(f"SELECT {call} FROM t")
+
+
+def test_with_fill_interpolate_after_fill_bounds(spark):
+    df = spark.createDataFrame([(1, 10), (3, 30)], "d bigint, v bigint")
+    got = [tuple(r) for r in ch_sql(
+        spark,
+        "SELECT d, v FROM t ORDER BY d WITH FILL FROM 1 TO 5 INTERPOLATE (v)",
+        views={"t": df},
+    ).collect()]
+    # TO is exclusive; fill rows carry the previous real row's v
+    assert got == [(1, 10), (2, 10), (3, 30), (4, 30)]

@@ -14,7 +14,10 @@ functions that no longer exist (``register_sampling_key``,
 views"), and now name what to supply instead — a ``QueryContext``
 entry, the statement's views or a warehouse table. ``RENAMED_ERRORS``
 maps each old text to its new one; the replay applies it to the
-recorded errors (86 records) and compares everything else unchanged.
+recorded errors (86 records). When the clause passes moved onto one
+clause map (``Tokens.clauses()``), six outputs changed; ``CHANGED_OUTPUTS``
+holds the new text of each, with its reason, and the replay compares
+everything else unchanged.
 Each statement translates with the empty query context, as the outputs
 were recorded with no view, dictionary or merged view declared; the
 translator keeps no state between calls, so the replay runs in this
@@ -52,12 +55,69 @@ RENAMED_ERRORS = (
      "the statement's views or read a warehouse table;"),
 )
 
+# statement → its new output. The first five read a select list whose
+# first item starts with a parenthesis: the head parser used to start
+# that list at its second word and so missed the first item's alias, and
+# an ORDER BY / LIMIT BY / DISTINCT ON key equal to that item went in as
+# a hidden column instead of its alias. Same rows: the alias is the same
+# expression (test_with_ties_order_key_aliased_away runs the first, and
+# test_fuzz_chsql seeds 10020, 40009, 40012 and 40054 compare the others
+# with DuckDB). In the last, the ARRAY JOIN clause ends at PREWHERE, so
+# the newline before PREWHERE is now one blank (whitespace only).
+CHANGED_OUTPUTS = {
+    "SELECT (id % 3) AS g, id AS k FROM t ORDER BY (id % 3) LIMIT 2 WITH "
+    "TIES":
+    "SELECT * EXCEPT(__rk) FROM(SELECT *, rank() OVER(ORDER BY g) AS __rk "
+    "FROM(SELECT(id % 3) AS g, id AS k FROM t)) WHERE __rk <= 2 ORDER BY g",
+    "SELECT (o_orderkey % 3) AS g, replaceAll('F', 'R', 'A') AS c0, "
+    "o_orderkey AS k FROM orders WHERE (o_orderkey = o_orderkey) ORDER BY "
+    "o_orderkey LIMIT 2 BY (o_orderkey % 3)":
+    "SELECT * EXCEPT(__rn) FROM(SELECT *, row_number() OVER(PARTITION BY g "
+    "ORDER BY k) AS __rn FROM(SELECT(o_orderkey % 3) AS g, replace('F', "
+    "'R', 'A') AS c0, o_orderkey AS k FROM orders WHERE(o_orderkey = "
+    "o_orderkey))) WHERE __rn <= 2 ORDER BY k",
+    "SELECT (o_orderkey % 7) AS g, toMonth(o_orderdate) AS c0, o_orderkey AS "
+    "k FROM orders WHERE (coalesce(nullIf(o_custkey % 13, 5), o_custkey) IN "
+    "(0, 1, 7)) ORDER BY (o_orderkey % 7) LIMIT 1 WITH TIES":
+    "SELECT * EXCEPT(__rk) FROM(SELECT *, rank() OVER(ORDER BY g) AS __rk "
+    "FROM(SELECT(o_orderkey % 7) AS g, month(o_orderdate) AS c0, o_orderkey "
+    "AS k FROM orders WHERE(coalesce(nullif(o_custkey % 13, 5), o_custkey) "
+    "IN(0, 1, 7)))) WHERE __rk <= 1 ORDER BY g",
+    "SELECT DISTINCT ON ((o_custkey % 3)) (o_custkey % 3) AS g, "
+    "sqrt(abs(round(o_totalprice, 4))) AS c0, o_orderkey AS k FROM orders "
+    "WHERE (upper('A') > o_orderpriority) ORDER BY o_orderkey":
+    "SELECT * EXCEPT(__don_rn) FROM(SELECT *, row_number() OVER(PARTITION BY "
+    "g ORDER BY k) AS __don_rn FROM(SELECT(o_custkey % 3) AS g, "
+    "sqrt(abs(round(o_totalprice, 4))) AS c0, o_orderkey AS k FROM orders "
+    "WHERE(upper('A') > o_orderpriority))) WHERE __don_rn = 1 ORDER BY k",
+    "SELECT (o_custkey % 3) AS g, (NOT (o_custkey > o_custkey)) AS c0, "
+    "o_orderkey AS k FROM orders WHERE (97 BETWEEN 4 AND 10) ORDER BY "
+    "(o_custkey % 3) LIMIT 3 WITH TIES":
+    "SELECT * EXCEPT(__rk) FROM(SELECT *, rank() OVER(ORDER BY g) AS __rk "
+    "FROM(SELECT(o_custkey % 3) AS g, (NOT(o_custkey > o_custkey)) AS c0, "
+    "o_orderkey AS k FROM orders WHERE(97 BETWEEN 4 AND 10))) WHERE __rk <= 3 "
+    "ORDER BY g",
+    "\n    SELECT lang, w, count() AS n\n    FROM documents\n    ARRAY JOIN "
+    "splitByChar(' ', text) AS w\n    PREWHERE doc_id < 200\n    GROUP BY "
+    "lang, w WITH TOTALS\n    ORDER BY n DESC, w\n    LIMIT 2 BY lang\n    "
+    "SETTINGS max_threads = 4\n    ":
+    "SELECT * EXCEPT(__rn) FROM(SELECT *, row_number() OVER(PARTITION BY lang "
+    "ORDER BY n DESC, w) AS __rn FROM(SELECT lang, w, count(*) AS n\n    "
+    "FROM documents\n    LATERAL VIEW explode(split(text, ' ')) __aj AS w "
+    "WHERE doc_id < 200 GROUP BY lang, w GROUPING SETS((lang, w), ()))) "
+    "WHERE __rn <= 2 ORDER BY n DESC, w",
+}
+
 
 def test_translate_replays_the_golden_corpus():
     with gzip.open(CORPUS, "rt", encoding="utf-8") as fh:
         records = json.load(fh)
-    diffs, renamed = [], 0
+    diffs, renamed, changed = [], 0, 0
     for rec in records:
+        if rec["sql"] in CHANGED_OUTPUTS:
+            assert rec["out"] != CHANGED_OUTPUTS[rec["sql"]]
+            rec = {**rec, "out": CHANGED_OUTPUTS[rec["sql"]]}
+            changed += 1
         if "error" in rec:
             error = rec["error"]
             for old, new in RENAMED_ERRORS:
@@ -75,3 +135,4 @@ def test_translate_replays_the_golden_corpus():
         f"{len(diffs)} of {len(records)} statements changed:\n{shown}"
     )
     assert renamed == 86, renamed
+    assert changed == len(CHANGED_OUTPUTS), changed

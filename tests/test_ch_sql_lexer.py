@@ -76,10 +76,16 @@ def test_edge_shapes_translate_as_before(sql, want):
     assert ch_sql.translate(sql) == want
 
 
-def test_subscript_on_a_string_literal_raises():
+@pytest.mark.parametrize("sql, kind", [
+    ("SELECT 'abc'[1] FROM t", "String"),
+    ("SELECT 1[1]", "number"),
+    ("SELECT a FROM t WHERE 2[1] = 1", "number"),
+], ids=["string", "number", "number-in-where"])
+def test_subscript_on_a_string_literal_raises(sql, kind):
     # ClickHouse's arrayElement takes an Array or a Map, never a String
-    with pytest.raises(ValueError, match="arrayElement rejects a String"):
-        ch_sql.translate("SELECT 'abc'[1] FROM t")
+    # or a number
+    with pytest.raises(ValueError, match=f"arrayElement rejects a {kind}"):
+        ch_sql.translate(sql)
 
 
 def test_call_rewrites_leave_string_literals_alone():
@@ -106,8 +112,14 @@ def test_translate_lexes_a_values_statement_about_once(monkeypatch):
         return real(sql)
 
     monkeypatch.setattr(ch_sql, "lex", counting)
+    # and no clause pass finds its trigger, so none builds a clause map
+    maps: list[int] = []
+    real_map = ch_sql._clause_map
+    monkeypatch.setattr(ch_sql, "_clause_map",
+                        lambda *a: maps.append(1) or real_map(*a))
     ch_sql.translate(stmt)
     assert sum(handed) <= 2 * len(stmt), (sum(handed), len(stmt))
+    assert not maps
 
 
 def test_argument_translation_is_linear_in_nesting(monkeypatch):

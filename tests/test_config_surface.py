@@ -366,6 +366,53 @@ def test_ch_sql_dispatches_calls_by_name():
     assert not compares, f"call names compared with text: {compares}"
 
 
+# Words that end a clause or a branch of a ClickHouse SELECT
+_CLAUSE_END_WORDS = frozenset(
+    "WHERE PREWHERE GROUP HAVING WINDOW QUALIFY ORDER LIMIT OFFSET SETTINGS "
+    "FORMAT UNION INTERSECT EXCEPT".split()
+)
+# the clause table, and two word classes that are not about where a
+# clause ends (a keyword before a '[' and a word after a table name)
+_CLAUSE_WORD_TABLES = {"_CLAUSES", "_BRACKET_LITERAL_KEYWORDS", "_NOT_ALIAS"}
+
+
+def test_ch_sql_clause_passes_read_one_clause_map():
+    # every clause pass takes its clause spans from Tokens.clauses():
+    # no other container literal in ch_sql.py lists two or more of the
+    # words where a clause ends
+    tree = ast.parse(open(CH_SQL, encoding="utf-8").read())
+    exempt: set[int] = set()
+    for n in tree.body:
+        if isinstance(n, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id in _CLAUSE_WORD_TABLES
+            for t in n.targets
+        ):
+            exempt |= {id(x) for x in ast.walk(n.value)}
+    lists = []
+    for n in ast.walk(tree):
+        if id(n) in exempt:
+            continue
+        if isinstance(n, (ast.Set, ast.Tuple, ast.List)):
+            elts = n.elts
+        elif isinstance(n, ast.Dict):
+            elts = n.keys
+        elif (isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+              and n.func.id in ("frozenset", "set", "tuple", "list")
+              and n.args and isinstance(n.args[0], (ast.Set, ast.Tuple,
+                                                     ast.List))):
+            elts = n.args[0].elts
+        else:
+            continue
+        words = {e.value.upper() for e in elts
+                 if isinstance(e, ast.Constant) and isinstance(e.value, str)}
+        if len(words & _CLAUSE_END_WORDS) >= 2:
+            lists.append((n.lineno, sorted(words & _CLAUSE_END_WORDS)))
+    assert not lists, f"clause keyword lists outside _CLAUSES: {lists}"
+    bound = {t.id for n in ast.walk(tree) if isinstance(n, ast.Assign)
+             for t in n.targets if isinstance(t, ast.Name)}
+    assert not {"_CLAUSE_STARTERS", "_COMMA_SCOPE"} & bound
+
+
 FUNCTIONS = os.path.join(PKG, "functions")
 
 # Methods that change the container they are called on.

@@ -800,6 +800,19 @@ class TestReviewFindings:
                 "CREATE MATERIALIZED VIEW m TO t AS SELECT x FROM t"
             )
 
+    def test_mv_table_names_inside_string_literals_are_no_reads(self, wh):
+        # the target and the source are table positions of the SELECT's
+        # tokens: a literal that spells "from tgt" reads nothing
+        wh.execute("CREATE TABLE src (k Int64) ENGINE = Memory")
+        wh.execute("CREATE TABLE tgt (k Int64, note String) ENGINE = Memory")
+        wh.execute(
+            "CREATE MATERIALIZED VIEW mv1 TO tgt AS "
+            "SELECT k, 'copied from tgt' AS note FROM src"
+        )
+        wh.execute("INSERT INTO src VALUES (7)")
+        got = [tuple(r) for r in wh.execute("SELECT k, note FROM tgt").collect()]
+        assert got == [(7, "copied from tgt")]
+
     def test_alias_name_inside_string_literal_untouched(self, wh):
         wh.execute(
             "CREATE TABLE t (id Int32, tag String, "
